@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   /** True iff an on-disk canonical record declares load_warning=false,
     * REGARDLESS of JSON serialization. The r14 guard substring-matched the
@@ -33,27 +32,24 @@ object Bench {
     * clean 8-core scaling run (indistinguishable from a 32-core record
     * because cpus was not stamped). A record is canonical only when it is
     * the FULL query set at the canonical core count on a quiet host;
-    * everything else is diverted to a self-describing side file. */
-  def targetFor(subsetRun: Boolean, cpus: String, canonCpus: String,
-                loadWarn: Boolean, cleanOnDisk: Boolean,
-                sfIsCanon: Boolean = true): String =
-    if (subsetRun) "BENCH_LOCAL_SUBSET.json"
-    else if (!sfIsCanon) "BENCH_LOCAL_ALTSF.json" // e.g. a /tmp sf1 corpus
-    else if (cpus != canonCpus) s"BENCH_LOCAL_C$cpus.json"
-    else if (loadWarn && cleanOnDisk) "BENCH_LOCAL_DIRTY.json"
-    else "BENCH_LOCAL.json"
+    * everything else is diverted to a self-describing side file. One rule
+    * guards every target: a load-warned run never replaces a clean record
+    * (`cleanOnDisk(target)`) and lands in the target's _DIRTY sibling. */
+  def targetFor(subsetRun: Boolean, cpus: Int, canonCpus: Int,
+                loadWarn: Boolean, cleanOnDisk: String => Boolean,
+                sfIsCanon: Boolean = true): String = {
+    val base =
+      if (subsetRun) "BENCH_LOCAL_SUBSET"
+      else if (!sfIsCanon) "BENCH_LOCAL_ALTSF" // e.g. a /tmp sf1 corpus
+      else if (cpus != canonCpus) s"BENCH_LOCAL_C$cpus"
+      else "BENCH_LOCAL"
+    if (loadWarn && cleanOnDisk(s"$base.json")) s"${base}_DIRTY.json" else s"$base.json"
+  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = LocalSpark.cpus
+    val spark = LocalSpark.session()
     // Warm up FS/parquet/codegen once so per-query timings measure the
     // query, not one-off JVM and HDFS-client initialization.
     Seq("lineitem", "orders", "customer", "nation", "part",
@@ -106,19 +102,19 @@ object Bench {
       val runs = scala.collection.mutable.ArrayBuffer[Double]()
       var err: Option[String] = None
       def once(r: Int): Unit = {
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); err = None; true }
-        catch { case t: Throwable =>
-          // Keep the MESSAGE, not just the class: round 8's artifact
-          // recorded bare "ExtendedAnalysisException" 54 times and the
-          // actual cause (a transiently re-generated events.parquet)
-          // was undiagnosable from it.
-          err = Some(t.getClass.getSimpleName + ": " +
-            Option(t.getMessage).getOrElse("").replace('\n', ' '))
-          System.err.println(s"[bench] $name FAILED: $t")
-          false
+        val (ok, run) = LocalSpark.timed {
+          try { fn(spark, sfDir).count(); err = None; true }
+          catch { case t: Throwable =>
+            // Keep the MESSAGE, not just the class: round 8's artifact
+            // recorded bare "ExtendedAnalysisException" 54 times and the
+            // actual cause (a transiently re-generated events.parquet)
+            // was undiagnosable from it.
+            err = Some(t.getClass.getSimpleName + ": " +
+              Option(t.getMessage).getOrElse("").replace('\n', ' '))
+            System.err.println(s"[bench] $name FAILED: $t")
+            false
+          }
         }
-        val run = (System.nanoTime() - t0) / 1e9
         if (ok) runs += run
         if (repeat > 1) println(f"[bench] $name run $r: $run%.3f s")
       }
@@ -170,17 +166,15 @@ object Bench {
     val load = loadavg() // 1-min load average at END of run
     // cpus is stamped into the record so an 8-core scaling run can never
     // pose as the 32-core canonical again (VERDICT r17 what's-wrong #2).
-    // SPARK_GRAFT_CPUS is free text (local[*] is legal) — quote unless int.
-    val cpusJson = if (cpus.forall(_.isDigit) && cpus.nonEmpty) cpus else jq(cpus)
-    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$nErr,"divergent_queries":${divergent.mkString("{", ",", "}")},"loadavg":$load,"loadavg_start":$loadStart,"load_warning":$loadWarn,"repeat":$repeat,"cpus":$cpusJson,"sf":"$sfDir"}"""
+    val fullLine = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"errors":$nErr,"divergent_queries":${divergent.mkString("{", ",", "}")},"loadavg":$load,"loadavg_start":$loadStart,"load_warning":$loadWarn,"repeat":$repeat,"cpus":$cpus,"sf":"$sfDir"}"""
     // Record routing (VERDICT r17 #3): subset and non-canonical-core runs
     // go to side files so they cannot clobber the canonical; a load-warned
-    // full run on canonical cores is diverted to BENCH_LOCAL_DIRTY.json
-    // when a clean canonical already exists.
-    val canonCpus = sys.env.getOrElse("SPARK_GRAFT_CANON_CPUS", "32")
+    // run is diverted to its target's _DIRTY sibling when that target
+    // already holds a clean record.
+    val canonCpus = sys.env.get("SPARK_GRAFT_CANON_CPUS").map(_.toInt).getOrElse(32)
     val canonSf = sys.env.getOrElse("SPARK_GRAFT_CANON_SF", "/root/testdata/sf0.1")
-    val cleanOnDisk = scala.util.Try(java.nio.file.Files.readString(
-      java.nio.file.Paths.get("BENCH_LOCAL.json"))).toOption.exists(isCleanRecord)
+    def cleanOnDisk(file: String): Boolean = scala.util.Try(java.nio.file.Files
+      .readString(java.nio.file.Paths.get(file))).toOption.exists(isCleanRecord)
     val target = targetFor(args.nonEmpty, cpus, canonCpus, loadWarn, cleanOnDisk,
       sfIsCanon = sfDir == canonSf)
     if (target != "BENCH_LOCAL.json")
@@ -201,7 +195,7 @@ object Bench {
       .map { case (k, (v, _, _)) => s"\"$k\":${fmt(v)}" }.mkString("{", ",", "}")
     val errDetail = results.toSeq.collect { case (k, (_, Some(e), _)) => k -> e }
       .take(4).map { case (k, e) => s"\"$k\":" + jq(e.take(160)) }.mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"top12 of ${results.size}; full map follows","errors":$nErr,"divergent":${divergent.size},"query_errors":$errDetail,"loadavg":$load,"loadavg_start":$loadStart,"load_warning":$loadWarn,"repeat":$repeat,"cpus":$cpusJson,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n_queries":${results.size},"queries":$slow,"queries_note":"top12 of ${results.size}; full map follows","errors":$nErr,"divergent":${divergent.size},"query_errors":$errDetail,"loadavg":$load,"loadavg_start":$loadStart,"load_warning":$loadWarn,"repeat":$repeat,"cpus":$cpus,"sf":"$sfDir"}""")
     spark.stop()
     println(fullLine)
   }

@@ -290,47 +290,6 @@ object TsFunctions {
     transform(c, x => (x - m) / s * lit(std) + lit(mu))
   }
 
-  /** Per-series min-max rescale (TimeSeriesScalerMinMax). */
-  def tsMinMax(c: Column, lo: Double = 0.0, hi: Double = 1.0): Column = {
-    val mn = array_min(c)
-    val mx = array_max(c)
-    transform(c, x =>
-      when(mx === mn, lit(lo))
-        .otherwise((x - mn) / (mx - mn) * lit(hi - lo) + lit(lo)))
-  }
-
-  /** PAA segment means: segSz = floor(size/nSeg), tail dropped
-    * (`piecewise.py:143-153`). */
-  def tsPaa(c: Column, nSegments: Int): Column = {
-    val segSz = (size(c) / nSegments).cast("int")
-    transform(sequence(lit(0), lit(nSegments - 1)), s =>
-      aggregate(slice(c, s * segSz + 1, segSz), lit(0.0), (acc, x) => acc + x) / segSz)
-  }
-
-  /** SAX symbols from a (z-normed) array column. Breakpoint literals come
-    * from the Scala ppf so SQL and kernel paths agree. */
-  def tsSaxSymbols(c: Column, nSegments: Int, alphabetSize: Int): Column = {
-    val bps = Sax.breakpoints(alphabetSize)
-    val paaC = tsPaa(c, nSegments)
-    transform(paaC, v =>
-      aggregate(lit(bps), lit(0), (acc, bp) => acc + when(v >= bp, 1).otherwise(0)))
-  }
-
-  /** Sliding min/max envelope of radius r — the array-column counterpart
-    * of the exploded-form `Window.rowsBetween(-r, r)` (SURVEY §2.6). */
-  def tsEnvelope(c: Column, r: Int): Column = {
-    val n = size(c)
-    // 0-based window [max(0,i-r), min(n-1,i+r)] → 1-based slice(start, len)
-    def win(i: Column): Column = {
-      val start0 = greatest(i - r, lit(0))
-      val end0 = least(i + r, n - 1)
-      slice(c, start0 + 1, end0 - start0 + 1)
-    }
-    struct(
-      transform(sequence(lit(0), n - 1), i => array_min(win(i))).as("low"),
-      transform(sequence(lit(0), n - 1), i => array_max(win(i))).as("up"))
-  }
-
   /** All length-m stride-1 sliding windows of an array column; a series
     * shorter than m yields no windows (unguarded, sequence(0, size−m)
     * turns descending and slice(start=0) throws). */

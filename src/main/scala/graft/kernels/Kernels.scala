@@ -624,10 +624,6 @@ object Kernels {
     out
   }
 
-  /** PAA distance — `piecewise.py:191-236`: ‖p1−p2‖·√(sz/nSeg). */
-  def paaDistance(p1: TS, p2: TS, originalSz: Int): Double =
-    euclidean(p1, p2) * math.sqrt(originalSz.toDouble / p1.length)
-
   /** All length-m stride-1 sliding segments (matrix profile building
     * block) — `matrix_profile/matrix_profile.py:25-66`. */
   def slidingSegments(ts: Array[Double], m: Int): Array[Array[Double]] = {
@@ -705,16 +701,5 @@ object Kernels {
       i += 1
     }
     Array.tabulate(n)(t => (best(t), idx(t)))
-  }
-
-  // ------------------------------------------------------------- stats
-
-  def mean(xs: Array[Double]): Double = { var s = 0.0; var i = 0; while (i < xs.length) { s += xs(i); i += 1 }; s / xs.length }
-
-  def stdPop(xs: Array[Double]): Double = {
-    val mu = mean(xs)
-    var s = 0.0; var i = 0
-    while (i < xs.length) { val d = xs(i) - mu; s += d * d; i += 1 }
-    math.sqrt(s / xs.length)
   }
 }

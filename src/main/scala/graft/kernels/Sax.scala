@@ -41,17 +41,6 @@ object Sax {
     x * scale
   }
 
-  /** Complementary error function (Numerical Recipes rational Chebyshev
-    * approximation, |err| < 1.2e-7, then used only to polish ppf). */
-  def erfc(x: Double): Double = {
-    val z = math.abs(x)
-    val t = 1.0 / (1.0 + 0.5 * z)
-    val ans = t * math.exp(-z * z - 1.26551223 + t * (1.00002368 + t * (0.37409196 +
-      t * (0.09678418 + t * (-0.18628806 + t * (0.27886807 + t * (-1.13520398 +
-        t * (1.48851587 + t * (-0.82215223 + t * 0.17087277)))))))))
-    if (x >= 0) ans else 2.0 - ans
-  }
-
   /** Gaussian breakpoints for nBins symbols — `piecewise.py:34-44`. */
   def breakpoints(nBins: Int, scale: Double = 1.0): Array[Double] =
     Array.tabulate(nBins - 1)(i => normPpf((i + 1).toDouble / nBins, scale))

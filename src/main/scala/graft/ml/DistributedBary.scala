@@ -28,14 +28,12 @@ object DistributedBary {
   case class DbaBuf(var sums: Array[Double], var wsum: Array[Double],
                     var cost: Double, var n: Long)
 
-  /** KShape: flattened sz×sz gram of SBD-aligned z-normed members, plus
-    * their vector sum (for the eigenvector sign fix) and count. */
-  case class GramBuf(var gram: Array[Double], var xsum: Array[Double], var n: Long)
-
   /** Soft-DTW value + gradient w.r.t. the (broadcast) center. */
   case class GradBuf(var value: Double, var grad: Array[Double], var n: Long)
 
-  /** GramBuf + the Σd² inertia numerator of the same assignment rows. */
+  /** KShape: flattened sz×sz gram of SBD-aligned z-normed members, their
+    * vector sum (for the eigenvector sign fix), count, and the Σd²
+    * inertia numerator of the same assignment rows. */
   case class GramD2Buf(var gram: Array[Double], var xsum: Array[Double],
                        var n: Long, var d2: Double)
 
@@ -111,44 +109,8 @@ object DistributedBary {
   }
 
   /** KShape gram pass: SBD-align each member to its cluster's current
-    * center, z-norm, accumulate z·zᵀ (flattened) and Σz. */
-  class GramAgg(centers: Array[Array[Double]])
-      extends Aggregator[(Int, Array[Double]), GramBuf, GramBuf] with Serializable {
-    @transient private lazy val centers2d: Array[Kernels.TS] =
-      centers.map(c => if (c == null) null else Kernels.uni(c))
-    def zero: GramBuf = GramBuf(Array.emptyDoubleArray, Array.emptyDoubleArray, 0L)
-    def reduce(b: GramBuf, in: (Int, Array[Double])): GramBuf = {
-      val center = centers2d(in._1)
-      val sz = center.length
-      if (b.gram.length < sz * sz) {
-        b.gram = java.util.Arrays.copyOf(b.gram, sz * sz)
-        b.xsum = java.util.Arrays.copyOf(b.xsum, sz)
-      }
-      val aligned = Ncc.shiftToAlign(center, Kernels.uni(in._2))
-      val z = Kernels.scaleMeanVariance(aligned).map(_(0))
-      var i = 0
-      while (i < sz) {
-        val zi = z(i)
-        b.xsum(i) += zi
-        var j = 0
-        while (j < sz) { b.gram(i * sz + j) += zi * z(j); j += 1 }
-        i += 1
-      }
-      b.n += 1
-      b
-    }
-    def merge(a: GramBuf, b: GramBuf): GramBuf = {
-      a.gram = addInto(a.gram, b.gram); a.xsum = addInto(a.xsum, b.xsum); a.n += b.n
-      a
-    }
-    def finish(b: GramBuf): GramBuf = b
-    def bufferEncoder: Encoder[GramBuf] = Encoders.product[GramBuf]
-    def outputEncoder: Encoder[GramBuf] = Encoders.product[GramBuf]
-  }
-
-  /** [[GramAgg]] extended with the Σd² of the rows' pre-computed SBD
-    * distances — the inertia-fused KShape iteration pass. The gram/xsum
-    * accumulation is line-for-line GramAgg's (same in-row float order). */
+    * center, z-norm, accumulate z·zᵀ (flattened) and Σz, plus the Σd² of
+    * the rows' pre-computed SBD distances (inertia fused into the pass). */
   class GramD2Agg(centers: Array[Array[Double]])
       extends Aggregator[(Int, Double, Array[Double]), GramD2Buf, GramD2Buf]
       with Serializable {
@@ -255,37 +217,6 @@ object DistributedBary {
     present.map(cid => cid -> centers(cid)).toMap
   }
 
-  /** Partition-local DBA shortcut (SURVEY §7.4): when every cluster's
-    * members fit one task, the `iters` distributed aggregation rounds of
-    * [[dbaByCluster]] collapse into ONE shuffle (hash by cluster) + the
-    * local [[graft.kernels.Barycenters.dba]] loop per cluster — iters×
-    * fewer Spark jobs, the dominant cost of a dtw-metric Lloyd update at
-    * small/medium cluster sizes (the iterative-job floor). Same update
-    * rule and same per-iteration math as the distributed path
-    * (KmeansSpec parity ~1e-9 — summation order differs); one semantic
-    * nuance: with tol > 0 the early stop is per-cluster here but GLOBAL
-    * (summed cost) in [[dbaByCluster]] — identical behavior at tol ≤ 0
-    * (fixed iteration count). Opt-in: the caller asserts clusters fit a
-    * task (n/k · sz doubles); [[dbaByCluster]] stays the default and the
-    * oracle path. */
-  def dbaByClusterLocal(rows: Dataset[(Int, Array[Double])],
-                        init: Array[Array[Double]], iters: Int,
-                        tol: Double = 1e-5): Map[Int, Array[Double]] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val bc = spark.sparkContext.broadcast(init)
-    rows.groupByKey(_._1)
-      .mapGroups { (cid, it) =>
-        val members = it.map(t => graft.kernels.Kernels.uni(t._2)).toSeq
-        val c0 = bc.value(cid)
-        val center = graft.kernels.Barycenters.dba(members,
-          barycenterSize = c0.length, maxIter = iters, tol = tol,
-          init = graft.kernels.Kernels.uni(c0))
-        (cid, center.map(_(0)))
-      }
-      .collect().toMap
-  }
-
   /** Soft-DTW barycenter update as `steps` FIXED-η gradient-descent steps
     * from the CURRENT centers (the k-means `metric="softdtw"` update in
     * its oracle-replayable form): b ← b − η·Σ_{x∈cluster} ∇_b softDTW(b, x),
@@ -368,14 +299,17 @@ object DistributedBary {
     * Sign fix uses (Σ aligned members)·µ — order-independent, equivalent to
     * the reference's Σ‖Xp∓µ‖ comparison. */
   def shapeByCluster(rows: Dataset[(Int, Array[Double])],
-                     centers: Array[Array[Double]]): Map[Int, Array[Double]] = {
-    aggByCluster(rows, new GramAgg(centers)).map { case (cid, b) =>
-      cid -> finishShapeEig(b.gram, b.xsum, centers(cid).length)
-    }
+                     centers: Array[Array[Double]]): Map[Int, Array[Double]] =
+    shapesWithInertia(withZeroDist(rows), centers, steps = 0)._1
+
+  private def withZeroDist(rows: Dataset[(Int, Array[Double])])
+      : Dataset[(Int, Double, Array[Double])] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.map { case (c, v) => (c, 0.0, v) }
   }
 
-  /** eigSym shape finisher over an accumulated gram/xsum pair — shared by
-    * the plain and the inertia-fused gram passes (identical float path). */
+  /** eigSym shape finisher over an accumulated gram/xsum pair. */
   private def finishShapeEig(gram: Array[Double], xsum: Array[Double],
                              sz: Int): Array[Double] = {
     import breeze.linalg.{DenseMatrix, eigSym}
@@ -429,14 +363,12 @@ object DistributedBary {
   def shapeByClusterPower(rows: Dataset[(Int, Array[Double])],
                           centers: Array[Array[Double]],
                           steps: Int = 60): Map[Int, Array[Double]] = {
-    aggByCluster(rows, new GramAgg(centers)).map { case (cid, b) =>
-      cid -> finishShapePower(b.gram, b.xsum, centers(cid).length, steps)
-    }
+    require(steps > 0, s"power iteration needs steps > 0, got $steps")
+    shapesWithInertia(withZeroDist(rows), centers, steps)._1
   }
 
   /** Power-method shape finisher (the oracle-replayable deterministic
-    * eigenvector route) — shared by the plain and the inertia-fused gram
-    * passes (identical float path). */
+    * eigenvector route). */
   private def finishShapePower(gram: Array[Double], xsum: Array[Double],
                                sz: Int, steps: Int): Array[Double] = {
     locally {

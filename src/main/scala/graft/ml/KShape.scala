@@ -12,7 +12,7 @@ import graft.kernels.{Kernels, Ncc}
   * M = Qᵀ (Σ xxᵀ) Q over SBD-aligned members (`kshape.py:118-137`).
   *
   * Spark layout: assignment = broadcast pass; shape extraction = one
-  * streaming gram aggregation per iteration (DistributedBary.GramAgg — the
+  * streaming gram aggregation per iteration (DistributedBary.GramD2Agg — the
   * sz×sz buffer is cluster-size-independent, with map-side combine), then
   * a local Breeze eigendecomposition per cluster on the driver. Input must
   * be equal-length (KShape z-normalizes internally, as the reference does).
@@ -111,41 +111,5 @@ object KShape {
       c += 1
     }
     (bestC, bestD)
-  }
-
-  /** Shape extraction (`kshape.py:118-137`): SBD-align members to the
-    * current centroid, z-norm, take leading eigenvector of
-    * M = Qᵀ S Q where S = Σ xxᵀ and Q = I − 1/sz; fix sign so the shape
-    * correlates positively with members. */
-  def extractShape(members: Array[Array[Double]], center: Array[Double]): Array[Double] = {
-    import breeze.linalg.{DenseMatrix, DenseVector, eigSym}
-    val sz = center.length
-    val refTs = Kernels.uni(center.toIndexedSeq: _*)
-    val S = DenseMatrix.zeros[Double](sz, sz)
-    members.foreach { m =>
-      val aligned = Ncc.shiftToAlign(refTs, Kernels.uni(m.toIndexedSeq: _*))
-      val z = Kernels.scaleMeanVariance(aligned).map(_(0))
-      val v = DenseVector(z)
-      S += v * v.t
-    }
-    val q = DenseMatrix.tabulate(sz, sz)((i, j) =>
-      (if (i == j) 1.0 else 0.0) - 1.0 / sz)
-    val m = q.t * S * q
-    val es = eigSym(m)
-    val idx = es.eigenvalues.toArray.zipWithIndex.maxBy(_._1)._2
-    val vec = es.eigenvectors(::, idx).toArray
-    // sign fix: orientation maximizing (Σ aligned members)·µ — the
-    // order-independent form of the reference's Σ‖Xp∓µ‖ comparison
-    // (kshape.py:130-135), shared with DistributedBary.shapeByCluster
-    val xsum = new Array[Double](sz)
-    members.foreach { m2 =>
-      val aligned = Ncc.shiftToAlign(refTs, Kernels.uni(m2.toIndexedSeq: _*))
-      val z = Kernels.scaleMeanVariance(aligned).map(_(0))
-      var i = 0
-      while (i < sz) { xsum(i) += z(i); i += 1 }
-    }
-    val dot = xsum.zip(vec).map { case (a, b) => a * b }.sum
-    val signed = if (dot < 0) vec.map(-_) else vec
-    Kernels.scaleMeanVariance(Kernels.uni(signed.toIndexedSeq: _*)).map(_(0))
   }
 }

@@ -127,11 +127,6 @@ class NonMyopicEarlyClassifier(
       sz
     }
 
-    def predictSingle(xi: Array[Double]): (String, Int) = {
-      val t = predictionTime(xi)
-      (labels(classifyAt(xi, t)), t)
-    }
-
     /** Batch predict: (series_id, decided_at, label, proba) — the
       * class-and-earliness / proba-and-earliness surface
       * (`early_classification.py:401-514`); 1NN proba is one-hot. */

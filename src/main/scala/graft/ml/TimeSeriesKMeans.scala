@@ -37,21 +37,7 @@ class TimeSeriesKMeans(
     // solver); "gd" = barycenterMaxIter fixed-η GD steps from the current
     // center — the deterministic, SQL-replayable variant (ts_kmeans_softdtw)
     val barycenterSolver: String = "lbfgs",
-    val barycenterEta: Double = 0.05,
-    // dtw-metric Lloyd update route: false = barycenterMaxIter
-    // distributed aggregation rounds (the default and oracle path, no
-    // task ever holds a cluster); true = the partition-local shortcut
-    // (one shuffle + local DBA per cluster — iters× fewer jobs; the
-    // caller asserts every cluster fits a task)
-    val localDba: Boolean = false,
-    // DBA inner-loop early-stop tolerance, passed to BOTH dtw update
-    // routes. The two routes apply it differently (dbaByCluster stops on
-    // the GLOBAL summed cost, dbaByClusterLocal per cluster), so the
-    // documented route-parity condition is barycenterTol <= 0 (run all
-    // barycenterMaxIter rounds) — with a positive tol the routes can
-    // genuinely diverge mid-fit. Before this knob existed both routes
-    // hardcoded 1e-5 and the parity condition was unreachable from here.
-    val barycenterTol: Double = 1e-5) extends Serializable {
+    val barycenterEta: Double = 0.05) extends Serializable {
 
   require(Seq("euclidean", "dtw", "softdtw").contains(metric), s"bad metric $metric")
   // "k-means++" = the reference's RNG over a driver sample;
@@ -101,12 +87,28 @@ class TimeSeriesKMeans(
       .as[(Long, Array[Double])]
       .localCheckpoint()
     val n = data0.count()
-    require(n >= k, s"need at least k=$k series, got $n")
     // iterative passes: size partitions to the data (~10k series each) so
     // each of the maxIter·nInit jobs pays for aggregation, not for
     // scheduling near-empty tasks
     val nPart = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 10000).toInt)
     val data = data0.repartition(nPart).cache()
+    // released however the fit ends, a failed restart included
+    try fitCached(data0, data, n)
+    finally {
+      data.unpersist()
+      // a local checkpoint is not in the cache manager, so
+      // Dataset.unpersist would leave its blocks to the ContextCleaner
+      data0.queryExecution.logical.collect {
+        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
+      }.foreach(_.unpersist(blocking = false))
+    }
+  }
+
+  private def fitCached(data0: Dataset[(Long, Array[Double])],
+                        data: Dataset[(Long, Array[Double])], n: Long): Model = {
+    val spark = data.sparkSession
+    import spark.implicits._
+    require(n >= k, s"need at least k=$k series, got $n")
     val sampleCap = 10000
     // lazy: the sample collect is one full job that init="first" fits
     // only ever need on an empty-cluster reseed (rare) — k-means++ inits
@@ -162,31 +164,28 @@ class TimeSeriesKMeans(
         // because the update pass below may run several jobs over it
         val assigned = TimeSeriesKMeans.assignDs(data, centroids, metric, gamma)
           .map(t => (t._2, t._3, t._4)).cache()
-        // restart ranking (nInit > 1, tol < 0) only ever reads the LAST
-        // iteration's inertia — skip the per-iteration reduce job until
-        // then (same value the full per-iteration sequence would leave)
-        if (tol >= 0 || (needInertia && iter == maxIter - 1))
-          inertia = assigned.map(r => r._2 * r._2).reduce(_ + _) / n
-        // update: distributed fixed-size-buffer aggregations — no task
-        // ever holds a whole cluster (DistributedBary scaladoc)
-        val rows = assigned.map(t => (t._1, t._3))
-        val updated: Map[Int, Array[Double]] = metric match {
-          case "dtw" if localDba =>
-            DistributedBary.dbaByClusterLocal(rows, centroids, barycenterMaxIter,
-              tol = barycenterTol)
-          case "dtw" =>
-            DistributedBary.dbaByCluster(rows, centroids, barycenterMaxIter,
-              tol = barycenterTol)
-          case "softdtw" if barycenterSolver == "gd" =>
-            DistributedBary.softDtwGdByCluster(rows, centroids, gamma,
-              barycenterEta, barycenterMaxIter)
-          case "softdtw" =>
-            DistributedBary.softDtwByCluster(rows,
-              centroids.indices.map(c => c -> centroids(c).length).toMap,
-              gamma, barycenterMaxIter)
-          case _ => DistributedBary.meanByCluster(rows)
-        }
-        assigned.unpersist()
+        val updated: Map[Int, Array[Double]] = try {
+          // restart ranking (nInit > 1, tol < 0) only ever reads the LAST
+          // iteration's inertia — skip the per-iteration reduce job until
+          // then (same value the full per-iteration sequence would leave)
+          if (tol >= 0 || (needInertia && iter == maxIter - 1))
+            inertia = assigned.map(r => r._2 * r._2).reduce(_ + _) / n
+          // update: distributed fixed-size-buffer aggregations — no task
+          // ever holds a whole cluster (DistributedBary scaladoc)
+          val rows = assigned.map(t => (t._1, t._3))
+          metric match {
+            case "dtw" =>
+              DistributedBary.dbaByCluster(rows, centroids, barycenterMaxIter)
+            case "softdtw" if barycenterSolver == "gd" =>
+              DistributedBary.softDtwGdByCluster(rows, centroids, gamma,
+                barycenterEta, barycenterMaxIter)
+            case "softdtw" =>
+              DistributedBary.softDtwByCluster(rows,
+                centroids.indices.map(c => c -> centroids(c).length).toMap,
+                gamma, barycenterMaxIter)
+            case _ => DistributedBary.meanByCluster(rows)
+          }
+        } finally assigned.unpersist()
         // empty-cluster retry: reseed from a random sample member
         // (reference raises EmptyClusterError and restarts; reseeding is
         // the deterministic-seed equivalent, `clustering/utils.py:13-33`)
@@ -215,18 +214,16 @@ class TimeSeriesKMeans(
         val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(nInit, 3))
         implicit val ec: scala.concurrent.ExecutionContext =
           scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            (0 until nInit).map(a => scala.concurrent.Future(runAttempt(a)))),
-          scala.concurrent.duration.Duration.Inf)
+        val attempts = (0 until nInit).map(a => scala.concurrent.Future(runAttempt(a)))
+        // every attempt settles before the first failure (in attempt
+        // order) is rethrown, so no sibling's jobs outlive the fit
+        try attempts.map(f => scala.concurrent.Await
+            .ready(f, scala.concurrent.duration.Duration.Inf).value.get).map(_.get)
         finally pool.shutdown()
       }
     // strict < on inertia in attempt order — the EXACT sequential best-model
     // fold (first minimum wins; NaN never displaces an earlier model)
-    val best = models.reduceLeft((b, m) => if (m.inertia < b.inertia) m else b)
-    data.unpersist()
-    data0.unpersist()
-    best
+    models.reduceLeft((b, m) => if (m.inertia < b.inertia) m else b)
   }
 }
 

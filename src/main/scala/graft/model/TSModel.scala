@@ -191,9 +191,6 @@ object TSModel {
     df
   }
 
-  def asMultivariate(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    transform(c, v => array(v))
-
   /** sklearn-style flat matrix view of a multivariate series column:
     * (sz, d) → one ARRAY<DOUBLE> of length sz·d, time-major —
     * `to_sklearn_dataset` (`/root/reference/tslearn/utils/cast.py:15-56`).
@@ -206,17 +203,6 @@ object TSModel {
   def fromSklearnFlat(flat: org.apache.spark.sql.Column, d: Int): org.apache.spark.sql.Column =
     transform(sequence(lit(0), (size(flat) / d).cast("int") - 1),
       t => slice(flat, t * d + 1, lit(d)))
-
-  /** Exploded long form: (series_id, t, value) from a nested univariate
-    * series column. */
-  def explodeSeries(df: DataFrame, seriesCol: String = "values"): DataFrame =
-    df.select(col("series_id"), posexplode(col(seriesCol)).as(Seq("t", "value")))
-
-  /** Long form back to nested: one shuffle, sort-in-group. */
-  def collectSeries(df: DataFrame): DataFrame =
-    df.groupBy("series_id").agg(
-      transform(array_sort(collect_list(struct(col("t"), col("value")))),
-        x => x.getField("value")).as("values"))
 
   /** tslearn text codec: dims joined by `|`, values by space —
     * `/root/reference/tslearn/utils/utils.py:219-291`. One series per line. */

@@ -139,28 +139,9 @@ object TextAnalysis {
       .select(col("doc_id"), col("source"), col("rank"), col("t").as("target"))
   }
 
-  /** Hashed bag-of-words features — the fasttext-style representation
-    * behind learned quality filters: bucket = portableHash(word) mod d,
-    * feature vector = per-bucket counts. Both stages are native
-    * single-pass expressions (guide §4: the former
-    * transform(split(lower)) + per-bucket size(filter(...)) HOF chain
-    * was O(d·words) of interpreted lambda dispatch per row and forced
-    * a two-select attribute split so Catalyst would not inline the
-    * bucket array into the histogram lambdas — the fused expressions
-    * are value- and order-identical, so every oracle is unchanged). */
-  def hashedBowBuckets(text: Column, d: Int): Column =
-    graft.functions.NativeExpressions.wordBucketsNative(text, d)
-
   /** Fused text → d-bucket count histogram, one pass over the bytes. */
   def hashedBow(text: Column, d: Int): Column =
     graft.functions.NativeExpressions.hashedBowNative(text, d)
-
-  /** Stage 2: d-bucket count histogram from an attribute of buckets.
-    * Kept for callers that need BOTH the per-word buckets and the
-    * histogram; text-only callers should use [[hashedBow]]. */
-  def hashedBowFromBuckets(buckets: Column, d: Int): Column =
-    transform(sequence(lit(0), lit(d - 1)),
-      b => size(filter(buckets, x => x === b)).cast("double"))
 
   /** One logistic-regression gradient step for a learned quality filter
     * over hashed bag-of-words features — the distributed training unit

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalSpark
 import graft.operators.Ann
 
 /** VERDICT r11 item 5 — the similarity-search family's 100 TB
@@ -51,13 +52,7 @@ object AnnProbe {
     // point. Queries follow the same mass law.
     val shape = if (args.length > 6) args(6) else "uniform"
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     import spark.implicits._
 
     // clustered corpus: vec = center(id % centers) + 0.8 * noise(id) —
@@ -89,9 +84,7 @@ object AnnProbe {
       .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).toSet }
 
     def timed[T](label: String)(f: => T): (T, Double) = {
-      val t0 = System.nanoTime()
-      val r = f
-      val w = (System.nanoTime() - t0) / 1e9
+      val (r, w) = LocalSpark.timed(f)
       System.err.println(f"[annprobe] $label: $w%.1f s")
       (r, w)
     }

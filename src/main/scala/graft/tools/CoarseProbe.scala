@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalSpark
 import graft.operators.Ann
 
 /** VERDICT r14 #1 — measure the distributed coarse trainer past the
@@ -40,13 +41,7 @@ object CoarseProbe {
     val d = 64
     val centers = 1024
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     import spark.implicits._
 
     // same clustered family as AnnProbe: vec = center(id % centers) + 0.8·noise(id)
@@ -62,9 +57,7 @@ object CoarseProbe {
       .getOrElse(-1.0)
     def timed[T](label: String)(f: => T): (T, Double) = {
       System.err.println(f"[coarse] $label starting (loadavg ${loadavg()}%.2f)")
-      val t0 = System.nanoTime()
-      val r = f
-      val w = (System.nanoTime() - t0) / 1e9
+      val (r, w) = LocalSpark.timed(f)
       System.err.println(f"[coarse] $label: $w%.1f s")
       (r, w)
     }

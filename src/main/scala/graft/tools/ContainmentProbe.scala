@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.LocalSpark
 import graft.operators.Dedup
 
 /** VERDICT r11 item 4: containmentPairsSketched's (sampleMod, slack) →
@@ -19,14 +19,7 @@ object ContainmentProbe {
     val threshold = if (args.length > 1) args(1).toDouble else 0.6
     val repeat = if (args.length > 2) args(2).toInt else 2
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val docs = spark.read.parquet(s"$dir/documents.parquet").localCheckpoint()
     val nDocs = docs.count()
@@ -34,9 +27,7 @@ object ContainmentProbe {
 
     var wExact = Double.PositiveInfinity
     (1 to repeat).foreach { r =>
-      val t0 = System.nanoTime()
-      val n = Dedup.containmentPairs(docs, threshold).count()
-      val w = (System.nanoTime() - t0) / 1e9
+      val (n, w) = LocalSpark.timed(Dedup.containmentPairs(docs, threshold).count())
       wExact = math.min(wExact, w)
       System.err.println(f"[containmentprobe] exact run $r: $w%.2f s pairs=$n")
     }
@@ -47,13 +38,8 @@ object ContainmentProbe {
 
     val rows = for (mod <- sys.env.getOrElse("CONT_MODS", "4,8,16").split(",").map(_.toInt).toSeq;
                      slack <- sys.env.getOrElse("CONT_SLACKS", "0.3,0.5,0.7").split(",").map(_.toDouble).toSeq) yield {
-      var w = Double.PositiveInfinity
-      (1 to repeat).foreach { r =>
-        val t0 = System.nanoTime()
-        Dedup.containmentPairsSketched(docs, threshold,
-          sampleMod = mod, slack = slack).count()
-        w = math.min(w, (System.nanoTime() - t0) / 1e9)
-      }
+      val w = (1 to repeat).map(_ => LocalSpark.timed(Dedup.containmentPairsSketched(
+        docs, threshold, sampleMod = mod, slack = slack).count())._2).min
       val got = Dedup.containmentPairsSketched(docs, threshold,
           sampleMod = mod, slack = slack)
         .select("doc_a", "doc_b").collect()

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.LocalSpark
 import graft.operators.Dedup
 
 /** VERDICT r11 item 2: emb_dedup_cosine is the suite's steepest sf1
@@ -28,14 +29,7 @@ object CosineProbe {
     val nlist = if (args.length > 5) args(5).toInt else 32
     val nprobe = if (args.length > 6) args(6).toInt else 2
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     val base = spark.read.parquet(s"$dir/embeddings.parquet")
     val shift = math.pow(10, math.ceil(math.log10(
@@ -50,9 +44,8 @@ object CosineProbe {
       var best = Double.PositiveInfinity
       var rows = -1L
       (1 to repeat).foreach { r =>
-        val t0 = System.nanoTime()
-        rows = f().count()
-        val w = (System.nanoTime() - t0) / 1e9
+        val (n, w) = LocalSpark.timed(f().count())
+        rows = n
         best = math.min(best, w)
         System.err.println(f"[cosineprobe] $label run $r: $w%.2f s pairs=$rows")
       }

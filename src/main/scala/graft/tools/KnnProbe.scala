@@ -1,7 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import graft.LocalSpark
 import graft.functions.TsFunctions
 import graft.model.TSModel
 import graft.operators.Cdist
@@ -31,15 +31,7 @@ object KnnProbe {
     val blocks = if (args.length > 4) args(4).toInt else 16
     val repeat = if (args.length > 5) args(5).toInt else 2
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
     TsFunctions.register(spark)
 
     val series = TSModel.eventsToSeries(spark, dir)
@@ -52,9 +44,7 @@ object KnnProbe {
     def time(label: String, f: () => Long): Double = {
       var best = Double.PositiveInfinity
       (1 to repeat).foreach { r =>
-        val t0 = System.nanoTime()
-        val rows = f()
-        val w = (System.nanoTime() - t0) / 1e9
+        val (rows, w) = LocalSpark.timed(f())
         best = math.min(best, w)
         System.err.println(f"[knnprobe] $label run $r: $w%.2f s rows=$rows")
       }

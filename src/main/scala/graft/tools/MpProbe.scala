@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.LocalSpark
 
 /** Dev-only probe (not part of the driver contract): walls and ns/cell
   * of the distributed long-series matrix profile
@@ -13,13 +13,7 @@ import org.apache.spark.sql.SparkSession
   */
 object MpProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     def walk(n: Int, seed: Long): Array[Double] = {
       val rng = new scala.util.Random(seed)
@@ -30,19 +24,14 @@ object MpProbe {
       ts
     }
 
-    def time[T](f: => T): (T, Double) = {
-      val t0 = System.nanoTime(); val r = f
-      (r, (System.nanoTime() - t0) / 1e9)
-    }
-
     // SPARK_GRAFT_MP_TILED_ONLY=1 skips the parity + broadcast sections
     val tiledOnly = sys.env.get("SPARK_GRAFT_MP_TILED_ONLY").contains("1")
     // ---- parity vs the local kernel at a kernel-feasible size ----
     if (!tiledOnly) {
       val n = 8192; val m = 64
       val ts = walk(n + m - 1, 7L)
-      val (local, tLoc) = time(graft.kernels.Kernels.matrixProfile(ts, m))
-      val (dist, tDist) = time {
+      val (local, tLoc) = LocalSpark.timed(graft.kernels.Kernels.matrixProfile(ts, m))
+      val (dist, tDist) = LocalSpark.timed {
         graft.operators.MatrixProfileDist.matrixProfile(spark, ts, m, blockSize = 1024)
           .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
       }
@@ -58,8 +47,8 @@ object MpProbe {
       val ts = walk(n + m - 1, 11L)
       def run(): Long = graft.operators.MatrixProfileDist
         .matrixProfile(spark, ts, m, blockSize = bs).count()
-      val (_, t1) = time(run())
-      val (cnt, t2) = time(run())
+      val (_, t1) = LocalSpark.timed(run())
+      val (cnt, t2) = LocalSpark.timed(run())
       val wall = math.min(t1, t2)
       val cells = n.toLong * n / 2
       println(f"[mpprobe] n=$n%,d m=$m block=$bs: wall=$wall%.2f s " +
@@ -76,7 +65,7 @@ object MpProbe {
         .map { case (v, i) => (i.toLong, v) }).toDF("idx", "v")
         .repartition(32).cache()
       df.count()
-      val (tiles, tT) = time {
+      val (tiles, tT) = LocalSpark.timed {
         graft.operators.MatrixProfileDist.matrixProfileTiled(spark, df, m, blockSize = 1024)
           .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       }
@@ -103,7 +92,7 @@ object MpProbe {
       var wall = Double.PositiveInfinity
       var cnt = 0L
       val walls = (1 to rep).map { _ =>
-        val (c, t) = time(run()); cnt = c; wall = math.min(wall, t); t }
+        val (c, t) = LocalSpark.timed(run()); cnt = c; wall = math.min(wall, t); t }
       val (t1, t2) = (walls.head, walls.last)
       val cells = n.toLong * n / 2
       val nb = (n + bs - 1) / bs
@@ -136,7 +125,7 @@ object MpProbe {
         val gFrom = band + c * w
         val gTo = math.min(band + (c + 1) * w, n - 1)
         if (gFrom < n - 1) {
-          val (cnt, t) = time {
+          val (cnt, t) = LocalSpark.timed {
             graft.operators.MatrixProfileDist
               .matrixProfileDiagBand(spark, series, m, gFrom, gTo, blockSize = bs).count()
           }
@@ -187,7 +176,7 @@ object MpProbe {
       val series = spark.range(0L, n + m - 1, 1L, parts).select(col("id").as("idx"),
         (sin(col("id").cast("double") * 0.0007) +
           (pmod(hash(col("id")).cast("double"), lit(1000.0)) - 500.0) / 2500.0).as("v"))
-      val (seg0, tSeg) = time {
+      val (seg0, tSeg) = LocalSpark.timed {
         graft.operators.MatrixProfileDist.segmentSeries(spark, series, m, blockSize = bs)
       }
       println(f"[mpprobe] chunkseg n=$n%,d segmentSeries plan: $tSeg%.2f s (lazy — first chunk materializes)")
@@ -196,7 +185,7 @@ object MpProbe {
         val gFrom = band + c * w
         val gTo = math.min(band + (c + 1) * w, n - 1)
         if (gFrom < n - 1) {
-          val (cnt, t) = time {
+          val (cnt, t) = LocalSpark.timed {
             graft.operators.MatrixProfileDist
               .matrixProfileDiagBand(spark, seg, gFrom, gTo).count()
           }
@@ -208,7 +197,7 @@ object MpProbe {
         } else println(s"[mpprobe] chunkseg $c skipped: gFrom=$gFrom >= ${n - 1} (empty band)")
         if (viaParquet && c == 0) {
           val pqPath = sys.env.getOrElse("SPARK_GRAFT_MP_SEG_DIR", "/tmp/mpprobe_segs")
-          val (_, tW) = time { seg.segs.write.mode("overwrite").parquet(pqPath) }
+          val (_, tW) = LocalSpark.timed { seg.segs.write.mode("overwrite").parquet(pqPath) }
           seg.unpersist()
           val reloaded = spark.read.parquet(pqPath)
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -247,7 +236,7 @@ object MpProbe {
       (0 until 2).foreach { c =>
         val gFrom = band + c * w
         val gTo = math.min(band + (c + 1) * w, n - 1)
-        val (_, t) = time {
+        val (_, t) = LocalSpark.timed {
           graft.operators.MatrixProfileDist
             .matrixProfileDiagBand(spark, seg, gFrom, gTo)
             .write.mode("overwrite").parquet(s"$dir/chunk$c")
@@ -255,7 +244,7 @@ object MpProbe {
         println(f"[mpprobe] fold-prep chunk$c g=($gFrom,$gTo]: sweep+write $t%.2f s")
       }
       seg.unpersist()
-      val (folded, tF) = time {
+      val (folded, tF) = LocalSpark.timed {
         spark.read.parquet(s"$dir/chunk0")
           .unionByName(spark.read.parquet(s"$dir/chunk1"))
           .groupBy("i").agg(min(col("mp")).as("mp"))

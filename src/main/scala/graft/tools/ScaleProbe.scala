@@ -2,6 +2,7 @@ package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.LocalSpark
 
 /** sf-scale readiness probe (VERDICT r5 item 9): the engine has only
   * ever been measured on ≤17 MB of input, so "would survive 100 TB" was
@@ -43,15 +44,7 @@ object ScaleProbe {
       "knn_dtw_users", "ts_kmeans_iter")
     val queries = if (args.length > 3) args.drop(3).toSeq else defaultQueries
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
 
     /** Replicate df `factor`× shifting `idCols` into disjoint ranges.
       * The shift constant is a power of ten above the source max id so
@@ -145,9 +138,10 @@ object ScaleProbe {
         var best = Double.PositiveInfinity
         var n = -1L
         (1 to probeRepeat).foreach { _ =>
-          val t0 = System.nanoTime()
-          n = scala.util.Try(fn(spark, dir).count()).getOrElse(-1L)
-          best = math.min(best, (System.nanoTime() - t0) / 1e9)
+          val (rows, w) = LocalSpark.timed(
+            scala.util.Try(fn(spark, dir).count()).getOrElse(-1L))
+          n = rows
+          best = math.min(best, w)
         }
         System.err.println(f"[probe] f=$f $name%-24s $best%8.2f s  rows=$n")
         name -> best

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
+import graft.LocalSpark
 import graft.streaming.StreamingOps
 
 /** VERDICT r12 #4 / r13 #4 — the RocksDB soak at REAL state size.
@@ -35,15 +35,9 @@ object StateSoakProbe {
     val nBatches = if (args.length > 0) args(0).toInt else 280
     val docsPerBatch = if (args.length > 1) args(1).toInt else 300
 
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSpark.session()
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
 

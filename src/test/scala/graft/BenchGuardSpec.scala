@@ -39,29 +39,50 @@ class BenchGuardSpec extends AnyFunSuite {
   }
 
   test("record routing: only a clean full-set canonical-core run may touch the canonical (VERDICT r17 #2/#3)") {
+    // only the canonical holds a clean record on disk
+    val canonClean = Set("BENCH_LOCAL.json")
+    val noneClean = Set.empty[String]
     // clean full run on canonical cores -> canonical
-    assert(Bench.targetFor(subsetRun = false, cpus = "32", canonCpus = "32",
-      loadWarn = false, cleanOnDisk = true) == "BENCH_LOCAL.json")
+    assert(Bench.targetFor(subsetRun = false, cpus = 32, canonCpus = 32,
+      loadWarn = false, cleanOnDisk = canonClean) == "BENCH_LOCAL.json")
     // a CLEAN subset run must never clobber the canonical (the r17 failure)
-    assert(Bench.targetFor(subsetRun = true, cpus = "32", canonCpus = "32",
-      loadWarn = false, cleanOnDisk = true) == "BENCH_LOCAL_SUBSET.json")
+    assert(Bench.targetFor(subsetRun = true, cpus = 32, canonCpus = 32,
+      loadWarn = false, cleanOnDisk = canonClean) == "BENCH_LOCAL_SUBSET.json")
     // the driver's clean 8-core scaling run goes to a core-stamped side file
-    assert(Bench.targetFor(subsetRun = false, cpus = "8", canonCpus = "32",
-      loadWarn = false, cleanOnDisk = true) == "BENCH_LOCAL_C8.json")
+    assert(Bench.targetFor(subsetRun = false, cpus = 8, canonCpus = 32,
+      loadWarn = false, cleanOnDisk = canonClean) == "BENCH_LOCAL_C8.json")
     // load-warned full run on canonical cores with a clean canonical on disk
-    assert(Bench.targetFor(subsetRun = false, cpus = "32", canonCpus = "32",
-      loadWarn = true, cleanOnDisk = true) == "BENCH_LOCAL_DIRTY.json")
+    assert(Bench.targetFor(subsetRun = false, cpus = 32, canonCpus = 32,
+      loadWarn = true, cleanOnDisk = canonClean) == "BENCH_LOCAL_DIRTY.json")
     // ... but when no clean canonical exists, a warned run may still seed it
-    assert(Bench.targetFor(subsetRun = false, cpus = "32", canonCpus = "32",
-      loadWarn = true, cleanOnDisk = false) == "BENCH_LOCAL.json")
+    assert(Bench.targetFor(subsetRun = false, cpus = 32, canonCpus = 32,
+      loadWarn = true, cleanOnDisk = noneClean) == "BENCH_LOCAL.json")
     // subset beats every other rule (even load-warned non-canonical cores)
-    assert(Bench.targetFor(subsetRun = true, cpus = "8", canonCpus = "32",
-      loadWarn = true, cleanOnDisk = true) == "BENCH_LOCAL_SUBSET.json")
+    assert(Bench.targetFor(subsetRun = true, cpus = 8, canonCpus = 32,
+      loadWarn = true, cleanOnDisk = canonClean) == "BENCH_LOCAL_SUBSET.json")
     // a full run over a NON-CANONICAL corpus (an sf1 scratch dir) must not
     // clobber the sf0.1 canonical either — the r18 variant of the clobber
-    assert(Bench.targetFor(subsetRun = false, cpus = "32", canonCpus = "32",
-      loadWarn = false, cleanOnDisk = true, sfIsCanon = false)
+    assert(Bench.targetFor(subsetRun = false, cpus = 32, canonCpus = 32,
+      loadWarn = false, cleanOnDisk = canonClean, sfIsCanon = false)
       == "BENCH_LOCAL_ALTSF.json")
+  }
+
+  test("record routing: a load-warned run never replaces a clean side record") {
+    val sideClean = Set("BENCH_LOCAL_C8.json", "BENCH_LOCAL_SUBSET.json",
+      "BENCH_LOCAL_ALTSF.json")
+    // every side target gets the same _DIRTY diversion as the canonical
+    assert(Bench.targetFor(subsetRun = false, cpus = 8, canonCpus = 32,
+      loadWarn = true, cleanOnDisk = sideClean) == "BENCH_LOCAL_C8_DIRTY.json")
+    assert(Bench.targetFor(subsetRun = true, cpus = 32, canonCpus = 32,
+      loadWarn = true, cleanOnDisk = sideClean) == "BENCH_LOCAL_SUBSET_DIRTY.json")
+    assert(Bench.targetFor(subsetRun = false, cpus = 32, canonCpus = 32,
+      loadWarn = true, cleanOnDisk = sideClean, sfIsCanon = false)
+      == "BENCH_LOCAL_ALTSF_DIRTY.json")
+    // a clean run, or a warned run over a dirty/missing record, keeps the target
+    assert(Bench.targetFor(subsetRun = false, cpus = 8, canonCpus = 32,
+      loadWarn = false, cleanOnDisk = sideClean) == "BENCH_LOCAL_C8.json")
+    assert(Bench.targetFor(subsetRun = false, cpus = 4, canonCpus = 32,
+      loadWarn = true, cleanOnDisk = sideClean) == "BENCH_LOCAL_C4.json")
   }
 
   test("per-query repeat divergence (VERDICT r16 #2)") {

@@ -268,51 +268,28 @@ class ClusteringSpec extends AnyFunSuite {
       byTrue.flatten.toSet.size == 3, s"clusters mixed: ${assigned.toSeq}")
   }
 
-  test("dbaByClusterLocal == dbaByCluster at fixed iterations (the §7.4 shortcut)") {
-    // same update rule, one shuffle + local loop instead of iters
-    // distributed rounds; parity to summation-order tolerance. tol < 0
-    // pins both paths to exactly `iters` iterations (the stopping rule
-    // is global-cost in the distributed path, per-cluster locally).
+  test("dbaByCluster matches the local Barycenters.dba per cluster at fixed iterations") {
+    // the distributed MM update (one DbaStepAgg pass per iteration, no
+    // task holding a cluster) against the local reference loop; tol = -inf
+    // pins both to exactly `iters` iterations, so only the summation order
+    // of the per-timestep sums differs
     import graft.ml.DistributedBary
+    import graft.kernels.{Barycenters, Kernels}
     val rng = new scala.util.Random(11)
     def series(c: Int) = Array.tabulate(16)(t =>
       math.sin(0.3 * t + c) + 0.2 * rng.nextGaussian())
-    val rows = spark.createDataset(
-      (0 until 60).map(i => (i % 3, series(i % 3))))
+    val members = (0 until 60).map(i => (i % 3, series(i % 3)))
     val init = Array.tabulate(3)(c => Array.tabulate(16)(t => math.sin(0.3 * t + c)))
-    val dist = DistributedBary.dbaByCluster(rows, init.map(_.clone()),
-      iters = 5, tol = Double.NegativeInfinity)
-    val local = DistributedBary.dbaByClusterLocal(rows, init.map(_.clone()),
-      iters = 5, tol = Double.NegativeInfinity)
-    assert(dist.keySet == local.keySet)
+    val dist = DistributedBary.dbaByCluster(spark.createDataset(members),
+      init.map(_.clone()), iters = 5, tol = Double.NegativeInfinity)
+    assert(dist.keySet == Set(0, 1, 2))
     dist.foreach { case (cid, c) =>
-      val l = local(cid)
-      assert(c.length == l.length)
-      c.indices.foreach(t => assert(math.abs(c(t) - l(t)) < 1e-9,
-        s"cluster $cid t=$t: ${c(t)} vs ${l(t)}"))
-    }
-  }
-
-  test("kmeans localDba route parity is reachable via barycenterTol <= 0") {
-    // ADVICE r12: localDba=true used the local route's default tol=1e-5
-    // (per-cluster early stop) while the default route stops on global
-    // summed cost — the documented parity condition (tol <= 0) was
-    // unreachable through the kmeans API. barycenterTol plumbs it: at
-    // barycenterTol = -inf both routes run exactly barycenterMaxIter
-    // rounds and the full FIT traces must agree.
-    val rng = new scala.util.Random(13)
-    def series(c: Int) = Array.tabulate(16)(t =>
-      math.sin(0.4 * t + 2 * c) + 0.2 * rng.nextGaussian())
-    val df = (0 until 30).map(i => (i.toLong, series(i % 2)))
-      .toDF("series_id", "values")
-    def fit(local: Boolean) = new graft.ml.TimeSeriesKMeans(k = 2, metric = "dtw",
-      maxIter = 2, nInit = 1, init = "first", barycenterMaxIter = 3,
-      localDba = local, barycenterTol = Double.NegativeInfinity).fit(df)
-    val a = fit(local = false)
-    val b = fit(local = true)
-    a.centroids.zip(b.centroids).foreach { case (ca, cb) =>
-      ca.indices.foreach(t => assert(math.abs(ca(t) - cb(t)) < 1e-9,
-        s"route centroids diverge at t=$t: ${ca(t)} vs ${cb(t)}"))
+      val ref = Barycenters.dba(members.filter(_._1 == cid).map(m => Kernels.uni(m._2)),
+        barycenterSize = 16, maxIter = 5, tol = Double.NegativeInfinity,
+        init = Kernels.uni(init(cid))).map(_(0))
+      assert(c.length == ref.length)
+      c.indices.foreach(t => assert(math.abs(c(t) - ref(t)) < 1e-9,
+        s"cluster $cid t=$t: ${c(t)} vs ${ref(t)}"))
     }
   }
 
