@@ -3606,7 +3606,7 @@ object SparkEntry {
     // MATERIALIZED: DuckDB inlines single-reference CTEs, and the
     // a/c chain would re-inline the whole resample pipeline into every
     // iteration layer (measured 560 s vs ~1 s for the 10-step trace).
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kmeans_dtw — the metric="dtw" Lloyd fit
@@ -3632,31 +3632,8 @@ object SparkEntry {
            |  SELECT rr.user_id, b.c, b.i, rr.j,
            |    (b.bv - rr.val) * (b.bv - rr.val) AS d
            |  FROM rr JOIN b$it b ON TRUE
-           |), a${it}x0 AS (
-           |  SELECT user_id, c, j,
-           |    sum(d) OVER (PARTITION BY user_id, c ORDER BY j) AS cost
-           |  FROM loc$it WHERE i = 0
            |)""".stripMargin
-      for (i <- 1 until sz) {
-        sb ++=
-          s"""
-             |, a${it}x$i AS (
-             |  SELECT user_id, c, j, cs + mn AS cost FROM (
-             |    SELECT user_id, c, j, cs,
-             |      min(mk - csk) OVER (PARTITION BY user_id, c ORDER BY j) AS mn
-             |    FROM (
-             |      SELECT l.user_id, l.c, l.j,
-             |        sum(l.d) OVER (PARTITION BY l.user_id, l.c ORDER BY l.j) AS cs,
-             |        sum(l.d) OVER (PARTITION BY l.user_id, l.c ORDER BY l.j) - l.d AS csk,
-             |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-             |      FROM loc$it l
-             |      LEFT JOIN a${it}x${i - 1} pk
-             |        ON pk.user_id = l.user_id AND pk.c = l.c AND pk.j = l.j
-             |      LEFT JOIN a${it}x${i - 1} pk1
-             |        ON pk1.user_id = l.user_id AND pk1.c = l.c AND pk1.j = l.j - 1
-             |      WHERE l.i = $i))
-             |)""".stripMargin
-      }
+      sb ++= minPlusChainCtes(Seq("user_id", "c"), s"loc$it", s"a${it}x", sz)
       sb ++= s"\n, asg$it AS (\n" +
         s"  SELECT user_id, c FROM (\n" +
         s"    SELECT user_id, c,\n" +
@@ -3706,7 +3683,7 @@ object SparkEntry {
          |  round(sqrt(x.cost), 4) + 0.0 AS dist
          |FROM asg$iters a
          |JOIN a${iters}x$last x ON x.user_id = a.user_id AND x.c = a.c AND x.j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (path\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -3770,7 +3747,7 @@ object SparkEntry {
          |${predictSql(0)}
          |UNION ALL
          |${predictSql(1)}""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_early_classify — the per-t nearest-centroid
@@ -3857,31 +3834,8 @@ object SparkEntry {
          |  JOIN r rp ON rp.user_id = c.pr
          |  JOIN r rc ON rc.user_id = c.cd
          |    AND rc.j BETWEEN rp.j - $radius AND rp.j + $radius
-         |), t0 AS (
-         |  SELECT pr, cd, j,
-         |    sum(d) OVER (PARTITION BY pr, cd ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin
-    for (i <- 1 until sz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, cd, j, cs + mn AS cost FROM (
-           |    SELECT pr, cd, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr, cd ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.cd, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk
-           |        ON pk.pr = l.pr AND pk.cd = l.cd AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1
-           |        ON pk1.pr = l.pr AND pk1.cd = l.cd AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr", "cd"), "loc", "t", sz)
     sb ++=
       s"""
          |, dtw AS (
@@ -3892,11 +3846,7 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY pr ORDER BY dist, cd) AS rn
          |  FROM dtw)
          |WHERE pr <> cd AND rn <= $keep""".stripMargin
-    // MATERIALIZED on every CTE: DuckDB inlines CTEs by default, and each
-    // DP step references its predecessor twice — inlining would expand
-    // the 32-step chain into an exponential tree of events.parquet scans
-    // ("Too many open files" long before any result).
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_dtw_mv_pairs: build the d=2 (value, Δt)
@@ -3932,28 +3882,8 @@ object SparkEntry {
            |, locC$k AS (
            |  SELECT a.pr, a.t AS i, b.t AS j, (a.p - b.p) * (a.p - b.p) AS d
            |  FROM px$k a JOIN py$k b ON b.pr = a.pr
-           |), c${k}x0 AS (
-           |  SELECT pr, j, sum(d) OVER (PARTITION BY pr ORDER BY j) AS cost
-           |  FROM locC$k WHERE i = 0
            |)""".stripMargin
-      for (i <- 1 until sz) {
-        sb ++=
-          s"""
-             |, c${k}x$i AS (
-             |  SELECT pr, j, cs + mn AS cost FROM (
-             |    SELECT pr, j, cs,
-             |      min(mk - csk) OVER (PARTITION BY pr ORDER BY j) AS mn
-             |    FROM (
-             |      SELECT l.pr, l.j,
-             |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) AS cs,
-             |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) - l.d AS csk,
-             |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-             |      FROM locC$k l
-             |      LEFT JOIN c${k}x${i - 1} pk ON pk.pr = l.pr AND pk.j = l.j
-             |      LEFT JOIN c${k}x${i - 1} pk1 ON pk1.pr = l.pr AND pk1.j = l.j - 1
-             |      WHERE l.i = $i))
-             |)""".stripMargin
-      }
+      sb ++= minPlusChainCtes(Seq("pr"), s"locC$k", s"c${k}x", sz)
       sb ++= s"\n, cumc$k AS (\n" +
         (0 until sz).map(i => s"  SELECT pr, $i AS i, j, cost FROM c${k}x$i")
           .mkString("", "\n  UNION ALL\n", "\n)")
@@ -4003,7 +3933,7 @@ object SparkEntry {
       s"""
          |SELECT pr AS user_id, round(sqrt(cost), 4) + 0.0 AS ctw
          |FROM cumc$rounds WHERE i = $last AND j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (pathc\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -4063,28 +3993,8 @@ object SparkEntry {
            |, locC$k AS (
            |  SELECT a.pr, a.t AS i, b.t AS j, (a.p - b.p) * (a.p - b.p) AS d
            |  FROM px$k a JOIN py$k b ON b.pr = a.pr
-           |), c${k}x0 AS (
-           |  SELECT pr, j, sum(d) OVER (PARTITION BY pr ORDER BY j) AS cost
-           |  FROM locC$k WHERE i = 0
            |)""".stripMargin
-      for (i <- 1 until maxSz) {
-        sb ++=
-          s"""
-             |, c${k}x$i AS (
-             |  SELECT pr, j, cs + mn AS cost FROM (
-             |    SELECT pr, j, cs,
-             |      min(mk - csk) OVER (PARTITION BY pr ORDER BY j) AS mn
-             |    FROM (
-             |      SELECT l.pr, l.j,
-             |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) AS cs,
-             |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) - l.d AS csk,
-             |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-             |      FROM locC$k l
-             |      LEFT JOIN c${k}x${i - 1} pk ON pk.pr = l.pr AND pk.j = l.j
-             |      LEFT JOIN c${k}x${i - 1} pk1 ON pk1.pr = l.pr AND pk1.j = l.j - 1
-             |      WHERE l.i = $i))
-             |)""".stripMargin
-      }
+      sb ++= minPlusChainCtes(Seq("pr"), s"locC$k", s"c${k}x", maxSz)
       sb ++= s"\n, cumc$k AS (\n" +
         (0 until maxSz).map(i => s"  SELECT pr, $i AS i, j, cost FROM c${k}x$i")
           .mkString("", "\n  UNION ALL\n", "\n)")
@@ -4167,32 +4077,7 @@ object SparkEntry {
 
     // hard-min DTW row chain over `locName` (pr, cd, i, j, d) → ${p}cum
     def dtwChain(p: String, locName: String): Unit = {
-      sb ++=
-        s"""
-           |, ${p}x0 AS (
-           |  SELECT pr, cd, j, sum(d) OVER (PARTITION BY pr, cd ORDER BY j) AS cost
-           |  FROM $locName WHERE i = 0
-           |)""".stripMargin
-      for (i <- 1 until sz) {
-        sb ++=
-          s"""
-             |, ${p}x$i AS (
-             |  SELECT pr, cd, j, cs + mn AS cost FROM (
-             |    SELECT pr, cd, j, cs,
-             |      min(mk - csk) OVER (PARTITION BY pr, cd ORDER BY j) AS mn
-             |    FROM (
-             |      SELECT l.pr, l.cd, l.j,
-             |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) AS cs,
-             |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) - l.d AS csk,
-             |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-             |      FROM $locName l
-             |      LEFT JOIN ${p}x${i - 1} pk
-             |        ON pk.pr = l.pr AND pk.cd = l.cd AND pk.j = l.j
-             |      LEFT JOIN ${p}x${i - 1} pk1
-             |        ON pk1.pr = l.pr AND pk1.cd = l.cd AND pk1.j = l.j - 1
-             |      WHERE l.i = $i))
-             |)""".stripMargin
-      }
+      sb ++= "\n" + minPlusChainCtes(Seq("pr", "cd"), locName, s"${p}x", sz)
       sb ++= s"\n, ${p}cum AS (\n" +
         (0 until sz).map(i => s"  SELECT pr, cd, $i AS i, j, cost FROM ${p}x$i")
           .mkString("", "\n  UNION ALL\n", "\n)")
@@ -4415,7 +4300,7 @@ object SparkEntry {
          |JOIN sbdf ON sbdf.pr = dd.pr AND sbdf.cd = dd.cd
          |JOIN c${ctwRounds}x$last cc ON cc.pr = dd.pr AND cc.cd = dd.cd AND cc.j = $last
          |WHERE dd.j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (cpath\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -4444,28 +4329,8 @@ object SparkEntry {
          |  SELECT a.user_id AS pr, a.j AS i, b.j AS j,
          |    (a.value - b.value) * (a.value - b.value) AS d
          |  FROM v a JOIN v b ON b.user_id = a.user_id + 1
-         |), t0 AS (
-         |  SELECT pr, j, sum(d) OVER (PARTITION BY pr ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin)
-    for (i <- 1 until maxSz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, j, cs + mn AS cost FROM (
-           |    SELECT pr, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk ON pk.pr = l.pr AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1 ON pk1.pr = l.pr AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr"), "loc", "t", maxSz)
     sb ++= "\n, ans AS (\n  SELECT pr, 0 AS i, j, cost FROM t0"
     for (i <- 1 until maxSz)
       sb ++= s"\n  UNION ALL SELECT pr, $i, j, cost FROM t$i"
@@ -4475,7 +4340,7 @@ object SparkEntry {
          |SELECT u.pr AS user_id, round(sqrt(u.cost), 4) AS dtw
          |FROM ans u JOIN lens ln ON ln.pr = u.pr
          |WHERE u.i = ln.len1 - 1 AND u.j = ln.len2 - 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for knn_dtw_ragged — all ordered pairs of the
@@ -4502,30 +4367,8 @@ object SparkEntry {
          |  SELECT a.user_id AS pr, b.user_id AS cd, a.j AS i, b.j AS j,
          |    (a.value - b.value) * (a.value - b.value) AS d
          |  FROM v a JOIN v b ON b.user_id <> a.user_id
-         |), t0 AS (
-         |  SELECT pr, cd, j, sum(d) OVER (PARTITION BY pr, cd ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin)
-    for (i <- 1 until maxSz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, cd, j, cs + mn AS cost FROM (
-           |    SELECT pr, cd, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr, cd ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.cd, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk
-           |        ON pk.pr = l.pr AND pk.cd = l.cd AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1
-           |        ON pk1.pr = l.pr AND pk1.cd = l.cd AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr", "cd"), "loc", "t", maxSz)
     sb ++= "\n, ans AS (\n  SELECT pr, cd, 0 AS i, j, cost FROM t0"
     for (i <- 1 until maxSz)
       sb ++= s"\n  UNION ALL SELECT pr, cd, $i, j, cost FROM t$i"
@@ -4546,7 +4389,7 @@ object SparkEntry {
          |      ORDER BY round(dist, 4), cd) AS rn
          |  FROM dtw)
          |WHERE pr <> cd AND rn <= $keep AND (SELECT ok FROM guard) = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** d=2 (value, Δt) channel prep shared by the multivariate oracles
@@ -4604,38 +4447,13 @@ object SparkEntry {
          |  SELECT a.user_id AS pr, b.user_id AS cd, a.j AS i, b.j AS j,
          |    (a.x - b.x) * (a.x - b.x) + (a.y - b.y) * (a.y - b.y) AS d
          |  FROM r a JOIN r b ON b.user_id = a.user_id + 1
-         |), t0 AS (
-         |  SELECT pr, cd, j,
-         |    sum(d) OVER (PARTITION BY pr, cd ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin
-    for (i <- 1 until sz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, cd, j, cs + mn AS cost FROM (
-           |    SELECT pr, cd, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr, cd ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.cd, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk
-           |        ON pk.pr = l.pr AND pk.cd = l.cd AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1
-           |        ON pk1.pr = l.pr AND pk1.cd = l.cd AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr", "cd"), "loc", "t", sz)
     sb ++=
       s"""
          |SELECT pr AS user_id, round(sqrt(cost), 4) AS dtw_mv
          |FROM t$last WHERE j = $last""".stripMargin
-    // MATERIALIZED for the same reason as knnDtwOracleSql: each DP step
-    // references its predecessor twice.
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_lcss_pairs: the ε-LCSS DP unrolled as a
@@ -4700,7 +4518,7 @@ object SparkEntry {
       s"""
          |SELECT pr AS user_id, CAST(len AS INT) AS lcss_len
          |FROM t${sz - 1} WHERE j = ${sz - 1}""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_dtw_itakura_pairs: the banded min-plus chain
@@ -4737,36 +4555,13 @@ object SparkEntry {
          |    $dSql AS d
          |  FROM r a JOIN r b ON b.user_id = a.user_id + 1
          |  WHERE $bandSql
-         |), t0 AS (
-         |  SELECT pr, cd, j,
-         |    sum(d) OVER (PARTITION BY pr, cd ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin
-    for (i <- 1 until sz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, cd, j, cs + mn AS cost FROM (
-           |    SELECT pr, cd, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr, cd ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.cd, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk
-           |        ON pk.pr = l.pr AND pk.cd = l.cd AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1
-           |        ON pk1.pr = l.pr AND pk1.cd = l.cd AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr", "cd"), "loc", "t", sz)
     sb ++=
       s"""
          |SELECT pr AS user_id, round($finalExpr, 4) AS dtw
          |FROM t$last WHERE j = $last""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_lcss_path_pairs: the LCSS alignment path
@@ -4838,7 +4633,7 @@ object SparkEntry {
          |JOIN loc m ON m.pr = p.pr AND m.cd = p.cd
          |  AND m.i = p.pi - 1 AND m.j = p.pj - 1
          |WHERE p.pi > 0 AND p.pj > 0 AND m.m = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replace(", path AS MATERIALIZED (", ", path AS (")
   }
 
@@ -4907,7 +4702,7 @@ object SparkEntry {
          |SELECT u.pr AS user_id, CAST(u.len AS INT) AS lcss_len
          |FROM ans u JOIN lens ln ON ln.pr = u.pr
          |WHERE u.i = ln.len1 - 1 AND u.j = ln.len2 - 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_1dsax_pairs (`cysax.pyx:95-124`): per-user
@@ -5044,6 +4839,62 @@ object SparkEntry {
         |JOIN norms nb ON nb.user_id = cc.cd
         |GROUP BY 1""".stripMargin)
 
+  /** Rewrite every CTE header that opens a line (`WITH x AS (`,
+    * `, x AS (`, `), x AS (`) to `x AS MATERIALIZED (`. DuckDB inlines
+    * CTEs by default, and a DP step that references its predecessor
+    * twice would expand an n-step chain into an exponential tree of
+    * parquet scans ("Too many open files" long before any result).
+    * Callers with a recursive CTE turn it back to a plain `AS (`. */
+  private def materialized(sql: String): String =
+    sql.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+
+  /** One min-plus DTW row chain `${t}0..${t}{n-1}` over a cell CTE
+    * `$loc(keys.., i, j, d)`: `${t}i(keys.., j, cost)` holds the
+    * accumulated squared cost of row i (Kernels.dtw's recurrence, with
+    * `d` the local cost). The same-row dependency is solved per row by
+    * the prefix-min identity
+    * new[j] = cs[j] + min_{k<=j}(min(prev[k], prev[k-1]) − cs[k-1])
+    * (cs = running sum of d over the row), two running windows per step.
+    * `freeStart` makes row 0 the raw local cost (subsequence DTW: any
+    * start column is free). The output opens with `, ${t}0 AS (` and no
+    * line break, so after the caller's closing `)` it reads
+    * `), ${t}0 AS (`; every later header is its own `, name AS (` line.
+    * Both forms match [[materialized]]. */
+  private def minPlusChainCtes(keys: Seq[String], loc: String, t: String, n: Int,
+                               freeStart: Boolean = false): String = {
+    val ks = keys.mkString(", ")
+    val lks = keys.map("l." + _).mkString(", ")
+    def on(p: String) = keys.map(k => s"$p.$k = l.$k").mkString(" AND ")
+    val cost0 = if (freeStart) "d" else s"sum(d) OVER (PARTITION BY $ks ORDER BY j)"
+    val sb = new StringBuilder(
+      s""", ${t}0 AS (
+         |  SELECT $ks, j,
+         |    $cost0 AS cost
+         |  FROM $loc WHERE i = 0
+         |)""".stripMargin)
+    for (i <- 1 until n) {
+      sb ++=
+        s"""
+           |, $t$i AS (
+           |  SELECT $ks, j, cs + mn AS cost FROM (
+           |    SELECT $ks, j, cs,
+           |      min(mk - csk) OVER (PARTITION BY $ks ORDER BY j) AS mn
+           |    FROM (
+           |      SELECT $lks, l.j,
+           |        sum(l.d) OVER (PARTITION BY $lks ORDER BY l.j) AS cs,
+           |        sum(l.d) OVER (PARTITION BY $lks ORDER BY l.j) - l.d AS csk,
+           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
+           |      FROM $loc l
+           |      LEFT JOIN $t${i - 1} pk
+           |        ON ${on("pk")} AND pk.j = l.j
+           |      LEFT JOIN $t${i - 1} pk1
+           |        ON ${on("pk1")} AND pk1.j = l.j - 1
+           |      WHERE l.i = $i))
+           |)""".stripMargin
+    }
+    sb.toString
+  }
+
   /** Shared sum-product DP chain for the GAK and soft-DTW oracles. Both
     * kernels satisfy W(i,j) = k(i,j)·(W(i-1,j) + W(i-1,j-1) + W(i,j-1)):
     * GAK directly in its Gram terms (Kernels.logUnnormalizedGak), and
@@ -5140,7 +4991,7 @@ object SparkEntry {
          |  SELECT pr, cd, lw FROM t${sz - 1} WHERE j = ${sz - 1}
          |)
          |$finalSql""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** Ragged variant of [[sumProdChainSql]]: each series is resampled to
@@ -5246,7 +5097,7 @@ object SparkEntry {
          |  WHERE a.i = ln.l1 - 1 AND a.j = ln.l2 - 1
          |)
          |$finalSql""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for cdist_dtw_pairs: unbanded univariate DTW between
@@ -5255,11 +5106,10 @@ object SparkEntry {
     * an all-pairs join, verifying the triangle self-join output. */
   private def cdistDtwOracleSql(sz: Int, maxId: Int): String = {
     val last = sz - 1
-    (cdistDtwChainSql(sz, maxId) +
+    materialized(cdistDtwChainSql(sz, maxId) +
       s"""
          |SELECT pr AS left_id, cd AS right_id, round(sqrt(cost), 4) AS dtw
          |FROM t$last WHERE j = $last""".stripMargin)
-      .replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
   }
 
   /** DuckDB oracle for ts_silhouette_dtw: the cdist DTW triangle chain
@@ -5269,7 +5119,7 @@ object SparkEntry {
     * `clustering/utils.py:66-197`. */
   private def silhouetteDtwOracleSql(sz: Int, maxId: Int): String = {
     val last = sz - 1
-    (cdistDtwChainSql(sz, maxId) +
+    materialized(cdistDtwChainSql(sz, maxId) +
       s"""
          |, pd AS (
          |  SELECT pr, cd, sqrt(cost) AS dist FROM t$last WHERE j = $last
@@ -5295,7 +5145,6 @@ object SparkEntry {
          |  FROM aa JOIN bb ON aa.l = bb.l
          |)
          |SELECT round(avg(s), 4) AS silhouette FROM sil""".stripMargin)
-      .replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
   }
 
   /** Shared all-pairs (a < b triangle) DTW DP chain over the first
@@ -5310,31 +5159,8 @@ object SparkEntry {
          |  SELECT a.user_id AS pr, b.user_id AS cd, a.j AS i, b.j AS j,
          |    (a.val - b.val) * (a.val - b.val) AS d
          |  FROM rs a JOIN rs b ON b.user_id > a.user_id
-         |), t0 AS (
-         |  SELECT pr, cd, j,
-         |    sum(d) OVER (PARTITION BY pr, cd ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin
-    for (i <- 1 until sz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, cd, j, cs + mn AS cost FROM (
-           |    SELECT pr, cd, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr, cd ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.cd, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk
-           |        ON pk.pr = l.pr AND pk.cd = l.cd AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1
-           |        ON pk1.pr = l.pr AND pk1.cd = l.cd AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr", "cd"), "loc", "t", sz)
     sb.toString
   }
 
@@ -5356,31 +5182,8 @@ object SparkEntry {
          |  SELECT a.user_id AS pr, b.user_id AS cd, a.j AS i, b.j AS j,
          |    (a.val - b.val) * (a.val - b.val) AS d
          |  FROM rs a JOIN rs b ON b.user_id = a.user_id + 1
-         |), t0 AS (
-         |  SELECT pr, cd, j,
-         |    sum(d) OVER (PARTITION BY pr, cd ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin
-    for (i <- 1 until sz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, cd, j, cs + mn AS cost FROM (
-           |    SELECT pr, cd, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr, cd ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.cd, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr, l.cd ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk
-           |        ON pk.pr = l.pr AND pk.cd = l.cd AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1
-           |        ON pk1.pr = l.pr AND pk1.cd = l.cd AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr", "cd"), "loc", "t", sz)
     sb ++= "\n, cum AS (\n" +
       (0 until sz).map(i => s"  SELECT pr, cd, $i AS i, j, cost FROM t$i")
         .mkString("", "\n  UNION ALL\n", "\n)")
@@ -5411,7 +5214,7 @@ object SparkEntry {
          |)
          |SELECT pr AS user_id, CAST(i AS INT) AS i, CAST(j AS INT) AS j
          |FROM path""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replace(", path AS MATERIALIZED (", ", path AS (")
   }
 
@@ -5535,7 +5338,7 @@ object SparkEntry {
          |    AND l.i = f.i AND l.j = f.j
          |  JOIN fin fn ON fn.pr = f.pr AND fn.cd = f.cd
          |)""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_softdtw_bary_step — one gradient-descent step
@@ -5597,7 +5400,7 @@ object SparkEntry {
          |)
          |SELECT g.t, round(b.val - $eta * g.gsum, 4) + 0.0 AS b_new
          |FROM g JOIN binit b ON b.j = g.t""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kmeans_softdtw — the metric="softdtw" k-means
@@ -5693,7 +5496,7 @@ object SparkEntry {
          |SELECT user_id AS series_id, c AS cluster,
          |  round(dist, 4) + 0.0 AS dist
          |FROM asg$iters""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle shared by doc_cms_heavy and doc_stream_cms (the
@@ -5796,7 +5599,7 @@ object SparkEntry {
            |)""".stripMargin
     }
     sb ++= assignCte("fin", s"c$iters")
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** Shared CTE chain of the raw (scale=false) matrix-profile oracles:
@@ -5973,31 +5776,8 @@ object SparkEntry {
            |  SELECT rr.user_id, cv.cid, cv.i, rr.j,
            |    (cv.bv - rr.val) * (cv.bv - rr.val) AS d
            |  FROM rr JOIN $cvName cv ON TRUE
-           |), ${p}x0 AS (
-           |  SELECT user_id, cid, j,
-           |    sum(d) OVER (PARTITION BY user_id, cid ORDER BY j) AS cost
-           |  FROM loc$p WHERE i = 0
            |)""".stripMargin
-      for (i <- 1 until sz) {
-        sb ++=
-          s"""
-             |, ${p}x$i AS (
-             |  SELECT user_id, cid, j, cs + mn AS cost FROM (
-             |    SELECT user_id, cid, j, cs,
-             |      min(mk - csk) OVER (PARTITION BY user_id, cid ORDER BY j) AS mn
-             |    FROM (
-             |      SELECT l.user_id, l.cid, l.j,
-             |        sum(l.d) OVER (PARTITION BY l.user_id, l.cid ORDER BY l.j) AS cs,
-             |        sum(l.d) OVER (PARTITION BY l.user_id, l.cid ORDER BY l.j) - l.d AS csk,
-             |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-             |      FROM loc$p l
-             |      LEFT JOIN ${p}x${i - 1} pk
-             |        ON pk.user_id = l.user_id AND pk.cid = l.cid AND pk.j = l.j
-             |      LEFT JOIN ${p}x${i - 1} pk1
-             |        ON pk1.user_id = l.user_id AND pk1.cid = l.cid AND pk1.j = l.j - 1
-             |      WHERE l.i = $i))
-             |)""".stripMargin
-      }
+      sb ++= minPlusChainCtes(Seq("user_id", "cid"), s"loc$p", s"${p}x", sz)
       sb.toString
     }
     val sb = new StringBuilder(evCte + resampleCte)
@@ -6057,7 +5837,7 @@ object SparkEntry {
            |UNION ALL SELECT $rr, cid, round(pot, 4) + 0.0 FROM b$rr""".stripMargin
     // MATERIALIZED: inlined, each of the ~k·sz DP layers re-expands its
     // whole upstream (and re-opens the parquet per reference)
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for emb_pca_project — the full PCA pipeline
@@ -6067,7 +5847,7 @@ object SparkEntry {
     * iterate), Rayleigh eigenvalue, sums·v sign fix, Hotelling
     * deflation between components, and the centered projection. */
   private def pcaProjectOracleSql(d: Int, steps: Int,
-                                  whiten: Boolean = false): String = {
+                                  whiten: Boolean = false): String = materialized {
     val c0 = (d - 1) / 2.0
     var n2 = 0.0
     var jj = 0
@@ -6145,7 +5925,7 @@ object SparkEntry {
          |JOIN v1 ON v1.j = x.j
          |JOIN v2 ON v2.j = x.j
          |GROUP BY x.vec_id""".stripMargin
-  }.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+  }
 
   private def bpeOracleFinish(sql: String): String = sql
     .replaceAll("(?m)^(WITH RECURSIVE |, )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
@@ -6328,7 +6108,7 @@ object SparkEntry {
       s"""
          |SELECT l.id AS series_id, l.c AS cluster, round(d.d2, 4) + 0.0 AS d2
          |FROM lab$iters l JOIN d_$iters d ON d.id = l.id AND d.c = l.c""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   private def kernelKMeansTraceSql(sz: Int, maxId: Int, k: Int, iters: Int): String =
@@ -6419,7 +6199,7 @@ object SparkEntry {
          |)
          |SELECT pr AS user_id, round(sqrt(min(cost)), 4) AS ldtw
          |FROM fin GROUP BY pr""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_ldtw_path_pairs — the L-DTW backtrack
@@ -6545,27 +6325,8 @@ object SparkEntry {
          |    (q.val - l.val) * (q.val - l.val) AS d
          |  FROM r l JOIN q ON true
          |  WHERE l.user_id > 0
-         |), t0 AS (
-         |  SELECT pr, j, d AS cost FROM loc WHERE i = 0
          |)""".stripMargin
-    for (i <- 1 until qsz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT pr, j, cs + mn AS cost FROM (
-           |    SELECT pr, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY pr ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.pr, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.pr ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk ON pk.pr = l.pr AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1 ON pk1.pr = l.pr AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("pr"), "loc", "t", qsz, freeStart = true)
     sb ++=
       s"""
          |SELECT pr AS user_id, CAST(j AS INT) AS end_pos,
@@ -6575,7 +6336,7 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY pr ORDER BY cost, j) AS rn
          |  FROM t${qsz - 1})
          |WHERE rn = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kshape_assign: SBD of every series to the four
@@ -6839,7 +6600,7 @@ object SparkEntry {
          |  round(l1.l - l0.l, 4) + 0.0 AS margin
          |FROM pl l0 JOIN pl l1 ON l1.user_id = l0.user_id
          |WHERE l0.c = 0 AND l1.c = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kshape_step — the full shape-extraction update
@@ -6984,7 +6745,7 @@ object SparkEntry {
          |FROM signedv s JOIN fstats f USING (cluster)""".stripMargin
     // materialize the shared layers; the pv chain is small but each step
     // references the previous one once — materialize those too
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_kshape: the FULL `iters`-iteration fit trace —
@@ -7149,7 +6910,7 @@ object SparkEntry {
          |    row_number() OVER (PARTITION BY user_id ORDER BY d, cluster) AS rn
          |  FROM sbdF)
          |WHERE rn = 1""".stripMargin
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
   }
 
   /** DuckDB oracle for ts_dba: the FULL `iters`-iteration MM trace —
@@ -7174,29 +6935,8 @@ object SparkEntry {
            |  SELECT r.user_id, b.i, r.j,
            |    (b.bv - r.val) * (b.bv - r.val) AS d
            |  FROM r JOIN bar$k b ON TRUE
-           |), t${k}x0 AS (
-           |  SELECT user_id, j,
-           |    sum(d) OVER (PARTITION BY user_id ORDER BY j) AS cost
-           |  FROM loc$k WHERE i = 0
            |)""".stripMargin
-      for (i <- 1 until sz) {
-        sb ++=
-          s"""
-             |, t${k}x$i AS (
-             |  SELECT user_id, j, cs + mn AS cost FROM (
-             |    SELECT user_id, j, cs,
-             |      min(mk - csk) OVER (PARTITION BY user_id ORDER BY j) AS mn
-             |    FROM (
-             |      SELECT l.user_id, l.j,
-             |        sum(l.d) OVER (PARTITION BY l.user_id ORDER BY l.j) AS cs,
-             |        sum(l.d) OVER (PARTITION BY l.user_id ORDER BY l.j) - l.d AS csk,
-             |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-             |      FROM loc$k l
-             |      LEFT JOIN t${k}x${i - 1} pk ON pk.user_id = l.user_id AND pk.j = l.j
-             |      LEFT JOIN t${k}x${i - 1} pk1 ON pk1.user_id = l.user_id AND pk1.j = l.j - 1
-             |      WHERE l.i = $i))
-             |)""".stripMargin
-      }
+      sb ++= minPlusChainCtes(Seq("user_id"), s"loc$k", s"t${k}x", sz)
       sb ++= s"\n, cum$k AS (\n" +
         (0 until sz).map(i => s"  SELECT user_id, $i AS i, j, cost FROM t${k}x$i")
           .mkString("", "\n  UNION ALL\n", "\n)")
@@ -7230,7 +6970,7 @@ object SparkEntry {
     // + 0.0 collapses IEEE −0.0 to 0.0 (same discipline as ts_kshape_*)
     sb ++= s"\nSELECT CAST(i AS INT) AS t, round(bv, 4) + 0.0 AS v FROM bar$iters"
     // materialize every DP-chain CTE, but never the recursive paths
-    sb.toString.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sb.toString)
       .replaceAll(", (path\\d+) AS MATERIALIZED \\(", ", $1 AS (")
   }
 
@@ -7261,7 +7001,7 @@ object SparkEntry {
 
   // materialize the DP chain, but never the recursive CTE itself
   private def dbaStepMaterialize(sql: String): String =
-    sql.replaceAll("(?m)^(WITH |, |\\), )(\\w+) AS \\($", "$1$2 AS MATERIALIZED (")
+    materialized(sql)
       .replace(", path AS MATERIALIZED (", ", path AS (")
 
   /** Shared ts_dba_step / ts_dba_ssg_step chain: everything through the
@@ -7279,29 +7019,8 @@ object SparkEntry {
          |  SELECT r.user_id, bar.i, r.j,
          |    (bar.bv - r.val) * (bar.bv - r.val) AS d
          |  FROM r JOIN bar ON TRUE
-         |), t0 AS (
-         |  SELECT user_id, j,
-         |    sum(d) OVER (PARTITION BY user_id ORDER BY j) AS cost
-         |  FROM loc WHERE i = 0
          |)""".stripMargin
-    for (i <- 1 until sz) {
-      sb ++=
-        s"""
-           |, t$i AS (
-           |  SELECT user_id, j, cs + mn AS cost FROM (
-           |    SELECT user_id, j, cs,
-           |      min(mk - csk) OVER (PARTITION BY user_id ORDER BY j) AS mn
-           |    FROM (
-           |      SELECT l.user_id, l.j,
-           |        sum(l.d) OVER (PARTITION BY l.user_id ORDER BY l.j) AS cs,
-           |        sum(l.d) OVER (PARTITION BY l.user_id ORDER BY l.j) - l.d AS csk,
-           |        least(coalesce(pk.cost, 1e308), coalesce(pk1.cost, 1e308)) AS mk
-           |      FROM loc l
-           |      LEFT JOIN t${i - 1} pk ON pk.user_id = l.user_id AND pk.j = l.j
-           |      LEFT JOIN t${i - 1} pk1 ON pk1.user_id = l.user_id AND pk1.j = l.j - 1
-           |      WHERE l.i = $i))
-           |)""".stripMargin
-    }
+    sb ++= minPlusChainCtes(Seq("user_id"), "loc", "t", sz)
     sb ++= "\n, cum AS (\n" +
       (0 until sz).map(i => s"  SELECT user_id, $i AS i, j, cost FROM t$i")
         .mkString("", "\n  UNION ALL\n", "\n)")

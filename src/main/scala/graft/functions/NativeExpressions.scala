@@ -13,7 +13,7 @@ import graft.kernels.Kernels
   * kernels run on primitive arrays with zero boxing on either side. */
 object NativeOps {
   def dtw(a: ArrayData, b: ArrayData, radius: Int): Double =
-    Kernels.dtwFlat(a.toDoubleArray(), b.toDoubleArray(), radius)
+    Kernels.dtwFlatEA(a.toDoubleArray(), b.toDoubleArray(), radius, Double.PositiveInfinity)
 
   private val md5Local: ThreadLocal[java.security.MessageDigest] =
     ThreadLocal.withInitial(() => java.security.MessageDigest.getInstance("MD5"))

@@ -168,21 +168,7 @@ object Advanced {
       }
       i += 1
     }
-    // backtrack (same tie rules as dtwPath)
-    var pi = l1; var pj = l2
-    val path = scala.collection.mutable.ArrayBuffer((pi - 1, pj - 1))
-    while (pi > 1 || pj > 1) {
-      if (pi == 1) pj -= 1
-      else if (pj == 1) pi -= 1
-      else {
-        val diag = cum(pi - 1)(pj - 1); val up = cum(pi - 1)(pj); val left = cum(pi)(pj - 1)
-        if (diag <= up && diag <= left) { pi -= 1; pj -= 1 }
-        else if (up <= left) pi -= 1
-        else pj -= 1
-      }
-      path += ((pi - 1, pj - 1))
-    }
-    (path.reverse.toArray, cum(l1)(l2)) // note: raw accumulated cost, not sqrt
+    (Kernels.returnPath(cum), cum(l1)(l2)) // note: raw accumulated cost, not sqrt
   }
 
   /** CCA transform weights fitted on (warped-aligned) row pairs: apply

@@ -64,54 +64,26 @@ object Kernels {
 
   def dtw(s1: TS, s2: TS): Double = dtw(s1, s2, Mask.none(s1.length, s2.length))
 
-  /** Univariate flat-array DTW (no per-timestep array wrappers) — the
-    * hot-path kernel behind the native Catalyst expression. radius < 0
-    * means unconstrained; radius ≥ 0 applies the Sakoe-Chiba band. */
-  def dtwFlat(a: Array[Double], b: Array[Double], radius: Int): Double = {
-    val l1 = a.length; val l2 = b.length
-    if (l1 == 0 || l2 == 0) return Double.NaN
-    val bounds = if (radius < 0) null else Mask.sakoeChiba(l1, l2, radius)
-    var prev = new Array[Double](l2 + 1)
-    var cur = new Array[Double](l2 + 1)
-    java.util.Arrays.fill(prev, Inf)
-    prev(0) = 0.0
-    var i = 1
-    while (i <= l1) {
-      java.util.Arrays.fill(cur, Inf)
-      val lo = if (bounds == null) 0 else bounds.lo(i - 1)
-      val hi = if (bounds == null) l2 - 1 else bounds.hi(i - 1)
-      val ai = a(i - 1)
-      var j = lo + 1
-      val jEnd = hi + 1
-      while (j <= jEnd) {
-        val diff = ai - b(j - 1)
-        var m = prev(j)
-        if (cur(j - 1) < m) m = cur(j - 1)
-        if (prev(j - 1) < m) m = prev(j - 1)
-        cur(j) = diff * diff + m
-        j += 1
-      }
-      val t = prev; prev = cur; cur = t
-      i += 1
-    }
-    math.sqrt(prev(l2))
-  }
-
-  /** [[dtwFlat]] with early abandonment — the UCR-suite cascade the
-    * reference reaches via LB pruning (`dtw_variants.py:1224-1296`):
-    * every warping path crosses every row of the DP, so the minimum of
-    * an accumulated row (within the band) lower-bounds the final cost;
-    * once sqrt(that minimum) strictly exceeds the cutoff the exact
-    * distance is provably > cutoff and the DP stops. Returns PositiveInfinity on
-    * abandonment (callers read it as "worse than the current kth
-    * best"), else exactly dtwFlat's value. Abandonment is STRICT (>):
-    * a candidate tying the cutoff is computed exactly, so (dist, id)
-    * tie-ranking downstream is unchanged. */
+  /** Univariate flat-array DTW (no per-timestep array wrappers) with
+    * early abandonment — the one score DP behind the native Catalyst
+    * expression, k-means' DTW assignment and the kNN cascades. radius < 0
+    * means unconstrained; radius ≥ 0 applies the Sakoe-Chiba band.
+    * An infinite or NaN cutoff never abandons: the exact distance.
+    * Otherwise this is the UCR-suite cascade the reference reaches via LB
+    * pruning (`dtw_variants.py:1224-1296`): every warping path crosses
+    * every row of the DP, so the minimum of an accumulated row (within
+    * the band) lower-bounds the final cost; once sqrt(that minimum)
+    * strictly exceeds the cutoff the exact distance is provably > cutoff
+    * and the DP stops. Returns PositiveInfinity on abandonment (callers
+    * read it as "worse than the current kth best"), else the exact
+    * distance. Abandonment is STRICT (>): a candidate tying the cutoff is
+    * computed exactly, so (dist, id) tie-ranking downstream is
+    * unchanged. */
   def dtwFlatEA(a: Array[Double], b: Array[Double], radius: Int, cutoff: Double): Double = {
-    if (cutoff.isNaN || cutoff.isInfinity) return dtwFlat(a, b, radius)
     val l1 = a.length; val l2 = b.length
     if (l1 == 0 || l2 == 0) return Double.NaN
     val bounds = if (radius < 0) null else Mask.sakoeChiba(l1, l2, radius)
+    val abandon = !(cutoff.isNaN || cutoff.isInfinity)
     var prev = new Array[Double](l2 + 1)
     var cur = new Array[Double](l2 + 1)
     java.util.Arrays.fill(prev, Inf)
@@ -140,7 +112,7 @@ object Kernels {
       // abandon a candidate the tie rule must keep; IEEE sqrt is
       // correctly rounded and monotone, so sqrt(rowMin) > cutoff fires
       // only when the final distance strictly exceeds the cutoff
-      if (math.sqrt(rowMin) > cutoff) return Double.PositiveInfinity
+      if (abandon && math.sqrt(rowMin) > cutoff) return Double.PositiveInfinity
       val t = prev; prev = cur; cur = t
       i += 1
     }
@@ -172,7 +144,7 @@ object Kernels {
 
   /** Backtrack on the (1-shifted) accumulated matrix; diagonal preferred on
     * ties, matching `_return_path` (`dtw_variants.py:86-106`). */
-  private def returnPath(cum: Array[Array[Double]]): Array[(Int, Int)] = {
+  private[kernels] def returnPath(cum: Array[Array[Double]]): Array[(Int, Int)] = {
     var i = cum.length - 1
     var j = cum(0).length - 1
     val path = scala.collection.mutable.ArrayBuffer((i - 1, j - 1))

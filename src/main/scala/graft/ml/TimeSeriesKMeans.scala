@@ -230,12 +230,12 @@ class TimeSeriesKMeans(
 object TimeSeriesKMeans {
   def metricDist(metric: String, gamma: Double): (Array[Double], Array[Double]) => Double =
     metric match {
-      case "dtw" => (a, b) => Kernels.dtw(Kernels.uni(a.toIndexedSeq: _*), Kernels.uni(b.toIndexedSeq: _*))
+      case "dtw" => (a, b) => Kernels.dtwFlatEA(a, b, -1, Double.PositiveInfinity)
       case "softdtw" => (a, b) => {
-        val d = Kernels.softDtw(Kernels.uni(a.toIndexedSeq: _*), Kernels.uni(b.toIndexedSeq: _*), gamma)
+        val d = Kernels.softDtw(Kernels.uni(a), Kernels.uni(b), gamma)
         math.sqrt(math.max(0.0, d))
       }
-      case _ => (a, b) => Kernels.euclidean(Kernels.uni(a.toIndexedSeq: _*), Kernels.uni(b.toIndexedSeq: _*))
+      case _ => (a, b) => Kernels.euclidean(Kernels.uni(a), Kernels.uni(b))
     }
 
   /** Deterministic DISTRIBUTED greedy k-means++ seeding over an

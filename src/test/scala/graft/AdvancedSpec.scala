@@ -157,7 +157,7 @@ class AdvancedSpec extends AnyFunSuite {
     // implementation throws here instead of silently falling back
     val proj = GenerateMutableProjection.generate(Seq(dtwE, lbE))
     val out = proj(row)
-    assert(out.getDouble(0) == graft.kernels.Kernels.dtwFlat(a, b, 2))
+    assert(out.getDouble(0) == graft.kernels.Kernels.dtwFlatEA(a, b, 2, Double.PositiveInfinity))
     assert(out.getDouble(1) == graft.kernels.Kernels.lbKeoghEnv(a, lo, hi))
   }
 }

@@ -244,11 +244,15 @@ class KernelsSpec extends AnyFunSuite {
   test("dtwFlatEA: exact below/at cutoff, Inf-or-exact above, strict at the boundary") {
     val rng = new scala.util.Random(7)
     def series(n: Int) = Array.fill(n)(rng.nextGaussian())
-    for (radius <- Seq(-1, 3); _ <- 1 to 50) {
-      val a = series(24); val b = series(24)
-      val exact = Kernels.dtwFlat(a, b, radius)
-      // cutoff = Inf degenerates to dtwFlat
+    for (radius <- Seq(-1, 0, 3); (la, lb) <- Seq((24, 24), (24, 31)); _ <- 1 to 50) {
+      val a = series(la); val b = series(lb)
+      // the general multivariate kernel is the exact reference: a
+      // separate DP implementation, bit-identical on univariate input
+      val bounds = if (radius < 0) Mask.none(la, lb) else Mask.sakoeChiba(la, lb, radius)
+      val exact = Kernels.dtw(uni(a), uni(b), bounds)
+      // an infinite or NaN cutoff never abandons
       assert(Kernels.dtwFlatEA(a, b, radius, Double.PositiveInfinity) == exact)
+      assert(Kernels.dtwFlatEA(a, b, radius, Double.NaN) == exact)
       // cutoff ABOVE the true distance: must return the exact value
       assert(Kernels.dtwFlatEA(a, b, radius, exact * 1.1) == exact)
       // cutoff EXACTLY the true distance: strict abandonment keeps ties
