@@ -1,19 +1,26 @@
 package graft.ml
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Cdist
 import graft.functions.TsFunctions
+import graft.kernels.Kernels
 
-/** Kernel k-means with a GAK (or any precomputed) kernel — semantics of
+/** Kernel k-means with a GAK (or rbf) kernel — semantics of
   * `/root/reference/tslearn/clustering/kmeans.py:136-457`.
   *
-  * The gram is materialized once as a pairs DataFrame (i, j, k_ij) —
-  * at scale this is the expensive O(n²) self-join, done triangle+mirror.
-  * Each iteration computes, per sample i and cluster c, the kernel-trick
-  * distance  K_ii − 2·Σ_{j∈c} K_ij/|c| + Σ_{j,l∈c} K_jl/|c|²
-  * (`_compute_dist`, `kmeans.py:390-405`) via two grouped aggregations —
-  * no per-pair recomputation of the kernel.
+  * The gram is built once, the upper triangle of the kernel self-join
+  * (each unordered pair evaluated once; K_ii = 1 of the normalized kernel
+  * stays analytic), and persisted as series-position blocks. Each Lloyd
+  * iteration is then ONE Spark job: a treeAggregate of the dense n×k
+  * matrix S(i, c) = Σ_{j∈c} K_ij against the broadcast label array. The
+  * driver derives |c|, term3(c) = Σ_{i∈c} S(i, c)/|c|² and the
+  * kernel-trick distance  K_ii − 2·S(i, c)/|c| + term3(c)  (`_compute_dist`,
+  * `kmeans.py:390-405`), and moves each series to its nearest non-empty
+  * cluster, ties to the lower cluster id. At this scale a fit is bound by
+  * its coordination rounds, not its arithmetic: the cluster does the
+  * O(n²) pair sum, the driver the O(n·k) step, holding the n input series
+  * and n·k sums.
   */
 class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
                    val sigma: Double = 1.0, val seed: Long = 0L,
@@ -30,8 +37,7 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
   require(Seq("gak", "rbf").contains(kernel), s"bad kernel $kernel")
 
   /** Pairwise kernel as a Column expression (the gram build). */
-  private def kernelExpr(a: org.apache.spark.sql.Column,
-                         b: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
+  private def kernelExpr(a: Column, b: Column): Column =
     kernel match {
       case "rbf" => exp(lit(-gamma) * aggregate(
         zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
@@ -46,8 +52,7 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
         var t = 0
         while (t < x.length) { val d = x(t) - y(t); ssd += d * d; t += 1 }
         math.exp(-gamma * ssd)
-      case _ => graft.kernels.Kernels.gak(
-        graft.kernels.Kernels.uni(x), graft.kernels.Kernels.uni(y), sigma)
+      case _ => Kernels.gak(Kernels.uni(x), Kernels.uni(y), sigma)
     }
 
   /** New-point assignment: kernel-trick distance to each fitted cluster
@@ -73,154 +78,141 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
           s"probe row (> maxTrainRows=$maxTrainRows). Subsample the training " +
           s"set, or switch to a landmark/Nystrom model " +
           s"(TimeSeriesSVC.fitNystrom) for predict at this scale.")
-      val spark = df.sparkSession
-      val t3 = term3
-      val bc = spark.sparkContext.broadcast(assignments)
+      // per-cluster state, dense in ascending cluster id; a training row
+      // whose cluster has no term3 gets slot -1 and adds to no sum
+      val clusters = term3.keys.toArray.sorted
+      val t3 = clusters.map(term3)
+      val slot = assignments.map(a => math.max(-1, java.util.Arrays.binarySearch(clusters, a._3)))
+      val counts = new Array[Int](clusters.length)
+      slot.foreach(c => if (c >= 0) counts(c) += 1)
+      val bc = df.sparkSession.sparkContext.broadcast((assignments.map(_._2), slot))
       val kf = kernelScalar _
       val f = udf((v: scala.collection.Seq[Double]) => {
         val x = v.toArray
-        val sums = scala.collection.mutable.Map[Int, Double]().withDefaultValue(0.0)
-        val counts = scala.collection.mutable.Map[Int, Int]().withDefaultValue(0)
-        bc.value.foreach { case (_, tv, c) =>
-          sums(c) += kf(x, tv)
-          counts(c) += 1
-        }
-        t3.keys.toSeq.sorted.map { c =>
-          (c, 1.0 - 2.0 * sums(c) / math.max(1, counts(c)) + t3(c))
-        }.minBy { case (c, d) => (d, c) }._1
+        val (train, slots) = bc.value
+        val sums = new Array[Double](clusters.length)
+        for (r <- train.indices if slots(r) >= 0) sums(slots(r)) += kf(x, train(r))
+        val d = Array.tabulate(clusters.length)(c => 1.0 - 2.0 * sums(c) / math.max(1, counts(c)) + t3(c))
+        clusters(d.indices.minBy(c => (d(c), c)))
       })
       df.select(col("series_id"), f(col("values")).as("cluster"))
     }
   }
 
   /** Fit on (series_id, values); returns assignments (series_id, cluster). */
-  def fit(df: DataFrame): DataFrame = fitInternal(df)._1.select("series_id", "cluster")
+  def fit(df: DataFrame): DataFrame = fitAssign(df).select("series_id", "cluster")
 
   /** Fit and return the final assignment WITH its kernel-trick distance
     * (series_id, cluster, d2) — the trace-oracle surface: with
     * init="mod" and tol=−∞ the whole fit is a deterministic
     * fixed-iteration replay (the ts_kernel_kmeans driver row). */
-  def fitAssign(df: DataFrame): DataFrame = fitInternal(df)._1
-
-  /** Fit and keep the predict-capable model (training series + labels +
-    * per-cluster constants). needModel=true is the only caller of the
-    * term3 collect and the final inertia — fit/fitAssign skip both. */
-  def fitModel(df: DataFrame): Model = {
+  def fitAssign(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     import spark.implicits._
-    val (labels0, term3, inertia) = fitInternal(df, needModel = true)
-    val labels = labels0.select("series_id", "cluster")
-    val assigned = df.select(col("series_id").cast("long"), col("values").cast("array<double>"))
-      .join(labels, "series_id")
-      .as[(Long, Array[Double], Int)].collect()
-    Model(assigned, term3, inertia)
+    val (rows, d2, _, _) = fitInternal(df, needModel = false)
+    rows.indices.map(i => (rows(i)._1, rows(i)._3, d2(i))).toDF("series_id", "cluster", "d2")
+      .withColumn("series_id", col("series_id").cast(df.schema("series_id").dataType))
   }
 
-  private def fitInternal(df: DataFrame,
-                          needModel: Boolean = false): (DataFrame, Map[Int, Double], Double) = {
-    val spark = df.sparkSession
-    // gram: normalized GAK so diag = 1. blocks > 0 switches to the
-    // block-partitioned pair join — no broadcast of the full relation, so
-    // the gram family is no longer capped at broadcast-sized inputs.
-    val pairs =
-      if (blocks > 0)
-        Cdist.selfCrossBlocked(df, kernelExpr, blocks, computeDiagonal = false)
-      else
-        Cdist.selfCross(df, kernelExpr, computeDiagonal = false)
-    // localCheckpoint, not cache: the gram feeds two join branches in
-    // EVERY iteration — a cache substitutes the scan but leaves the full
-    // lineage in each round's analyzed plan (re-planned per iteration,
-    // the measured fixed cost of iterative local-mode loops)
-    val gram = pairs
-      .union(df.select(col("series_id").as("left_id"), col("series_id").as("right_id"),
-        lit(1.0).as("dist")))
-      .withColumnRenamed("dist", "k_ij")
-      .localCheckpoint()
+  /** Fit and keep the predict-capable model (training series + labels +
+    * per-cluster constants). Only this caller pays the term3 aggregate. */
+  def fitModel(df: DataFrame): Model = {
+    val (rows, _, term3, inertia) = fitInternal(df, needModel = true)
+    Model(rows, term3, inertia)
+  }
 
-    // deterministic init labels: "random" = seeded hash; "mod" =
-    // series_id % k — the SQL-replayable trace-oracle mode (the
-    // KShape init="first" analogue)
-    val initLabel =
-      if (init == "mod") pmod(col("series_id"), lit(k)).cast("int")
-      else pmod(xxhash64(col("series_id"), lit(seed)), lit(k)).cast("int")
-    var labels = df.select(col("series_id"), initLabel.as("cluster"))
-      .cache()
-    var prevInertia = Double.PositiveInfinity
-    var lastInertia = Double.PositiveInfinity
-    var term3Map: Map[Int, Double] = Map.empty
-    var iter = 0
-    var done = false
-    // tol = −∞ (the fixed-iteration trace mode every driver query runs)
-    // can never early-stop: prev − inertia < −∞ is false for ALL doubles
-    // (including NaN), so the per-iteration inertia reduce is a dead job
-    // — skip it and, when the caller needs the model, compute the final
-    // inertia once after the loop (guide §1.2: remove passes that
-    // compute things thrown away).
-    val needInertia = tol > Double.NegativeInfinity
-    while (iter < maxIter && !done) {
-      val withC = gram.join(labels.select(col("series_id").as("right_id"), col("cluster")), "right_id")
-      // term2(i, c) = Σ_{j in c} K_ij / |c| — checkpointed because BOTH
-      // the term3 derivation and the distance projection below read it
-      // (without the checkpoint the gram-join-groupBy subtree runs twice
-      // per iteration, one per consumer)
-      val sums = withC.groupBy(col("left_id"), col("cluster"))
-        .agg(sum("k_ij").as("s"), count(lit(1)).as("cnt"))
-        .localCheckpoint()
-      // term3(c) = Σ_{j,l in c} K_jl / |c|² — derived from `sums`
-      // instead of re-joining the gram: Σ_{i∈c} term2sum(i, c) is the
-      // same pair sum (each (j,l) with both in c counted once), so the
-      // SECOND full gram scan + two joins per iteration collapse into a
-      // broadcast-sized aggregation over the (n·k)-row sums relation
-      // (guide §2.4: remove shuffles outright). cnt already equals |c|
-      // on the rows where i ∈ c.
-      val bothIn = sums
-        .join(labels.select(col("series_id").as("left_id"), col("cluster").as("lc")), "left_id")
-        .where(col("cluster") === col("lc"))
-        .groupBy(col("cluster"))
-        .agg(sum("s").as("s3"), count(lit(1)).as("csz"))
-      val dists = sums.join(broadcast(bothIn), "cluster")
-        .select(col("left_id"), col("cluster"),
-          (lit(1.0) - lit(2.0) * col("s") / col("cnt") + col("s3") / (col("csz") * col("csz"))).as("d2"))
-      // eager localCheckpoint: materializes AND truncates lineage, so
-      // iteration r+1's plan starts from a leaf instead of replaying r
-      // rounds of analysis
-      val newLabels = dists
-        .groupBy(col("left_id").as("series_id"))
-        .agg(min_by(col("cluster"), struct(col("d2"), col("cluster"))).as("cluster"),
-          min("d2").as("d2"))
-        .localCheckpoint()
-      labels.unpersist()
-      labels = newLabels
-      if (needInertia) {
-        // inertia = Σ min-d2, read off the already-checkpointed
-        // assignment frame (one cheap leaf scan)
-        val inertia = newLabels.agg(sum("d2")).head().getDouble(0)
-        lastInertia = inertia
-        if (prevInertia - inertia < tol) done = true
-        prevInertia = inertia
-      }
-      iter += 1
-    }
-    if (needModel) {
-      if (!needInertia)
-        lastInertia = labels.agg(sum("d2")).head().getDouble(0)
-      // within-cluster constant of the FINAL labels (predict-time term3).
-      // |c| comes from the n-row labels relation, NOT a countDistinct over
-      // the n²-scale within-cluster gram rows (countDistinct forced an
-      // expand + two-phase dedup over the pair relation; the member count
-      // is the same integer — every member owns its diagonal row).
-      val csz = labels.groupBy(col("cluster")).agg(count(lit(1)).as("csz"))
-      term3Map = gram
-        .join(labels.select(col("series_id").as("left_id"), col("cluster").as("lc")), "left_id")
-        .join(labels.select(col("series_id").as("right_id"), col("cluster").as("rc")), "right_id")
-        .where(col("lc") === col("rc"))
-        .groupBy(col("lc").as("cluster"))
-        .agg(sum("k_ij").as("s3"))
-        .join(broadcast(csz), "cluster")
-        .select(col("cluster"), (col("s3") / (col("csz") * col("csz"))).as("t3"))
-        .collect().map(r => r.getInt(0) -> r.getDouble(1)).toMap
-    }
-    gram.unpersist()
-    (labels, term3Map, lastInertia)
+  /** (series_id, values, cluster) rows in ascending series_id order, their
+    * d2, the term3 map (needModel only) and the inertia. */
+  private def fitInternal(df: DataFrame, needModel: Boolean)
+      : (Array[(Long, Array[Double], Int)], Array[Double], Map[Int, Double], Double) = {
+    val spark = df.sparkSession
+    import spark.implicits._
+    val sc = spark.sparkContext
+    val kk = k
+    // lazy: filled by the row collect, read back by the gram build
+    val data = df.select("series_id", "values").localCheckpoint(eager = false)
+    try {
+      // deterministic init labels: "random" = seeded hash; "mod" =
+      // series_id % k — the SQL-replayable trace-oracle mode (the
+      // KShape init="first" analogue)
+      val initLabel =
+        if (init == "mod") pmod(col("series_id"), lit(k)).cast("int")
+        else pmod(xxhash64(col("series_id"), lit(seed)), lit(k)).cast("int")
+      val rows = data.select(col("series_id").cast("long"), col("values").cast("array<double>"), initLabel)
+        .as[(Long, Array[Double], Int)].collect().sortBy(_._1)
+      val n = rows.length
+      val ids = sc.broadcast(rows.map(_._1))
+      // the gram's upper triangle, one (i, j, K_ij) block of series positions per partition;
+      // blocks > 0 is the block-partitioned pair join (no broadcast of the full relation)
+      val upper =
+        if (blocks > 0) Cdist.selfBlockedUpper(data, kernelExpr, blocks)
+        else Cdist.selfUpper(data, kernelExpr)
+      val gram = upper.select(col("left_id").cast("long"), col("right_id").cast("long"), col("dist"))
+        .as[(Long, Long, Double)].rdd
+        .mapPartitions { it =>
+          val ps = it.toArray
+          def at(id: Long) = java.util.Arrays.binarySearch(ids.value, id)
+          Iterator.single((ps.map(p => at(p._1)), ps.map(p => at(p._2)), ps.map(_._3)))
+        }.persist()
+      try {
+        // S(i, c) = Σ_{j∈c} K_ij under `lab`, row-major n×k, in one job:
+        // each pair adds K_ij to S(i, lab j) and S(j, lab i)
+        def sums(lab: Array[Int]): Array[Double] = {
+          val bl = sc.broadcast(lab)
+          val s =
+            try gram.treeAggregate(new Array[Double](n * kk))({ case (acc, (is, js, ks)) =>
+              val l = bl.value
+              var t = 0
+              while (t < ks.length) {
+                acc(is(t) * kk + l(js(t))) += ks(t)
+                acc(js(t) * kk + l(is(t))) += ks(t)
+                t += 1
+              }
+              acc
+            }, { (a, b) => for (t <- a.indices) a(t) += b(t); a })
+            finally bl.destroy()
+          for (i <- 0 until n) s(i * kk + lab(i)) += 1.0 // K_ii of the normalized kernel
+          s
+        }
+        // |c| and term3(c) = Σ_{j,l∈c} K_jl / |c|² = Σ_{i∈c} S(i, c) / |c|²
+        def clusterTerms(lab: Array[Int], s: Array[Double]): (Array[Long], Array[Double]) = {
+          val cnt = new Array[Long](kk)
+          val s3 = new Array[Double](kk)
+          for (i <- 0 until n) { cnt(lab(i)) += 1; s3(lab(i)) += s(i * kk + lab(i)) }
+          (cnt, Array.tabulate(kk)(c => s3(c) / (cnt(c) * cnt(c))))
+        }
+        var labels = rows.map(_._3)
+        var d2 = Array.fill(n)(Double.NaN)
+        var inertia = Double.PositiveInfinity
+        var iter = 0
+        var done = false
+        while (iter < maxIter && !done) {
+          val s = sums(labels)
+          val (cnt, t3) = clusterTerms(labels, s)
+          // nearest non-empty cluster by (d2, cluster), doubles ordered as
+          // Spark orders them: -0.0 == 0.0 and NaN above every number
+          labels = Array.fill(n)(-1)
+          d2 = new Array[Double](n)
+          for (i <- 0 until n; c <- 0 until kk if cnt(c) > 0) {
+            val d = 1.0 - 2.0 * s(i * kk + c) / cnt(c) + t3(c)
+            if (labels(i) < 0 || (d != d2(i) && java.lang.Double.compare(d, d2(i)) < 0)) {
+              labels(i) = c; d2(i) = d
+            }
+          }
+          val prevInertia = inertia
+          inertia = d2.sum
+          // tol = −∞ (the fixed-iteration trace mode) never stops early:
+          // prev − inertia < −∞ is false for every double, NaN included
+          done = prevInertia - inertia < tol
+          iter += 1
+        }
+        // within-cluster constant of the FINAL labels (predict-time term3)
+        val term3 = if (!needModel) Map.empty[Int, Double] else {
+          val (cnt, t3) = clusterTerms(labels, sums(labels))
+          (0 until kk).filter(cnt(_) > 0).map(c => c -> t3(c)).toMap
+        }
+        (rows.indices.map(i => (rows(i)._1, rows(i)._2, labels(i))).toArray, d2, term3, inertia)
+      } finally { gram.unpersist(blocking = false); ids.destroy() }
+    } finally TimeSeriesKMeans.releaseLocalCheckpoint(data)
   }
 }

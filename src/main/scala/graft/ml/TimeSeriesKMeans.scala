@@ -1,6 +1,7 @@
 package graft.ml
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 import graft.kernels.Kernels
 
@@ -94,14 +95,7 @@ class TimeSeriesKMeans(
     val data = data0.repartition(nPart).cache()
     // released however the fit ends, a failed restart included
     try fitCached(data0, data, n)
-    finally {
-      data.unpersist()
-      // a local checkpoint is not in the cache manager, so
-      // Dataset.unpersist would leave its blocks to the ContextCleaner
-      data0.queryExecution.logical.collect {
-        case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
-      }.foreach(_.unpersist(blocking = false))
-    }
+    finally { data.unpersist(); TimeSeriesKMeans.releaseLocalCheckpoint(data0) }
   }
 
   private def fitCached(data0: Dataset[(Long, Array[Double])],
@@ -377,6 +371,12 @@ object TimeSeriesKMeans {
     if (metric != "euclidean") series.unpersist()
     trace.toSeq.toDF("round", "center_id", "pot")
   }
+
+  /** Releases the blocks of a `localCheckpoint()`ed Dataset. A local
+    * checkpoint is not in the cache manager, so `Dataset.unpersist` would
+    * leave its blocks to the ContextCleaner. */
+  private[ml] def releaseLocalCheckpoint(ds: Dataset[_]): Unit =
+    ds.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }.foreach(_.unpersist(blocking = false))
 
   /** (id, cluster, dist, values) typed assignment pass. */
   private[ml] def assignDs(data: Dataset[(Long, Array[Double])],

@@ -11,7 +11,7 @@ import graft.functions.TsFunctions
   * Scale design: the pair space is the product of the two inputs; the
   * small side (centroids, probes, shapelets — almost always ≪ the data)
   * is broadcast so NO shuffle of the big side happens. Self-joins compute
-  * the upper triangle only (`a.id <= b.id`) and mirror, halving kernel
+  * the upper triangle only (`a.id < b.id`) and mirror, halving kernel
   * work exactly like `_cdist_generic`'s k=0/1 triangle optimization.
   */
 object Cdist {
@@ -27,25 +27,42 @@ object Cdist {
       .select(col("left_id"), col("right_id"), metric(col("lv"), col("rv")).as("dist"))
   }
 
-  /** Symmetric self cross-distance, upper-triangle + mirror. The triangle
-    * join halves the O(n²) kernel evaluations; the mirror is a cheap
-    * column swap union (no recompute). Diagonal dist is 0 for true
-    * metrics; pass computeDiagonal=false to skip it (as `compute_diagonal`
-    * does). */
-  def selfCross(ds: DataFrame, metric: (Column, Column) => Column,
-                seriesCol: String = "values", computeDiagonal: Boolean = true): DataFrame = {
+  /** Upper-triangle pairs (left_id < right_id) of the broadcast self-join:
+    * the metric is evaluated once per unordered pair, as
+    * `metric(lv, rv)` with the lower id on the left. */
+  def selfUpper(ds: DataFrame, metric: (Column, Column) => Column,
+                seriesCol: String = "values"): DataFrame = {
     val l = ds.select(col("series_id").as("left_id"), col(seriesCol).as("lv"))
     val r = ds.select(col("series_id").as("right_id"), col(seriesCol).as("rv"))
-    val upper = l.crossJoin(broadcast(r))
+    l.crossJoin(broadcast(r))
       .where(col("left_id") < col("right_id"))
       .select(col("left_id"), col("right_id"), metric(col("lv"), col("rv")).as("dist"))
-    val mirrored = upper.select(col("right_id").as("left_id"), col("left_id").as("right_id"), col("dist"))
+  }
+
+  /** Symmetric self cross-distance: [[selfUpper]] plus its mirror. The
+    * triangle join halves the O(n²) kernel evaluations. Diagonal dist is
+    * 0 for true metrics; pass computeDiagonal=false to skip it (as
+    * `compute_diagonal` does). */
+  def selfCross(ds: DataFrame, metric: (Column, Column) => Column,
+                seriesCol: String = "values", computeDiagonal: Boolean = true): DataFrame =
+    withMirror(ds, selfUpper(ds, metric, seriesCol), computeDiagonal)
+
+  /** Both orientations of every upper-triangle row plus the diagonal.
+    * Both rows come out of the ONE evaluated row: a union of `upper` with
+    * a column-swapped copy of itself plans the pair join, metric
+    * included, once per branch. */
+  private def withMirror(ds: DataFrame, upper: DataFrame, computeDiagonal: Boolean): DataFrame = {
+    val both = upper.select(explode(array(
+        struct(col("left_id"), col("right_id"), col("dist")),
+        struct(col("right_id").as("left_id"), col("left_id").as("right_id"), col("dist"))
+      )).as("p"))
+      .select(col("p.left_id"), col("p.right_id"), col("p.dist"))
     val diag =
       if (computeDiagonal)
         ds.select(col("series_id").as("left_id"), col("series_id").as("right_id"), lit(0.0).as("dist"))
       else ds.sparkSession.emptyDataFrame
         .select(lit(0L).as("left_id"), lit(0L).as("right_id"), lit(0.0).as("dist")).limit(0)
-    upper.unionAll(mirrored).unionAll(diag)
+    both.unionAll(diag)
   }
 
   /** Upper-triangle pairs (left_id < right_id) of the block-partitioned
@@ -88,17 +105,8 @@ object Cdist {
     * Same output contract as [[selfCross]]. */
   def selfCrossBlocked(ds: DataFrame, metric: (Column, Column) => Column, blocks: Int,
                        seriesCol: String = "values",
-                       computeDiagonal: Boolean = true): DataFrame = {
-    val upper = selfBlockedUpper(ds, metric, blocks, seriesCol)
-    val mirrored = upper.select(col("right_id").as("left_id"),
-      col("left_id").as("right_id"), col("dist"))
-    val diag =
-      if (computeDiagonal)
-        ds.select(col("series_id").as("left_id"), col("series_id").as("right_id"), lit(0.0).as("dist"))
-      else ds.sparkSession.emptyDataFrame
-        .select(lit(0L).as("left_id"), lit(0L).as("right_id"), lit(0.0).as("dist")).limit(0)
-    upper.unionAll(mirrored).unionAll(diag)
-  }
+                       computeDiagonal: Boolean = true): DataFrame =
+    withMirror(ds, selfBlockedUpper(ds, metric, blocks, seriesCol), computeDiagonal)
 
   /** Normalized soft-DTW cross-distance:
     * D(x,y) − ½(D(x,x) + D(y,y)) — `cdist_soft_dtw_normalized`

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TsFunctions
@@ -39,6 +39,37 @@ class CdistBlockSpec extends AnyFunSuite {
         assert(math.abs(e._3 - g._3) < 1e-12, s"dist mismatch $e vs $g")
       }
     }
+  }
+
+  test("selfCross and selfCrossBlocked evaluate each pair once and equal the union-of-mirror formulation") {
+    val n = 23
+    val ds = mkSeries(n, 8).cache()
+    val calls = spark.sparkContext.longAccumulator("metric calls")
+    val counted = udf((a: Seq[Double], b: Seq[Double]) => {
+      calls.add(1); a.zip(b).map { case (x, y) => math.abs(x - y) }.sum
+    })
+    val metric = (a: Column, b: Column) => counted(a, b)
+    val routes: Seq[(String, Boolean => DataFrame, DataFrame)] = Seq(
+      ("broadcast", d => Cdist.selfCross(ds, metric, computeDiagonal = d), Cdist.selfUpper(ds, metric)),
+      ("blocked", d => Cdist.selfCrossBlocked(ds, metric, 4, computeDiagonal = d),
+        Cdist.selfBlockedUpper(ds, metric, 4)))
+    for ((name, route, upper) <- routes; diag <- Seq(true, false)) {
+      // the formulation that plans the pair join once per union branch
+      val diagRows =
+        if (diag) ds.select(col("series_id").as("left_id"), col("series_id").as("right_id"), lit(0.0).as("dist"))
+        else spark.emptyDataFrame.select(lit(0L).as("left_id"), lit(0L).as("right_id"), lit(0.0).as("dist")).limit(0)
+      val union = upper.unionAll(upper.select(col("right_id").as("left_id"),
+        col("left_id").as("right_id"), col("dist"))).unionAll(diagRows)
+      val want = union.as[(Long, Long, Double)].collect().sorted
+      calls.reset()
+      val out = route(diag)
+      val got = out.as[(Long, Long, Double)].collect().sorted
+      assert(calls.value == n * (n - 1) / 2, s"$name diag=$diag: ${calls.value} metric calls")
+      assert(out.schema.map(f => (f.name, f.dataType)) == union.schema.map(f => (f.name, f.dataType)))
+      assert(got.sameElements(want), s"$name diag=$diag: output differs")
+    }
+    val plan = Cdist.selfCross(ds, metric).queryExecution.executedPlan.toString
+    assert("BroadcastNestedLoopJoin".r.findAllMatchIn(plan).size == 1, plan)
   }
 
   test("selfCrossBlocked plan has no BroadcastExchange of the input relation") {

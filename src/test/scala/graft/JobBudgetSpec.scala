@@ -1,0 +1,63 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.scalatest.funsuite.AnyFunSuite
+import graft.ml.KernelKMeans
+
+/** Spark jobs per kernel k-means fit: one to collect the rows, one to
+  * broadcast the gram's input, one per Lloyd iteration, and one for the
+  * model's term3. A regression gate on the shape of the fit: each extra
+  * coordination round per iteration shows up here. */
+class JobBudgetSpec extends AnyFunSuite {
+  lazy val spark: SparkSession = SparkSession.builder()
+    .master("local[4]")
+    .config("spark.sql.shuffle.partitions", "4")
+    .config("spark.ui.enabled", "false")
+    .getOrCreate()
+
+  import spark.implicits._
+
+  private def input: DataFrame = {
+    val rng = new scala.util.Random(11)
+    (0 until 16).map(i => (i.toLong, Array.fill(32)(rng.nextGaussian() + i % 3)))
+      .toDF("series_id", "values")
+  }
+
+  /** Jobs started while `body` runs. */
+  private def jobs(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val n = new AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = n.incrementAndGet()
+    }
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try { body; ListenerBusDrain(sc); n.get() }
+    finally sc.removeSparkListener(listener)
+  }
+
+  private def km(maxIter: Int, blocks: Int) =
+    new KernelKMeans(k = 3, maxIter = maxIter, tol = Double.NegativeInfinity, blocks = blocks)
+
+  test("fitModel runs at most maxIter + 3 jobs, fitAssign at most maxIter + 2") {
+    val df = input
+    for (maxIter <- Seq(2, 4)) {
+      val model = jobs(km(maxIter, 0).fitModel(df))
+      assert(model <= maxIter + 3, s"fitModel(maxIter $maxIter) ran $model jobs")
+      val assign = jobs(km(maxIter, 0).fitAssign(df).collect())
+      assert(assign <= maxIter + 2, s"fitAssign(maxIter $maxIter) ran $assign jobs")
+    }
+  }
+
+  test("each Lloyd iteration is one job on both gram routes") {
+    val df = input
+    for (blocks <- Seq(0, 2)) {
+      val two = jobs(km(2, blocks).fitModel(df))
+      val four = jobs(km(4, blocks).fitModel(df))
+      assert(four - two == 2, s"blocks $blocks: maxIter 2 ran $two jobs, maxIter 4 ran $four")
+    }
+  }
+}
