@@ -1712,7 +1712,7 @@ object SparkEntry {
           (round(col("d2"), 4) + lit(0.0)).as("d2"))
     }),
 
-    // IVF-PQ with the production exact-rerank stage (round 12, AnnProbe:
+    // IVF-PQ with the production exact-rerank stage (SCALEPROBE round 12:
     // pure ADC saturates ~0.5 recall@10 at 1 M from 8-byte quantization
     // error; the rerank equi-joins ONLY the ADC shortlist's exact
     // vectors back — rerank·|queries| rows, never the corpus): same
@@ -1964,8 +1964,8 @@ object SparkEntry {
     // The SAME kNN through the no-broadcast blocked route (maxIndexRows
     // = 0 forces the dispatch the 100× train scale-up takes): tiled
     // salted LB phase, winners-only rejoin, the early-abandon cascade.
-    // Output is route-independent (CdistBlockSpec + KnnProbe parity at
-    // sf1), so the oracle is knn_dtw_users' own SQL — this row makes
+    // Output is route-independent (CdistBlockSpec parity, and the sf1
+    // parity of SCALEPROBE.md), so the oracle is knn_dtw_users' own SQL — this row makes
     // the blocked path driver signal, not just spec signal.
     "knn_dtw_blocked" -> ((s, dir) => {
       TsFunctions.register(s)

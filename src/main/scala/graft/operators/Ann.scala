@@ -153,185 +153,24 @@ object Ann {
     * of `rerank` per query (cheap, codes-only) is equi-joined back to
     * the exact candidate vectors — rerank·|queries| rows, never the
     * corpus — and exact cosine re-ranks to the final k. ADC alone
-    * saturates ~0.5 recall@10 from 8-byte quantization error (AnnProbe,
-    * 1 M corpus); rerank ≈ 4k recovers near-IVF recall at ~the same
-    * wall. Default 0 keeps the pure-ADC contract (and the driver
-    * oracle's replay) unchanged. */
+    * saturates ~0.5 recall@10 from 8-byte quantization error (1 M
+    * corpus, SCALEPROBE round 12); rerank ≈ 4k recovers near-IVF recall
+    * at ~the same wall. Default 0 keeps the pure-ADC contract (and the
+    * driver oracle's replay) unchanged. */
   def ivfPqTopK(candidates: DataFrame, queries: DataFrame, k: Int,
                 centroids: Array[Array[Double]], nprobe: Int,
                 codebooks: Array[Array[Array[Double]]],
                 idCol: String = "vec_id", vecCol: String = "v",
-                rerank: Int = 0, residual: Boolean = false): DataFrame = {
-    val compressed =
-      if (residual) ivfPqIndex(candidates, centroids, codebooks, idCol, vecCol)
-      else ivfAssign(candidates, centroids, idCol, vecCol)
-        .join(pqEncode(candidates, codebooks, idCol, vecCol), idCol)
-    ivfPqTopKIndexed(compressed, candidates, queries, k, centroids, nprobe,
-      codebooks, idCol, vecCol, rerank, residual)
-  }
-
-  /** One-scan IVF-PQ index build: (id, cell, RESIDUAL codes) in a single
-    * corpus pass — assign the coarse cell and PQ-encode the residual
-    * v − centroid[cell] in the same UDF, so the corpus floats are read
-    * once (the two-scan assign ⋈ encode form reads them twice and pays a
-    * 10⁸-row equi-join; at the measured 10⁸ octave that build was
-    * 6 278 s, dominated by the duplicated assign scan).
-    *
-    * Residual encoding is the IVFADC design of Jégou et al. (TPAMI
-    * 2011, §V): within a cell the residual's dynamic range is the CELL
-    * spread, not the corpus spread, so the 8-byte code budget separates
-    * points that raw-vector codes collapse. The difference is decisive
-    * at high density — at 10⁸ points in 1 024 clusters (~10⁵
-    * near-duplicates per cluster) raw-code ADC recall@10 measured 0.016
-    * (rerank=4k: 0.082): quantization error of whole-vector codes
-    * exceeds the inter-neighbor distances, making the shortlist
-    * effectively random. Codebooks for this index MUST be trained on
-    * residuals ([[trainPqCodebooksResidual]]); scoring goes through
-    * [[ivfPqTopKIndexed]] with `residual = true`. */
-  def ivfPqIndex(candidates: DataFrame, centroids: Array[Array[Double]],
-                 codebooks: Array[Array[Array[Double]]],
-                 idCol: String = "vec_id", vecCol: String = "v"): DataFrame = {
+                rerank: Int = 0): DataFrame = {
     val spark = candidates.sparkSession
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val bcB = spark.sparkContext.broadcast(codebooks)
-    val enc = udf((v: scala.collection.Seq[Double]) => {
-      val cs = bcC.value; val cbs = bcB.value
-      val x = v.toArray
-      var best = 0; var bestD = Double.PositiveInfinity
-      var c = 0
-      while (c < cs.length) {
-        val cc = cs(c)
-        var d = 0.0; var i = 0
-        while (i < x.length) { val t = cc(i) - x(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      val cen = cs(best)
-      val m = cbs.length
-      val dsub = cbs(0)(0).length
-      require(x.length == m * dsub,
-        s"vector dim ${x.length} != $m subspaces x $dsub dims")
-      val codes = Array.tabulate(m) { s =>
-        val cb = cbs(s)
-        var bj = 0; var bd = Double.PositiveInfinity
-        var j = 0
-        while (j < cb.length) {
-          var d = 0.0; var t = 0
-          while (t < dsub) {
-            val r = (x(s * dsub + t) - cen(s * dsub + t)) - cb(j)(t)
-            d += r * r; t += 1
-          }
-          if (d < bd) { bd = d; bj = j }
-          j += 1
-        }
-        bj
-      }
-      (best, codes)
-    })
-    candidates.select(col(idCol), enc(col(vecCol)).as("cc"))
-      .select(col(idCol), col("cc._1").as("cell"), col("cc._2").as("codes"))
-  }
-
-  /** Train the m per-subspace PQ codebooks on RESIDUALS v − centroid:
-    * one bounded sample, one assign pass over it, then m driver-local
-    * trainings (the codebooks are 256 rows each — driver Lloyd is the
-    * right tool at that size, same rationale as [[trainCoarse]]). */
-  def trainPqCodebooksResidual(df: DataFrame, centroids: Array[Array[Double]],
-                               m: Int = 8, sampleCap: Int = 20000, seed: Long = 7L,
-                               idCol: String = "vec_id", vecCol: String = "v"): Array[Array[Array[Double]]] = {
-    val spark = df.sparkSession
-    val n = df.count()
-    val sampled = (if (n <= sampleCap) df
-      else df.sample(withReplacement = false, sampleCap.toDouble / n, seed))
-      .select(col(idCol), col(vecCol).cast("array<double>").as("v"))
-      .localCheckpoint(eager = true)
-    val bcC = spark.sparkContext.broadcast(centroids)
-    val resid = udf((v: scala.collection.Seq[Double]) => {
-      val cs = bcC.value
-      val x = v.toArray
-      var best = 0; var bestD = Double.PositiveInfinity
-      var c = 0
-      while (c < cs.length) {
-        val cc = cs(c)
-        var d = 0.0; var i = 0
-        while (i < x.length) { val t = cc(i) - x(i); d += t * t; i += 1 }
-        if (d < bestD) { bestD = d; best = c }
-        c += 1
-      }
-      val cen = cs(best)
-      Array.tabulate(x.length)(i => x(i) - cen(i))
-    })
-    val residDf = sampled.select(col(idCol), resid(col("v")).as("v"))
-      .localCheckpoint(eager = true)
-    releaseCheckpoint(sampled)
-    val dim = residDf.select(size(col("v"))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible into $m subspaces")
-    val dsub = dim / m
-    val out = Array.tabulate(m) { s =>
-      trainCoarse(residDf.select(col(idCol),
-        slice(col("v"), s * dsub + 1, dsub).as("v")), nlist = 256, seed = seed + s)
-    }
-    releaseCheckpoint(residDf)
-    out
-  }
-
-  /** IVF-PQ search over a PREBUILT (id, cell, codes) index relation —
-    * the fleet shape: at 10⁸+ vectors the index is built once (assign +
-    * encode, two corpus scans) and persisted/checkpointed; query batches
-    * then touch ONLY the codes relation plus, when rerank > 0, the
-    * shortlist's exact vectors (`candidates` is read only on that
-    * rerank join — pass anything with (idCol, vecCol) when rerank = 0).
-    * [[ivfPqTopK]] delegates here after building the index inline, so
-    * the two routes are one plan. */
-  def ivfPqTopKIndexed(compressed: DataFrame, candidates: DataFrame,
-                       queries: DataFrame, k: Int,
-                       centroids: Array[Array[Double]], nprobe: Int,
-                       codebooks: Array[Array[Array[Double]]],
-                       idCol: String = "vec_id", vecCol: String = "v",
-                       rerank: Int = 0, residual: Boolean = false): DataFrame = {
-    val spark = compressed.sparkSession
+    val compressed = ivfAssign(candidates, centroids, idCol, vecCol)
+      .join(pqEncode(candidates, codebooks, idCol, vecCol), idCol)
     val qProbes = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("cell", explode(probeCellsUdf(spark, centroids, nprobe)(col("qv"))))
-    // residual ADC (IVFADC): d²(q,c) ≈ Σ_s ‖(q − centroid[cell])_s −
-    // cb_s[code_s]‖² — the codes approximate v − centroid[cell], so the
-    // query is shifted into the candidate's cell frame before the
-    // asymmetric sum (codes MUST come from [[ivfPqIndex]] /
-    // residual-trained codebooks, or distances are meaningless)
-    val scoredRaw =
-      if (!residual) {
-        val adc = adcUdf(spark, codebooks)
-        compressed.join(broadcast(qProbes), "cell")
-          .select(col("query_id"), col(idCol).as("cand_id"),
-            adc(col("qv"), col("codes")).as("d2"))
-      } else {
-        val bcC = spark.sparkContext.broadcast(centroids)
-        val bcB = spark.sparkContext.broadcast(codebooks)
-        val adcR = udf((q: scala.collection.Seq[Double], cell: Int,
-                        codes: scala.collection.Seq[Int]) => {
-          val cen = bcC.value(cell); val cbs = bcB.value
-          val m = cbs.length
-          val dsub = cbs(0)(0).length
-          require(q.length == m * dsub,
-            s"query dim ${q.length} != $m subspaces x $dsub dims")
-          var d = 0.0
-          var s = 0
-          while (s < m) {
-            val cb = cbs(s)(codes(s))
-            var t = 0
-            while (t < dsub) {
-              val i = s * dsub + t
-              val r = (q(i) - cen(i)) - cb(t)
-              d += r * r; t += 1
-            }
-            s += 1
-          }
-          d
-        })
-        compressed.join(broadcast(qProbes), "cell")
-          .select(col("query_id"), col(idCol).as("cand_id"),
-            adcR(col("qv"), col("cell"), col("codes")).as("d2"))
-      }
-    val scored = scoredRaw
+    val adc = adcUdf(spark, codebooks)
+    val scored = compressed.join(broadcast(qProbes), "cell")
+      .select(col("query_id"), col(idCol).as("cand_id"),
+        adc(col("qv"), col("codes")).as("d2"))
     // rank keys rounded to 4 decimals (same convention as the tf-idf
     // retrieval rank): the ADC sum's oracle twin is a re-associated SQL
     // SUM whose last-ulp order can differ, and an unrounded float key
@@ -357,16 +196,21 @@ object Ann {
     }
   }
 
-  /** nprobe nearest coarse cells per query (lowest cell index on ties —
-    * stable sort over the (cell, dist) list). */
+  /** nprobe nearest coarse cells per query by euclidean distance (lowest
+    * cell index on ties — stable sort over the (cell, dist) list). */
   private def probeCellsUdf(spark: org.apache.spark.sql.SparkSession,
                             centroids: Array[Array[Double]], nprobe: Int) = {
     val bc = spark.sparkContext.broadcast(centroids)
     udf((q: scala.collection.Seq[Double]) => {
       val cs = bc.value
-      cs.indices.map(i => (i, graft.kernels.Kernels.euclidean(
-          cs(i).map(Array(_)), q.map(Array(_)).toArray)))
-        .sortBy(_._2).take(nprobe).map(_._1).toArray
+      val x = q.toArray
+      cs.indices.map { c =>
+        val cc = cs(c)
+        require(cc.length == x.length, "euclidean requires equal-size series")
+        var d = 0.0; var i = 0
+        while (i < x.length) { val t = cc(i) - x(i); d += t * t; i += 1 }
+        (c, math.sqrt(d))
+      }.sortBy(_._2).take(nprobe).map(_._1).toArray
     })
   }
 
@@ -378,11 +222,9 @@ object Ann {
     *
     * The assignment scan is thread-parallel over FIXED sample chunks
     * with per-chunk partial (sums, counts) merged in chunk order —
-    * bit-deterministic for a given (seed, sampleCap, chunk count), and
-    * what makes nlist past 1024 trainable (the r12 cap existed because
-    * the sequential scan cost nlist·sampleCap·d·iters on one core;
-    * nlist=4096/sampleCap=160k is ~4·10¹¹ mults, minutes sequential,
-    * seconds across cores). */
+    * bit-deterministic for a given (seed, sampleCap, chunk count). The
+    * scan costs nlist·sampleCap·d·iters: nlist=4096/sampleCap=160k is
+    * ~4·10¹¹ mults, minutes sequential, seconds across cores. */
   def trainCoarse(df: DataFrame, nlist: Int, seed: Long = 0L, sampleCap: Int = 20000,
                   idCol: String = "vec_id", vecCol: String = "v"): Array[Array[Double]] = {
     val spark = df.sparkSession
@@ -446,259 +288,6 @@ object Ann {
     }
     centers
   }
-
-  /** Distributed Lloyd for the coarse quantizer — the scale-out
-    * successor to [[trainCoarse]] past the driver-local ceiling. The
-    * driver trainer's per-iteration cost is sample·nlist·d mults on ONE
-    * machine's cores, and under the 40-points-per-cell sampling rule
-    * (sample = 40·nlist) that is quadratic in nlist: 209.5 s at
-    * nlist=4096 (SCALEPROBE r14), ~14 min at 8192, ~an hour at 16384 —
-    * while `embeddingCosineAuto`'s √n rule wants 16384 cells at
-    * n≈2.7·10⁸ and 32768 at 10⁹. Here each iteration is one Spark job:
-    * broadcast centers → per-row flat argmin (the zero-alloc kernel of
-    * [[ivfAssign]]) → two-level deterministic reduce → collect nlist
-    * (sum, count) rows (nlist·d doubles — 8 MB at 16384·64). Work
-    * spreads over the cluster and shuffle stays bounded by the SAMPLE
-    * (≤ 40·nlist rows), not the corpus.
-    *
-    * Bit-determinism contract ([[trainCoarse]]'s fixed-chunk contract
-    * re-expressed relationally): every float fold happens in an
-    * explicitly sorted order — rows fold within a (cell, chunk) group
-    * sorted by their stable hash key, chunk partials fold within a cell
-    * sorted by chunk id — so for a fixed materialized sample the
-    * centroids are a pure function of (sample, seed, nChunks),
-    * independent of partitioning, task scheduling, and core count
-    * (spec-locked: two runs on the same input are array-identical).
-    * Chunking also bounds any single collect_list group at ~sample/64
-    * even under adversarial skew (every point in one cell).
-    *
-    * Kept separate from [[trainCoarse]] rather than replacing it: below
-    * ~4096 cells the driver loop wins (no per-iteration job/shuffle
-    * floor); [[trainCoarseAuto]] routes on that measured boundary.
-    * Reference semantics: same Lloyd refinement as the reference's
-    * k-means fit loop (`/root/reference/tslearn/clustering/kmeans.py:677-727`),
-    * here as the IVF quantizer trainer. */
-  /** Release the eager-localCheckpoint blocks behind a DataFrame (the
-    * checkpointed RDD sits behind a LogicalRDD leaf; if a future Spark
-    * changes that plan shape the release is skipped and GC reclaims the
-    * blocks — the safe fallback). */
-  private def releaseCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** k-means‖-style oversampling init (Bahmani et al., "Scalable
-    * k-means++", VLDB 2012) over the materialized training sample:
-    * `rounds` distributed passes each draw ~2·nlist/rounds new
-    * candidates with probability ∝ min-squared-distance to the
-    * candidates drawn so far, then the first nlist candidates in draw
-    * order become the initial centers (early rounds dominate — the
-    * sequential-k-means++ approximation the paper proves a constant
-    * factor for; the reference's init shape is
-    * `/root/reference/tslearn/clustering/kmeans.py:50-133`). Versus the
-    * uniform hash init, distance-weighted draws spread initial centers
-    * into low-mass regions, which is what high-nlist trainers lack (the
-    * 10⁸/nlist=32768 run reseeded empty cells every iteration).
-    *
-    * Deterministic by the same contract as the Lloyd loop: the round-r
-    * draw for a point is a pure function of (hkey, seed, r) — uniform
-    * u = xxhash64(hkey, seed+r) >>> 11 / 2⁵³ compared against
-    * l·md/Σmd — and candidates append in (round, hkey) order, so the
-    * init is a pure function of (sample, seed, nlist). Cost: one
-    * sum + one filtered collect + one broadcast min-dist update pass
-    * per round ≈ half a Lloyd iteration total at any nlist. Opt-in via
-    * `trainCoarseDistributed(init = "kpar")` until the A/B shows it
-    * earns the default (measure first: SCALEPROBE). */
-  private def initKmeansPar(sample: DataFrame, nlist: Int, seed: Long,
-                            reserve: Array[Array[Double]],
-                            rounds: Int = 5): Array[Array[Double]] = {
-    val spark = sample.sparkSession
-    def minDistTo(cs: Array[Array[Double]], v: scala.collection.Seq[Double]): Double = {
-      var best = Double.PositiveInfinity
-      var c = 0
-      while (c < cs.length) {
-        val cc = cs(c)
-        var d = 0.0; var i = 0
-        while (i < cc.length) { val t = cc(i) - v(i); d += t * t; i += 1 }
-        if (d < best) best = d
-        c += 1
-      }
-      best
-    }
-    val cand = scala.collection.mutable.ArrayBuffer[Array[Double]](reserve(0))
-    val l = math.ceil(2.0 * nlist / rounds) // 2× oversample across rounds
-    var cur = {
-      val bc0 = spark.sparkContext.broadcast(Array(reserve(0)))
-      val d0 = udf((v: scala.collection.Seq[Double]) => minDistTo(bc0.value, v))
-      sample.select(col("hkey"), col("v"), d0(col("v")).as("md"))
-        .localCheckpoint(eager = true)
-    }
-    var r = 1
-    var liveMass = true
-    while (r <= rounds && cand.length < 2 * nlist && liveMass) {
-      val total = cur.agg(sum("md")).head().getDouble(0)
-      if (total <= 0.0) liveMass = false // every point IS a candidate already
-      else {
-        val u = shiftrightunsigned(xxhash64(col("hkey"), lit(seed + r)), 11)
-          .cast("double") / lit((1L << 53).toDouble)
-        // deterministic draw; orderBy(hkey)+limit bounds the collect even
-        // if a degenerate mass distribution makes every point pass
-        val newC = cur.where(u < lit(l) * col("md") / lit(total))
-          .orderBy(col("hkey")).limit(4 * l.toInt)
-          .select(col("v")).collect().map(_.getSeq[Double](0).toArray)
-        if (newC.isEmpty) liveMass = false
-        else {
-          cand ++= newC
-          val bc = spark.sparkContext.broadcast(newC)
-          val upd = udf((v: scala.collection.Seq[Double], md: Double) =>
-            math.min(md, minDistTo(bc.value, v)))
-          val next = cur.select(col("hkey"), col("v"),
-            upd(col("v"), col("md")).as("md")).localCheckpoint(eager = true)
-          releaseCheckpoint(cur)
-          cur = next
-          bc.destroy()
-        }
-      }
-      r += 1
-    }
-    releaseCheckpoint(cur)
-    System.err.println(s"[ann] initKmeansPar nlist=$nlist: ${cand.length} " +
-      s"candidates after ${r - 1} rounds")
-    // first nlist in draw order; a short draw (tight data) pads from the
-    // uniform reserve TAIL — the same pool empty-cell reseeds use
-    val out = cand.take(nlist).map(_.clone())
-    var pad = reserve.length - 1
-    while (out.length < nlist && pad >= 0) { out += reserve(pad).clone(); pad -= 1 }
-    out.toArray
-  }
-
-  def trainCoarseDistributed(df: DataFrame, nlist: Int, seed: Long = 0L,
-                             sampleCap: Int = -1, iters: Int = 10, nChunks: Int = 64,
-                             idCol: String = "vec_id", vecCol: String = "v",
-                             init: String = "hash"): Array[Array[Double]] = {
-    val spark = df.sparkSession
-    val cap = if (sampleCap > 0) sampleCap else math.max(20000, 40 * nlist)
-    val n = df.count()
-    val base = df.select(
-      xxhash64(col(idCol), lit(seed)).as("hkey"),
-      col(vecCol).cast("array<double>").as("v"))
-    // freeze the sample once: iterations re-scan 40·nlist rows, never
-    // the corpus, and the fold order below is defined over this exact
-    // materialized set
-    val sample = (if (n <= cap) base
-      else base.sample(withReplacement = false, cap.toDouble / n, seed))
-      .localCheckpoint(eager = true)
-    // init + reseed reserve: hash order is pseudorandom, so "first
-    // 2·nlist by hkey" is a deterministic uniform draw; first nlist are
-    // the initial centers, the tail feeds empty-cell reseeds
-    val reserve = sample.orderBy(col("hkey"), col("v"))
-      .limit(2 * nlist).collect()
-      .map(r => r.getSeq[Double](1).toArray)
-    require(reserve.nonEmpty, "trainCoarseDistributed: empty sample")
-    // A sample smaller than nlist yields fewer than nlist centers —
-    // same contract as trainCoarse (a k-cell quantizer over < k points
-    // is ill-posed however trained), but say so rather than silently
-    // returning a short array.
-    if (reserve.length < nlist)
-      System.err.println(s"[ann] trainCoarseDistributed: sample has only " +
-        s"${reserve.length} rows < nlist=$nlist — returning ${math.min(nlist, reserve.length)} centers")
-    var centers = init match {
-      case "kpar" if reserve.length >= nlist =>
-        initKmeansPar(sample, nlist, seed, reserve)
-      case "kpar" => // ill-posed anyway; hash init states the short count
-        reserve.take(math.min(nlist, reserve.length)).map(_.clone())
-      case "hash" => reserve.take(math.min(nlist, reserve.length)).map(_.clone())
-      case other => throw new IllegalArgumentException(
-        s"trainCoarseDistributed: unknown init '$other' (hash | kpar)")
-    }
-    val dim = centers(0).length
-    val rng = new scala.util.Random(seed)
-    // the folds are pure Catalyst HOFs, no UDF: `aggregate` folds LEFT
-    // in array order, so sort_array + aggregate pins every float
-    // association explicitly
-    val zeros = array_repeat(lit(0.0), dim)
-    for (it <- 1 to iters) {
-      val tIter = System.nanoTime()
-      val bc = spark.sparkContext.broadcast(centers)
-      val assignU = udf((v: scala.collection.Seq[Double]) => {
-        val x = v.toArray
-        val cs = bc.value
-        var best = 0; var bestD = Double.PositiveInfinity
-        var c = 0
-        while (c < cs.length) {
-          val cc = cs(c)
-          var d = 0.0; var i = 0
-          while (i < x.length) { val t = cc(i) - x(i); d += t * t; i += 1 }
-          if (d < bestD) { bestD = d; best = c }
-          c += 1
-        }
-        best
-      })
-      val assigned = sample.select(col("hkey"), col("v"),
-        assignU(col("v")).as("cell"),
-        pmod(col("hkey"), lit(nChunks.toLong)).as("chunk"))
-      val partials = assigned.groupBy("cell", "chunk")
-        .agg(sort_array(collect_list(struct(col("hkey"), col("v")))).as("rows"))
-        .select(col("cell"), col("chunk"),
-          aggregate(col("rows"), zeros,
-            (acc, x) => zip_with(acc, x.getField("v"), (a, b) => a + b)).as("sum"),
-          size(col("rows")).cast("long").as("cnt"))
-      val cellRows = partials.groupBy("cell")
-        .agg(sort_array(collect_list(struct(col("chunk"), col("sum"), col("cnt")))).as("ps"))
-        .select(col("cell"),
-          aggregate(col("ps"), zeros,
-            (acc, x) => zip_with(acc, x.getField("sum"), (a, b) => a + b)).as("sum"),
-          aggregate(col("ps"), lit(0L), (acc, x) => acc + x.getField("cnt")).as("cnt"))
-        .collect()
-      val sums = Array.fill(centers.length)(null: Array[Double])
-      val counts = new Array[Long](centers.length)
-      cellRows.foreach { r =>
-        val c = r.getInt(0)
-        sums(c) = r.getSeq[Double](1).toArray
-        counts(c) = r.getLong(2)
-      }
-      // reseed empties in ascending cell order — rng draw sequence is
-      // then a pure function of the empty-cell pattern
-      centers = centers.indices.map { c =>
-        if (counts(c) == 0L) reserve(rng.nextInt(reserve.length)).clone()
-        else sums(c).map(_ / counts(c))
-      }.toArray
-      bc.destroy()
-      System.err.println(f"[ann] trainCoarseDistributed nlist=$nlist iter $it/$iters: " +
-        f"${(System.nanoTime() - tIter) / 1e9}%.1f s, " +
-        s"${counts.count(_ == 0L)} empty cells reseeded")
-    }
-    // The eager localCheckpoint pinned the sample's blocks in the block
-    // manager (~670 MB at nlist=32768, d=64); the last iteration's
-    // collect fully consumed it, so release the blocks now instead of
-    // waiting for RDD GC.
-    releaseCheckpoint(sample)
-    centers
-  }
-
-  /** Size-routed coarse trainer: driver-local Lloyd below nlist=4096,
-    * distributed Lloyd above. The boundary is where the driver form's
-    * quadratic 40·nlist²·d·iters term stops being tolerable on one
-    * machine (measured 209.5 s at 4096, SCALEPROBE r14) — and at that
-    * very point the distributed form already wins outright (33.7 s at
-    * 4096/n=10⁷, r15 fifteenth probe), so the boundary is conservative:
-    * the driver route is kept below it for its zero job/shuffle floor
-    * on small quantizers and for oracle replayability. The two produce
-    * different (both valid, both deterministic) quantizers, so the
-    * switch is loud for reproducibility audits. */
-  def trainCoarseAuto(df: DataFrame, nlist: Int, seed: Long = 0L,
-                      sampleCap: Int = -1, distributedAbove: Int = 4096,
-                      idCol: String = "vec_id", vecCol: String = "v"): Array[Array[Double]] =
-    if (nlist <= distributedAbove)
-      trainCoarse(df, nlist, seed,
-        if (sampleCap > 0) sampleCap else math.max(20000, 40 * nlist), idCol, vecCol)
-    else {
-      System.err.println(s"[ann] trainCoarseAuto: nlist=$nlist > $distributedAbove — " +
-        "distributed Lloyd (driver-local is quadratic in nlist past this point)")
-      trainCoarseDistributed(df, nlist, seed, sampleCap, idCol = idCol, vecCol = vecCol)
-    }
 
   /** Assign each vector to its nearest coarse cell: one broadcast pass.
     * This is the ONE pass that touches the full corpus, so it runs a
@@ -764,12 +353,12 @@ object Ann {
     *  - bits per band r from target bucket occupancy: a band code must
     *    discriminate the corpus into ~n/2^r ≈ `targetBucket` rows, so
     *    r = ⌈log₂(n / targetBucket)⌉ — this is the "code bits must grow
-    *    with log₂(n)" rule the 1 M AnnProbe run measured (recall 0.117
+    *    with log₂(n)" rule the 1 M-vector scale run measured (recall 0.117
     *    at the old fixed 4-bit bands; buckets of 62 k rows).
     *  - bands b from the recall law P(candidate) = 1 − (1 − pʳ)ᵇ ≥
     *    `recallTarget`, at p = `pNear`, the sign-collision probability
     *    1 − θ/π of a true top-k neighbor. The default 0.68 is MEASURED:
-    *    the 1 M lshauto AnnProbe campaign (SCALEPROBE round 14) ran the
+    *    the 1 M-vector lshauto campaign (SCALEPROBE round 14) ran the
     *    previous p=0.77 derivation (144 bits / 18 bands) and observed
     *    recall 0.579, not the ≥0.9 it was solved for; inverting the law
     *    at (r=8, b=18) gives the effective p = 0.682 of a true top-10
@@ -845,7 +434,7 @@ object Ann {
     *
     * `nBits`/`nBands` ≤ 0 (the default) derives both from the candidate
     * count via [[autoLshParams]] — band bits that actually grow with
-    * log₂(n) (the 1 M AnnProbe run measured recall 0.117 at the old
+    * log₂(n) (the 1 M-vector scale run measured recall 0.117 at the old
     * fixed 16/4 defaults — exactly the scale the operator exists for).
     * Operating regime, measured at 1 M (SCALEPROBE r14): sign-LSH's
     * value is CHEAP MODERATE-RECALL candidate generation (e.g. 0.58
@@ -865,8 +454,8 @@ object Ann {
     *
     * Hot-bucket cap: a band code holding a huge slice of the corpus is
     * a useless discriminator whose candidate join would emit
-    * width·|queries| rows (AnnProbe measured 4-bit band codes at 1 M
-    * vectors filling the shuffle disk with a 250 M-row join). The cap
+    * width·|queries| rows (the 1 M-vector scale run measured 4-bit band
+    * codes filling the shuffle disk with a 250 M-row join). The cap
     * is folded into the candidate scan as a window count over
     * (band, code) — same single job, no eager detection pass (the old
     * groupBy + count() guard cost two extra jobs per call even when no

@@ -14,7 +14,6 @@ import org.apache.spark.sql.functions._
   *    agreeing on ≥1 band are candidates (Hamming ≤ 3 within 64 bits is
   *    guaranteed caught by pigeonhole on 4 bands).
   *  - embedding cosine: triangle self-join at small n; at scale, the
-  *    exact block-partitioned pair join (embeddingCosineBlocked) or the
   *    IVF cell-bucketed candidate join (embeddingCosineIvf).
   */
 object Dedup {
@@ -581,8 +580,7 @@ object Dedup {
 
   /** Embedding cosine near-dup pairs — brute triangle with a broadcast
     * right side. Exact; right for inputs under broadcast size. Above it,
-    * use [[embeddingCosineBlocked]] (exact, no broadcast) or
-    * [[embeddingCosineIvf]] (approximate, cell-bucketed candidates).
+    * use [[embeddingCosineIvf]] (approximate, cell-bucketed candidates).
     *
     * Perf note: the cast + norm are materialized per ROW before the join
     * (localCheckpoint barrier). Left inlined, Catalyst re-evaluates them
@@ -658,51 +656,24 @@ object Dedup {
     val n = df.count()
     if (n <= exactLimit) embeddingCosine(df, threshold, idCol, vecCol)
     else {
-      // nlist = -1 → the FAISS-style √n rule. The cap's history is a
-      // sequence of measurements: 1024 until the 10 M ivfsweep
-      // (SCALEPROBE r14) showed finer-than-cluster cells lose NO recall
-      // at matched candidate mass (nlist=4096/np=16 and np=32 both
-      // recall 1.0 vs brute) and driver-local training holds 209.5 s at
-      // 4096; 8192 was that trainer's practical ceiling (quadratic in
-      // nlist under the 40-points-per-cell rule); now 32768, because
-      // trainCoarseAuto routes past 4096 to the DISTRIBUTED Lloyd,
-      // measured at n=10⁸ (SCALEPROBE r15): 390 s at nlist=16384,
-      // 1205 s at 32768 — walls that scale out with executors instead
-      // of saturating the driver. 32768 is reached by √n at n≈1.1·10⁹
-      // vectors; the next octave (65536) is the same code at ~4× the
-      // training work, unmeasured, so the cap stays at the measured
-      // point. For this operator the query side IS the corpus, so the
-      // candidate scan term n²·np/nlist dominates any assignment cost
-      // and √n cells strictly wins as n grows — at 10⁸ vectors the old
-      // 1024 cap meant ~10⁵-member cells and ~4·10⁵ candidates/vector.
-      // nprobe = 4 is the measured knee of the recall/wall frontier
-      // (CosineProbe, SCALEPROBE round 12: recall 0.51 → 0.87-0.93 over
-      // nprobe 2 → 4 at the SAME wall; nprobe 8 buys ~1.0 recall at ~3×
-      // the wall)
+      // nlist = -1 → the FAISS-style √n rule, capped at 4096: the
+      // largest nlist the driver-local coarse trainer was measured at
+      // (209.5 s, SCALEPROBE r14; its Lloyd cost is quadratic in nlist
+      // under the 40-points-per-cell sampling rule). √n reaches the cap
+      // at n ≈ 1.7·10⁷ vectors. For this operator the query side IS the
+      // corpus, so the candidate scan term n²·np/nlist dominates any
+      // assignment cost and √n cells win as n grows. nprobe = 4 is the
+      // measured knee of the recall/wall frontier (SCALEPROBE round 12:
+      // recall 0.51 → 0.87-0.93 over nprobe 2 → 4 at the SAME wall;
+      // nprobe 8 buys ~1.0 recall at ~3× the wall)
       val lists = if (nlist > 0) nlist
-        else math.max(32, math.min(32768, math.ceil(math.sqrt(n.toDouble)).toInt))
+        else math.max(32, math.min(4096, math.ceil(math.sqrt(n.toDouble)).toInt))
       System.err.println(
         s"[dedup] embeddingCosineAuto: $n rows > exactLimit=$exactLimit — routing to " +
           s"IVF (nlist=$lists, nprobe=$nprobe); recall<1 by construction, emitted " +
           "pairs stay exact-verified")
       embeddingCosineIvf(df, threshold, lists, nprobe, seed, idCol, vecCol)
     }
-  }
-
-  /** EXACT cosine near-dup pairs with no broadcast of the full relation:
-    * the block-partitioned pair join (Cdist.selfBlockedUpper). Identical
-    * output to [[embeddingCosine]]; use when the table exceeds broadcast
-    * size. Shuffle volume `blocks`·n rows; kernel work is still the full
-    * n²/2 dot products — the exact ceiling. */
-  def embeddingCosineBlocked(df: DataFrame, threshold: Double, blocks: Int,
-                             idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import graft.functions.TsFunctions
-    val e = df.select(col(idCol).as("series_id"),
-      TsFunctions.l2NormalizeUdf(transform(col(vecCol), x => x.cast("double"))).as("values"))
-      .localCheckpoint(eager = false)
-    Cdist.selfBlockedUpper(e, (a, b) => graft.functions.NativeExpressions.dotNative(a, b), blocks)
-      .select(col("left_id").as("vec_a"), col("right_id").as("vec_b"), col("dist").as("cos"))
-      .where(col("cos") >= threshold)
   }
 
   /** APPROXIMATE cosine near-dup pairs at scale: vectors are multi-probe
@@ -721,14 +692,10 @@ object Dedup {
       TsFunctions.l2NormalizeUdf(transform(col(vecCol), x => x.cast("double"))).as("v"))
       .localCheckpoint(eager = false)
     // sampleCap scales with nlist (40 training points per cell, the
-    // AnnProbe ivfsweep rule): the default 20 k over the router's
+    // SCALEPROBE r14 ivfsweep rule): the default 20 k over the router's
     // ceiling would leave ~2 points/cell — empty-cell reseeds and a
-    // junk quantizer. trainCoarseAuto routes to the DISTRIBUTED Lloyd
-    // past nlist=4096, where the driver-local trainer's quadratic
-    // 40·nlist²·d·iters term stops fitting one machine (VERDICT r14 #1;
-    // measured: driver 209.5 s at 4096 vs distributed 390 s at 16384 —
-    // a nlist16× point the driver form would need ~an hour for).
-    val centroids = Ann.trainCoarseAuto(e, nlist, seed,
+    // junk quantizer
+    val centroids = Ann.trainCoarse(e, nlist, seed,
       sampleCap = math.max(20000, 40 * nlist), idCol = "vec_id", vecCol = "v")
     val bc = spark.sparkContext.broadcast(centroids)
     val probeUdf = udf((x: scala.collection.Seq[Double]) => {

@@ -2,88 +2,30 @@ package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Distributed matrix profile for ONE very long series — the deferred
-  * scale path for `matrix_profile.py:184-199` semantics (non-normalized
+/** Distributed matrix profile for ONE very long series — the scale
+  * path for `matrix_profile.py:184-199` semantics (non-normalized
   * euclidean, exclusion band ⌈m/4⌉).
   *
-  * Layout: the series is broadcast once (8 B/point — a 100M-point series
-  * is 800 MB, still broadcastable; beyond that, chunk into overlapping
-  * windows upstream). The SUBSEQUENCE INDEX is partitioned into
-  * contiguous i-blocks; each task owns a block and computes its rows'
-  * exact minima by sweeping every diagonal offset with an O(1) rolling
-  * squared-distance update (d²(i+1,j+1) = d²(i,j) − (x_i−x_j)² +
-  * (x_{i+m}−x_{j+m})²), so a block costs O(n·B + n·m) instead of
-  * O(n·B·m). No shuffle at all: every task emits final values for its
-  * own i-range. Work scales as O(n²) total over n/B perfectly parallel
-  * tasks — the same row-block decomposition a 1000-executor run wants.
+  * Layout: the series is a DataFrame of (idx, v) rows, so no single node
+  * ever holds it. Subsequence space splits into `blockSize`-wide tiles;
+  * each tile pulls one segment of blockSize+m−1 points, and every tile
+  * PAIR (bi <= bj) is one task that sweeps the pair's diagonals with an
+  * O(1) rolling squared-distance update (d²(i+1,j+1) = d²(i,j) −
+  * (x_i−x_j)² + (x_{i+m}−x_{j+m})²) in [[tileMinima]], so a pair costs
+  * O(blockSize² + blockSize·m) instead of O(blockSize²·m). A final
+  * groupBy(i).min + sqrt folds the per-pair partial minima.
+  * [[matrixProfileTiled]] sweeps every diagonal; [[matrixProfileDiagBand]]
+  * sweeps one diagonal band (the anytime / chunked form), optionally
+  * against segments built once by [[segmentSeries]].
   */
 object MatrixProfileDist {
 
-  /** Exact per-block minima for i ∈ [b0, b1). */
-  private[operators] def blockMinima(ts: Array[Double], m: Int, band: Int,
-                                     b0: Int, b1: Int): Array[Double] = {
-    val n = ts.length - m + 1
-    // min over SQUARED distances (same argmin — sqrt is monotone), one
-    // sqrt per output at the very end instead of one per cell: the
-    // per-cell sqrt was the measured hot instruction in the 100k probe.
-    val out = Array.fill(b1 - b0)(Double.PositiveInfinity)
-    // One rolling sweep over i ∈ [lo, hi): O(m) init, O(1) per step.
-    def sweep(d: Int, lo: Int, hi: Int): Unit = {
-      if (lo < hi) {
-        var sq = 0.0
-        var k = 0
-        while (k < m) {
-          val df = ts(lo + k) - ts(lo + d + k)
-          sq += df * df
-          k += 1
-        }
-        var i = lo
-        while (i < hi) {
-          if (i >= b0 && i < b1 && sq < out(i - b0)) out(i - b0) = sq
-          val j = i + d
-          if (j >= b0 && j < b1 && sq < out(j - b0)) out(j - b0) = sq
-          // roll to (i+1, j+1)
-          if (i + 1 < hi) {
-            val dOld = ts(i) - ts(j)
-            val dNew = ts(i + m) - ts(j + m)
-            sq += dNew * dNew - dOld * dOld
-          }
-          i += 1
-        }
-      }
-    }
-    // diagonal offset d: pairs (i, i+d), d > band — handles BOTH sides of
-    // each block row because d runs over all offsets with i+d in range,
-    // and for j < i we use the same diagonal from the smaller index:
-    // (j, j+d) with j+d ∈ block. Per diagonal the useful i-ranges are
-    // j∈block → [b0−d, b1−d) and i∈block → [b0, b1): when the diagonal
-    // is wider than the block (d > b1−b0) the two are DISJOINT and must
-    // be swept separately — a single bridged sweep pays O(d) per
-    // diagonal, i.e. O(n²) per BLOCK and O(n³/B) total, the defect the
-    // round-11 1M-point probe caught (the probe hung for >13 min where
-    // the split form finishes in seconds).
-    var d = band + 1
-    while (d < n) {
-      val lo1 = math.max(0, b0 - d); val hi1 = math.min(n - d, b1 - d)
-      val lo2 = b0; val hi2 = math.min(n - d, b1)
-      if (hi1 >= lo2) sweep(d, lo1, math.max(hi1, hi2))
-      else { sweep(d, lo1, hi1); sweep(d, lo2, hi2) }
-      d += 1
-    }
-    var t = 0
-    while (t < out.length) {
-      out(t) = math.sqrt(math.max(0.0, out(t)))
-      t += 1
-    }
-    out
-  }
-
-  /** Cross-tile minima kernel shared by the tiled (no-broadcast) path.
+  /** Cross-tile minima kernel of every tiled sweep.
     * Tile A holds subsequences [aIdx0, aIdx0+aLen) with values `va`
     * (aLen+m-1 points); tile B likewise, with bIdx0 >= aIdx0. Sweeps
     * every global diagonal g = j−i > band that intersects the tile
-    * pair with the same O(1) rolling squared-distance update as
-    * [[blockMinima]], returning per-row SQUARED minima for both tiles
+    * pair with the O(1) rolling squared-distance update, returning
+    * per-row SQUARED minima for both tiles
     * (PositiveInfinity where the pair contributes nothing — e.g. the
     * band-excluded corner of adjacent tiles). Self pairs (aIdx0 ==
     * bIdx0) fall out naturally: only g > band sweeps run and each
@@ -130,47 +72,20 @@ object MatrixProfileDist {
     (minsA, minsB)
   }
 
-  /** (i, mp) rows for every subsequence start of the broadcast series. */
-  def matrixProfile(spark: SparkSession, ts: Array[Double], m: Int,
-                    blockSize: Int = 65536): DataFrame = {
-    import spark.implicits._
-    require(ts.length >= 2 * m, "series shorter than two windows")
-    val n = ts.length - m + 1
-    val band = math.ceil(m / 4.0).toInt
-    val bc = spark.sparkContext.broadcast(ts)
-    val nBlocks = (n + blockSize - 1) / blockSize
-    // parallelize's contiguous slicing puts EXACTLY ⌈blocks/slices⌉
-    // blocks in every task — `repartition(k)` round-robins each input
-    // row from a RANDOM start, which at block counts near the core
-    // count lands 2-3 blocks on some tasks and none on others (measured
-    // as a ~2× straggler tail in the round-11 1M-point probe).
-    spark.sparkContext
-      .parallelize(0 until nBlocks, math.min(nBlocks, spark.sparkContext.defaultParallelism * 2))
-      .flatMap { blk =>
-        val b0 = blk * blockSize
-        val b1 = math.min(n, b0 + blockSize)
-        val mins = blockMinima(bc.value, m, band, b0, b1)
-        (b0 until b1).iterator.map(i => (i, mins(i - b0)))
-      }
-      .toDF("i", "mp")
-  }
-
-  /** Tiled matrix profile over a DISTRIBUTED series — the path past the
-    * broadcast bound (the array form tops out where 8 B/point stops
-    * broadcasting, ~1 G points). Input is a DataFrame of
-    * (idx: Long, v: Double) rows, idx contiguous from 0; no single node
-    * ever holds the series.
+  /** Tiled matrix profile over a DISTRIBUTED series: (i, mp) rows for
+    * every subsequence start. Input is a DataFrame of
+    * (idx: Long, v: Double) rows, idx contiguous from 0.
     *
     * SCAMP-style decomposition: subsequence space splits into
     * `blockSize`-wide tiles; every tile PAIR (bi <= bj) is one task that
     * pulls just its two segments (blockSize+m−1 points each), sweeps the
-    * pair's diagonals with the same O(1) rolling update, and emits
+    * pair's diagonals with the O(1) rolling update, and emits
     * per-row partial minima; a final groupBy(idx).min + sqrt folds the
-    * (n/B) partials per row. Costs vs the broadcast form: segments move
-    * through one shuffle replicated (n/B)× — total (n²/B + n·m) values
-    * on the wire — and the partial-min fold shuffles n·(n/B) rows
-    * (map-side combined), in exchange for O(blockSize) peak memory per
-    * task and no driver/broadcast bottleneck. Pick blockSize so
+    * (n/B) partials per row. Costs: segments move through one shuffle
+    * replicated (n/B)× — total (n²/B + n·m) values on the wire — and
+    * the partial-min fold shuffles n·(n/B) rows (map-side combined), in
+    * exchange for O(blockSize) peak memory per task and no
+    * driver/broadcast bottleneck. Pick blockSize so
     * n/blockSize ≈ 4× total cores; bigger tiles cut replication
     * quadratically in exchange for per-task memory. */
   def matrixProfileTiled(spark: SparkSession, series: DataFrame, m: Int,

