@@ -398,7 +398,6 @@ object SparkEntry {
     // ---------------- matrix profile (SURVEY §2.4/2.6) ---------------
     "ts_matrix_profile" -> ((s, dir) => {
       val m = 8
-      TsFunctions.register(s)
       val series = TSModel.eventsToSeries(s, dir)
         .where(size(col("values")) >= m * 2)
       series
@@ -481,7 +480,6 @@ object SparkEntry {
     // rows; no window over the corpus.
     "ts_discord" -> ((s, dir) => {
       val m = 8
-      TsFunctions.register(s)
       TSModel.eventsToSeries(s, dir)
         .where(size(col("values")) >= m * 2)
         .select(col("series_id").as("user_id"),
@@ -523,7 +521,6 @@ object SparkEntry {
     // min; the scale=false raw variant is ts_matrix_profile.
     "ts_matrix_profile_znorm" -> ((s, dir) => {
       val m = 8
-      TsFunctions.register(s)
       val series = TSModel.eventsToSeries(s, dir)
         .where(size(col("values")) >= m * 2)
       series
@@ -1201,9 +1198,6 @@ object SparkEntry {
         .select(col("probe_id").as("query_id"), col("label"))
     }),
 
-    // portable=true switches the base hash to md5-60bit and band buckets
-    // to slice values, so the DuckDB oracle below reproduces the LSH
-    // pipeline with IDENTICAL constants (Dedup.minhashCoeffs)
     // silhouette of the label clustering over the first 200 embeddings —
     // the silhouette operator (clustering/utils.py:66-197) with a full
     // relational oracle (pairwise dists → per-cluster means → (b−a)/max)
@@ -1222,8 +1216,11 @@ object SparkEntry {
       Seq(math.rint(score * 1e4) / 1e4).toDF("silhouette")
     }),
 
+    // the md5-60 base hash and slice-value band buckets let the DuckDB
+    // oracle reproduce the LSH pipeline with IDENTICAL constants
+    // (Dedup.minhashCoeffs)
     "doc_minhash_pairs" -> ((s, dir) => {
-      graft.operators.Dedup.minhashLsh(docs(s, dir), threshold = 0.35, portable = true)
+      graft.operators.Dedup.minhashLsh(docs(s, dir), threshold = 0.35)
         .select(col("doc_a"), col("doc_b"), round(col("est_jaccard"), 4).as("est_jaccard"))
     }),
 
@@ -1472,7 +1469,7 @@ object SparkEntry {
     // turns a pair list into "keep one doc per cluster".
     "doc_dedup_clusters" -> ((s, dir) => {
       val d = docs(s, dir)
-      val pairs = graft.operators.Dedup.minhashLsh(d, threshold = 0.35, portable = true)
+      val pairs = graft.operators.Dedup.minhashLsh(d, threshold = 0.35)
       val comps = graft.operators.Dedup.connectedComponents(pairs)
       d.select(col("doc_id")).join(comps, Seq("doc_id"), "left")
         .select(col("doc_id"), coalesce(col("cluster"), col("doc_id")).as("cluster"))
@@ -1486,7 +1483,7 @@ object SparkEntry {
     // sees corpus-scale partitions at any data size.
     "doc_dedup_keep_best" -> ((s, dir) => {
       val d = docs(s, dir)
-      val pairs = graft.operators.Dedup.minhashLsh(d, threshold = 0.35, portable = true)
+      val pairs = graft.operators.Dedup.minhashLsh(d, threshold = 0.35)
       val comps = graft.operators.Dedup.connectedComponents(pairs)
       val q = d.select(col("doc_id"),
         graft.operators.TextAnalysis.qualityScore(col("text")).as("quality"))
@@ -1499,14 +1496,14 @@ object SparkEntry {
     }),
 
     "doc_simhash" -> ((s, dir) => {
-      graft.operators.Dedup.simhash(docs(s, dir), portable = true)
+      graft.operators.Dedup.simhash(docs(s, dir))
     }),
 
     // banded simhash near-dup pairs; the 4×15-bit pigeonhole makes the
     // band filter LOSSLESS for hamming ≤ 3, so the oracle is the plain
     // all-pairs hamming join
     "doc_simhash_pairs" -> ((s, dir) => {
-      graft.operators.Dedup.simhashPairs(docs(s, dir), maxHamming = 3, portable = true)
+      graft.operators.Dedup.simhashPairs(docs(s, dir), maxHamming = 3)
     }),
 
     // ---------------- clustering / barycenters -----------------------
@@ -1517,7 +1514,6 @@ object SparkEntry {
     // no-ops once converged, so running all 10 updates is equivalent to
     // the tol-gated loop on converged data.
     "ts_kmeans" -> ((s, dir) => {
-      TsFunctions.register(s)
       // localCheckpoint: fit and predict both consume the prepared
       // series; without it the events→series→resample pipeline runs twice
       val series = TSModel.eventsToSeries(s, dir)
@@ -1951,7 +1947,6 @@ object SparkEntry {
     // (LB-prune mirror + banded DTW DP unrolled as a 32-step CTE chain,
     // knnDtwOracleSql) compares without float-hash fragility.
     "knn_dtw_users" -> ((s, dir) => {
-      TsFunctions.register(s)
       val series = TSModel.eventsToSeries(s, dir)
         .select(col("series_id"),
           TsFunctions.resampleZnormUdf(col("values"), lit(32)).as("values"))
@@ -1968,7 +1963,6 @@ object SparkEntry {
     // parity of SCALEPROBE.md), so the oracle is knn_dtw_users' own SQL — this row makes
     // the blocked path driver signal, not just spec signal.
     "knn_dtw_blocked" -> ((s, dir) => {
-      TsFunctions.register(s)
       val series = TSModel.eventsToSeries(s, dir)
         .select(col("series_id"),
           TsFunctions.resampleZnormUdf(col("values"), lit(32)).as("values"))
@@ -2156,7 +2150,6 @@ object SparkEntry {
     // the same unbanded DP chain oracle as ts_dtw_mv_pairs (univariate
     // local cost, all-pairs join).
     "cdist_dtw_pairs" -> ((s, dir) => {
-      TsFunctions.register(s)
       val series = TSModel.eventsToSeries(s, dir)
         .where(col("series_id") < 16)
         .select(col("series_id"),
@@ -2173,7 +2166,6 @@ object SparkEntry {
     // aggregation, pinned parity labels.
     "ts_silhouette_dtw" -> ((s, dir) => {
       import s.implicits._
-      TsFunctions.register(s)
       val series = TSModel.eventsToSeries(s, dir)
         .where(col("series_id") < 16)
         .select(col("series_id"),
@@ -2193,7 +2185,6 @@ object SparkEntry {
     // which let metricsSampleOracleSql replay ALL six metrics — the
     // last rows-only query.
     "cdist_metrics_sample" -> ((s, dir) => {
-      TsFunctions.register(s)
       val series = TSModel.eventsToSeries(s, dir)
         .where(col("series_id") < 20)
         // fixed length for the equal-size metrics (SBD); DTW/GAK/LCSS
@@ -2849,7 +2840,7 @@ object SparkEntry {
     // micro-batch, so every non-min doc of a band bucket emits
     // (doc, band, bucket_min) — exactly the per-band window oracle.
     "doc_stream_neardup" -> ((s, dir) =>
-      graft.streaming.StreamingOps.dedupNearMinhash(docs(s, dir), portable = true)
+      graft.streaming.StreamingOps.dedupNearMinhash(docs(s, dir))
         .toDF().select(col("doc_id"), col("band"), col("dup_of"))),
 
     // Streaming early-classification predict (StreamingOps.earlyClassify

@@ -23,12 +23,8 @@ object NativeOps {
     * 32-char hex string or re-parsing it base-16: the first 15 hex chars
     * are the first 8 digest bytes big-endian shifted right 4 bits. */
   def md5Hash60(s: org.apache.spark.unsafe.types.UTF8String): Long = {
-    val d = md5Local.get()
-    d.reset()
-    val h = d.digest(s.getBytes)
-    (((h(0) & 0xffL) << 56) | ((h(1) & 0xffL) << 48) | ((h(2) & 0xffL) << 40) |
-      ((h(3) & 0xffL) << 32) | ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) |
-      ((h(6) & 0xffL) << 8) | (h(7) & 0xffL)) >>> 4
+    val bytes = s.getBytes
+    md5Word60(md5Local.get(), bytes, 0, bytes.length)
   }
 
   /** Primitive dot product — the UDF version converts both arrays into
@@ -101,19 +97,8 @@ object NativeOps {
   def shingleHash60(text: org.apache.spark.unsafe.types.UTF8String, k: Int,
                     lowercase: Boolean, distinct: Boolean): ArrayData = {
     val bytes = (if (lowercase) text.toLowerCase else text).getBytes
-    // word boundaries: indices of spaces
-    var nWords = 1
-    var i = 0
-    while (i < bytes.length) { if (bytes(i) == ' ') nWords += 1; i += 1 }
-    val starts = new Array[Int](nWords + 1)
-    var w = 1
-    starts(0) = 0
-    i = 0
-    while (i < bytes.length) {
-      if (bytes(i) == ' ') { starts(w) = i + 1; w += 1 }
-      i += 1
-    }
-    starts(nWords) = bytes.length + 1 // sentinel: end of word j is starts(j+1)-1
+    val starts = wordStarts(bytes)
+    val nWords = starts.length - 1
     val nSh = math.max(nWords - k, 0) + 1
     val d = md5Local.get()
     val out = new Array[Long](nSh)
@@ -122,15 +107,8 @@ object NativeOps {
       // window [s, min(s+k, nWords)) joined with ' ' is EXACTLY the
       // byte range from starts(s) to the end of word min(s+k,nWords)-1
       val endWord = math.min(s + k, nWords)
-      val from = starts(s)
-      val until = starts(endWord) - 1 // strip trailing separator/sentinel
-      d.reset()
-      d.update(bytes, from, until - from)
-      val h = d.digest()
-      out(s) = (((h(0) & 0xffL) << 56) | ((h(1) & 0xffL) << 48) |
-        ((h(2) & 0xffL) << 40) | ((h(3) & 0xffL) << 32) |
-        ((h(4) & 0xffL) << 24) | ((h(5) & 0xffL) << 16) |
-        ((h(6) & 0xffL) << 8) | (h(7) & 0xffL)) >>> 4
+      // - 1 strips the trailing separator/sentinel
+      out(s) = md5Word60(d, bytes, starts(s), starts(endWord) - 1)
       s += 1
     }
     if (!distinct) ArrayData.toArrayData(out)
@@ -154,7 +132,7 @@ object NativeOps {
     * min(i+k, nWords)−1 (single-space separators make the join equal
     * the span; UTF-8 never embeds 0x20 in a multibyte sequence), so
     * the produced strings are IDENTICAL to the HOF chain's — every
-    * downstream md5/xxhash64 and string-equality join is unchanged.
+    * downstream md5 and string-equality join is unchanged.
     * `distinct` mirrors array_distinct: first-occurrence order. */
   def shingleSpans(text: org.apache.spark.unsafe.types.UTF8String, k: Int,
                    distinct: Boolean): ArrayData = {
@@ -185,9 +163,9 @@ object NativeOps {
   }
 
   /** One-pass MinHash signature over an array of shingle strings: for
-    * each shingle, the 60-bit portable md5 base hash mod p, then the
-    * running minimum of (a_j·x + b_j) mod p for every permutation j —
-    * the fused form of rowShingleHashes + rowSignatureFromHashes
+    * each shingle, the 60-bit md5 base hash mod p, then the running
+    * minimum of (a_j·x + b_j) mod p for every permutation j — the fused
+    * form of 64 staged `array_min(transform(..))` HOF minima
     * (interpreted HOF lambdas cost ~64 closure calls per shingle; this
     * is one tight primitive loop). Base hash is non-negative, a_j,
     * x < p = 2³¹−1, so products fit a Long and % equals pmod. */
@@ -229,6 +207,10 @@ object NativeOps {
     starts
   }
 
+  /** The 60-bit md5 hash of `bytes[from, until)`: the first 8 digest
+    * bytes big-endian, shifted right 4 bits — the value DuckDB replays
+    * as `substring(md5(x), 1, 15)` read base 16. The one definition of
+    * the text-dedup hash. */
   private def md5Word60(d: java.security.MessageDigest,
                         bytes: Array[Byte], from: Int, until: Int): Long = {
     d.reset()
@@ -501,11 +483,10 @@ case class HashedBowExpression(child: Expression, d: Int)
     copy(child = c)
 }
 
-/** Fused portable MinHash signature of an ARRAY<STRING> shingle column
+/** Fused MinHash signature of an ARRAY<STRING> shingle column
   * (see [[NativeOps.minhashSig]]): numHashes per-permutation minima in
-  * one primitive pass, bit-identical to the staged HOF form (and so to
-  * the DuckDB oracle's md5 replay). Coefficient arrays ride along as
-  * codegen reference objects. */
+  * one primitive pass, bit-identical to the DuckDB oracle's md5 replay.
+  * Coefficient arrays ride along as codegen reference objects. */
 case class MinhashSigExpression(child: Expression, numHashes: Int, seed: Long)
     extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
   private val p: Long = graft.operators.Dedup.MinhashP
@@ -536,7 +517,7 @@ case class MinhashSigExpression(child: Expression, numHashes: Int, seed: Long)
 }
 
 object NativeExpressions {
-  /** Fused portable MinHash signature of an ARRAY<STRING> column. */
+  /** Fused MinHash signature of an ARRAY<STRING> column. */
   def minhashSigNative(sh: Column, numHashes: Int = 64, seed: Long = 42L): Column =
     GraftColumnBridge.column(MinhashSigExpression(
       GraftColumnBridge.expression(sh), numHashes, seed))
@@ -564,11 +545,6 @@ object NativeExpressions {
   def dtwNative(a: Column, b: Column, radius: Int = -1): Column =
     GraftColumnBridge.column(DtwExpression(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b), radius))
-
-  def lbKeoghNative(q: Column, low: Column, up: Column): Column =
-    GraftColumnBridge.column(LbKeoghExpression(
-      GraftColumnBridge.expression(q), GraftColumnBridge.expression(low),
-      GraftColumnBridge.expression(up)))
 
   /** One-pass word-k-shingle strings (array<string>) of a STRING
     * column — value-identical to the interpreted

@@ -187,16 +187,6 @@ object TsFunctions {
   val resampleZnormUdf: UserDefinedFunction =
     udf((s: S, target: Int) =>
       Kernels.scaleMeanVariance(Kernels.resample(uniTs(s), target)).map(_(0)))
-  /** Primitive-loop dot product: one call per pair. The higher-order
-    * zip_with+aggregate form pays per-element boxing inside generic
-    * ArrayData — measured ~10× slower in multi-million-pair joins. */
-  val dotUdf: UserDefinedFunction =
-    udf((a: S, b: S) => {
-      var s = 0.0; var i = 0
-      val n = math.min(a.length, b.length)
-      while (i < n) { s += a(i) * b(i); i += 1 }
-      s
-    })
   /** L2-normalize a vector in one pass (pre-join materialization for
     * cosine pair joins). */
   val l2NormalizeUdf: UserDefinedFunction =
@@ -216,18 +206,6 @@ object TsFunctions {
     udf((s: S, r: Int) => {
       val (low, up) = Kernels.lbEnvelope(s.toArray, r)
       (low, up)
-    })
-  /** LB_Keogh from a precomputed envelope (cheap per-pair bound). */
-  val lbKeoghEnvUdf: UserDefinedFunction =
-    udf((q: S, low: S, up: S) => {
-      var s = 0.0; var i = 0
-      while (i < q.length) {
-        val v = q(i)
-        if (v > up(i)) { val d = v - up(i); s += d * d }
-        else if (v < low(i)) { val d = low(i) - v; s += d * d }
-        i += 1
-      }
-      math.sqrt(s)
     })
 
   /** Register every kernel for SQL use. Idempotent. */

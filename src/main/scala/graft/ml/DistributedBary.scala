@@ -327,6 +327,20 @@ object DistributedBary {
     Kernels.scaleMeanVariance(Kernels.uni(signed)).map(_(0))
   }
 
+  /** Power-iteration start vector shared with the SQL oracle: the ramp
+    * i − (sz−1)/2, ℓ2-normalized (zero-mean but outside null(M); see
+    * [[shapeByClusterPower]]). sz = 1 degenerates to the zero ramp →
+    * fall back to the unit vector. */
+  def powerInit(sz: Int): Array[Double] = {
+    val c = (sz - 1) / 2.0
+    val raw = Array.tabulate(sz)(i => i - c)
+    var n2 = 0.0
+    var i = 0
+    while (i < sz) { n2 += raw(i) * raw(i); i += 1 }
+    val n = math.sqrt(n2)
+    if (n == 0) Array.fill(sz)(1.0) else raw.map(_ / n)
+  }
+
   /** Deterministic power-iteration variant of [[shapeByCluster]]: the
     * same distributed gram pass, but the dominant eigenvector is the
     * result of EXACTLY `steps` power-method updates from the ramp init
@@ -346,20 +360,6 @@ object DistributedBary {
     * toward the dominant eigenvector; with enough steps the result
     * matches [[shapeByCluster]] up to tolerance (spec-checked).
     * Same sign fix ((Σ aligned members)·v) and final z-norm. */
-  /** Power-iteration start vector shared with the SQL oracle: the ramp
-    * i − (sz−1)/2, ℓ2-normalized (zero-mean but outside null(M); see
-    * [[shapeByClusterPower]]). sz = 1 degenerates to the zero ramp →
-    * fall back to the unit vector. */
-  def powerInit(sz: Int): Array[Double] = {
-    val c = (sz - 1) / 2.0
-    val raw = Array.tabulate(sz)(i => i - c)
-    var n2 = 0.0
-    var i = 0
-    while (i < sz) { n2 += raw(i) * raw(i); i += 1 }
-    val n = math.sqrt(n2)
-    if (n == 0) Array.fill(sz)(1.0) else raw.map(_ / n)
-  }
-
   def shapeByClusterPower(rows: Dataset[(Int, Array[Double])],
                           centers: Array[Array[Double]],
                           steps: Int = 60): Map[Int, Array[Double]] = {

@@ -10,11 +10,14 @@ import org.apache.spark.sql.functions._
   *  - MinHash+LSH: shingle explode → per-doc signature agg → band-bucket
   *    join. Candidate pairs only ever form inside a bucket, so the
   *    all-pairs O(n²) never materializes — the 100TB path.
-  *  - SimHash: 64-bit signature per doc, banded into 4×16-bit keys; pairs
-  *    agreeing on ≥1 band are candidates (Hamming ≤ 3 within 64 bits is
+  *  - SimHash: 60-bit signature per doc, banded into 4×15-bit keys; pairs
+  *    agreeing on ≥1 band are candidates (Hamming ≤ 3 within 60 bits is
   *    guaranteed caught by pigeonhole on 4 bands).
   *  - embedding cosine: triangle self-join at small n; at scale, the
   *    IVF cell-bucketed candidate join (embeddingCosineIvf).
+  *
+  * Every text hash is the 60-bit md5 of [[md5Hash60]], which the DuckDB
+  * oracles replay as `substring(md5(x), 1, 15)`.
   */
 object Dedup {
 
@@ -31,7 +34,7 @@ object Dedup {
     * sizes (e.g. Jaccard denominators). Callers with possibly-duplicated
     * ids must `dropDuplicates(idCol)` first. */
   def shingles(df: DataFrame, k: Int = 3, idCol: String = "doc_id",
-               textCol: String = "text", dedupe: Boolean = true): DataFrame = {
+               textCol: String = "text"): DataFrame = {
     // Native one-pass construction (guide §4): the former
     // split(lower)/transform(sequence)/slice/array_join HOF chain cost
     // interpreted lambda dispatch + an intermediate word array per row
@@ -41,12 +44,11 @@ object Dedup {
     // strings (each shingle is the contiguous lowercased byte span of
     // its k-word window; single-space separators make the join equal
     // the span), so every downstream hash and string join is unchanged.
-    // dedupe=true mirrors array_distinct (first-occurrence order),
-    // per-row before the explode — no shuffle; dedupe=false keeps the
-    // multiset for consumers like MinHash minima.
+    // The per-doc distinct mirrors array_distinct (first-occurrence
+    // order), per-row before the explode — no shuffle.
     df.select(col(idCol).as("doc_id"),
       explode(graft.functions.NativeExpressions.shingleSpansNative(
-        col(textCol), k, distinct = dedupe)).as("sh"))
+        col(textCol), k)).as("sh"))
   }
 
   /** Directional shingle containment C(a → b) = |Sh(a) ∩ Sh(b)| / |Sh(a)|
@@ -176,30 +178,23 @@ object Dedup {
     * shuffle of the stream at all.
     *
     * PRECONDITION: `shingleStream` must hold at most one row per
-    * (doc_id, sh) — true for every in-repo call site (shingles with
-    * dedupe=true, or array_distinct before the explode). Only then does
-    * count(1) equal doc frequency; pass `perDocDeduped = false` for a
-    * raw multiset stream and the df is computed with
-    * countDistinct(doc_id) instead (correct, but the distinct pass
-    * shuffles a hot shingle's doc ids to one reducer — prefer deduping
-    * upstream).
+    * (doc_id, sh) — true for every call site ([[shingles]], or a
+    * per-doc distinct before the explode). Only then does count(1)
+    * equal doc frequency.
     *
     * The hot set's only bound is rows/maxDf, which a web-scale corpus
     * can push past driver memory, so the broadcast is guarded: the hot
     * set is counted (it is materialized anyway) and past
-    * `broadcastCap` rows the anti-join falls back to a plain shuffled
+    * [[BroadcastCap]] rows the anti-join falls back to a plain shuffled
     * join — the same guard-and-fallback split as knnDtwPruned and
     * connectedComponents. */
-  def dfCapped(shingleStream: DataFrame, maxDf: Int,
-               perDocDeduped: Boolean = true,
-               broadcastCap: Long = 2000000L): DataFrame = {
-    val dfExpr = if (perDocDeduped) count(lit(1)) else countDistinct(col("doc_id"))
+  def dfCapped(shingleStream: DataFrame, maxDf: Int): DataFrame = {
     // localCheckpoint (eager): the hot frame feeds the count AND the
     // anti-join — without it the groupBy runs twice
-    val hot = shingleStream.groupBy("sh").agg(dfExpr.as("df"))
+    val hot = shingleStream.groupBy("sh").agg(count(lit(1)).as("df"))
       .where(col("df") > maxDf).select("sh")
       .localCheckpoint()
-    if (hot.count() <= broadcastCap)
+    if (hot.count() <= BroadcastCap)
       shingleStream.join(broadcast(hot), Seq("sh"), "left_anti")
     else
       shingleStream.join(hot.hint("shuffle_hash"), Seq("sh"), "left_anti")
@@ -324,6 +319,10 @@ object Dedup {
     res
   }
 
+  /** Row cap on the broadcast side of the hot-set anti-joins
+    * ([[dfCapped]], [[capBuckets]]); a larger hot set is shuffle-joined. */
+  private val BroadcastCap: Long = 2000000L
+
   /** The MinHash modulus: 2^31−1 keeps a·x+b < 2^62 (no ANSI overflow). */
   val MinhashP: Long = 2147483647L
 
@@ -335,11 +334,12 @@ object Dedup {
       math.abs(rng.nextLong()) % MinhashP))
   }
 
-  /** Engine-portable 60-bit hash: first 15 hex chars of md5 — computable
-    * bit-identically in DuckDB (`CAST(CONCAT('0x', substring(md5(x),1,15))
-    * AS BIGINT)`), unlike xxhash64. Slower than xxhash64; used where an
-    * external oracle must reproduce the hash. Native codegen expression
-    * (digest bytes -> long, no hex string + conv round-trip: ~2.5x). */
+  /** The text-dedup base hash: first 15 hex chars of md5 as a 60-bit
+    * long — computable bit-identically in DuckDB
+    * (`CAST(CONCAT('0x', substring(md5(x),1,15)) AS BIGINT)`), so every
+    * signature built on it has an external oracle. Native codegen
+    * expression (digest bytes -> long, no hex string + conv round-trip:
+    * ~2.5x). */
   def md5Hash60(c: Column): Column =
     graft.functions.NativeExpressions.md5Hash60Native(c.cast("string"))
 
@@ -376,24 +376,12 @@ object Dedup {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Array[Long]]()
   }
 
-  /** MinHash signatures: numHashes permutations via (a_i·x + b_i) mod p
-    * over a base shingle hash (xxhash64 by default; the md5-based portable
-    * hash when `portable`). One explode + one typed min-agg — no
-    * shingle×hash row explosion. */
-  def minhashSignatures(sh: DataFrame, numHashes: Int = 64, seed: Long = 42L,
-                        portable: Boolean = false): DataFrame = {
-    val p = MinhashP
-    val base = pmod(if (portable) md5Hash60(col("sh")) else xxhash64(col("sh")), lit(p))
-    minhashSignaturesFromHashes(
-      sh.select(col("doc_id").cast("long").as("doc_id"), base.as("x")),
-      numHashes, seed)
-  }
-
-  /** Signature aggregation over pre-hashed base values `(doc_id, x)`
-    * with x already in [0, p). udaf on a plain groupBy (not typed
-    * groupByKey): skips the per-row tuple encode/decode of the Dataset
-    * conversion while keeping the single-buffer aggregation + map-side
-    * combine. */
+  /** MinHash signatures: numHashes permutations via (a_i·x + b_i) mod p,
+    * aggregated over pre-hashed base values `(doc_id, x)` with x already
+    * in [0, p). One typed min-agg — no shingle×hash row explosion; udaf
+    * on a plain groupBy (not typed groupByKey) skips the per-row tuple
+    * encode/decode of the Dataset conversion while keeping the
+    * single-buffer aggregation + map-side combine. */
   def minhashSignaturesFromHashes(xs: DataFrame, numHashes: Int = 64,
                                   seed: Long = 42L): DataFrame = {
     val p = MinhashP
@@ -431,7 +419,7 @@ object Dedup {
       // broadcast is a counted guard, not an assumption: the hot-bucket
       // set is rows/maxBucket-bounded, which web scale can still blow
       // past driver memory — past the cap, shuffled anti-join instead
-      if (nHot <= 2000000L) banded.join(broadcast(hot), keyCols, "left_anti")
+      if (nHot <= BroadcastCap) banded.join(broadcast(hot), keyCols, "left_anti")
       else banded.join(hot.hint("shuffle_hash"), keyCols, "left_anti")
     }
   }
@@ -440,11 +428,17 @@ object Dedup {
     * candidates are verified against the estimated Jaccard from full
     * signatures. Returns (doc_a, doc_b, est_jaccard ≥ threshold).
     * `maxBucket` bounds any one band bucket's candidate contribution
-    * (see [[capBuckets]]). */
+    * (see [[capBuckets]]). The base shingle hash is [[md5Hash60]] and a
+    * band's bucket key is its slice VALUE, so an external SQL oracle
+    * reproduces the banding as a plain list-equality join. The mode
+    * flag before `maxBucket` accepts only its default, `true`; it stays
+    * for callers that still pass it by name. */
   def minhashLsh(df: DataFrame, threshold: Double = 0.5, numHashes: Int = 64,
                  bands: Int = 16, shingleK: Int = 3, seed: Long = 42L,
                  idCol: String = "doc_id", textCol: String = "text",
-                 portable: Boolean = false, maxBucket: Int = 1000): DataFrame = {
+                 portable: Boolean = true, maxBucket: Int = 1000): DataFrame = {
+    require(portable, "minhashLsh: the xxhash64 mode (portable = false) was removed; " +
+      "the 60-bit md5 is the only base hash")
     val rowsPerBand = numHashes / bands
     // NOTE (measured, round 9): the exploded UDAF shape here is
     // deliberate — swapping in the fused per-row MinhashSigExpression
@@ -453,33 +447,24 @@ object Dedup {
     // codegen row by row, while the per-row form materializes each
     // doc's whole signature before the next stage sees it. What DOES
     // win is replacing the interpreted string-shingle construction
-    // with the native one-pass hash (ShingleHash60Expression,
-    // portable mode): same explode+UDAF shape, 8-byte rows, no
-    // intermediate strings.
-    // dedupe=false / distinct=false: per-permutation minima are
-    // multiset-invariant, so the per-doc distinct is pure overhead.
+    // with the native one-pass hash (ShingleHash60Expression): same
+    // explode+UDAF shape, 8-byte rows, no intermediate strings.
+    // distinct=false: per-permutation minima are multiset-invariant, so
+    // the per-doc distinct is pure overhead.
     // localCheckpoint, not cache: the signature table feeds the banding,
     // the bucket-cap count AND both verification joins of the lazily
     // returned result — a cache here is never unpersistable before the
     // caller materializes, so it would pin blocks for the session
-    val sig = (if (portable)
-      minhashSignaturesFromHashes(
-        df.select(col(idCol).cast("long").as("doc_id"),
-            explode(graft.functions.NativeExpressions.shingleHash60Native(
-              col(textCol), shingleK, lowercase = true, distinct = false)).as("h"))
-          .select(col("doc_id"), pmod(col("h"), lit(MinhashP)).as("x")),
-        numHashes, seed)
-    else minhashSignatures(shingles(df, shingleK, idCol, textCol, dedupe = false),
-      numHashes, seed, portable)).localCheckpoint()
-    // bucket key: the band slice hashed to 64 bits (narrow shuffle key) —
-    // or the slice VALUE itself in portable mode, which an external SQL
-    // oracle can reproduce as a plain list-equality join
-    def bucketOf(b: Int): Column =
-      if (portable) slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).cast("string")
-      else xxhash64(slice(col("sig"), b * rowsPerBand + 1, rowsPerBand), lit(b)).cast("string")
+    val sig = minhashSignaturesFromHashes(
+      df.select(col(idCol).cast("long").as("doc_id"),
+          explode(graft.functions.NativeExpressions.shingleHash60Native(
+            col(textCol), shingleK, lowercase = true, distinct = false)).as("h"))
+        .select(col("doc_id"), pmod(col("h"), lit(MinhashP)).as("x")),
+      numHashes, seed).localCheckpoint()
     val banded = capBuckets(
       sig.select(col("doc_id"), col("sig"),
-        posexplode(array((0 until bands).map(bucketOf): _*))
+        posexplode(array((0 until bands).map(b =>
+          slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).cast("string")): _*))
           .as(Seq("band", "bucket"))),
       Seq("band", "bucket"), maxBucket, "minhashLsh")
     val candidates = banded.select(col("band"), col("bucket"), col("doc_id"))
@@ -498,9 +483,6 @@ object Dedup {
       .where(col("est_jaccard") >= threshold)
   }
 
-  /** SimHash per doc from word-level hashes (unweighted): 64 bits of
-    * xxhash64 by default, 60 bits of the portable md5 hash when
-    * `portable` (so a DuckDB oracle reproduces it bit-for-bit). */
   /** Elementwise vector sum as a typed aggregation — replaces nBits
     * separate sum(CASE…) aggregates whose whole-stage codegen alone cost
     * seconds to compile; the buffer is one primitive array with map-side
@@ -534,32 +516,32 @@ object Dedup {
       org.apache.spark.sql.Encoders.scalaLong
   }
 
-  def simhash(df: DataFrame, idCol: String = "doc_id", textCol: String = "text",
-              portable: Boolean = false): DataFrame = {
-    val nBits = if (portable) 60 else 64
-    val bitAgg = udaf(new BitSumAgg(nBits),
+  /** SimHash per doc from word-level hashes (unweighted): 60 bits, one
+    * per bit of the word's [[md5Hash60]], so a DuckDB oracle reproduces
+    * it bit-for-bit. */
+  def simhash(df: DataFrame, idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
+    val bitAgg = udaf(new BitSumAgg(60),
       org.apache.spark.sql.Encoders.scalaLong)
     df.select(col(idCol).cast("long").as("doc_id"),
         explode(split(lower(col(textCol)), " ")).as("w"))
-      .select(col("doc_id"),
-        (if (portable) md5Hash60(col("w")) else xxhash64(col("w"))).as("h"))
+      .select(col("doc_id"), md5Hash60(col("w")).as("h"))
       .groupBy("doc_id")
       .agg(bitAgg(col("h")).as("simhash"))
   }
 
   /** SimHash near-dup candidates with Hamming distance ≤ maxHamming,
-    * banded into 4 keys (16-bit, or 15-bit in portable/60-bit mode) —
+    * banded into 4 keys of 15 bits (of the 60-bit signature) —
     * pigeonhole-complete for maxHamming ≤ 3 as long as no band bucket
     * exceeds `maxBucket` (a dropped degenerate bucket trades that
     * completeness for a bounded join; see [[capBuckets]], which reports
     * any drop). */
   def simhashPairs(df: DataFrame, maxHamming: Int = 3,
                    idCol: String = "doc_id", textCol: String = "text",
-                   portable: Boolean = false, maxBucket: Int = 1000): DataFrame = {
-    val bandBits = if (portable) 15 else 16
+                   maxBucket: Int = 1000): DataFrame = {
+    val bandBits = 15
     val bandMask = (1L << bandBits) - 1
     // localCheckpoint for the same no-session-pin reason as minhashLsh
-    val sh = simhash(df, idCol, textCol, portable).localCheckpoint()
+    val sh = simhash(df, idCol, textCol).localCheckpoint()
     val banded = capBuckets(
       sh.select(col("doc_id"), col("simhash"),
         posexplode(array((0 until 4).map(b =>

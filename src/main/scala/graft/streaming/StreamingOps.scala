@@ -106,53 +106,23 @@ object StreamingOps {
 
   case class BandHit(doc_id: Long, band: Int, dup_of: Long)
 
-  /** Per-row MinHash signature as pure expressions, in two stages — the
-    * streaming-legal form of Dedup.minhashSignatures (whose explode +
-    * min-agg is a stateful aggregation, and Structured Streaming cannot
-    * chain an aggregation into flatMapGroupsWithState). Same math
-    * bit-for-bit: sig_j = min over word-k-shingles of (a_j·x + b_j)
-    * mod p with x = baseHash(shingle) mod p; a_j, x < p = 2³¹−1, so
-    * a_j·x fits a Long. Cost per doc: shingles × numHashes
-    * multiply-mods, row-local, no shuffle.
-    *
-    * Stage 1: per-row array of base shingle hashes (mod p). MUST be
-    * projected as a real column (its own select) before feeding
-    * [[rowSignatureFromHashes]] — a Column referenced inside an HOF
-    * lambda is INLINED by Catalyst, so passing this expression directly
-    * into the 64 per-permutation minima re-runs the md5 of every
-    * shingle 64× (measured: 93 s inlined → ~3 s warm staged on 5 k
-    * docs at sf0.1). */
   /** Per-row word-k-shingle array (same construction as Dedup.shingles
-    * with dedupe=false, as an expression) — the native one-pass span
-    * form (guide §4): identical strings in identical order to the
-    * former split/transform/slice/array_join HOF chain, minus the
+    * without the per-doc distinct, as an expression) — the native
+    * one-pass span form (guide §4): identical strings in identical order
+    * to the former split/transform/slice/array_join HOF chain, minus the
     * interpreted lambda dispatch and the intermediate word array. */
   def shingleArr(textCol: org.apache.spark.sql.Column, k: Int): org.apache.spark.sql.Column =
     graft.functions.NativeExpressions.shingleSpansNative(textCol, k, distinct = false)
 
-  def rowShingleHashes(textCol: org.apache.spark.sql.Column, k: Int = 3,
-                       portable: Boolean = false): org.apache.spark.sql.Column = {
-    val p = graft.operators.Dedup.MinhashP
-    transform(shingleArr(textCol, k), s =>
-      pmod(if (portable) graft.operators.Dedup.md5Hash60(s) else xxhash64(s), lit(p)))
-  }
-
-  /** Stage 2: the numHashes per-permutation minima over an ATTRIBUTE
-    * column of base hashes (see [[rowShingleHashes]]). */
-  def rowSignatureFromHashes(xsCol: org.apache.spark.sql.Column,
-                             numHashes: Int = 64, seed: Long = 42L): org.apache.spark.sql.Column = {
-    val p = graft.operators.Dedup.MinhashP
-    val coeffs = graft.operators.Dedup.minhashCoeffs(numHashes, seed)
-    array(coeffs.map { case (a, b) =>
-      array_min(transform(xsCol, x => pmod(x * lit(a) + lit(b), lit(p))))
-    }.toIndexedSeq: _*)
-  }
-
   /** Streaming near-duplicate detection at ingest — the streaming twin
-    * of Dedup.minhashLsh's banding stage: per-row signatures (stateless,
-    * see rowShingleHashes / rowSignatureFromHashes), LSH band codes as the state key, and one
-    * `flatMapGroupsWithState` keeping ONE Long per (band, bucket): the
-    * lowest doc_id seen so far. A doc landing in a non-empty bucket
+    * of Dedup.minhashLsh's banding stage: per-row signatures, LSH band
+    * codes as the state key, and one `flatMapGroupsWithState` keeping
+    * ONE Long per (band, bucket): the lowest doc_id seen so far. The
+    * signature is the fused MinhashSigExpression, stateless and
+    * row-local (Structured Streaming cannot chain the batch route's
+    * explode + min-agg into flatMapGroupsWithState), with the same math
+    * bit-for-bit: sig_j = min over word-k-shingles of (a_j·x + b_j) mod p
+    * with x = md5Hash60(shingle) mod p. A doc landing in a non-empty bucket
     * emits (doc_id, band, dup_of = that holder) — the ingest-time
     * "probably seen before" signal, before any expensive verification.
     * Docs in each micro-batch are processed in doc_id order so the
@@ -162,28 +132,17 @@ object StreamingOps {
     * state-store TTL; the group sort is bounded by the bucket's rows in
     * ONE micro-batch, not the stream's history. */
   def dedupNearMinhash(docs: DataFrame, numHashes: Int = 64, bands: Int = 16,
-                       shingleK: Int = 3, seed: Long = 42L,
-                       portable: Boolean = false): Dataset[BandHit] = {
+                       shingleK: Int = 3, seed: Long = 42L): Dataset[BandHit] = {
     val spark = docs.sparkSession
     import spark.implicits._
     val rowsPerBand = numHashes / bands
-    // portable mode: the fused native expression (one primitive pass,
-    // codegen'd — bit-identical to the staged HOF form and the DuckDB
-    // oracle). xxhash mode keeps the staged HOFs: two selects on
-    // purpose, xs must be an attribute when the 64 minima reference it
-    // (HOF lambda inlining).
-    val sig =
-      if (portable)
-        docs.select(col("doc_id").cast("long").as("doc_id"),
-            shingleArr(col("text"), shingleK).as("shs"))
-          .select(col("doc_id"),
-            graft.functions.NativeExpressions.minhashSigNative(
-              col("shs"), numHashes, seed).as("sig"))
-      else
-        docs.select(col("doc_id").cast("long").as("doc_id"),
-            rowShingleHashes(col("text"), shingleK, portable).as("xs"))
-          .select(col("doc_id"),
-            rowSignatureFromHashes(col("xs"), numHashes, seed).as("sig"))
+    // one primitive codegen'd pass per row, bit-identical to the DuckDB
+    // oracle's md5 replay
+    val sig = docs.select(col("doc_id").cast("long").as("doc_id"),
+        shingleArr(col("text"), shingleK).as("shs"))
+      .select(col("doc_id"),
+        graft.functions.NativeExpressions.minhashSigNative(
+          col("shs"), numHashes, seed).as("sig"))
     val banded = sig.select(col("doc_id"), posexplode(
         array((0 until bands).map(b =>
           slice(col("sig"), b * rowsPerBand + 1, rowsPerBand).cast("string")): _*))

@@ -135,6 +135,20 @@ class AdvancedSpec extends AnyFunSuite {
     }
   }
 
+  test("TsFunctions.register: re-registering works and SQL ts_dtw equals Kernels.dtw") {
+    import graft.functions.TsFunctions
+    // the SQL surface README documents; a second register must replace,
+    // not fail
+    TsFunctions.register(spark)
+    TsFunctions.register(spark)
+    val a = Array(0.0, 1.0, 2.5, 1.0, -0.5)
+    val b = Array(0.5, 2.0, 2.0, 0.0)
+    val got = spark.sql(
+      s"SELECT ts_dtw(array(${a.mkString(", ")}), array(${b.mkString(", ")}))")
+      .head().getDouble(0)
+    assert(got == Kernels.dtw(uni(a), uni(b)))
+  }
+
   test("native expressions COMPILE under codegen (no fallback) and match eval") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference

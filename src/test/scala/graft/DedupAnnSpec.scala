@@ -68,9 +68,9 @@ class DedupAnnSpec extends AnyFunSuite {
     // the real corpus has no bucket near the default cap: results with
     // and without the cap are identical (the oracle-compatibility claim)
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val a = Dedup.simhashPairs(docs, portable = true)
+    val a = Dedup.simhashPairs(docs)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
-    val b = Dedup.simhashPairs(docs, portable = true, maxBucket = Int.MaxValue)
+    val b = Dedup.simhashPairs(docs, maxBucket = Int.MaxValue)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(a == b, "default cap must not fire on the test corpus")
   }
@@ -523,6 +523,32 @@ class DedupAnnSpec extends AnyFunSuite {
         .mapValues(_.map(_._2).toSet).toMap
       assert(native == viaStrings, s"lowercase=$lc drifted")
     }
+  }
+
+  test("60-bit md5 hash == the first 15 hex chars of a JDK MessageDigest md5") {
+    import graft.functions.NativeExpressions
+    // independent reference: hex-encode the full digest, then read the
+    // first 15 hex chars base 16 — what the DuckDB oracles replay
+    def ref(s: String): Long = {
+      val hex = java.security.MessageDigest.getInstance("MD5")
+        .digest(s.getBytes("UTF-8")).map(b => f"${b & 0xff}%02x").mkString
+      java.lang.Long.parseLong(hex.take(15), 16)
+    }
+    val texts = Seq("", "abc", "naïve café über straße 東京")
+    val got = texts.toDF("s")
+      .select(NativeExpressions.md5Hash60Native(col("s"))).as[Long].collect().toSeq
+    assert(got == texts.map(ref))
+    // one 3-word shingle: the whole (lowercased) text is the only window
+    val sh = Seq("The Quick fox").toDF("text")
+      .select(NativeExpressions.shingleHash60Native(col("text"), 3,
+        lowercase = true, distinct = true)).as[Seq[Long]].head()
+    assert(sh == Seq(ref("the quick fox")))
+  }
+
+  test("minhashLsh rejects the removed xxhash64 mode") {
+    val docs = Seq((0L, "a b c d")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](Dedup.minhashLsh(docs, portable = false))
+    assert(e.getMessage.contains("xxhash64"))
   }
 
   test("learned quality filter: gradient step reduces loss, fit separates") {

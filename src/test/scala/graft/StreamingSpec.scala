@@ -183,9 +183,18 @@ class StreamingSpec extends AnyFunSuite {
       (1L, "the quick brown fox jumps over the lazy dog today"),  // near-dup of 0
       (2L, "completely different text with no overlap at all here"))
       .toDF("doc_id", "text")
+    // reference: the staged HOF form — per-row base hashes mod p as a
+    // real column, then 64 per-permutation array_min(transform(..))
+    // minima over it (two selects: a Column referenced inside an HOF
+    // lambda is inlined, so xs must be an attribute)
+    val p = graft.operators.Dedup.MinhashP
+    val coeffs = graft.operators.Dedup.minhashCoeffs(64, 42L)
     val rowSig = docsDf.select(col("doc_id"),
-        StreamingOps.rowShingleHashes(col("text"), portable = true).as("xs"))
-      .select(col("doc_id"), StreamingOps.rowSignatureFromHashes(col("xs")).as("sig"))
+        transform(StreamingOps.shingleArr(col("text"), 3),
+          s => pmod(graft.operators.Dedup.md5Hash60(s), lit(p))).as("xs"))
+      .select(col("doc_id"), array(coeffs.map { case (a, b) =>
+          array_min(transform(col("xs"), x => pmod(x * lit(a) + lit(b), lit(p))))
+        }.toIndexedSeq: _*).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     // the fused native expression must equal the staged HOF form
     val nativeSig = docsDf.select(col("doc_id"),
@@ -194,15 +203,17 @@ class StreamingSpec extends AnyFunSuite {
         graft.functions.NativeExpressions.minhashSigNative(col("shs")).as("sig"))
       .as[(Long, Seq[Long])].collect().toMap
     assert(nativeSig == rowSig, "native fused signature drifted from the HOF form")
-    val aggSig = graft.operators.Dedup.minhashSignatures(
-        graft.operators.Dedup.shingles(docsDf, 3, dedupe = false),
-        portable = true)
+    val aggSig = graft.operators.Dedup.minhashSignaturesFromHashes(
+        docsDf.select(col("doc_id"),
+            explode(graft.functions.NativeExpressions.shingleHash60Native(
+              col("text"), 3, lowercase = true, distinct = false)).as("h"))
+          .select(col("doc_id"), pmod(col("h"), lit(p)).as("x")))
       .as[(Long, Seq[Long])].collect().toMap
     assert(rowSig == aggSig, "row-expression signature drifted from the batch agg")
 
     val input = MemoryStream[(Long, String)]
     val q = StreamingOps.dedupNearMinhash(
-        input.toDF().toDF("doc_id", "text"), portable = true)
+        input.toDF().toDF("doc_id", "text"))
       .writeStream.format("memory").queryName("neardup").outputMode("append").start()
     input.addData((0L, "the quick brown fox jumps over the lazy dog tonight"),
       (2L, "completely different text with no overlap at all here"))
