@@ -1956,9 +1956,10 @@ object SparkEntry {
         .select(col("probe_id"), col("rank"), col("neighbor_id"))
     }),
 
-    // The SAME kNN through the no-broadcast blocked route (maxIndexRows
-    // = 0 forces the dispatch the 100× train scale-up takes): tiled
-    // salted LB phase, winners-only rejoin, the early-abandon cascade.
+    // The SAME kNN through the no-broadcast blocked route, called
+    // directly (the front door takes it past 100,000 train rows, as at a
+    // 100× train scale-up): tiled salted LB phase, winners-only rejoin,
+    // the early-abandon cascade.
     // Output is route-independent (CdistBlockSpec parity, and the sf1
     // parity of SCALEPROBE.md), so the oracle is knn_dtw_users' own SQL — this row makes
     // the blocked path driver signal, not just spec signal.
@@ -1967,7 +1968,7 @@ object SparkEntry {
         .select(col("series_id"),
           TsFunctions.resampleZnormUdf(col("values"), lit(32)).as("values"))
         .localCheckpoint()
-      Cdist.knnDtwPruned(series, series, k = 4, radius = 4, maxIndexRows = 0)
+      Cdist.knnDtwBlocked(series, series, k = 4, radius = 4)
         .where(col("probe_id") =!= col("neighbor_id")).where(col("rank") <= 3)
         .select(col("probe_id"), col("rank"), col("neighbor_id"))
     }),

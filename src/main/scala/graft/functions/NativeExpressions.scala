@@ -1,7 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.GraftColumnBridge
@@ -259,22 +259,6 @@ object NativeOps {
     }
     ArrayData.toArrayData(hist)
   }
-
-  def lbKeogh(q: ArrayData, lo: ArrayData, hi: ArrayData): Double = {
-    val qa = q.toDoubleArray()
-    val la = lo.toDoubleArray()
-    val ua = hi.toDoubleArray()
-    var s = 0.0
-    var i = 0
-    val n = math.min(qa.length, math.min(la.length, ua.length))
-    while (i < n) {
-      val v = qa(i)
-      if (v > ua(i)) { val d = v - ua(i); s += d * d }
-      else if (v < la(i)) { val d = la(i) - v; s += d * d }
-      i += 1
-    }
-    math.sqrt(s)
-  }
 }
 
 /** Native Catalyst expressions for the hot pair-metric path.
@@ -298,23 +282,6 @@ case class DtwExpression(left: Expression, right: Expression, radius: Int)
       s"${ev.value} = graft.functions.NativeOps.dtw($a, $b, $radius);")
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
-}
-
-/** LB_Keogh against a precomputed envelope (low, up) — cheap O(sz) bound
-  * evaluated per pair before the exact DTW. */
-case class LbKeoghExpression(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "ts_lb_keogh_native"
-  override protected def nullSafeEval(q: Any, lo: Any, hi: Any): Any =
-    NativeOps.lbKeogh(q.asInstanceOf[ArrayData], lo.asInstanceOf[ArrayData],
-      hi.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (q, lo, hi) =>
-      s"${ev.value} = graft.functions.NativeOps.lbKeogh($q, $lo, $hi);")
-  override protected def withNewChildrenInternal(f: Expression, s: Expression,
-                                                 t: Expression): Expression =
-    copy(first = f, second = s, third = t)
 }
 
 /** Dot product of two ARRAY<DOUBLE> columns on the primitive buffers —

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import graft.functions.TsFunctions
 
 /** All-pairs metric θ-join machinery — the reference's only join shape
@@ -138,31 +138,35 @@ object Cdist {
       .select(col("left_id").as("probe_id"), col("rank"), col("right_id").as("neighbor_id"), col("dist"))
   }
 
+  /** Train rows up to which the DTW k-NN front doors broadcast their index. */
+  private val MaxIndexRows = 100000
+
+  /** The size guard of both DTW k-NN front doors, [[knnDtwPruned]] and
+    * [[knnDtwRagged]]. Up to [[MaxIndexRows]] train rows, the whole train
+    * index is collected once, broadcast, and scanned per probe row inside
+    * one UDF call: the plan adds no exchange (PlanAuditSpec-locked). Past
+    * it — where a broadcast index would run the driver out of memory at
+    * a 100× train scale-up — each front door takes its tiled twin,
+    * [[knnDtwBlocked]] or [[knnDtwRaggedBlocked]]: the train side
+    * shuffles into 16 hashed blocks ([[tiledBest]]) and the output is
+    * identical (CdistBlockSpec, VariableLengthSpec). All four routes rank
+    * by (dist, id) ascending, NaN after every number: the k-slot
+    * [[TopK.insert]] on the broadcast side, array_sort merges on the
+    * tiled side. limit + count answers "more than MaxIndexRows rows?"
+    * without scanning the full relation. */
+  private def fitsIndex(train: DataFrame): Boolean =
+    train.select(col("series_id")).limit(MaxIndexRows + 1).count() <= MaxIndexRows
+
   /** DTW k-NN with LB_Keogh pre-pruning (equal-length series required for
     * the bound) — the reference's lower-bound optimization
     * (`dtw_variants.py:1224-1296`) as a pre-join filter: the cheap O(n)
     * bound prunes candidates before the O(n²) DTW runs. `factor` keeps
-    * k·factor candidates per probe by LB before the exact metric.
-    *
-    * Guarded dispatch: up to `maxIndexRows` train rows the whole
-    * (id, series, envelope) index is broadcast and the plan is
-    * exchange-free (PlanAuditSpec-locked). Beyond that — the driver-memory
-    * ceiling the broadcast index would otherwise OOM on at a 100× train
-    * scale-up — it degrades to [[knnDtwBlocked]], which shuffles the train
-    * side into block-local indexes and produces IDENTICAL output. */
+    * k·factor candidates per probe by LB before the exact metric
+    * ([[lbSelect]]). Route by train size: [[fitsIndex]]. */
   def knnDtwPruned(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
-                   factor: Int = 4, seriesCol: String = "values",
-                   maxIndexRows: Long = 100000, blocks: Int = 16): DataFrame = {
-    // limit+count short-circuits: answers "more than maxIndexRows?" without
-    // scanning the full relation; the +1 saturates instead of overflowing
-    // (maxIndexRows = Long.MaxValue must mean "never blocked", not a
-    // wrapped-negative limit(0))
-    val cap = if (maxIndexRows >= Int.MaxValue - 1L) Int.MaxValue
-              else (maxIndexRows + 1).toInt
-    val over = train.select(col("series_id")).limit(cap).count() > maxIndexRows
-    if (over) knnDtwBlocked(probes, train, k, radius, factor, blocks, seriesCol)
-    else knnDtwBroadcastIndex(probes, train, k, radius, factor, seriesCol)
-  }
+                   factor: Int = 4, seriesCol: String = "values"): DataFrame =
+    if (fitsIndex(train)) knnDtwBroadcastIndex(probes, train, k, radius, factor, seriesCol)
+    else knnDtwBlocked(probes, train, k, radius, factor, seriesCol = seriesCol)
 
   private def knnDtwBroadcastIndex(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
                                    factor: Int, seriesCol: String): DataFrame = {
@@ -173,8 +177,7 @@ object Cdist {
     // row stream; each executor scans the index with O(sz) bounds and runs
     // the O(sz·radius) DTW only for the k·factor LB survivors. Envelopes
     // are precomputed once per train series (O(sz·radius) each), not per
-    // pair. Same candidate-selection semantics as the former two-window
-    // formulation: k·factor by (lb, id) asc, then k by (dist, id) asc.
+    // pair.
     val spark = probes.sparkSession
     import spark.implicits._
     val index: Array[(Long, Array[Double], Array[Double], Array[Double])] =
@@ -184,119 +187,81 @@ object Cdist {
         .as[(Long, Array[Double], Array[Double], Array[Double])]
         .collect()
         .sortBy(_._1)
-    val bc = spark.sparkContext.broadcast(index)
+    val bc = spark.sparkContext.broadcast((index.map(r => (r._1, r._3, r._4)), index.map(_._2)))
     val kf = k * factor
     val knnUdf = udf((lv: scala.collection.Seq[Double]) => {
       val q = lv.toArray
-      val idx = bc.value
-      // pass 1: LB_Keogh against every train envelope, keep k·factor
-      val lbs = new Array[Double](idx.length)
-      var i = 0
-      while (i < idx.length) {
-        // LB_Keogh is UNDEFINED for unequal lengths (the reference raises,
-        // `dtw_variants.py:1248-1251`): a silent min-length walk would be
-        // a bound of NOTHING and prune true neighbors. Reject loudly.
-        require(idx(i)._3.length == q.length,
-          s"LB_Keogh requires equal-length series (probe sz=${q.length}, " +
-            s"train id=${idx(i)._1} sz=${idx(i)._3.length}); " +
-            "use Cdist.knnDtwRagged for variable-length input")
-        lbs(i) = graft.kernels.Kernels.lbKeoghEnv(q, idx(i)._3, idx(i)._4)
-        i += 1
-      }
-      val cand = (0 until idx.length).sortBy(i => (lbs(i), idx(i)._1)).take(kf)
-      // pass 2: the kth-best cascade over the SAME candidate set
-      cascade(q, cand.map(i => (lbs(i), idx(i)._1, idx(i)._2)), k, radius)
+      val (env, series) = bc.value
+      cascade(q, lbSelect(q, env, kf).map { case (lb, i) => (lb, env(i)._1, series(i)) },
+        k, radius)
     })
-    probes.select(col("series_id").as("probe_id"),
-        posexplode(knnUdf(col(seriesCol))).as(Seq("rank0", "hit")))
-      .select(col("probe_id"), (col("rank0") + 1).as("rank"),
-        col("hit._1").as("neighbor_id"), col("hit._2").as("dist"))
+    ranked(probes, col("series_id"), knnUdf(col(seriesCol)), "_1", "_2")
   }
 
-  /** LB-ordered k-slot early-abandon cascade — shared pass 2 of both
-    * kNN paths. `cands` must be sorted ascending (lb, id); once the
+  /** The LB candidate select of both pruned routes: LB_Keogh of `q`
+    * against every (id, lower, upper) envelope of `env`, then the `kf`
+    * best as (lb, index into `env`), ascending (lb, id). LB_Keogh is
+    * UNDEFINED for unequal lengths (the reference raises,
+    * `dtw_variants.py:1248-1251`): a silent min-length walk would be a
+    * bound of NOTHING and prune true neighbors, so it is rejected loudly. */
+  private def lbSelect(q: Array[Double], env: Array[(Long, Array[Double], Array[Double])],
+                       kf: Int): IndexedSeq[(Double, Int)] = {
+    val lbs = new Array[Double](env.length)
+    var i = 0
+    while (i < env.length) {
+      require(env(i)._2.length == q.length,
+        s"LB_Keogh requires equal-length series (probe sz=${q.length}, " +
+          s"train id=${env(i)._1} sz=${env(i)._2.length}); " +
+          "use Cdist.knnDtwRagged for variable-length input")
+      lbs(i) = graft.kernels.Kernels.lbKeoghEnv(q, env(i)._2, env(i)._3)
+      i += 1
+    }
+    (0 until env.length).sortBy(i => (lbs(i), env(i)._1)).take(kf).map(i => (lbs(i), i))
+  }
+
+  /** LB-ordered k-slot early-abandon cascade — the exact pass of every
+    * DTW k-NN route. `cands` must be sorted ascending (lb, id); once the
     * k-slot buffer fills, a candidate whose LB strictly exceeds the
     * kth-best distance is skipped outright (dist ≥ lb), and the DP of
     * a survivor abandons past that bound ([[Kernels.dtwFlatEA]]).
     * Strict (>) comparisons everywhere, so a candidate TYING the kth
     * best is still computed exactly and (dist, id) tie-ranking is
-    * bit-identical to the exhaustive pass it replaces. */
+    * bit-identical to the exhaustive pass it replaces. A NaN kth best
+    * (the distance to an empty series) neither skips nor abandons, and
+    * any number displaces it ([[TopK.insert]]). */
   private[graft] def cascade(q: Array[Double],
                              cands: scala.collection.Seq[(Double, Long, Array[Double])],
                              k: Int, radius: Int): Array[(Long, Double)] = {
-    val ids = new Array[Long](k)
-    val ds = new Array[Double](k)
-    var n = 0
+    val b = TopK.Buf(new Array[Long](k), new Array[Double](k), 0)
     cands.foreach { case (lb, id, tv) =>
-      val bsf = if (n == k) ds(k - 1) else Double.PositiveInfinity
-      if (!(n == k && lb > bsf)) {
-        val d = graft.kernels.Kernels.dtwFlatEA(q, tv, radius, bsf)
-        if (n < k || d < ds(k - 1) || (d == ds(k - 1) && id < ids(k - 1))) {
-          var p = math.min(n, k - 1)
-          while (p > 0 && (ds(p - 1) > d || (ds(p - 1) == d && ids(p - 1) > id))) {
-            ds(p) = ds(p - 1); ids(p) = ids(p - 1); p -= 1
-          }
-          ds(p) = d; ids(p) = id
-          if (n < k) n += 1
-        }
-      }
+      val bsf = if (b.n == k) b.vs(k - 1) else Double.PositiveInfinity
+      if (!(b.n == k && lb > bsf))
+        TopK.insert(b, id, graft.kernels.Kernels.dtwFlatEA(q, tv, radius, bsf))
     }
-    (0 until n).map(i => (ids(i), ds(i))).toArray
+    Array.tabulate(b.n)(i => (b.ids(i), b.vs(i)))
   }
 
   /** Partitioned-index DTW k-NN for train sides too large to broadcast.
     *
-    * Phase 1 is LB-only: the train side's (id, envelope) index is hashed
-    * into `blocks` grouped rows (series stay OUT of the index — they are
-    * re-joined for the winners only); probes replicate `blocks`× and
-    * equi-join — shuffle volume is blocks·|probes| + |train| rows, never
-    * a pair-space stream and never a full-relation broadcast. The global
-    * merge re-slices the per-block LB survivors to the k·factor best by
-    * (lb, id) — bit-identical candidate selection to the broadcast
-    * path's. Phase 2 equi-joins ONLY those winners' series back by id,
-    * regroups per probe, and runs the same LB-ordered early-abandon
-    * [[cascade]] as the broadcast path: exact DTW work is ≤ k·factor
-    * DPs per probe (it was blocks·k·factor before the two-phase split),
-    * each abandoning at the running kth-best. */
+    * Phase 1 is LB-only: the train side's (id, envelope) index is tiled
+    * against the probes ([[tiledBest]]; series stay OUT of the index —
+    * they are re-joined for the winners only), so shuffle volume is
+    * blocks·|probes| + |train| rows, never a pair-space stream and never
+    * a full-relation broadcast. The global merge re-slices the per-block
+    * LB survivors to the k·factor best by (lb, id) — bit-identical
+    * candidate selection to the broadcast path's. Phase 2 equi-joins ONLY
+    * those winners' series back by id, regroups per probe, and runs the
+    * same LB-ordered early-abandon [[cascade]] as the broadcast path:
+    * exact DTW work is ≤ k·factor DPs per probe, each abandoning at the
+    * running kth-best. */
   private[graft] def knnDtwBlocked(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
                                    factor: Int = 4, blocks: Int = 16,
                                    seriesCol: String = "values"): DataFrame = {
-    require(blocks >= 1, "blocks must be >= 1")
     val kf = k * factor
-    // salt the (small) index side: `blocks` alone is too few join keys
-    // to occupy a fleet — without it the tile scan ran on ≤`blocks`
-    // tasks regardless of cores (measured: 5 busy threads of 32 at the
-    // sf1 octave). Each block row replicates `salt`×; a probe chunk
-    // joins exactly the replica at chk % salt, so every tile pair still
-    // meets exactly once, over blocks·salt ≥ 4·parallelism keys.
-    val salt = math.max(1,
-      (4 * train.sparkSession.sparkContext.defaultParallelism + blocks - 1) / blocks)
-    val tEnv = train
-      .select(col("series_id").cast("long").as("id"),
-        TsFunctions.envelopeUdf(col(seriesCol), lit(radius)).as("env"))
-      .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
-      .groupBy("blk")
-      .agg(collect_list(struct(col("id").as("_1"),
-        col("env._1").as("_2"), col("env._2").as("_3"))).as("idx"))
-      .withColumn("slt", explode(sequence(lit(0), lit(salt - 1))))
-    // probes tile into chunks so one task call scans (chunk × block):
-    // the block index deserializes ONCE per tile pair, not once per
-    // probe row — per-row UDF decode of a thousand-entry struct array
-    // was the measured bottleneck at the sf1 octave (5 effective
-    // threads, minutes of pure deserialization)
-    val chunks = math.max(32,
-      probes.sparkSession.sparkContext.defaultParallelism * 4)
-    val pChunks = probes
-      .select(col("series_id").cast("long").as("probe_id"),
-        col(seriesCol).cast("array<double>").as("q"))
-      .withColumn("chk", pmod(xxhash64(col("probe_id")), lit(chunks)).cast("int"))
-      .groupBy("chk")
-      .agg(collect_list(struct(col("probe_id").as("_1"), col("q").as("_2"))).as("ps"))
-      .withColumn("blk", explode(sequence(lit(0), lit(blocks - 1))))
-      .withColumn("slt", pmod(col("chk"), lit(salt)).cast("int"))
-    // per-(tile × block) survivors as (probe_id, lb, id) — struct field
-    // ORDER after probe_id is the merge key: array_sort on (_1=lb,
-    // _2=id) reproduces the broadcast path's global candidate selection
+    val tEnv = train.select(col("series_id").cast("long").as("id"),
+      TsFunctions.envelopeUdf(col(seriesCol), lit(radius)).as("env"))
+    // per tile, the survivors as (probe_id, lb, id): array_sort on
+    // (lb, id) then reproduces the broadcast path's global selection
     val lbUdf = udf((ps: scala.collection.Seq[(Long, scala.collection.Seq[Double])],
                      idx: scala.collection.Seq[(Long, scala.collection.Seq[Double],
                        scala.collection.Seq[Double])]) => {
@@ -304,33 +269,14 @@ object Cdist {
       // linked list, and an O(i) apply inside the sort comparator turns
       // the per-probe top-kf into O(n² log n) (measured: every executor
       // thread stuck in List.drop at the sf1 octave)
-      val index = idx.iterator.map(r => (r._1, r._2.toArray, r._3.toArray)).toArray
-      val lbs = new Array[Double](index.length)
+      val env = idx.iterator.map(r => (r._1, r._2.toArray, r._3.toArray)).toArray
       ps.iterator.flatMap { case (pid, q) =>
-        val qa = q.toArray
-        var i = 0
-        while (i < index.length) {
-          // same equal-length contract as the broadcast route: LB_Keogh
-          // on sz1 != sz2 is not a lower bound (`dtw_variants.py:1248-1251`)
-          require(index(i)._2.length == qa.length,
-            s"LB_Keogh requires equal-length series (probe sz=${qa.length}, " +
-              s"train id=${index(i)._1} sz=${index(i)._2.length}); " +
-              "use Cdist.knnDtwRagged for variable-length input")
-          lbs(i) = graft.kernels.Kernels.lbKeoghEnv(qa, index(i)._2, index(i)._3)
-          i += 1
-        }
-        (0 until index.length).sortBy(i => (lbs(i), index(i)._1)).take(kf)
-          .map(i => (pid, lbs(i), index(i)._1))
+        lbSelect(q.toArray, env, kf).map { case (lb, i) => (pid, lb, env(i)._1) }
       }.toArray
     })
-    // shuffle-hash: this path exists because train exceeds broadcast size
-    val winners = pChunks.join(tEnv.hint("shuffle_hash"), Seq("blk", "slt"))
-      .select(explode(lbUdf(col("ps"), col("idx"))).as("c"))
-      .select(col("c._1").as("probe_id"),
-        struct(col("c._2").as("_1"), col("c._3").as("_2")).as("c"))
-      .groupBy("probe_id")
-      .agg(slice(array_sort(collect_list(col("c"))), 1, kf).as("cands"))
-      .select(col("probe_id"), explode(col("cands")).as("c"))
+    val winners = tiledBest(probes, tEnv, Seq(col("env._1"), col("env._2")), blocks,
+        seriesCol, lbUdf, kf)
+      .select(col("probe_id"), explode(col("best")).as("c"))
       .select(col("probe_id"), col("c._1").as("lb"), col("c._2").as("id"))
     val cascadeUdf = udf((q: scala.collection.Seq[Double],
                           cs: scala.collection.Seq[(Double, Long, scala.collection.Seq[Double])]) => {
@@ -342,7 +288,7 @@ object Cdist {
     // shuffle_hash on both rejoins: this path exists because train (and
     // possibly probes) exceed broadcast size — never let a toy input
     // bait Catalyst into a broadcast the real scale can't afford
-    winners
+    val cands = winners
       .join(train.select(col("series_id").cast("long").as("id"),
         col(seriesCol).cast("array<double>").as("tv")).hint("shuffle_hash"), Seq("id"))
       .groupBy("probe_id")
@@ -350,10 +296,7 @@ object Cdist {
         col("tv").as("_3"))).as("cs"))
       .join(probes.select(col("series_id").cast("long").as("probe_id"),
         col(seriesCol).cast("array<double>").as("q")).hint("shuffle_hash"), Seq("probe_id"))
-      .select(col("probe_id"),
-        posexplode(cascadeUdf(col("q"), col("cs"))).as(Seq("rank0", "hit")))
-      .select(col("probe_id"), (col("rank0") + 1).as("rank"),
-        col("hit._1").as("neighbor_id"), col("hit._2").as("dist"))
+    ranked(cands, col("probe_id"), cascadeUdf(col("q"), col("cs")), "_1", "_2")
   }
 
   /** Exact DTW k-NN for RAGGED input (sz1 ≠ sz2) — the prune-BYPASS
@@ -366,21 +309,11 @@ object Cdist {
     * running kth-best cutoff), and tie-ranking stays (dist, id)
     * bit-identical to an exhaustive pass. radius < 0 = unconstrained
     * DTW (Sakoe-Chiba on ragged pairs widens the band by |sz1−sz2|,
-    * a different semantics — callers opt in explicitly).
-    *
-    * Same scale dispatch as [[knnDtwPruned]]: up to `maxIndexRows` the
-    * (id, series) index broadcasts and the plan is exchange-free;
-    * beyond it the train side shuffles into `blocks` hashed tiles,
-    * each tile emits its local exact top-k, and a grouped
-    * array_sort-merge keeps the global k — per-probe shuffle volume is
-    * k·blocks rows, never the pair space. */
+    * a different semantics — callers opt in explicitly). Route by train
+    * size: [[fitsIndex]]. */
   def knnDtwRagged(probes: DataFrame, train: DataFrame, k: Int, radius: Int = -1,
-                   seriesCol: String = "values", maxIndexRows: Long = 100000,
-                   blocks: Int = 16): DataFrame = {
-    val cap = if (maxIndexRows >= Int.MaxValue - 1L) Int.MaxValue
-              else (maxIndexRows + 1).toInt
-    val over = train.select(col("series_id")).limit(cap).count() > maxIndexRows
-    if (over) knnDtwRaggedBlocked(probes, train, k, radius, blocks, seriesCol)
+                   seriesCol: String = "values"): DataFrame =
+    if (!fitsIndex(train)) knnDtwRaggedBlocked(probes, train, k, radius, seriesCol = seriesCol)
     else {
       val spark = probes.sparkSession
       import spark.implicits._
@@ -396,44 +329,21 @@ object Cdist {
         // every candidate runs the DP, abandoning at the running kth best
         cascade(lv.toArray, bc.value, k, radius)
       })
-      probes.select(col("series_id").as("probe_id"),
-          posexplode(knnUdf(col(seriesCol))).as(Seq("rank0", "hit")))
-        .select(col("probe_id"), (col("rank0") + 1).as("rank"),
-          col("hit._1").as("neighbor_id"), col("hit._2").as("dist"))
+      ranked(probes, col("series_id"), knnUdf(col(seriesCol)), "_1", "_2")
     }
-  }
 
-  /** Tiled no-broadcast variant of [[knnDtwRagged]]: probes group into
-    * chunks, train into hashed salted blocks (same tiling as
-    * [[knnDtwBlocked]], minus the LB phase it cannot have); one UDF call
-    * per (chunk × block) tile decodes the tile ONCE and runs the
-    * cascade per probe against the block's series, emitting that tile's
-    * exact top-k. The global merge array_sorts the k·blocks survivors
-    * per probe on (dist, id) and keeps k — exact, and output-identical
-    * to the broadcast route (CdistBlockSpec). */
+  /** Tiled no-broadcast variant of [[knnDtwRagged]]: the same tiling as
+    * [[knnDtwBlocked]] ([[tiledBest]]) over (id, series), minus the LB
+    * phase it cannot have; each tile runs the cascade per probe against
+    * the block's series and emits that tile's exact top-k. The global
+    * merge keeps the k best of the k·blocks survivors per probe on
+    * (dist, id) — exact, and output-identical to the broadcast route
+    * (VariableLengthSpec). */
   private[graft] def knnDtwRaggedBlocked(probes: DataFrame, train: DataFrame, k: Int,
                                          radius: Int, blocks: Int = 16,
                                          seriesCol: String = "values"): DataFrame = {
-    require(blocks >= 1, "blocks must be >= 1")
-    val salt = math.max(1,
-      (4 * train.sparkSession.sparkContext.defaultParallelism + blocks - 1) / blocks)
-    val tIdx = train
-      .select(col("series_id").cast("long").as("id"),
-        col(seriesCol).cast("array<double>").as("tv"))
-      .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
-      .groupBy("blk")
-      .agg(collect_list(struct(col("id").as("_1"), col("tv").as("_2"))).as("idx"))
-      .withColumn("slt", explode(sequence(lit(0), lit(salt - 1))))
-    val chunks = math.max(32,
-      probes.sparkSession.sparkContext.defaultParallelism * 4)
-    val pChunks = probes
-      .select(col("series_id").cast("long").as("probe_id"),
-        col(seriesCol).cast("array<double>").as("q"))
-      .withColumn("chk", pmod(xxhash64(col("probe_id")), lit(chunks)).cast("int"))
-      .groupBy("chk")
-      .agg(collect_list(struct(col("probe_id").as("_1"), col("q").as("_2"))).as("ps"))
-      .withColumn("blk", explode(sequence(lit(0), lit(blocks - 1))))
-      .withColumn("slt", pmod(col("chk"), lit(salt)).cast("int"))
+    val tIdx = train.select(col("series_id").cast("long").as("id"),
+      col(seriesCol).cast("array<double>").as("tv"))
     val tileUdf = udf((ps: scala.collection.Seq[(Long, scala.collection.Seq[Double])],
                        idx: scala.collection.Seq[(Long, scala.collection.Seq[Double])]) => {
       // arrays up front: the converter's Seq can be a linked list and
@@ -444,14 +354,63 @@ object Cdist {
         cascade(q.toArray, index, k, radius).map { case (id, d) => (pid, d, id) }
       }.toArray
     })
+    ranked(tiledBest(probes, tIdx, Seq(col("tv")), blocks, seriesCol, tileUdf, k),
+      col("probe_id"), col("best"), "_2", "_1")
+  }
+
+  /** The probe × train tiling of both no-broadcast routes. `train` rows
+    * (an `id` plus whatever `fields` read) hash into `blocks` blocks,
+    * each collected as one `idx` array of struct(id, fields…), and
+    * probes hash into chunks collected as `ps` = array of
+    * struct(probe_id, q). `scan(ps, idx)` runs once per (chunk × block)
+    * tile and returns (probe_id, key, id) survivors; the merge keeps the
+    * `keep` best per probe as `best` = array of struct(key, id),
+    * ascending (key, id) — array_sort, NaN after every number.
+    *
+    * One UDF call per tile decodes the block index ONCE per tile pair,
+    * not once per probe row — per-row decode of a thousand-entry struct
+    * array was the measured bottleneck at the sf1 octave (5 effective
+    * threads, minutes of pure deserialization). The block side is
+    * salted: `blocks` alone is too few join keys to occupy a fleet
+    * (measured: 5 busy threads of 32 at the sf1 octave), so each block
+    * row replicates `salt`× and a probe chunk joins exactly the replica
+    * at chk % salt — every tile pair still meets exactly once, over
+    * blocks·salt ≥ 4·parallelism keys. The join is shuffle-hash: these
+    * routes exist because train exceeds broadcast size. */
+  private def tiledBest(probes: DataFrame, train: DataFrame, fields: Seq[Column], blocks: Int,
+                        seriesCol: String, scan: UserDefinedFunction, keep: Int): DataFrame = {
+    require(blocks >= 1, "blocks must be >= 1")
+    val parallelism = train.sparkSession.sparkContext.defaultParallelism
+    val salt = math.max(1, (4 * parallelism + blocks - 1) / blocks)
+    val entry = (col("id") +: fields).zipWithIndex.map { case (c, i) => c.as(s"_${i + 1}") }
+    val tIdx = train
+      .withColumn("blk", pmod(xxhash64(col("id")), lit(blocks)).cast("int"))
+      .groupBy("blk")
+      .agg(collect_list(struct(entry: _*)).as("idx"))
+      .withColumn("slt", explode(sequence(lit(0), lit(salt - 1))))
+    val chunks = math.max(32, parallelism * 4)
+    val pChunks = probes
+      .select(col("series_id").cast("long").as("probe_id"),
+        col(seriesCol).cast("array<double>").as("q"))
+      .withColumn("chk", pmod(xxhash64(col("probe_id")), lit(chunks)).cast("int"))
+      .groupBy("chk")
+      .agg(collect_list(struct(col("probe_id").as("_1"), col("q").as("_2"))).as("ps"))
+      .withColumn("blk", explode(sequence(lit(0), lit(blocks - 1))))
+      .withColumn("slt", pmod(col("chk"), lit(salt)).cast("int"))
     pChunks.join(tIdx.hint("shuffle_hash"), Seq("blk", "slt"))
-      .select(explode(tileUdf(col("ps"), col("idx"))).as("c"))
+      .select(explode(scan(col("ps"), col("idx"))).as("c"))
       .select(col("c._1").as("probe_id"),
         struct(col("c._2").as("_1"), col("c._3").as("_2")).as("c"))
       .groupBy("probe_id")
-      .agg(slice(array_sort(collect_list(col("c"))), 1, k).as("top"))
-      .select(col("probe_id"), posexplode(col("top")).as(Seq("rank0", "hit")))
-      .select(col("probe_id"), (col("rank0") + 1).as("rank"),
-        col("hit._2").as("neighbor_id"), col("hit._1").as("dist"))
+      .agg(slice(array_sort(collect_list(col("c"))), 1, keep).as("best"))
   }
+
+  /** The (probe_id, rank, neighbor_id, dist) output of every DTW k-NN
+    * route: one row per element of the per-probe `hits` array, rank
+    * 1-based in array order, id and dist read from the named fields. */
+  private def ranked(rows: DataFrame, probeId: Column, hits: Column,
+                     idField: String, distField: String): DataFrame =
+    rows.select(probeId.as("probe_id"), posexplode(hits).as(Seq("rank0", "hit")))
+      .select(col("probe_id"), (col("rank0") + 1).as("rank"),
+        col(s"hit.$idField").as("neighbor_id"), col(s"hit.$distField").as("dist"))
 }

@@ -186,8 +186,8 @@ object Dedup {
     * can push past driver memory, so the broadcast is guarded: the hot
     * set is counted (it is materialized anyway) and past
     * [[BroadcastCap]] rows the anti-join falls back to a plain shuffled
-    * join — the same guard-and-fallback split as knnDtwPruned and
-    * connectedComponents. */
+    * join — the same guard-and-fallback split as the DTW k-NN front
+    * doors' size guard (`Cdist.fitsIndex`) and connectedComponents. */
   def dfCapped(shingleStream: DataFrame, maxDf: Int): DataFrame = {
     // localCheckpoint (eager): the hot frame feeds the count AND the
     // anti-join — without it the groupBy runs twice
@@ -233,8 +233,8 @@ object Dedup {
     // iterative fixpoint — (node, min id of its component) — which
     // DedupAnnSpec locks by direct comparison. Past the cap (a corpus
     // whose near-dup pair list alone is >5M edges) the distributed
-    // pointer-doubling loop below is the scale path, exactly like
-    // knnDtwPruned's broadcast-index / partitioned-index split.
+    // pointer-doubling loop below is the scale path, exactly like the
+    // DTW k-NN front doors' broadcast / tiled split (`Cdist.fitsIndex`).
     val nEdges = edges.count()
     if (nEdges <= localEdgeCap) return ccLocal(edges)
     val und = edges.union(edges.select(col("dst").as("src"), col("src").as("dst")))
@@ -624,7 +624,7 @@ object Dedup {
 
   /** Size-routed front door for cosine near-dup: EXACT brute triangle
     * under `exactLimit` rows, IVF cell-bucketed candidates past it —
-    * the same guard-and-fallback split as knnDtwPruned /
+    * the same guard-and-fallback split as the DTW k-NN `Cdist.fitsIndex` /
     * connectedComponents / dfCapped, so a pipeline written against one
     * call survives the corpus growing 1000×. The recall contract at the
     * switch: the IVF route only LOSES pairs (two vectors sharing no

@@ -14,31 +14,40 @@ import org.apache.spark.sql.functions.col
   * fleet scale.
   *
   * Ordering: ascending (v, id) — ties break by id for determinism,
-  * matching the window formulation it replaces. Negate v for "largest k".
+  * matching the window formulation it replaces; NaN ranks after every
+  * number, as in Spark's sort. Negate v for "largest k".
   */
 object TopK {
 
-  /** k-slot sorted buffer; ids/vs are parallel arrays, first n valid. */
+  /** k-slot sorted buffer; ids/vs are parallel arrays of length k, first n valid. */
   case class Buf(var ids: Array[Long], var vs: Array[Double], var n: Int)
+
+  /** Whether (v, id) ranks strictly before (w, jd): ascending v, ties by
+    * id, and Spark's sort rule for NaN — after every number, all NaNs
+    * tying. Numbers compare with plain `<` / `==`. */
+  private def precedes(v: Double, id: Long, w: Double, jd: Long): Boolean =
+    if (w.isNaN) !v.isNaN || id < jd
+    else v < w || (v == w && id < jd)
+
+  /** Inserts (v, id) into `b`, keeping its k = `b.ids.length` best in
+    * ascending (v, id) order; a full buffer drops whatever ranks last.
+    * The one k-slot insert of [[TopKAgg]] and the DTW k-NN cascade. */
+  def insert(b: Buf, id: Long, v: Double): Unit = {
+    val k = b.ids.length
+    if (b.n == k && !precedes(v, id, b.vs(k - 1), b.ids(k - 1))) return
+    // find insertion point (v, id) ascending, from the end
+    var i = math.min(b.n, k - 1)
+    while (i > 0 && precedes(v, id, b.vs(i - 1), b.ids(i - 1))) {
+      b.vs(i) = b.vs(i - 1); b.ids(i) = b.ids(i - 1)
+      i -= 1
+    }
+    b.vs(i) = v; b.ids(i) = id
+    if (b.n < k) b.n += 1
+  }
 
   class TopKAgg(k: Int) extends Aggregator[(Long, Long, Double), Buf, Buf]
       with Serializable {
     def zero: Buf = Buf(new Array[Long](k), new Array[Double](k), 0)
-
-    private def insert(b: Buf, id: Long, v: Double): Unit = {
-      if (b.n == k) {
-        val worstV = b.vs(k - 1)
-        if (v > worstV || (v == worstV && id >= b.ids(k - 1))) return
-      }
-      // find insertion point (v, id) ascending, from the end
-      var i = math.min(b.n, k - 1)
-      while (i > 0 && (b.vs(i - 1) > v || (b.vs(i - 1) == v && b.ids(i - 1) > id))) {
-        b.vs(i) = b.vs(i - 1); b.ids(i) = b.ids(i - 1)
-        i -= 1
-      }
-      b.vs(i) = v; b.ids(i) = id
-      if (b.n < k) b.n += 1
-    }
 
     def reduce(b: Buf, in: (Long, Long, Double)): Buf = { insert(b, in._2, in._3); b }
     def merge(a: Buf, b: Buf): Buf = {

@@ -155,23 +155,17 @@ class AdvancedSpec extends AnyFunSuite {
     import org.apache.spark.sql.catalyst.expressions.codegen.GenerateMutableProjection
     import org.apache.spark.sql.catalyst.util.GenericArrayData
     import org.apache.spark.sql.types.{ArrayType, DoubleType}
-    import graft.functions.{DtwExpression, LbKeoghExpression}
+    import graft.functions.DtwExpression
     val at = ArrayType(DoubleType, containsNull = false)
     val a = Array(1.0, 2.0, 3.0, 4.0)
     val b = Array(1.0, 2.5, 2.5, 4.0)
-    val lo = b.map(_ - 0.2)
-    val hi = b.map(_ + 0.2)
-    val row = InternalRow(new GenericArrayData(a), new GenericArrayData(b),
-      new GenericArrayData(lo), new GenericArrayData(hi))
+    val row = InternalRow(new GenericArrayData(a), new GenericArrayData(b))
     val dtwE = DtwExpression(BoundReference(0, at, nullable = false),
       BoundReference(1, at, nullable = false), 2)
-    val lbE = LbKeoghExpression(BoundReference(0, at, nullable = false),
-      BoundReference(2, at, nullable = false), BoundReference(3, at, nullable = false))
     // GenerateMutableProjection compiles doGenCode directly — a broken
     // implementation throws here instead of silently falling back
-    val proj = GenerateMutableProjection.generate(Seq(dtwE, lbE))
+    val proj = GenerateMutableProjection.generate(Seq(dtwE))
     val out = proj(row)
     assert(out.getDouble(0) == graft.kernels.Kernels.dtwFlatEA(a, b, 2, Double.PositiveInfinity))
-    assert(out.getDouble(1) == graft.kernels.Kernels.lbKeoghEnv(a, lo, hi))
   }
 }

@@ -92,19 +92,24 @@ class CdistBlockSpec extends AnyFunSuite {
   }
 
   test("knnDtwBlocked matches the broadcast-index path exactly") {
-    val train = mkSeries(61, 16).cache()
+    val distinct = mkSeries(61, 16).cache()
+    // every series twice under different ids: equal LBs and distances,
+    // so the kth slot ties and (dist, id) decides it on both routes
+    val duplicated = distinct.union(distinct.select(
+      (col("series_id") + 61).as("series_id"), col("values"))).cache()
     val probes = mkSeries(9, 16)
     // tight factor so LB pruning actually bites (candidate set < train)
-    for (blocks <- Seq(1, 4, 7)) {
+    for ((name, train) <- Seq("distinct" -> distinct, "duplicated" -> duplicated);
+         blocks <- Seq(1, 4, 7)) {
       val base = Cdist.knnDtwPruned(probes, train, k = 3, radius = 4, factor = 2)
         .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
       val blocked = Cdist.knnDtwBlocked(probes, train, k = 3, radius = 4,
           factor = 2, blocks = blocks)
         .as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-      assert(blocked.length == base.length, s"blocks=$blocks row count")
+      assert(blocked.length == base.length, s"$name blocks=$blocks row count")
       base.zip(blocked).foreach { case (e, g) =>
-        assert(e._1 == g._1 && e._2 == g._2 && e._3 == g._3, s"hit mismatch $e vs $g")
-        assert(math.abs(e._4 - g._4) < 1e-12, s"dist mismatch $e vs $g")
+        assert(e._1 == g._1 && e._2 == g._2 && e._3 == g._3, s"$name hit mismatch $e vs $g")
+        assert(math.abs(e._4 - g._4) < 1e-12, s"$name dist mismatch $e vs $g")
       }
     }
   }
@@ -112,8 +117,8 @@ class CdistBlockSpec extends AnyFunSuite {
   test("knnDtwPruned guard dispatches to the blocked path past maxIndexRows") {
     val train = mkSeries(40, 12).cache()
     val probes = mkSeries(6, 12)
-    val guarded = Cdist.knnDtwPruned(probes, train, k = 2, radius = 3,
-      factor = 2, maxIndexRows = 10, blocks = 4)
+    val guarded = Cdist.knnDtwBlocked(probes, train, k = 2, radius = 3,
+      factor = 2, blocks = 4)
     // past the ceiling the plan must not broadcast the train relation
     val plan = guarded.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastExchange"), s"unexpected broadcast in:\n$plan")
@@ -123,5 +128,27 @@ class CdistBlockSpec extends AnyFunSuite {
     assert(base.sameElements(got) || base.zip(got).forall { case (e, g) =>
       e._1 == g._1 && e._2 == g._2 && e._3 == g._3 && math.abs(e._4 - g._4) < 1e-12
     })
+    // the guard itself at its real boundary: 100,001 train rows take the
+    // tiled route. The plan is built, not run: only the guard's count job
+    val big = spark.range(100001).select(col("id").as("series_id"),
+      array(col("id").cast("double"), lit(0.0)).as("values"))
+    val bigPlan = Cdist.knnDtwPruned(big.where(col("series_id") < 2), big, k = 1, radius = 1)
+      .queryExecution.executedPlan.toString
+    assert(bigPlan.contains("ShuffledHashJoin") && !bigPlan.contains("BroadcastExchange"),
+      s"past 100,000 train rows the front door must tile:\n$bigPlan")
+  }
+
+  test("TopK.byKey ranks NaN after every number, in any arrival order") {
+    import graft.operators.TopK
+    // one partition, so all three values pass through one k-slot buffer
+    // in the listed order; id 3 carries the NaN
+    for (vs <- Seq(1.0, 2.0, Double.NaN).permutations; k <- Seq(2, 3)) {
+      val rows = spark.sparkContext.parallelize(
+        vs.map(v => (0L, if (v.isNaN) 3L else v.toLong, v)), 1).toDF("key", "id", "v")
+      val got = TopK.byKey(rows, k, "key", "id", "v")
+        .select("rank", "id").as[(Int, Long)].collect().sortBy(_._1)
+      assert(got.map(_._2).sameElements(Seq(1L, 2L, 3L).take(k)),
+        s"arrival ${vs.mkString(",")} k=$k: ${got.mkString(",")}")
+    }
   }
 }

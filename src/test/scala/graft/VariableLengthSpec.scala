@@ -54,8 +54,7 @@ class VariableLengthSpec extends AnyFunSuite {
     }
     assert(messageChain(eBroadcast).contains("knnDtwRagged"), messageChain(eBroadcast))
     val eBlocked = intercept[Exception] {
-      Cdist.knnDtwPruned(ragged, ragged, k = 2, radius = 3,
-        maxIndexRows = 0, blocks = 3).collect()
+      Cdist.knnDtwBlocked(ragged, ragged, k = 2, radius = 3, blocks = 3).collect()
     }
     assert(messageChain(eBlocked).contains("knnDtwRagged"), messageChain(eBlocked))
   }
@@ -83,10 +82,50 @@ class VariableLengthSpec extends AnyFunSuite {
         assert(math.abs(e._4 - g._4) < 1e-12, s"blocks=$blocks dist mismatch $e vs $g")
       }
     }
-    // the dispatch itself: past maxIndexRows the ragged route must not
-    // broadcast the train relation
-    val guarded = Cdist.knnDtwRagged(ragged, ragged, k = 3, maxIndexRows = 5)
+    // the tiled route must not broadcast the train relation
+    val guarded = Cdist.knnDtwRaggedBlocked(ragged, ragged, k = 3, radius = -1, blocks = 3)
     assert(!guarded.queryExecution.executedPlan.toString.contains("BroadcastExchange"))
+    // the front door's guard at its real boundary: 100,001 train rows
+    // take the tiled route. The plan is built, not run: only the guard's
+    // count job
+    val big = spark.range(100001).select(col("id").as("series_id"),
+      array(col("id").cast("double"), lit(0.0)).as("values"))
+    val bigPlan = Cdist.knnDtwRagged(big.where(col("series_id") < 2), big, k = 1)
+      .queryExecution.executedPlan.toString
+    assert(bigPlan.contains("ShuffledHashJoin") && !bigPlan.contains("BroadcastExchange"),
+      s"past 100,000 train rows the front door must tile:\n$bigPlan")
+
+    // against an exhaustive reference (dtwFlatEA on every pair, ranked
+    // by (dist, id) with NaN last), on every route: `ragged` itself; an
+    // empty series at the lowest id, whose NaN distance must not hold
+    // the k = 1 slot against any number; and every series twice under
+    // different ids, so the kth slot ties and (dist, id) decides it
+    val withEmpty = ragged.union(Seq((-1L, Array.empty[Double], "c0"))
+      .toDF("series_id", "values", "label"))
+    val duplicated = ragged.union(ragged.withColumn("series_id", col("series_id") + 100))
+    for ((name, ds, k) <- Seq(("ragged", ragged, 3), ("empty at lowest id", withEmpty, 1),
+                              ("duplicated", duplicated, 3))) {
+      val series = ds.select(col("series_id"), col("values")).as[(Long, Array[Double])].collect()
+      val want = series.flatMap { case (pid, q) =>
+        series.map { case (id, t) =>
+            (id, graft.kernels.Kernels.dtwFlatEA(q, t, -1, Double.PositiveInfinity)) }
+          .sortBy { case (id, d) => (d.isNaN, if (d.isNaN) 0.0 else d, id) }
+          .take(k).zipWithIndex.map { case ((id, d), r) => (pid, r + 1, id, d) }
+      }.sortBy(r => (r._1, r._2))
+      val routes = ("broadcast" -> Cdist.knnDtwRagged(ds, ds, k)) +:
+        Seq(1, 3, 5).map(b => s"blocks=$b" -> Cdist.knnDtwRaggedBlocked(ds, ds, k,
+          radius = -1, blocks = b))
+      for ((route, df) <- routes) {
+        val got = df.as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
+        assert(got.length == want.length, s"$name $route row count")
+        want.zip(got).foreach { case (e, g) =>
+          assert(e._1 == g._1 && e._2 == g._2 && e._3 == g._3,
+            s"$name $route hit mismatch $e vs $g")
+          assert((e._4.isNaN && g._4.isNaN) || math.abs(e._4 - g._4) < 1e-12,
+            s"$name $route dist mismatch $e vs $g")
+        }
+      }
+    }
   }
 
   test("kNN-DTW classifies ragged series (test_variablelength kNN leg)") {
