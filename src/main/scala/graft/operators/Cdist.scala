@@ -1,6 +1,11 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.collection.mutable
+import scala.reflect.ClassTag
+import org.apache.spark.SparkContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, classic}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.{UserDefinedFunction, Window}
 import graft.functions.TsFunctions
@@ -141,6 +146,9 @@ object Cdist {
   /** Train rows up to which the DTW k-NN front doors broadcast their index. */
   private val MaxIndexRows = 100000
 
+  /** Bytes of prepared broadcast indexes that [[indexStore]] holds at once. */
+  private val MaxStoredIndexBytes = 64L << 20
+
   /** The size guard of both DTW k-NN front doors, [[knnDtwPruned]] and
     * [[knnDtwRagged]]. Up to [[MaxIndexRows]] train rows, the whole train
     * index is collected once, broadcast, and scanned per probe row inside
@@ -153,41 +161,154 @@ object Cdist {
     * by (dist, id) ascending, NaN after every number: the k-slot
     * [[TopK.insert]] on the broadcast side, array_sort merges on the
     * tiled side. limit + count answers "more than MaxIndexRows rows?"
-    * without scanning the full relation. */
+    * without scanning the full relation. A call that finds its index in
+    * [[indexStore]] skips the guard: only broadcast indexes are stored. */
   private def fitsIndex(train: DataFrame): Boolean =
     train.select(col("series_id")).limit(MaxIndexRows + 1).count() <= MaxIndexRows
+
+  /** What a broadcast k-NN index depends on besides its train relation:
+    * the series column, and for the pruned kind the envelope radius.
+    * `k` and `factor` never change an index. */
+  private[graft] sealed trait IndexKind
+  private[graft] final case class PrunedIndex(seriesCol: String, radius: Int) extends IndexKind
+  private[graft] final case class RaggedIndex(seriesCol: String) extends IndexKind
+
+  /** Prepared broadcast k-NN indexes, kept across calls for train
+    * relations that Spark's CacheManager holds persisted, so a warm call
+    * runs only its query job. An entry is keyed on the identity of its
+    * relation's cache builder plus its [[IndexKind]]: a new persist, even
+    * of the same plan, and a recache each make a new builder, so an old
+    * entry never answers for new data. It holds the broadcast handle
+    * only. [[sweep]] drops every entry whose cached RDD is no longer
+    * registered with the running SparkContext (unpersisted, recached, or
+    * of a stopped context) and destroys its broadcast when its context
+    * still runs. Entries beyond `capBytes` in total are evicted least
+    * recently used first, destroying their broadcast; an index larger
+    * than `capBytes` is never stored. A DataFrame a front door returned
+    * reads its index when it runs, so it must run before that index
+    * leaves the store; every caller collects it at once. */
+  private[graft] final class IndexStore(capBytes: Long) {
+    private final class Entry(val builder: AnyRef, val kind: IndexKind, val rdd: RDD[_],
+                              val bc: Broadcast[_], val bytes: Long)
+    // least recently used first
+    private val entries = mutable.ArrayBuffer.empty[Entry]
+
+    private def find(builder: AnyRef, kind: IndexKind): Int =
+      entries.indexWhere(e => (e.builder eq builder) && e.kind == kind)
+
+    def get(builder: AnyRef, kind: IndexKind): Option[Broadcast[_]] = synchronized {
+      val i = find(builder, kind)
+      if (i < 0) None
+      else {
+        val e = entries.remove(i)
+        entries += e
+        Some(e.bc)
+      }
+    }
+
+    /** Stores `bc`, the index of `kind` over the relation cached as
+      * `rdd` by `builder`, unless it is over the cap or already stored. */
+    def put(builder: AnyRef, kind: IndexKind, rdd: RDD[_], bc: Broadcast[_], bytes: Long): Unit =
+      synchronized {
+        if (bytes <= capBytes && find(builder, kind) < 0) {
+          var total = entries.iterator.map(_.bytes).sum + bytes
+          while (total > capBytes) {
+            val e = entries.remove(0)
+            total -= e.bytes
+            e.bc.destroy()
+          }
+          entries += new Entry(builder, kind, rdd, bc, bytes)
+        }
+      }
+
+    def sweep(sc: SparkContext): Unit = synchronized {
+      val live = sc.getPersistentRDDs
+      entries.filterInPlace { e =>
+        val running = e.rdd.sparkContext eq sc
+        val valid = running && live.get(e.rdd.id).exists(_ eq e.rdd)
+        // a stopped context's broadcast ids are reused by its successor
+        if (running && !valid) e.bc.destroy()
+        valid
+      }
+    }
+
+    /** (kind, bytes, broadcast) of every entry, least recently used first. */
+    def snapshot: Seq[(IndexKind, Long, Broadcast[_])] = synchronized {
+      entries.map(e => (e.kind, e.bytes, e.bc)).toSeq
+    }
+  }
+
+  private val indexStore = new IndexStore(MaxStoredIndexBytes)
+
+  /** The entries of the front doors' [[IndexStore]]. */
+  private[graft] def storedIndexes: Seq[(IndexKind, Long, Broadcast[_])] = indexStore.snapshot
+
+  /** The broadcast index of a front door, or None when the train side
+    * is past [[fitsIndex]] and the tiled twin runs instead. `build`
+    * returns the index and its size in bytes; it runs unless the train
+    * relation is persisted and [[indexStore]] holds its index of `kind`,
+    * and its result is stored when the relation is persisted. */
+  private def broadcastIndex[T: ClassTag](train: DataFrame, kind: IndexKind,
+                                          build: => (T, Long)): Option[Broadcast[T]] = {
+    val sc = train.sparkSession.sparkContext
+    indexStore.sweep(sc)
+    val builder = (train match {
+      case ds: classic.Dataset[_] => ds.sparkSession.sharedState.cacheManager.lookupCachedData(ds)
+      case _ => None
+    }).map(_.cachedRepresentation.cacheBuilder)
+    builder.flatMap(indexStore.get(_, kind)) match {
+      case Some(bc) => Some(bc.asInstanceOf[Broadcast[T]])
+      case None if !fitsIndex(train) => None
+      case None =>
+        val (index, bytes) = build
+        val bc = sc.broadcast(index)
+        builder.foreach(b => indexStore.put(b, kind, b.cachedColumnBuffers, bc, bytes))
+        Some(bc)
+    }
+  }
 
   /** DTW k-NN with LB_Keogh pre-pruning (equal-length series required for
     * the bound) — the reference's lower-bound optimization
     * (`dtw_variants.py:1224-1296`) as a pre-join filter: the cheap O(n)
     * bound prunes candidates before the O(n²) DTW runs. `factor` keeps
     * k·factor candidates per probe by LB before the exact metric
-    * ([[lbSelect]]). Route by train size: [[fitsIndex]]. */
+    * ([[lbSelect]]). Route by train size: [[fitsIndex]]; a persisted
+    * train side's index is built once ([[broadcastIndex]]). */
   def knnDtwPruned(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
                    factor: Int = 4, seriesCol: String = "values"): DataFrame =
-    if (fitsIndex(train)) knnDtwBroadcastIndex(probes, train, k, radius, factor, seriesCol)
-    else knnDtwBlocked(probes, train, k, radius, factor, seriesCol = seriesCol)
+    broadcastIndex(train, PrunedIndex(seriesCol, radius), prunedIndex(train, radius, seriesCol)) match {
+      case Some(bc) => knnDtwBroadcastIndex(probes, bc, k, radius, factor, seriesCol)
+      case None => knnDtwBlocked(probes, train, k, radius, factor, seriesCol = seriesCol)
+    }
 
-  private def knnDtwBroadcastIndex(probes: DataFrame, train: DataFrame, k: Int, radius: Int,
-                                   factor: Int, seriesCol: String): DataFrame = {
-    // The train side was ALWAYS the broadcast side of this join — so skip
-    // the pair-row materialization entirely: broadcast the (id, series,
-    // envelope) index once and run the whole LB-prune → DTW → top-k per
-    // probe inside one kernel call per probe row. Zero shuffles, no n²
-    // row stream; each executor scans the index with O(sz) bounds and runs
-    // the O(sz·radius) DTW only for the k·factor LB survivors. Envelopes
-    // are precomputed once per train series (O(sz·radius) each), not per
-    // pair.
-    val spark = probes.sparkSession
+  /** The pruned index: per train series, ascending id, its (id, lower,
+    * upper) envelope and its values; and its size in bytes. Envelopes are
+    * computed once per train series (O(sz·radius) each), not per pair. */
+  private def prunedIndex(train: DataFrame, radius: Int, seriesCol: String)
+      : ((Array[(Long, Array[Double], Array[Double])], Array[Array[Double]]), Long) = {
+    val spark = train.sparkSession
     import spark.implicits._
-    val index: Array[(Long, Array[Double], Array[Double], Array[Double])] =
-      train.select(col("series_id").cast("long"), col(seriesCol).cast("array<double>"),
-          TsFunctions.envelopeUdf(col(seriesCol), lit(radius)).as("env"))
-        .select(col("series_id"), col("values"), col("env._1"), col("env._2"))
-        .as[(Long, Array[Double], Array[Double], Array[Double])]
-        .collect()
-        .sortBy(_._1)
-    val bc = spark.sparkContext.broadcast((index.map(r => (r._1, r._3, r._4)), index.map(_._2)))
+    val index = train.select(col("series_id").cast("long"),
+        col(seriesCol).cast("array<double>").as("tv"),
+        TsFunctions.envelopeUdf(col(seriesCol), lit(radius)).as("env"))
+      .select(col("series_id"), col("tv"), col("env._1"), col("env._2"))
+      .as[(Long, Array[Double], Array[Double], Array[Double])]
+      .collect()
+      .sortBy(_._1)
+    ((index.map(r => (r._1, r._3, r._4)), index.map(_._2)),
+      8L * index.iterator.map(r => 1L + r._2.length + r._3.length + r._4.length).sum)
+  }
+
+  private def knnDtwBroadcastIndex(
+      probes: DataFrame,
+      bc: Broadcast[(Array[(Long, Array[Double], Array[Double])], Array[Array[Double]])],
+      k: Int, radius: Int, factor: Int, seriesCol: String): DataFrame = {
+    // The train side was ALWAYS the broadcast side of this join — so skip
+    // the pair-row materialization entirely: run the whole LB-prune →
+    // DTW → top-k per probe inside one kernel call per probe row. Zero
+    // shuffles, no n² row stream; each executor scans the index with
+    // O(sz) bounds and runs the O(sz·radius) DTW only for the k·factor
+    // LB survivors.
     val kf = k * factor
     val knnUdf = udf((lv: scala.collection.Seq[Double]) => {
       val q = lv.toArray
@@ -310,27 +431,31 @@ object Cdist {
     * bit-identical to an exhaustive pass. radius < 0 = unconstrained
     * DTW (Sakoe-Chiba on ragged pairs widens the band by |sz1−sz2|,
     * a different semantics — callers opt in explicitly). Route by train
-    * size: [[fitsIndex]]. */
+    * size: [[fitsIndex]]; a persisted train side's index is built once
+    * ([[broadcastIndex]]). */
   def knnDtwRagged(probes: DataFrame, train: DataFrame, k: Int, radius: Int = -1,
                    seriesCol: String = "values"): DataFrame =
-    if (!fitsIndex(train)) knnDtwRaggedBlocked(probes, train, k, radius, seriesCol = seriesCol)
-    else {
-      val spark = probes.sparkSession
-      import spark.implicits._
-      // id-ascending with lb = 0 satisfies the cascade's (lb, id) sort
-      // contract; pre-shaped ONCE before broadcast so the per-probe call
-      // allocates nothing but the k-slot buffers
-      val index: Array[(Double, Long, Array[Double])] =
-        train.select(col("series_id").cast("long"), col(seriesCol).cast("array<double>"))
-          .as[(Long, Array[Double])].collect().sortBy(_._1)
-          .map(t => (0.0, t._1, t._2))
-      val bc = spark.sparkContext.broadcast(index)
-      val knnUdf = udf((lv: scala.collection.Seq[Double]) => {
+    broadcastIndex(train, RaggedIndex(seriesCol), raggedIndex(train, seriesCol)) match {
+      case Some(bc) =>
         // every candidate runs the DP, abandoning at the running kth best
-        cascade(lv.toArray, bc.value, k, radius)
-      })
-      ranked(probes, col("series_id"), knnUdf(col(seriesCol)), "_1", "_2")
+        val knnUdf = udf((lv: scala.collection.Seq[Double]) => cascade(lv.toArray, bc.value, k, radius))
+        ranked(probes, col("series_id"), knnUdf(col(seriesCol)), "_1", "_2")
+      case None => knnDtwRaggedBlocked(probes, train, k, radius, seriesCol = seriesCol)
     }
+
+  /** The ragged index: (0, id, series) per train series, ascending id —
+    * lb = 0 satisfies the cascade's (lb, id) sort contract, and shaping it
+    * once before the broadcast leaves the per-probe call allocating only
+    * its k-slot buffers; and its size in bytes. */
+  private def raggedIndex(train: DataFrame, seriesCol: String)
+      : (Array[(Double, Long, Array[Double])], Long) = {
+    val spark = train.sparkSession
+    import spark.implicits._
+    val index = train.select(col("series_id").cast("long"), col(seriesCol).cast("array<double>"))
+      .as[(Long, Array[Double])].collect().sortBy(_._1)
+      .map(t => (0.0, t._1, t._2))
+    (index, 8L * index.iterator.map(2L + _._3.length).sum)
+  }
 
   /** Tiled no-broadcast variant of [[knnDtwRagged]]: the same tiling as
     * [[knnDtwBlocked]] ([[tiledBest]]) over (id, series), minus the LB

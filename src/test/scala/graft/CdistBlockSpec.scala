@@ -114,6 +114,20 @@ class CdistBlockSpec extends AnyFunSuite {
     }
   }
 
+  test("knnDtwPruned on a persisted train: first and second calls match an unpersisted call") {
+    val data = mkSeries(53, 16).select((col("series_id") + 1000).as("series_id"), col("values"))
+    val probes = mkSeries(9, 16)
+    def rows(df: DataFrame) = df.as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
+    val want = rows(Cdist.knnDtwPruned(probes, data, k = 3, radius = 4, factor = 2))
+    val train = data.persist()
+    val first = rows(Cdist.knnDtwPruned(probes, train, k = 3, radius = 4, factor = 2))
+    val second = rows(Cdist.knnDtwPruned(probes, train, k = 3, radius = 4, factor = 2))
+    assert(want.length == 27)
+    assert(first.sameElements(want), "first persisted call differs from the unpersisted call")
+    assert(second.sameElements(want), "second persisted call differs from the unpersisted call")
+    train.unpersist(true)
+  }
+
   test("knnDtwPruned guard dispatches to the blocked path past maxIndexRows") {
     val train = mkSeries(40, 12).cache()
     val probes = mkSeries(6, 12)

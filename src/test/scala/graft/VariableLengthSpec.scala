@@ -99,12 +99,25 @@ class VariableLengthSpec extends AnyFunSuite {
     // by (dist, id) with NaN last), on every route: `ragged` itself; an
     // empty series at the lowest id, whose NaN distance must not hold
     // the k = 1 slot against any number; and every series twice under
-    // different ids, so the kth slot ties and (dist, id) decides it
+    // different ids, so the kth slot ties and (dist, id) decides it; and
+    // series holding +Inf and -Inf, and of lengths 1 and 2. The broadcast
+    // route also runs twice on a persisted copy: the second call reads
+    // its stored index
     val withEmpty = ragged.union(Seq((-1L, Array.empty[Double], "c0"))
       .toDF("series_id", "values", "label"))
     val duplicated = ragged.union(ragged.withColumn("series_id", col("series_id") + 100))
+    val edges = ragged.union(Seq(
+        (200L, Array(0.1, Double.PositiveInfinity, 0.3, 0.2), "c0"),
+        (201L, Array(Double.NegativeInfinity, 2.0, 2.1), "c1"),
+        (202L, Array(Double.PositiveInfinity, Double.NegativeInfinity), "c0"),
+        (203L, Array(0.05), "c0"),
+        (204L, Array(2.5), "c1"),
+        (205L, Array(0.0, 0.4), "c0"),
+        (206L, Array(2.2, 2.9), "c1"))
+      .toDF("series_id", "values", "label"))
+    def storedIds = Cdist.storedIndexes.map(_._3.id).toSet
     for ((name, ds, k) <- Seq(("ragged", ragged, 3), ("empty at lowest id", withEmpty, 1),
-                              ("duplicated", duplicated, 3))) {
+                              ("duplicated", duplicated, 3), ("inf and short", edges, 3))) {
       val series = ds.select(col("series_id"), col("values")).as[(Long, Array[Double])].collect()
       val want = series.flatMap { case (pid, q) =>
         series.map { case (id, t) =>
@@ -112,7 +125,15 @@ class VariableLengthSpec extends AnyFunSuite {
           .sortBy { case (id, d) => (d.isNaN, if (d.isNaN) 0.0 else d, id) }
           .take(k).zipWithIndex.map { case ((id, d), r) => (pid, r + 1, id, d) }
       }.sortBy(r => (r._1, r._2))
-      val routes = ("broadcast" -> Cdist.knnDtwRagged(ds, ds, k)) +:
+      val copy = ds.select(col("series_id"), col("values")).persist()
+      val before = storedIds
+      val cold = Cdist.knnDtwRagged(ds, copy, k)
+      val added = storedIds -- before
+      assert(added.size == 1, s"$name: the persisted copy's index is not stored")
+      val warm = Cdist.knnDtwRagged(ds, copy, k)
+      assert(storedIds -- before == added, s"$name: the warm call stored again")
+      val routes = Seq("broadcast" -> Cdist.knnDtwRagged(ds, ds, k),
+          "broadcast persisted cold" -> cold, "broadcast persisted warm" -> warm) ++
         Seq(1, 3, 5).map(b => s"blocks=$b" -> Cdist.knnDtwRaggedBlocked(ds, ds, k,
           radius = -1, blocks = b))
       for ((route, df) <- routes) {
@@ -121,10 +142,11 @@ class VariableLengthSpec extends AnyFunSuite {
         want.zip(got).foreach { case (e, g) =>
           assert(e._1 == g._1 && e._2 == g._2 && e._3 == g._3,
             s"$name $route hit mismatch $e vs $g")
-          assert((e._4.isNaN && g._4.isNaN) || math.abs(e._4 - g._4) < 1e-12,
+          assert((e._4.isNaN && g._4.isNaN) || e._4 == g._4 || math.abs(e._4 - g._4) < 1e-12,
             s"$name $route dist mismatch $e vs $g")
         }
       }
+      copy.unpersist(true)
     }
   }
 
