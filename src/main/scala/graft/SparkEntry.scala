@@ -1973,17 +1973,18 @@ object SparkEntry {
         .select(col("probe_id"), col("rank"), col("neighbor_id"))
     }),
 
-    // Ragged kNN — the prune-BYPASS dispatch as driver signal (VERDICT
+    // Ragged kNN — the variable-length dispatch as a checked query (VERDICT
     // r12 #8: every other knn_dtw_* row resamples to 32 first, so
     // sz1 ≠ sz2 had never flowed through the kNN cascade under the
     // oracle). No resample: raw per-user event series (lengths 49–86
     // at sf0.01), UNCONSTRAINED DTW — LB_Keogh is invalid for unequal
-    // sizes (`dtw_variants.py:1248-1251`), so the route runs every
-    // pair through the k-slot cascade with lb=0 (mid-DP early abandon
-    // only; the LB routes now loudly reject ragged input instead of
-    // silently mis-pruning). Subset user_id % 10 = 0 keeps the
-    // all-pairs oracle DP-chain replay affordable. The published rank
-    // is recomputed on round(dist, 4) — the cascade and the oracle's
+    // sizes (`dtw_variants.py:1248-1251`), so the route orders every
+    // pair by the any-length corner-and-range bound (Kernels.lbRagged)
+    // through the k-slot cascade (the LB_Keogh routes loudly reject
+    // ragged input instead of silently mis-pruning). Subset
+    // user_id % 10 = 0 keeps the all-pairs oracle DP-chain replay
+    // affordable. The published rank is recomputed on round(dist, 4) —
+    // the cascade and the oracle's
     // cumsum DP sum identical terms in different float association
     // order, the same last-ulp near-tie class the ADC/rerank keys
     // round away; the operator's unrounded k=4 shortlist carries one

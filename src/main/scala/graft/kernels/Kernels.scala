@@ -80,19 +80,40 @@ object Kernels {
     * computed exactly, so (dist, id) tie-ranking downstream is
     * unchanged. */
   def dtwFlatEA(a: Array[Double], b: Array[Double], radius: Int, cutoff: Double): Double = {
+    val width = b.length + 1
+    dtwFlatEA(a, b, radius, cutoff, new Array[Double](width), new Array[Double](width))
+  }
+
+  /** [[dtwFlatEA]] on two caller-owned DP rows, each at least
+    * `b.length + 1` long, so a caller running many DPs allocates them
+    * once. What the rows hold on entry is never read: each row fills
+    * only its band of [[Mask.sakoeChiba]] (every column when radius < 0),
+    * computed inline, and resets to +Inf only the two cells outside the
+    * band that it or the next row reads: the one left of the band and
+    * the one past its end. The bands of consecutive rows start and end
+    * at most one column apart, so every cell a row reads is in a band
+    * or one of those reset cells. */
+  private[graft] def dtwFlatEA(a: Array[Double], b: Array[Double], radius: Int, cutoff: Double,
+                               row0: Array[Double], row1: Array[Double]): Double = {
     val l1 = a.length; val l2 = b.length
     if (l1 == 0 || l2 == 0) return Double.NaN
-    val bounds = if (radius < 0) null else Mask.sakoeChiba(l1, l2, radius)
+    // row i's band is [i − wLo, i + wHi] clipped to the columns; a radius
+    // past both lengths (or none) admits every column
+    val r = if (radius < 0) math.max(l1, l2) else math.min(radius, math.max(l1, l2))
+    val wLo = if (l1 <= l2) r else l1 - l2 + r
+    val wHi = if (l1 <= l2) l2 - l1 + r else r
     val abandon = !(cutoff.isNaN || cutoff.isInfinity)
-    var prev = new Array[Double](l2 + 1)
-    var cur = new Array[Double](l2 + 1)
-    java.util.Arrays.fill(prev, Inf)
+    var prev = row0
+    var cur = row1
+    // DP row 0 (1-shifted): the origin, then +Inf under row 1's band
     prev(0) = 0.0
+    java.util.Arrays.fill(prev, 1, math.min(l2 - 1, wHi) + 2, Inf)
     var i = 1
     while (i <= l1) {
-      java.util.Arrays.fill(cur, Inf)
-      val lo = if (bounds == null) 0 else bounds.lo(i - 1)
-      val hi = if (bounds == null) l2 - 1 else bounds.hi(i - 1)
+      val lo = math.max(0, i - 1 - wLo)
+      val hi = math.min(l2 - 1, i - 1 + wHi)
+      cur(lo) = Inf
+      if (hi + 2 <= l2) cur(hi + 2) = Inf
       val ai = a(i - 1)
       var rowMin = Inf
       var j = lo + 1
@@ -117,6 +138,42 @@ object Kernels {
       i += 1
     }
     math.sqrt(prev(l2))
+  }
+
+  /** A lower bound of [[dtwFlatEA]]`(x, y, r, _)` for ANY two lengths and
+    * any radius r. Every warping path holds both corner cells and at least
+    * one cell in each row and each column, so
+    * LB(x, y) = √((x₀−y₀)² + (x_last−y_last)² + Σ₀<ᵢ<last dist(xᵢ, [yLo, yHi])²)
+    * bounds it whenever [yLo, yHi] holds y's values, and so does LB(y, x);
+    * this is their max (LB_Kim's corners, Kim et al. ICDE 2001, plus
+    * LB_Yi's range, Yi et al. ICDE 1998). An inner NaN value or a NaN
+    * range end adds 0 to the sum, so a range over the non-NaN values only
+    * (Spark's `array_min`) still bounds every finite DP result: a finite
+    * result is the cost of a path whose every cell is finite. 0 when
+    * either series has fewer than two points (one point is both
+    * corners) and when the bound is NaN (an infinity meeting the same
+    * infinity at a corner). */
+  def lbRagged(x: Array[Double], xLo: Double, xHi: Double,
+               y: Array[Double], yLo: Double, yHi: Double): Double = {
+    if (x.length < 2 || y.length < 2) return 0.0
+    val lb = math.sqrt(math.max(lbRangeSq(x, y, yLo, yHi), lbRangeSq(y, x, xLo, xHi)))
+    if (lb.isNaN) 0.0 else lb
+  }
+
+  /** LB(x, y)² of [[lbRagged]]: both corners, then each inner x value's
+    * squared distance to [lo, hi]. */
+  private def lbRangeSq(x: Array[Double], y: Array[Double], lo: Double, hi: Double): Double = {
+    val d0 = x(0) - y(0)
+    val dn = x(x.length - 1) - y(y.length - 1)
+    var s = d0 * d0 + dn * dn
+    var i = 1
+    while (i < x.length - 1) {
+      val v = x(i)
+      if (v < lo) { val d = lo - v; s += d * d }
+      else if (v > hi) { val d = v - hi; s += d * d }
+      i += 1
+    }
+    s
   }
 
   /** Full accumulated cost matrix (squared costs), (sz1+1)×(sz2+1), for

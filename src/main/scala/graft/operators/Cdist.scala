@@ -313,40 +313,81 @@ object Cdist {
     val knnUdf = udf((lv: scala.collection.Seq[Double]) => {
       val q = lv.toArray
       val (env, series) = bc.value
-      cascade(q, lbSelect(q, env, kf).map { case (lb, i) => (lb, env(i)._1, series(i)) },
+      cascade(q, keoghSelect(q, env, kf).map { case (lb, i) => (lb, env(i)._1, series(i)) },
         k, radius)
     })
     ranked(probes, col("series_id"), knnUdf(col(seriesCol)), "_1", "_2")
   }
 
   /** The LB candidate select of both pruned routes: LB_Keogh of `q`
-    * against every (id, lower, upper) envelope of `env`, then the `kf`
-    * best as (lb, index into `env`), ascending (lb, id). LB_Keogh is
-    * UNDEFINED for unequal lengths (the reference raises,
-    * `dtw_variants.py:1248-1251`): a silent min-length walk would be a
-    * bound of NOTHING and prune true neighbors, so it is rejected loudly. */
-  private def lbSelect(q: Array[Double], env: Array[(Long, Array[Double], Array[Double])],
-                       kf: Int): IndexedSeq[(Double, Int)] = {
-    val lbs = new Array[Double](env.length)
-    var i = 0
-    while (i < env.length) {
+    * against every (id, lower, upper) envelope of `env`, and the `kf`
+    * best by [[lbSelect]]. LB_Keogh is UNDEFINED for unequal lengths (the
+    * reference raises, `dtw_variants.py:1248-1251`): a silent min-length
+    * walk would be a bound of NOTHING and prune true neighbors, so it is
+    * rejected loudly. */
+  private def keoghSelect(q: Array[Double], env: Array[(Long, Array[Double], Array[Double])],
+                          kf: Int): Array[(Double, Int)] =
+    lbSelect(env.length, env(_)._1, kf) { i =>
       require(env(i)._2.length == q.length,
         s"LB_Keogh requires equal-length series (probe sz=${q.length}, " +
           s"train id=${env(i)._1} sz=${env(i)._2.length}); " +
           "use Cdist.knnDtwRagged for variable-length input")
-      lbs(i) = graft.kernels.Kernels.lbKeoghEnv(q, env(i)._2, env(i)._3)
-      i += 1
+      graft.kernels.Kernels.lbKeoghEnv(q, env(i)._2, env(i)._3)
     }
-    (0 until env.length).sortBy(i => (lbs(i), env(i)._1)).take(kf).map(i => (lbs(i), i))
+
+  /** The one LB order of every DTW k-NN route: `bound(i)` of each of `n`
+    * candidates, then the `keep` best as (lb, candidate), ascending
+    * (lb, id) — lbs by `java.lang.Double.compare` (NaN after every
+    * number), ids by `id(i)`. The pruned routes keep k·factor candidates
+    * by LB_Keogh; the ragged routes keep all of them, ordered by
+    * [[Kernels.lbRagged]]. A bottom-up merge sort of primitive
+    * candidate indices: no boxing and no tuple per comparison. */
+  private def lbSelect(n: Int, id: Int => Long, keep: Int)(bound: Int => Double)
+      : Array[(Double, Int)] = {
+    val lbs = new Array[Double](n)
+    val ids = new Array[Long](n)
+    var i = 0
+    while (i < n) { lbs(i) = bound(i); ids(i) = id(i); i += 1 }
+    var order = Array.range(0, n)
+    var merged = new Array[Int](n)
+    var width = 1
+    while (width < n) {
+      var lo = 0
+      while (lo < n) {
+        val mid = math.min(lo + width, n)
+        val hi = math.min(lo + 2 * width, n)
+        var a = lo; var b = mid; var o = lo
+        while (o < hi) {
+          val takeB = a >= mid || (b < hi && {
+            val c = java.lang.Double.compare(lbs(order(b)), lbs(order(a)))
+            c < 0 || (c == 0 && ids(order(b)) < ids(order(a)))
+          })
+          if (takeB) { merged(o) = order(b); b += 1 } else { merged(o) = order(a); a += 1 }
+          o += 1
+        }
+        lo = hi
+      }
+      val t = order; order = merged; merged = t
+      width *= 2
+    }
+    Array.tabulate(math.min(keep, n))(r => (lbs(order(r)), order(r)))
   }
 
   /** LB-ordered k-slot early-abandon cascade — the exact pass of every
-    * DTW k-NN route. `cands` must be sorted ascending (lb, id); once the
-    * k-slot buffer fills, a candidate whose LB strictly exceeds the
-    * kth-best distance is skipped outright (dist ≥ lb), and the DP of
-    * a survivor abandons past that bound ([[Kernels.dtwFlatEA]]).
-    * Strict (>) comparisons everywhere, so a candidate TYING the kth
-    * best is still computed exactly and (dist, id) tie-ranking is
+    * DTW k-NN route. `cands` come ascending (lb, id) from [[lbSelect]];
+    * once the k-slot buffer fills, a candidate whose LB exceeds the
+    * kth-best distance is skipped outright (dist ≥ lb), and the DP of a
+    * survivor abandons past that bound ([[Kernels.dtwFlatEA]], on two DP
+    * rows allocated once per call).
+    *
+    * Both comparisons are strict, and the skip is also conservative by
+    * the relative margin (|q| + |c|)·2⁻⁵²: an lb and a DP that are equal
+    * in exact arithmetic round apart by up to about (|q| + |c|)·2⁻⁵³
+    * relative (each is a sum of that many rounded squares), so without
+    * the margin a computed lb could land an ulp above a computed
+    * distance that ties the kth best, and skip a candidate the (dist, id)
+    * rule must rank (two constant series: LB = DTW). So a candidate
+    * TYING the kth best is always computed exactly, and the result is
     * bit-identical to the exhaustive pass it replaces. A NaN kth best
     * (the distance to an empty series) neither skips nor abandons, and
     * any number displaces it ([[TopK.insert]]). */
@@ -354,10 +395,13 @@ object Cdist {
                              cands: scala.collection.Seq[(Double, Long, Array[Double])],
                              k: Int, radius: Int): Array[(Long, Double)] = {
     val b = TopK.Buf(new Array[Long](k), new Array[Double](k), 0)
+    val width = cands.iterator.map(_._3.length + 1).maxOption.getOrElse(0)
+    val row0 = new Array[Double](width)
+    val row1 = new Array[Double](width)
     cands.foreach { case (lb, id, tv) =>
       val bsf = if (b.n == k) b.vs(k - 1) else Double.PositiveInfinity
-      if (!(b.n == k && lb > bsf))
-        TopK.insert(b, id, graft.kernels.Kernels.dtwFlatEA(q, tv, radius, bsf))
+      if (!(b.n == k && lb * (1 - (q.length + tv.length) * math.ulp(1.0)) > bsf))
+        TopK.insert(b, id, graft.kernels.Kernels.dtwFlatEA(q, tv, radius, bsf, row0, row1))
     }
     Array.tabulate(b.n)(i => (b.ids(i), b.vs(i)))
   }
@@ -392,7 +436,7 @@ object Cdist {
       // thread stuck in List.drop at the sf1 octave)
       val env = idx.iterator.map(r => (r._1, r._2.toArray, r._3.toArray)).toArray
       ps.iterator.flatMap { case (pid, q) =>
-        lbSelect(q.toArray, env, kf).map { case (lb, i) => (pid, lb, env(i)._1) }
+        keoghSelect(q.toArray, env, kf).map { case (lb, i) => (pid, lb, env(i)._1) }
       }.toArray
     })
     val winners = tiledBest(probes, tEnv, Seq(col("env._1"), col("env._2")), blocks,
@@ -401,9 +445,10 @@ object Cdist {
       .select(col("probe_id"), col("c._1").as("lb"), col("c._2").as("id"))
     val cascadeUdf = udf((q: scala.collection.Seq[Double],
                           cs: scala.collection.Seq[(Double, Long, scala.collection.Seq[Double])]) => {
-      val qa = q.toArray
-      cascade(qa,
-        cs.sortBy(r => (r._1, r._2)).map(r => (r._1, r._2, r._3.toArray)),
+      val c = cs.toArray
+      cascade(q.toArray,
+        lbSelect(c.length, c(_)._2, c.length)(c(_)._1)
+          .map { case (lb, i) => (lb, c(i)._2, c(i)._3.toArray) },
         k, radius)
     })
     // shuffle_hash on both rejoins: this path exists because train (and
@@ -420,66 +465,92 @@ object Cdist {
     ranked(cands, col("probe_id"), cascadeUdf(col("q"), col("cs")), "_1", "_2")
   }
 
-  /** Exact DTW k-NN for RAGGED input (sz1 ≠ sz2) — the prune-BYPASS
-    * route. LB_Keogh is undefined for unequal lengths (the reference
-    * raises, `dtw_variants.py:1248-1251`; VARIABLE_LENGTH_METRICS
-    * admits dtw itself, `metrics/__init__.py:29`), so there is no cheap
-    * bound to select candidates with: every (probe, train) pair enters
-    * the k-slot cascade with lb = 0 — the envelope SKIP is gone, but
-    * the mid-DP early abandon survives ([[Kernels.dtwFlatEA]] at the
-    * running kth-best cutoff), and tie-ranking stays (dist, id)
-    * bit-identical to an exhaustive pass. radius < 0 = unconstrained
-    * DTW (Sakoe-Chiba on ragged pairs widens the band by |sz1−sz2|,
-    * a different semantics — callers opt in explicitly). Route by train
-    * size: [[fitsIndex]]; a persisted train side's index is built once
-    * ([[broadcastIndex]]). */
+  /** Exact DTW k-NN for RAGGED input (sz1 ≠ sz2). LB_Keogh is undefined
+    * for unequal lengths (the reference raises,
+    * `dtw_variants.py:1248-1251`; VARIABLE_LENGTH_METRICS admits dtw
+    * itself, `metrics/__init__.py:29`), so these routes order candidates
+    * by [[Kernels.lbRagged]] instead — corners plus each value's distance
+    * to the other series' value range, valid for any two lengths and any
+    * band. Every (probe, train) pair enters the k-slot [[cascade]] in
+    * (lb, id) order: once the kth best falls below a candidate's bound
+    * the DP is skipped, otherwise it abandons at the running kth best,
+    * and tie-ranking stays (dist, id) bit-identical to an exhaustive
+    * pass. radius < 0 = unconstrained DTW (Sakoe-Chiba on ragged pairs
+    * widens the band by |sz1−sz2|, a different semantics — callers opt
+    * in explicitly). Route by train size: [[fitsIndex]]; a persisted
+    * train side's index is built once ([[broadcastIndex]]). */
   def knnDtwRagged(probes: DataFrame, train: DataFrame, k: Int, radius: Int = -1,
                    seriesCol: String = "values"): DataFrame =
     broadcastIndex(train, RaggedIndex(seriesCol), raggedIndex(train, seriesCol)) match {
       case Some(bc) =>
-        // every candidate runs the DP, abandoning at the running kth best
-        val knnUdf = udf((lv: scala.collection.Seq[Double]) => cascade(lv.toArray, bc.value, k, radius))
+        val knnUdf = udf((lv: scala.collection.Seq[Double]) =>
+          raggedKnn(lv.toArray, bc.value, k, radius))
         ranked(probes, col("series_id"), knnUdf(col(seriesCol)), "_1", "_2")
       case None => knnDtwRaggedBlocked(probes, train, k, radius, seriesCol = seriesCol)
     }
 
-  /** The ragged index: (0, id, series) per train series, ascending id —
-    * lb = 0 satisfies the cascade's (lb, id) sort contract, and shaping it
-    * once before the broadcast leaves the per-probe call allocating only
-    * its k-slot buffers; and its size in bytes. */
-  private def raggedIndex(train: DataFrame, seriesCol: String)
-      : (Array[(Double, Long, Array[Double])], Long) = {
+  /** Train series of a ragged route: ids, values, and each series' value
+    * range [lo, hi] for [[Kernels.lbRagged]]. */
+  private final case class RaggedSeries(ids: Array[Long], series: Array[Array[Double]],
+                                       lo: Array[Double], hi: Array[Double])
+
+  /** The (id, tv, lo, hi) rows of both ragged routes' indexes: `lo` and
+    * `hi` are `array_min` / `array_max` of the series (NaN ranks above
+    * every number; an empty series, whose lb is 0, reads 0). */
+  private def raggedRows(train: DataFrame, seriesCol: String): DataFrame = {
+    val tv = col(seriesCol).cast("array<double>")
+    train.select(col("series_id").cast("long").as("id"), tv.as("tv"),
+      coalesce(array_min(tv), lit(0.0)).as("lo"), coalesce(array_max(tv), lit(0.0)).as("hi"))
+  }
+
+  /** The exact pass of both ragged routes: the top-k of `q` over every
+    * series of `t`, through the [[cascade]] in (lb, id) order by
+    * [[Kernels.lbRagged]]. */
+  private def raggedKnn(q: Array[Double], t: RaggedSeries, k: Int,
+                        radius: Int): Array[(Long, Double)] = {
+    val (qLo, qHi) =
+      if (q.isEmpty) (0.0, 0.0)
+      else (q.reduce((a, b) => math.min(a, b)), q.reduce((a, b) => math.max(a, b)))
+    val order = lbSelect(t.ids.length, t.ids(_), t.ids.length) { i =>
+      graft.kernels.Kernels.lbRagged(q, qLo, qHi, t.series(i), t.lo(i), t.hi(i))
+    }
+    cascade(q, order.map { case (lb, i) => (lb, t.ids(i), t.series(i)) }, k, radius)
+  }
+
+  /** The ragged index: every train series, ascending id, with its value
+    * range; and its size in bytes (8 per id, value and range end). */
+  private def raggedIndex(train: DataFrame, seriesCol: String): (RaggedSeries, Long) = {
     val spark = train.sparkSession
     import spark.implicits._
-    val index = train.select(col("series_id").cast("long"), col(seriesCol).cast("array<double>"))
-      .as[(Long, Array[Double])].collect().sortBy(_._1)
-      .map(t => (0.0, t._1, t._2))
-    (index, 8L * index.iterator.map(2L + _._3.length).sum)
+    val rows = raggedRows(train, seriesCol).as[(Long, Array[Double], Double, Double)]
+      .collect().sortBy(_._1)
+    (RaggedSeries(rows.map(_._1), rows.map(_._2), rows.map(_._3), rows.map(_._4)),
+      8L * rows.iterator.map(3L + _._2.length).sum)
   }
 
   /** Tiled no-broadcast variant of [[knnDtwRagged]]: the same tiling as
-    * [[knnDtwBlocked]] ([[tiledBest]]) over (id, series), minus the LB
-    * phase it cannot have; each tile runs the cascade per probe against
-    * the block's series and emits that tile's exact top-k. The global
-    * merge keeps the k best of the k·blocks survivors per probe on
-    * (dist, id) — exact, and output-identical to the broadcast route
+    * [[knnDtwBlocked]] ([[tiledBest]]) over (id, series, lo, hi) block
+    * entries; each tile runs the same LB-ordered cascade per probe
+    * against the block's series and emits that tile's exact top-k. The
+    * global merge keeps the k best of the k·blocks survivors per probe
+    * on (dist, id) — exact, and output-identical to the broadcast route
     * (VariableLengthSpec). */
   private[graft] def knnDtwRaggedBlocked(probes: DataFrame, train: DataFrame, k: Int,
                                          radius: Int, blocks: Int = 16,
                                          seriesCol: String = "values"): DataFrame = {
-    val tIdx = train.select(col("series_id").cast("long").as("id"),
-      col(seriesCol).cast("array<double>").as("tv"))
     val tileUdf = udf((ps: scala.collection.Seq[(Long, scala.collection.Seq[Double])],
-                       idx: scala.collection.Seq[(Long, scala.collection.Seq[Double])]) => {
+                       idx: scala.collection.Seq[
+                         (Long, scala.collection.Seq[Double], Double, Double)]) => {
       // arrays up front: the converter's Seq can be a linked list and
       // O(i) applies amplify quadratically inside the cascade loop
-      val index = idx.iterator.map(r => (0.0, r._1, r._2.toArray)).toArray
-        .sortBy(t => t._2)
+      val rows = idx.toArray
+      val t = RaggedSeries(rows.map(_._1), rows.map(_._2.toArray), rows.map(_._3), rows.map(_._4))
       ps.iterator.flatMap { case (pid, q) =>
-        cascade(q.toArray, index, k, radius).map { case (id, d) => (pid, d, id) }
+        raggedKnn(q.toArray, t, k, radius).map { case (id, d) => (pid, d, id) }
       }.toArray
     })
-    ranked(tiledBest(probes, tIdx, Seq(col("tv")), blocks, seriesCol, tileUdf, k),
+    ranked(tiledBest(probes, raggedRows(train, seriesCol), Seq(col("tv"), col("lo"), col("hi")),
+        blocks, seriesCol, tileUdf, k),
       col("probe_id"), col("best"), "_2", "_1")
   }
 

@@ -267,4 +267,103 @@ class KernelsSpec extends AnyFunSuite {
     val x = Array.fill(64)(0.0); val y = Array.fill(64)(100.0)
     assert(Kernels.dtwFlatEA(x, y, -1, 1.0).isPosInfinity)
   }
+
+  /** The DP dtwFlatEA had before it filled only the band: every row
+    * reset to +Inf in full, the band read from [[Mask.sakoeChiba]]. */
+  private def fullFillDtw(a: Array[Double], b: Array[Double], radius: Int, cutoff: Double): Double = {
+    val l1 = a.length; val l2 = b.length
+    if (l1 == 0 || l2 == 0) return Double.NaN
+    val bounds = if (radius < 0) Mask.none(l1, l2) else Mask.sakoeChiba(l1, l2, radius)
+    val abandon = !(cutoff.isNaN || cutoff.isInfinity)
+    var prev = Array.fill(l2 + 1)(Double.PositiveInfinity)
+    var cur = new Array[Double](l2 + 1)
+    prev(0) = 0.0
+    for (i <- 1 to l1) {
+      java.util.Arrays.fill(cur, Double.PositiveInfinity)
+      var rowMin = Double.PositiveInfinity
+      for (j <- bounds.lo(i - 1) + 1 to bounds.hi(i - 1) + 1) {
+        val diff = a(i - 1) - b(j - 1)
+        var m = prev(j)
+        if (cur(j - 1) < m) m = cur(j - 1)
+        if (prev(j - 1) < m) m = prev(j - 1)
+        cur(j) = diff * diff + m
+        if (cur(j) < rowMin) rowMin = cur(j)
+      }
+      if (abandon && math.sqrt(rowMin) > cutoff) return Double.PositiveInfinity
+      val t = prev; prev = cur; cur = t
+    }
+    math.sqrt(prev(l2))
+  }
+
+  test("dtwFlatEA filling only the band is bit-identical to the full-fill DP") {
+    val rng = new scala.util.Random(11)
+    // rows reused across calls and dirtied in between: the kernel must
+    // never read what a row held on entry
+    val row0 = new Array[Double](64); val row1 = new Array[Double](64)
+    for (_ <- 1 to 300) {
+      val a = Array.fill(1 + rng.nextInt(40))(rng.nextGaussian())
+      val b = Array.fill(1 + rng.nextInt(40))(rng.nextGaussian())
+      val longest = math.max(a.length, b.length)
+      for (radius <- Seq(-1, 0, 1, 12, longest, longest + 5)) {
+        val exact = fullFillDtw(a, b, radius, Double.PositiveInfinity)
+        for (cutoff <- Seq(Double.PositiveInfinity, exact * 0.5, math.nextDown(exact), exact,
+                           math.nextUp(exact), exact * 2)) {
+          val want = fullFillDtw(a, b, radius, cutoff)
+          assert(Kernels.dtwFlatEA(a, b, radius, cutoff) == want,
+            s"|a|=${a.length} |b|=${b.length} r=$radius cutoff=$cutoff")
+          java.util.Arrays.fill(row0, Double.NaN)
+          java.util.Arrays.fill(row1, -1.0)
+          assert(Kernels.dtwFlatEA(a, b, radius, cutoff, row0, row1) == want,
+            s"reused rows: |a|=${a.length} |b|=${b.length} r=$radius cutoff=$cutoff")
+        }
+      }
+    }
+  }
+
+  test("lbRagged lower-bounds dtwFlatEA for any two lengths, radius and infinities") {
+    val rng = new scala.util.Random(13)
+    def value(): Double = rng.nextInt(50) match {
+      case 0 => Double.PositiveInfinity
+      case 1 => Double.NegativeInfinity
+      case _ => rng.nextGaussian() * 3
+    }
+    def range(x: Array[Double]): (Double, Double) =
+      if (x.isEmpty) (0.0, 0.0)
+      else (x.reduce((u, v) => math.min(u, v)), x.reduce((u, v) => math.max(u, v)))
+    val inf = Double.PositiveInfinity
+    // an infinity meeting the same infinity at a corner makes the bound
+    // NaN, which reads 0
+    val fixed = Seq((Array(inf, 1.0, 2.0), Array(inf, 0.0)),
+      (Array(0.0, 1.0, -inf), Array(5.0, -inf)), (Array(inf, inf), Array(inf, inf, inf)))
+    for ((a, b) <- fixed)
+      assert(Kernels.lbRagged(a, range(a)._1, range(a)._2, b, range(b)._1, range(b)._2) == 0.0)
+    var bounded = 0
+    val random = Iterator.fill(3000)((Array.fill(rng.nextInt(if (rng.nextBoolean()) 4 else 30))(value()),
+      Array.fill(rng.nextInt(if (rng.nextBoolean()) 4 else 30))(value())))
+    for ((a, b) <- fixed.iterator ++ random) {
+      val (aLo, aHi) = range(a); val (bLo, bHi) = range(b)
+      val lb = Kernels.lbRagged(a, aLo, aHi, b, bLo, bHi)
+      assert(lb == Kernels.lbRagged(b, bLo, bHi, a, aLo, aHi), "lbRagged is symmetric")
+      assert(!lb.isNaN && lb >= 0)
+      if (a.length < 2 || b.length < 2) assert(lb == 0.0)
+      for (radius <- Seq(-1, 0, 3)) {
+        val d = Kernels.dtwFlatEA(a, b, radius, Double.PositiveInfinity)
+        // the cascade's rounding margin: lb and d may each round by
+        // about (|a| + |b|)·2⁻⁵³ relative
+        assert(d.isNaN || lb * (1 - (a.length + b.length) * math.ulp(1.0)) <= d,
+          s"lb $lb > dtw $d: ${a.toSeq} vs ${b.toSeq} r=$radius")
+        if (lb > 0 && !d.isInfinite) bounded += 1
+      }
+    }
+    // the bound is not vacuous: most finite pairs get a positive one
+    assert(bounded > 1000, s"only $bounded positive bounds")
+  }
+
+  test("lbRagged equals DTW on constant series") {
+    for ((n, m) <- Seq((2, 2), (5, 3), (3, 5), (7, 2))) {
+      val a = Array.fill(n)(0.1); val b = Array.fill(m)(0.7)
+      val d = Kernels.dtwFlatEA(a, b, -1, Double.PositiveInfinity)
+      assert(Kernels.lbRagged(a, 0.1, 0.1, b, 0.7, 0.7) == d)
+    }
+  }
 }

@@ -94,8 +94,8 @@ class KnnIndexStoreSpec extends AnyFunSuite {
     val rTrain = persisted(raggedSeries(43, 12))
     val rProbes = persisted(raggedSeries(44, 4, firstId = 100))
     // an entry's size: 8 bytes per id and double (pruned: the series and
-    // both envelope bounds; ragged: the series and a zero lb)
-    val raggedBytes = 8L * rTrain.selectExpr("size(values)").as[Int].collect().map(2L + _).sum
+    // both envelope bounds; ragged: the series and its min and max)
+    val raggedBytes = 8L * rTrain.selectExpr("size(values)").as[Int].collect().map(3L + _).sum
     val calls = Seq(
       ("pruned", () => Cdist.knnDtwPruned(probes, train, k = 3, radius = 2, factor = 2),
         8L * 12 * (1 + 3 * 8)),

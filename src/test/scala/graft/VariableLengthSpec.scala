@@ -99,10 +99,13 @@ class VariableLengthSpec extends AnyFunSuite {
     // by (dist, id) with NaN last), on every route: `ragged` itself; an
     // empty series at the lowest id, whose NaN distance must not hold
     // the k = 1 slot against any number; and every series twice under
-    // different ids, so the kth slot ties and (dist, id) decides it; and
-    // series holding +Inf and -Inf, and of lengths 1 and 2. The broadcast
-    // route also runs twice on a persisted copy: the second call reads
-    // its stored index
+    // different ids, so the kth slot ties and (dist, id) decides it;
+    // series holding +Inf and -Inf, and of lengths 1 and 2; and constant
+    // series, whose lower bound equals their DTW exactly (every inner
+    // value is as far from the other's range as from any of its values),
+    // so the kth slot ties at lb = dist. Each input runs unconstrained
+    // and at radius 2. The broadcast route also runs twice on a fresh
+    // persisted copy: the second call reads its stored index
     val withEmpty = ragged.union(Seq((-1L, Array.empty[Double], "c0"))
       .toDF("series_id", "values", "label"))
     val duplicated = ragged.union(ragged.withColumn("series_id", col("series_id") + 100))
@@ -115,39 +118,60 @@ class VariableLengthSpec extends AnyFunSuite {
         (205L, Array(0.0, 0.4), "c0"),
         (206L, Array(2.2, 2.9), "c1"))
       .toDF("series_id", "values", "label"))
+    val constants = Seq((0.1, 6), (0.3, 3), (0.3, 5), (0.7, 4), (0.5, 2), (0.7, 6),
+        (0.3, 6), (0.1, 4), (1.3, 5), (0.7, 2))
+      .zipWithIndex.map { case ((v, n), i) => (300L - i, Array.fill(n)(v), "c0") }
+    val constantTies = (constants ++ Seq((400L, Array(0.1, 0.7, 0.2, 0.3, 0.3), "c1"),
+        (401L, Array(0.3, 0.3, 0.3, 0.7), "c1")))
+      .toDF("series_id", "values", "label")
     def storedIds = Cdist.storedIndexes.map(_._3.id).toSet
     for ((name, ds, k) <- Seq(("ragged", ragged, 3), ("empty at lowest id", withEmpty, 1),
-                              ("duplicated", duplicated, 3), ("inf and short", edges, 3))) {
+                              ("duplicated", duplicated, 3), ("inf and short", edges, 3),
+                              ("constant ties", constantTies, 3));
+         radius <- Seq(-1, 2)) {
       val series = ds.select(col("series_id"), col("values")).as[(Long, Array[Double])].collect()
       val want = series.flatMap { case (pid, q) =>
         series.map { case (id, t) =>
-            (id, graft.kernels.Kernels.dtwFlatEA(q, t, -1, Double.PositiveInfinity)) }
+            (id, graft.kernels.Kernels.dtwFlatEA(q, t, radius, Double.PositiveInfinity)) }
           .sortBy { case (id, d) => (d.isNaN, if (d.isNaN) 0.0 else d, id) }
           .take(k).zipWithIndex.map { case ((id, d), r) => (pid, r + 1, id, d) }
       }.sortBy(r => (r._1, r._2))
       val copy = ds.select(col("series_id"), col("values")).persist()
       val before = storedIds
-      val cold = Cdist.knnDtwRagged(ds, copy, k)
+      val cold = Cdist.knnDtwRagged(ds, copy, k, radius)
       val added = storedIds -- before
       assert(added.size == 1, s"$name: the persisted copy's index is not stored")
-      val warm = Cdist.knnDtwRagged(ds, copy, k)
+      val warm = Cdist.knnDtwRagged(ds, copy, k, radius)
       assert(storedIds -- before == added, s"$name: the warm call stored again")
-      val routes = Seq("broadcast" -> Cdist.knnDtwRagged(ds, ds, k),
+      val routes = Seq("broadcast" -> Cdist.knnDtwRagged(ds, ds, k, radius),
           "broadcast persisted cold" -> cold, "broadcast persisted warm" -> warm) ++
         Seq(1, 3, 5).map(b => s"blocks=$b" -> Cdist.knnDtwRaggedBlocked(ds, ds, k,
-          radius = -1, blocks = b))
+          radius = radius, blocks = b))
       for ((route, df) <- routes) {
         val got = df.as[(Long, Int, Long, Double)].collect().sortBy(r => (r._1, r._2))
-        assert(got.length == want.length, s"$name $route row count")
+        assert(got.length == want.length, s"$name r=$radius $route row count")
         want.zip(got).foreach { case (e, g) =>
           assert(e._1 == g._1 && e._2 == g._2 && e._3 == g._3,
-            s"$name $route hit mismatch $e vs $g")
+            s"$name r=$radius $route hit mismatch $e vs $g")
           assert((e._4.isNaN && g._4.isNaN) || e._4 == g._4 || math.abs(e._4 - g._4) < 1e-12,
-            s"$name $route dist mismatch $e vs $g")
+            s"$name r=$radius $route dist mismatch $e vs $g")
         }
       }
       copy.unpersist(true)
     }
+  }
+
+  test("cascade computes a candidate whose lb rounds an ulp above a tying distance") {
+    import graft.operators.Cdist
+    // two train series at the same DTW d from q; the lower id arrives
+    // second, its lb one ulp above d (the rounding an lb equal to d in
+    // exact arithmetic can take). The (dist, id) rule ranks it first, so
+    // the skip test must not fire on it
+    val q = Array(0.1, 0.7, 0.2, 0.3)
+    val c = Array(1.0, 1.0)
+    val d = graft.kernels.Kernels.dtwFlatEA(q, c, -1, Double.PositiveInfinity)
+    val got = Cdist.cascade(q, Seq((0.5, 2L, c), (math.nextUp(d), 1L, c.clone())), k = 1, radius = -1)
+    assert(got.toSeq == Seq((1L, d)))
   }
 
   test("kNN-DTW classifies ragged series (test_variablelength kNN leg)") {
