@@ -1614,7 +1614,7 @@ object SparkEntry {
     }),
 
     // One DBA (MM) update from the deterministic euclidean-mean init —
-    // the DbaStepAgg path driver-verified (the full 10-iteration ts_dba
+    // the dbaByCluster path driver-verified (the full 10-iteration ts_dba
     // stays rows-only; the DuckDB mirror backtracks the DTW path with a
     // recursive CTE using the kernel's diag-first tie-break).
     "ts_dba_step" -> ((s, dir) => {
@@ -3610,7 +3610,7 @@ object SparkEntry {
     * (sz−1, sz−1) cell, lowest c on ties — assignDs's strict <) and,
     * via the recursive backtrack restricted to the assigned pair, the
     * aligned-mean DBA update (wsum = 0 cells keep the old centroid
-    * value, DbaStepAgg's rule). Final layer = the predict pass. */
+    * value, dbaByCluster's rule). Final layer = the predict pass. */
   private def kmeansDtwTraceSql(iters: Int, sz: Int, k: Int, nUsers: Int): String = {
     val last = sz - 1
     val sb = new StringBuilder(

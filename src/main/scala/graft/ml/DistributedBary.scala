@@ -1,7 +1,7 @@
 package graft.ml
 
-import org.apache.spark.sql.{Dataset, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import scala.collection.mutable
+import org.apache.spark.sql.Dataset
 import graft.kernels.{Kernels, Ncc}
 
 /** Distributed barycenter / shape-extraction update passes.
@@ -9,33 +9,39 @@ import graft.kernels.{Kernels, Ncc}
   * Semantics of `/root/reference/tslearn/barycenters/dba.py:221-345` (the
   * ΣV/ΣWx DBA update), `euclidean.py:8-43`, `softdtw.py:17-113` and
   * `clustering/kshape.py:118-137` (gram shape extraction), re-expressed as
-  * typed Spark `Aggregator`s over (cluster, series) rows.
+  * one `treeAggregate` fold over (cluster, series) rows ([[byCluster]]).
   *
-  * Each buffer is FIXED-SIZE — per-timestep sums (O(sz)), an sz×sz gram,
-  * or a soft-DTW gradient — and aggregation is associative, so Spark does
-  * map-side partial aggregation and no task ever materializes a whole
+  * Each cluster's buffer is FIXED-SIZE — per-timestep sums (O(sz)), an
+  * sz×sz gram, or a soft-DTW gradient — and the fold is associative, so
+  * every task folds its own rows and no task ever materializes a whole
   * cluster: a skewed cluster costs O(sz²) memory per task instead of
-  * O(|cluster|·sz). The driver updates centers from the k collected
-  * buffers and re-broadcasts — the same job shape at 300 series or 300M.
+  * O(|cluster|·sz). The driver updates centers from the k merged buffers
+  * and re-broadcasts — one job per update, the same job shape at 300
+  * series or 300M.
   */
 object DistributedBary {
 
-  /** Ragged per-timestep running mean (euclidean barycenter). */
-  case class MeanBuf(var sums: Array[Double], var wsum: Array[Double])
+  /** One cluster's running sums: two arrays, a count and a scalar. The
+    * caller gives them their meaning: per-timestep sums and weights, a
+    * gradient, or a flattened gram and its members' vector sum. */
+  private final class Sums extends Serializable {
+    var a: Array[Double] = Array.emptyDoubleArray
+    var b: Array[Double] = Array.emptyDoubleArray
+    var n: Long = 0L
+    var s: Double = 0.0
 
-  /** One DBA (MM) step: per-center-timestep alignment sums + weights +
-    * summed squared DTW cost + member count. */
-  case class DbaBuf(var sums: Array[Double], var wsum: Array[Double],
-                    var cost: Double, var n: Long)
+    /** Zero-pads `a` and `b` to at least these lengths. */
+    def grow(aLen: Int, bLen: Int): Sums = {
+      if (a.length < aLen) a = java.util.Arrays.copyOf(a, aLen)
+      if (b.length < bLen) b = java.util.Arrays.copyOf(b, bLen)
+      this
+    }
 
-  /** Soft-DTW value + gradient w.r.t. the (broadcast) center. */
-  case class GradBuf(var value: Double, var grad: Array[Double], var n: Long)
-
-  /** KShape: flattened sz×sz gram of SBD-aligned z-normed members, their
-    * vector sum (for the eigenvector sign fix), count, and the Σd²
-    * inertia numerator of the same assignment rows. */
-  case class GramD2Buf(var gram: Array[Double], var xsum: Array[Double],
-                       var n: Long, var d2: Double)
+    def add(o: Sums): Sums = {
+      a = addInto(a, o.a); b = addInto(b, o.b); n += o.n; s += o.s
+      this
+    }
+  }
 
   private def addInto(a: Array[Double], b: Array[Double]): Array[Double] = {
     if (a.length == 0) return b
@@ -46,154 +52,65 @@ object DistributedBary {
     big
   }
 
-  /** Per-cluster ragged per-timestep mean — each timestep averages the
-    * members that reach it, matching `Barycenters.euclidean`. */
-  class MeanBaryAgg extends Aggregator[(Int, Array[Double]), MeanBuf, MeanBuf]
-      with Serializable {
-    def zero: MeanBuf = MeanBuf(Array.emptyDoubleArray, Array.emptyDoubleArray)
-    def reduce(b: MeanBuf, in: (Int, Array[Double])): MeanBuf = {
-      val x = in._2
-      if (b.sums.length < x.length) {
-        b.sums = java.util.Arrays.copyOf(b.sums, x.length)
-        b.wsum = java.util.Arrays.copyOf(b.wsum, x.length)
-      }
-      var t = 0
-      while (t < x.length) { b.sums(t) += x(t); b.wsum(t) += 1.0; t += 1 }
-      b
-    }
-    def merge(a: MeanBuf, b: MeanBuf): MeanBuf = {
-      if (a.sums.length >= b.sums.length) {
-        a.sums = addInto(a.sums, b.sums); a.wsum = addInto(a.wsum, b.wsum); a
-      } else {
-        b.sums = addInto(b.sums, a.sums); b.wsum = addInto(b.wsum, a.wsum); b
-      }
-    }
-    def finish(b: MeanBuf): MeanBuf = b
-    def bufferEncoder: Encoder[MeanBuf] = Encoders.product[MeanBuf]
-    def outputEncoder: Encoder[MeanBuf] = Encoders.product[MeanBuf]
+  /** The one per-cluster pass: ONE `treeAggregate` job folds every row into
+    * the buffer of the cluster it names — `fold(row, sums)` takes that
+    * buffer from `sums(cid)` — and merges the per-task buffers by cluster
+    * id. Returns the clusters that received at least one row. */
+  private def byCluster[T](rows: Dataset[T])(fold: (T, Int => Sums) => Unit): Map[Int, Sums] =
+    rows.rdd.treeAggregate(mutable.HashMap.empty[Int, Sums])({ (acc, row) =>
+      fold(row, acc.getOrElseUpdate(_, new Sums))
+      acc
+    }, { (x, y) =>
+      y.foreach { case (cid, s) => x(cid) = x.get(cid).fold(s)(_.add(s)) }
+      x
+    }).toMap
+
+  private def uniCenters(centers: Array[Array[Double]]): Array[Kernels.TS] =
+    centers.map(c => if (c == null) null else Kernels.uni(c))
+
+  /** Adds x to ragged per-timestep sums (`a`) and weights (`b`). */
+  private def addMean(sums: Sums, x: Array[Double]): Sums = {
+    sums.grow(x.length, x.length)
+    var t = 0
+    while (t < x.length) { sums.a(t) += x(t); sums.b(t) += 1.0; t += 1 }
+    sums.n += 1
+    sums
   }
 
-  /** One DBA (MM) iteration: align each member to its cluster's broadcast
-    * center with dtwPath, accumulate the per-center-timestep sums. The
-    * centers array travels in the task closure (k·sz doubles — tiny). */
-  class DbaStepAgg(centers: Array[Array[Double]])
-      extends Aggregator[(Int, Array[Double]), DbaBuf, DbaBuf] with Serializable {
-    @transient private lazy val centers2d: Array[Kernels.TS] =
-      centers.map(c => if (c == null) null else Kernels.uni(c))
-    def zero: DbaBuf = DbaBuf(Array.emptyDoubleArray, Array.emptyDoubleArray, 0.0, 0L)
-    def reduce(b: DbaBuf, in: (Int, Array[Double])): DbaBuf = {
-      val center = centers2d(in._1)
-      val sz = center.length
-      if (b.sums.length < sz) {
-        b.sums = java.util.Arrays.copyOf(b.sums, sz)
-        b.wsum = java.util.Arrays.copyOf(b.wsum, sz)
-      }
-      val (path, dist) = Kernels.dtwPath(center, Kernels.uni(in._2))
-      var p = 0
-      while (p < path.length) {
-        val (i, j) = path(p)
-        b.sums(i) += in._2(j); b.wsum(i) += 1.0
-        p += 1
-      }
-      b.cost += dist * dist; b.n += 1
-      b
-    }
-    def merge(a: DbaBuf, b: DbaBuf): DbaBuf = {
-      a.sums = addInto(a.sums, b.sums); a.wsum = addInto(a.wsum, b.wsum)
-      a.cost += b.cost; a.n += b.n
-      a
-    }
-    def finish(b: DbaBuf): DbaBuf = b
-    def bufferEncoder: Encoder[DbaBuf] = Encoders.product[DbaBuf]
-    def outputEncoder: Encoder[DbaBuf] = Encoders.product[DbaBuf]
-  }
+  private def means(bufs: Map[Int, Sums]): Map[Int, Array[Double]] =
+    bufs.map { case (cid, m) => cid -> Array.tabulate(m.a.length)(t => m.a(t) / m.b(t)) }
 
-  /** KShape gram pass: SBD-align each member to its cluster's current
-    * center, z-norm, accumulate z·zᵀ (flattened) and Σz, plus the Σd² of
-    * the rows' pre-computed SBD distances (inertia fused into the pass). */
-  class GramD2Agg(centers: Array[Array[Double]])
-      extends Aggregator[(Int, Double, Array[Double]), GramD2Buf, GramD2Buf]
-      with Serializable {
-    @transient private lazy val centers2d: Array[Kernels.TS] =
-      centers.map(c => if (c == null) null else Kernels.uni(c))
-    def zero: GramD2Buf =
-      GramD2Buf(Array.emptyDoubleArray, Array.emptyDoubleArray, 0L, 0.0)
-    def reduce(b: GramD2Buf, in: (Int, Double, Array[Double])): GramD2Buf = {
-      val center = centers2d(in._1)
-      val sz = center.length
-      if (b.gram.length < sz * sz) {
-        b.gram = java.util.Arrays.copyOf(b.gram, sz * sz)
-        b.xsum = java.util.Arrays.copyOf(b.xsum, sz)
-      }
-      val aligned = Ncc.shiftToAlign(center, Kernels.uni(in._3))
-      val z = Kernels.scaleMeanVariance(aligned).map(_(0))
-      var i = 0
-      while (i < sz) {
-        val zi = z(i)
-        b.xsum(i) += zi
-        var j = 0
-        while (j < sz) { b.gram(i * sz + j) += zi * z(j); j += 1 }
-        i += 1
-      }
-      b.n += 1
-      b.d2 += in._2 * in._2
-      b
-    }
-    def merge(a: GramD2Buf, b: GramD2Buf): GramD2Buf = {
-      a.gram = addInto(a.gram, b.gram); a.xsum = addInto(a.xsum, b.xsum)
-      a.n += b.n; a.d2 += b.d2
-      a
-    }
-    def finish(b: GramD2Buf): GramD2Buf = b
-    def bufferEncoder: Encoder[GramD2Buf] = Encoders.product[GramD2Buf]
-    def outputEncoder: Encoder[GramD2Buf] = Encoders.product[GramD2Buf]
-  }
+  /** Σd² over all rows: the per-cluster sums `s`, in ascending cluster id. */
+  private def totalS(bufs: Map[Int, Sums]): Double =
+    bufs.toSeq.sortBy(_._1).map(_._2.s).sum
 
-  /** Soft-DTW barycenter objective: Σ softDTW(center_cid, x) with gradient
-    * w.r.t. the center, per cluster — one pass evaluates every cluster. */
-  class SoftDtwGradAgg(centers: Array[Array[Double]], gamma: Double)
-      extends Aggregator[(Int, Array[Double]), GradBuf, GradBuf] with Serializable {
-    @transient private lazy val centers2d: Array[Kernels.TS] =
-      centers.map(c => if (c == null) null else Kernels.uni(c))
-    def zero: GradBuf = GradBuf(0.0, Array.emptyDoubleArray, 0L)
-    def reduce(b: GradBuf, in: (Int, Array[Double])): GradBuf = {
-      val center = centers2d(in._1)
-      val sz = center.length
-      if (b.grad.length < sz) b.grad = java.util.Arrays.copyOf(b.grad, sz)
-      val (v, g) = Kernels.softDtwGrad(center, Kernels.uni(in._2), gamma)
-      b.value += v
-      var t = 0
-      while (t < sz) { b.grad(t) += g(t)(0); t += 1 }
-      b.n += 1
-      b
-    }
-    def merge(a: GradBuf, b: GradBuf): GradBuf = {
-      a.value += b.value; a.grad = addInto(a.grad, b.grad); a.n += b.n
-      a
-    }
-    def finish(b: GradBuf): GradBuf = b
-    def bufferEncoder: Encoder[GradBuf] = Encoders.product[GradBuf]
-    def outputEncoder: Encoder[GradBuf] = Encoders.product[GradBuf]
-  }
-
-  /** Collect the per-cluster aggregation of `agg` over (cluster, series)
-    * rows — k tiny rows on the driver. */
-  private def aggByCluster[B](rows: Dataset[(Int, Array[Double])],
-                              agg: Aggregator[(Int, Array[Double]), B, B]): Map[Int, B] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.groupByKey(_._1).agg(agg.toColumn).collect().toMap
-  }
-
-  /** Per-cluster ragged means (euclidean barycenter update). */
+  /** Per-cluster ragged means (euclidean barycenter update) — each timestep
+    * averages the members that reach it, matching `Barycenters.euclidean`. */
   def meanByCluster(rows: Dataset[(Int, Array[Double])]): Map[Int, Array[Double]] =
-    aggByCluster(rows, new MeanBaryAgg).map { case (cid, b) =>
-      cid -> Array.tabulate(b.sums.length)(t => b.sums(t) / b.wsum(t))
+    means(byCluster(rows) { case ((cid, x), sums) => addMean(sums(cid), x) })
+
+  /** One euclidean Lloyd step as one pass: each row joins its nearest
+    * center (`TimeSeriesKMeans.nearest`, the assignment rule of
+    * `assignDs`), and the same fold adds it to that cluster's
+    * per-timestep sums and its squared distance to the cluster's Σd².
+    * Returns the new means of the clusters that received a row, and Σd²
+    * over all rows. */
+  private[ml] def meansWithInertia(rows: Dataset[(Long, Array[Double])],
+                                   centers: Array[Array[Double]]): (Map[Int, Array[Double]], Double) = {
+    val dist = TimeSeriesKMeans.metricDist("euclidean", 1.0)
+    val bufs = byCluster(rows) { case ((_, x), sums) =>
+      val (cid, d) = TimeSeriesKMeans.nearest(centers, x, dist)
+      addMean(sums(cid), x).s += d * d
     }
+    (means(bufs), totalS(bufs))
+  }
 
   /** Per-cluster DBA (MM) with `iters` distributed update steps starting
-    * from `init` — the k-means `metric="dtw"` update pass. Stops early
-    * when the summed normalized cost stops improving by `tol`. */
+    * from `init` — the k-means `metric="dtw"` update pass. Each step aligns
+    * every member to its cluster's center with dtwPath and accumulates the
+    * per-center-timestep sums (`a`), weights (`b`) and squared DTW cost
+    * (`s`). Stops early when the summed normalized cost stops improving by
+    * `tol`. */
   def dbaByCluster(rows: Dataset[(Int, Array[Double])], init: Array[Array[Double]],
                    iters: Int, tol: Double = 1e-5): Map[Int, Array[Double]] = {
     val centers = init.map(c => if (c == null) null else c.clone())
@@ -202,13 +119,25 @@ object DistributedBary {
     var it = 0
     var done = false
     while (it < iters && !done) {
-      val bufs = aggByCluster(rows, new DbaStepAgg(centers))
+      val cs = uniCenters(centers)
+      val bufs = byCluster(rows) { case ((cid, x), sums) =>
+        val center = cs(cid)
+        val b = sums(cid).grow(center.length, center.length)
+        val (path, dist) = Kernels.dtwPath(center, Kernels.uni(x))
+        var p = 0
+        while (p < path.length) {
+          val (i, j) = path(p)
+          b.a(i) += x(j); b.b(i) += 1.0
+          p += 1
+        }
+        b.s += dist * dist; b.n += 1
+      }
       present = bufs.keySet
       var cost = 0.0
       bufs.foreach { case (cid, b) =>
         centers(cid) = Array.tabulate(centers(cid).length)(t =>
-          if (b.wsum(t) > 0) b.sums(t) / b.wsum(t) else centers(cid)(t))
-        cost += b.cost / math.max(1L, b.n)
+          if (b.b(t) > 0) b.a(t) / b.b(t) else centers(cid)(t))
+        cost += b.s / math.max(1L, b.n)
       }
       if (prevCost - cost < tol) done = true
       prevCost = cost
@@ -217,11 +146,28 @@ object DistributedBary {
     present.map(cid => cid -> centers(cid)).toMap
   }
 
+  /** Soft-DTW barycenter objective: per cluster, Σ softDTW(center_cid, x)
+    * (`s`) and its gradient w.r.t. the center (`a`) — one pass evaluates
+    * every cluster. */
+  private def softDtwGrads(rows: Dataset[(Int, Array[Double])],
+                           centers: Array[Array[Double]], gamma: Double): Map[Int, Sums] = {
+    val cs = uniCenters(centers)
+    byCluster(rows) { case ((cid, x), sums) =>
+      val center = cs(cid)
+      val b = sums(cid).grow(center.length, 0)
+      val (v, g) = Kernels.softDtwGrad(center, Kernels.uni(x), gamma)
+      b.s += v
+      var t = 0
+      while (t < center.length) { b.a(t) += g(t)(0); t += 1 }
+      b.n += 1
+    }
+  }
+
   /** Soft-DTW barycenter update as `steps` FIXED-η gradient-descent steps
     * from the CURRENT centers (the k-means `metric="softdtw"` update in
     * its oracle-replayable form): b ← b − η·Σ_{x∈cluster} ∇_b softDTW(b, x),
-    * one distributed SoftDtwGradAgg pass per step evaluating all k
-    * clusters at once. The deterministic analog of the reference's
+    * one distributed gradient pass per step evaluating all k clusters at
+    * once. The deterministic analog of the reference's
     * `softdtw_barycenter(init=cluster_centers_[k])` L-BFGS solve
     * (`softdtw.py:17-113` via `kmeans.py:709-727`) — same init
     * convention (current center, not cluster mean), same sum-gradient,
@@ -235,12 +181,12 @@ object DistributedBary {
     var present: Set[Int] = Set.empty
     var it = 0
     while (it < steps) {
-      val bufs = aggByCluster(rows, new SoftDtwGradAgg(centers, gamma))
+      val bufs = softDtwGrads(rows, centers, gamma)
       present = bufs.keySet
       bufs.foreach { case (cid, b) =>
         val c = centers(cid)
         var t = 0
-        while (t < c.length) { c(t) -= eta * b.grad(t); t += 1 }
+        while (t < c.length) { c(t) -= eta * b.a(t); t += 1 }
       }
       it += 1
     }
@@ -274,14 +220,14 @@ object DistributedBary {
     val f = new DiffFunction[DenseVector[Double]] {
       def calculate(v: DenseVector[Double]): (Double, DenseVector[Double]) = {
         val centers = unflatten(v)
-        val bufs = aggByCluster(rows, new SoftDtwGradAgg(centers, gamma))
+        val bufs = softDtwGrads(rows, centers, gamma)
         val grad = DenseVector.zeros[Double](v.length)
         var value = 0.0
         cids.indices.foreach { i =>
           bufs.get(cids(i)).foreach { b =>
-            value += b.value
+            value += b.s
             var t = 0
-            while (t < b.grad.length) { grad(offsets(i) + t) = b.grad(t); t += 1 }
+            while (t < b.a.length) { grad(offsets(i) + t) = b.a(t); t += 1 }
           }
         }
         (value, grad)
@@ -300,14 +246,43 @@ object DistributedBary {
     * the reference's Σ‖Xp∓µ‖ comparison. */
   def shapeByCluster(rows: Dataset[(Int, Array[Double])],
                      centers: Array[Array[Double]]): Map[Int, Array[Double]] =
-    shapesWithInertia(withZeroDist(rows), centers, steps = 0)._1
+    shapes(shapeSums(rows, centers), centers, steps = 0)
 
-  private def withZeroDist(rows: Dataset[(Int, Array[Double])])
-      : Dataset[(Int, Double, Array[Double])] = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    rows.map { case (c, v) => (c, 0.0, v) }
+  /** Adds x, SBD-aligned to its cluster's `center` and re-z-normed, to the
+    * cluster's flattened gram (`a` += z·zᵀ) and vector sum (`b` += z). */
+  private def addAligned(sums: Sums, center: Kernels.TS, x: Array[Double]): Sums = {
+    val sz = center.length
+    sums.grow(sz * sz, sz)
+    val aligned = Ncc.shiftToAlign(center, Kernels.uni(x))
+    val z = Kernels.scaleMeanVariance(aligned).map(_(0))
+    var i = 0
+    while (i < sz) {
+      val zi = z(i)
+      sums.b(i) += zi
+      var j = 0
+      while (j < sz) { sums.a(i * sz + j) += zi * z(j); j += 1 }
+      i += 1
+    }
+    sums.n += 1
+    sums
   }
+
+  /** The gram pass of [[shapeByCluster]] / [[shapeByClusterPower]]. */
+  private def shapeSums(rows: Dataset[(Int, Array[Double])],
+                        centers: Array[Array[Double]]): Map[Int, Sums] = {
+    val cs = uniCenters(centers)
+    byCluster(rows) { case ((cid, x), sums) => addAligned(sums(cid), cs(cid), x) }
+  }
+
+  /** Each cluster's shape from its gram: `steps` power-method updates, or
+    * eigSym when `steps` is 0. */
+  private def shapes(bufs: Map[Int, Sums], centers: Array[Array[Double]],
+                     steps: Int): Map[Int, Array[Double]] =
+    bufs.map { case (cid, b) =>
+      val sz = centers(cid).length
+      cid -> (if (steps > 0) finishShapePower(b.a, b.b, sz, steps)
+              else finishShapeEig(b.a, b.b, sz))
+    }
 
   /** eigSym shape finisher over an accumulated gram/xsum pair. */
   private def finishShapeEig(gram: Array[Double], xsum: Array[Double],
@@ -364,7 +339,7 @@ object DistributedBary {
                           centers: Array[Array[Double]],
                           steps: Int = 60): Map[Int, Array[Double]] = {
     require(steps > 0, s"power iteration needs steps > 0, got $steps")
-    shapesWithInertia(withZeroDist(rows), centers, steps)._1
+    shapes(shapeSums(rows, centers), centers, steps)
   }
 
   /** Power-method shape finisher (the oracle-replayable deterministic
@@ -417,33 +392,23 @@ object DistributedBary {
     }
   }
 
-  /** KShape gram + Σd² fused pass (VERDICT r17 #6, guide §1.2): one job per
-    * Lloyd iteration computes BOTH the per-cluster shape grams and the
-    * inertia numerator that used to be a separate reduce over the same
-    * cached assignment. Rows carry the SBD distance already computed by the
-    * assignment map, so the distances are bit-identical to the two-job path
-    * by construction (no cross-path recompute); the shape finishers are the
-    * shared float paths above. Returns (shapes, Σd² over all rows) — the
-    * Σd² total folds the k per-cluster sums in ascending cluster order. */
+  /** KShape gram + Σd² in one pass per Lloyd iteration: the per-cluster
+    * shape grams and the inertia numerator of the same assignment rows.
+    * Rows carry the SBD distance the assignment map computed, so no
+    * distance is recomputed here. Returns (shapes, Σd² over all rows). */
   def shapesWithInertia(rows: Dataset[(Int, Double, Array[Double])],
                         centers: Array[Array[Double]],
                         steps: Int): (Map[Int, Array[Double]], Double) = {
-    val spark = rows.sparkSession
-    import spark.implicits._
-    val agg = new GramD2Agg(centers)
-    val bufs = rows.groupByKey(_._1).agg(agg.toColumn).collect().toMap
-    val shapes = bufs.map { case (cid, b) =>
-      val sz = centers(cid).length
-      cid -> (if (steps > 0) finishShapePower(b.gram, b.xsum, sz, steps)
-              else finishShapeEig(b.gram, b.xsum, sz))
+    val cs = uniCenters(centers)
+    val bufs = byCluster(rows) { case ((cid, d, x), sums) =>
+      addAligned(sums(cid), cs(cid), x).s += d * d
     }
-    val d2 = bufs.toSeq.sortBy(_._1).map(_._2.d2).sum
-    (shapes, d2)
+    (shapes(bufs, centers, steps), totalS(bufs))
   }
 
   /** Whole-dataset DBA (MM variant) — `dba.py:394-604` distributed: init
-    * from the distributed euclidean mean, then one DbaStepAgg job per MM
-    * iteration against the re-broadcast center. */
+    * from the distributed euclidean mean, then one [[dbaByCluster]] pass
+    * per MM iteration against the current center. */
   def dba(series: Dataset[Array[Double]], barycenterSize: Int = -1,
           maxIter: Int = 30, tol: Double = 1e-5): Array[Double] = {
     val spark = series.sparkSession
@@ -452,9 +417,11 @@ object DistributedBary {
     // rows; without it the caller's (often expensive) upstream pipeline
     // re-evaluates once per iteration
     val keyed = series.map(x => (0, x)).localCheckpoint()
-    val mean = meanByCluster(keyed)(0)
-    val size = if (barycenterSize > 0) barycenterSize else mean.length
-    val init = Kernels.resample(Kernels.uni(mean), size).map(_(0))
-    dbaByCluster(keyed, Array(init), maxIter, tol)(0)
+    try {
+      val mean = meanByCluster(keyed)(0)
+      val size = if (barycenterSize > 0) barycenterSize else mean.length
+      val init = Kernels.resample(Kernels.uni(mean), size).map(_(0))
+      dbaByCluster(keyed, Array(init), maxIter, tol)(0)
+    } finally TimeSeriesKMeans.releaseLocalCheckpoint(keyed)
   }
 }

@@ -11,9 +11,9 @@ import graft.kernels.{Kernels, Ncc}
   * shape extraction per cluster is the leading eigenvector of
   * M = Qᵀ (Σ xxᵀ) Q over SBD-aligned members (`kshape.py:118-137`).
   *
-  * Spark layout: assignment = broadcast pass; shape extraction = one
-  * streaming gram aggregation per iteration (DistributedBary.GramD2Agg — the
-  * sz×sz buffer is cluster-size-independent, with map-side combine), then
+  * Spark layout: one job per iteration — the broadcast assignment map feeds
+  * a per-cluster gram fold (DistributedBary.shapesWithInertia — the sz×sz
+  * buffer is cluster-size-independent, each task folds its own rows), then
   * a local Breeze eigendecomposition per cluster on the driver. Input must
   * be equal-length (KShape z-normalizes internally, as the reference does).
   */
@@ -36,7 +36,7 @@ class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
       df.select(col("series_id").cast("long"), col("values").cast("array<double>"))
         .as[(Long, Array[Double])]
         .map { case (id, vs) =>
-          val z = Kernels.scaleMeanVariance(Kernels.uni(vs.toIndexedSeq: _*)).map(_(0))
+          val z = Kernels.scaleMeanVariance(Kernels.uni(vs)).map(_(0))
           val (c, d) = KShape.nearest(z, bc.value)
           (id, c, d)
         }.toDF("series_id", "cluster", "dist")
@@ -49,7 +49,7 @@ class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
     val data0 = df.select(col("series_id").cast("long"), col("values").cast("array<double>"))
       .as[(Long, Array[Double])]
       .map { case (id, vs) =>
-        (id, Kernels.scaleMeanVariance(Kernels.uni(vs.toIndexedSeq: _*)).map(_(0)))
+        (id, Kernels.scaleMeanVariance(Kernels.uni(vs)).map(_(0)))
       }
       // localCheckpoint: count + repartition-cache fill + takeSample each
       // re-read these rows; truncate so the upstream runs once
@@ -77,14 +77,11 @@ class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
       var done = false
       while (iter < maxIter && !done) {
         val bc = spark.sparkContext.broadcast(centroids)
-        // assignment + inertia + shape extraction fused into ONE job per
-        // iteration (VERDICT r17 #6, guide §1.2): the SBD distance computed
-        // by the assignment map rides the row into the gram aggregation,
-        // which accumulates Σd² alongside the sz×sz gram — the former
-        // two-job shape (cache + inertia reduce + gram pass) recomputed
-        // nothing but still paid a second scheduling round trip and the
-        // cache materialization. Distances are bit-identical by
-        // construction (KShapeInertiaFuseSpec locks the whole trace).
+        // assignment + inertia + shape extraction in ONE job per
+        // iteration: the SBD distance computed by the assignment map rides
+        // the row into the per-cluster gram fold, which accumulates Σd²
+        // alongside the sz×sz gram (KShapeInertiaFuseSpec locks the trace
+        // against the unfused loop).
         val assigned = data.map { case (_, vs) =>
           val (c, d) = KShape.nearest(vs, bc.value)
           (c, d, vs)
@@ -104,15 +101,10 @@ class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
 }
 
 object KShape {
+  private val sbd: (Array[Double], Array[Double]) => Double =
+    (c, x) => Ncc.sbd(Kernels.uni(c), Kernels.uni(x))
+
   /** argmin over centroids of 1 − maxNCC. */
-  def nearest(vs: Array[Double], centroids: Array[Array[Double]]): (Int, Double) = {
-    var bestC = 0; var bestD = Double.PositiveInfinity
-    var c = 0
-    while (c < centroids.length) {
-      val d = Ncc.sbd(Kernels.uni(centroids(c).toIndexedSeq: _*), Kernels.uni(vs.toIndexedSeq: _*))
-      if (d < bestD) { bestD = d; bestC = c }
-      c += 1
-    }
-    (bestC, bestD)
-  }
+  def nearest(vs: Array[Double], centroids: Array[Array[Double]]): (Int, Double) =
+    TimeSeriesKMeans.nearest(centroids, vs, sbd)
 }

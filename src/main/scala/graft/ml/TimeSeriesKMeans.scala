@@ -11,12 +11,13 @@ import graft.kernels.Kernels
   *
   *  - assignment: one distributed pass — `crossJoin(broadcast(centroids))`
   *    + `min_by` argmin. No shuffle of the big side; centroids are tiny.
-  *  - update: distributed fixed-size-buffer aggregations (DistributedBary)
-  *    — per-cluster ΣV/ΣWx for DBA, per-timestep means for euclidean, a
-  *    joint L-BFGS with distributed gradients for soft-DTW. Map-side
-  *    partial aggregation means a skewed cluster costs O(sz) buffer per
-  *    task, never O(|cluster|·sz) — the round-1 whole-cluster `mapGroups`
-  *    is gone.
+  *  - update: one per-cluster fold of fixed-size buffers per pass
+  *    (DistributedBary) — per-cluster ΣV/ΣWx for DBA, per-timestep means
+  *    for euclidean, a joint L-BFGS with distributed gradients for
+  *    soft-DTW. Each task folds its own rows, so a skewed cluster costs
+  *    O(sz) buffer per task, never O(|cluster|·sz). Euclidean folds the
+  *    assignment, the means and Σd² into that one pass: one job per
+  *    Lloyd iteration.
   *  - control flow (init restarts, tolerance, empty-cluster retry,
   *    `n_init` best-of) stays on the driver, mirroring the reference.
   *
@@ -49,6 +50,9 @@ class TimeSeriesKMeans(
     s"bad init $init")
   require(Seq("lbfgs", "gd").contains(barycenterSolver), s"bad solver $barycenterSolver")
 
+  /** `inertia` is the last assignment's Σd²/n: the squared distances of
+    * the final iteration's assignment, against the centroids it assigned
+    * to (the reference's `_assign` then `_post_fit`). */
   case class Model(centroids: Array[Array[Double]], inertia: Double) {
     /** Assign each series to its nearest centroid: single broadcast pass. */
     def predict(df: DataFrame): DataFrame = TimeSeriesKMeans.assign(df, centroids, metric, gamma)
@@ -148,50 +152,45 @@ class TimeSeriesKMeans(
       var inertia = Double.PositiveInfinity
       var iter = 0
       var done = false
-      // the per-iteration inertia job only matters when it gates the loop
-      // (tol early stop) or ranks restarts; with tol<0 and a single init
-      // it is one dead distributed pass per iteration — compute inertia
-      // once after the loop instead
-      val needInertia = tol >= 0 || nInit > 1
       while (iter < maxIter && !done) {
-        // (cluster, dist, values) for this iteration's centroids; cached
-        // because the update pass below may run several jobs over it
-        val assigned = TimeSeriesKMeans.assignDs(data, centroids, metric, gamma)
-          .map(t => (t._2, t._3, t._4)).cache()
-        val updated: Map[Int, Array[Double]] = try {
-          // restart ranking (nInit > 1, tol < 0) only ever reads the LAST
-          // iteration's inertia — skip the per-iteration reduce job until
-          // then (same value the full per-iteration sequence would leave)
-          if (tol >= 0 || (needInertia && iter == maxIter - 1))
-            inertia = assigned.map(r => r._2 * r._2).reduce(_ + _) / n
-          // update: distributed fixed-size-buffer aggregations — no task
-          // ever holds a whole cluster (DistributedBary scaladoc)
-          val rows = assigned.map(t => (t._1, t._3))
-          metric match {
-            case "dtw" =>
-              DistributedBary.dbaByCluster(rows, centroids, barycenterMaxIter)
-            case "softdtw" if barycenterSolver == "gd" =>
-              DistributedBary.softDtwGdByCluster(rows, centroids, gamma,
-                barycenterEta, barycenterMaxIter)
-            case "softdtw" =>
-              DistributedBary.softDtwByCluster(rows,
-                centroids.indices.map(c => c -> centroids(c).length).toMap,
-                gamma, barycenterMaxIter)
-            case _ => DistributedBary.meanByCluster(rows)
+        val updated: Map[Int, Array[Double]] =
+          if (metric == "euclidean") {
+            // assignment, per-timestep sums, counts and Σd² in one pass
+            val (means, d2) = DistributedBary.meansWithInertia(data, centroids)
+            inertia = d2 / n
+            means
+          } else {
+            // (cluster, dist, values) for this iteration's centroids;
+            // cached because the barycenter steps below reread it
+            val assigned = TimeSeriesKMeans.assignDs(data, centroids, metric, gamma)
+              .map(t => (t._2, t._3, t._4)).cache()
+            try {
+              // only the tol gate and the model (the last iteration's
+              // value) read the inertia
+              if (tol >= 0 || iter == maxIter - 1)
+                inertia = assigned.map(r => r._2 * r._2).reduce(_ + _) / n
+              val rows = assigned.map(t => (t._1, t._3))
+              if (metric == "dtw")
+                DistributedBary.dbaByCluster(rows, centroids, barycenterMaxIter)
+              else if (barycenterSolver == "gd")
+                DistributedBary.softDtwGdByCluster(rows, centroids, gamma,
+                  barycenterEta, barycenterMaxIter)
+              else
+                DistributedBary.softDtwByCluster(rows,
+                  centroids.indices.map(c => c -> centroids(c).length).toMap,
+                  gamma, barycenterMaxIter)
+            } finally assigned.unpersist()
           }
-        } finally assigned.unpersist()
         // empty-cluster retry: reseed from a random sample member
         // (reference raises EmptyClusterError and restarts; reseeding is
         // the deterministic-seed equivalent, `clustering/utils.py:13-33`)
         centroids = Array.tabulate(k)(c =>
           updated.getOrElse(c, sample(rng.nextInt(sample.length))))
-        if (needInertia && prevInertia - inertia < tol) done = true
+        // a negative tol never stops early (the fixed-iteration mode)
+        if (tol >= 0 && prevInertia - inertia < tol) done = true
         prevInertia = inertia
         iter += 1
       }
-      if (!needInertia)
-        inertia = TimeSeriesKMeans.assignDs(data, centroids, metric, gamma)
-          .map(t => t._3 * t._3).reduce(_ + _) / n
       Model(centroids, inertia)
     }
     // Restarts are fully independent (per-attempt rng, shared read-only
@@ -378,6 +377,20 @@ object TimeSeriesKMeans {
   private[ml] def releaseLocalCheckpoint(ds: Dataset[_]): Unit =
     ds.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }.foreach(_.unpersist(blocking = false))
 
+  /** (cluster, dist) of the centroid nearest to `vs` under `d`: strict <,
+    * so ties go to the lower cluster id. */
+  private[ml] def nearest(cs: Array[Array[Double]], vs: Array[Double],
+                          d: (Array[Double], Array[Double]) => Double): (Int, Double) = {
+    var bestC = 0; var bestD = Double.PositiveInfinity
+    var c = 0
+    while (c < cs.length) {
+      val dd = d(cs(c), vs)
+      if (dd < bestD) { bestD = dd; bestC = c }
+      c += 1
+    }
+    (bestC, bestD)
+  }
+
   /** (id, cluster, dist, values) typed assignment pass. */
   private[ml] def assignDs(data: Dataset[(Long, Array[Double])],
                            centroids: Array[Array[Double]],
@@ -387,15 +400,8 @@ object TimeSeriesKMeans {
     val bc = spark.sparkContext.broadcast(centroids)
     val d = metricDist(metric, gamma)
     data.map { case (id, vs) =>
-      val cs = bc.value
-      var bestC = 0; var bestD = Double.PositiveInfinity
-      var c = 0
-      while (c < cs.length) {
-        val dd = d(cs(c), vs)
-        if (dd < bestD) { bestD = dd; bestC = c }
-        c += 1
-      }
-      (id, bestC, bestD, vs)
+      val (c, dist) = nearest(bc.value, vs, d)
+      (id, c, dist, vs)
     }
   }
 

@@ -269,7 +269,7 @@ class ClusteringSpec extends AnyFunSuite {
   }
 
   test("dbaByCluster matches the local Barycenters.dba per cluster at fixed iterations") {
-    // the distributed MM update (one DbaStepAgg pass per iteration, no
+    // the distributed MM update (one per-cluster pass per iteration, no
     // task holding a cluster) against the local reference loop; tol = -inf
     // pins both to exactly `iters` iterations, so only the summation order
     // of the per-timestep sums differs
@@ -290,6 +290,41 @@ class ClusteringSpec extends AnyFunSuite {
       assert(c.length == ref.length)
       c.indices.foreach(t => assert(math.abs(c(t) - ref(t)) < 1e-9,
         s"cluster $cid t=$t: ${c(t)} vs ${ref(t)}"))
+    }
+  }
+
+  test("dba releases its local checkpoint") {
+    import graft.ml.DistributedBary
+    val sc = spark.sparkContext
+    val series = spark.createDataset((0 until 12).map(i =>
+      Array.tabulate(16)(t => math.sin(0.3 * t + i % 3))))
+    val before = sc.getPersistentRDDs.size
+    val b = DistributedBary.dba(series, maxIter = 2)
+    assert(b.length == 16)
+    assert(sc.getPersistentRDDs.size == before, s"persisted RDDs: ${sc.getPersistentRDDs.keySet}")
+  }
+
+  test("Model.inertia is the last assignment's Σd²/n, at tol = 0 and tol = -1 alike") {
+    // unstructured noise: Lloyd is still moving centroids at iteration 3
+    val rng = new scala.util.Random(7)
+    val df = (0 until 40).map(i => (i.toLong, Array.fill(8)(rng.nextGaussian())))
+      .toDF("series_id", "values")
+    val xs = df.select(col("values")).as[Array[Double]].collect()
+    for (metric <- Seq("euclidean", "dtw")) {
+      def fit(maxIter: Int, tol: Double) = new TimeSeriesKMeans(k = 3, metric = metric,
+        maxIter = maxIter, tol = tol, init = "first", barycenterMaxIter = 1).fit(df)
+      val (at0, atNeg) = (fit(3, 0.0), fit(3, -1.0))
+      // the centroids the third (last) assignment ran against
+      val before = fit(2, -1.0).centroids
+      def same(a: Array[Array[Double]], b: Array[Array[Double]]) =
+        a.indices.forall(c => java.util.Arrays.equals(a(c), b(c)))
+      assert(same(at0.centroids, atNeg.centroids), s"$metric: tol 0 and -1 ran different iterations")
+      // the fit does not converge: the last update still moves a centroid
+      assert(!same(before, atNeg.centroids), s"$metric: converged before the last iteration")
+      assert(at0.inertia == atNeg.inertia, s"$metric: ${at0.inertia} at tol 0, ${atNeg.inertia} at tol -1")
+      val d = TimeSeriesKMeans.metricDist(metric, 1.0)
+      val want = xs.map { x => val m = before.map(c => d(c, x)).min; m * m }.sum / xs.length
+      assert(math.abs(atNeg.inertia - want) <= 1e-12 * want, s"$metric: inertia ${atNeg.inertia}, want $want")
     }
   }
 

@@ -5,11 +5,12 @@ import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
-import graft.ml.KernelKMeans
+import graft.ml.{KShape, KernelKMeans, TimeSeriesKMeans}
 
-/** Spark jobs per kernel k-means fit: one to collect the rows, one to
-  * broadcast the gram's input, one per Lloyd iteration, and one for the
-  * model's term3. A regression gate on the shape of the fit: each extra
+/** Spark jobs per k-means fit. Kernel k-means runs one job to collect the
+  * rows, one to broadcast the gram's input, one per Lloyd iteration, and
+  * one for the model's term3; euclidean k-means and KShape run one job per
+  * Lloyd iteration. A regression gate on the shape of the fit: each extra
   * coordination round per iteration shows up here. */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
@@ -58,6 +59,22 @@ class JobBudgetSpec extends AnyFunSuite {
       val two = jobs(km(2, blocks).fitModel(df))
       val four = jobs(km(4, blocks).fitModel(df))
       assert(four - two == 2, s"blocks $blocks: maxIter 2 ran $two jobs, maxIter 4 ran $four")
+    }
+  }
+
+  // init = "first" seeds k-means with one series of each of the input's
+  // three offset groups, so no cluster empties and no reseed sample job
+  // runs (KShape keeps an emptied cluster's centroid: no job either way)
+  test("each euclidean k-means and KShape Lloyd iteration is one job") {
+    val df = input
+    val fits: Seq[(String, Int => Unit)] = Seq(
+      "k-means" -> (m => new TimeSeriesKMeans(k = 3, maxIter = m,
+        tol = Double.NegativeInfinity, init = "first").fit(df)),
+      "KShape" -> (m => new KShape(k = 3, maxIter = m,
+        tol = Double.NegativeInfinity, init = "first").fit(df)))
+    for ((name, fit) <- fits) {
+      val (two, four) = (jobs(fit(2)), jobs(fit(4)))
+      assert(four - two == 2, s"$name: maxIter 2 ran $two jobs, maxIter 4 ran $four")
     }
   }
 }
