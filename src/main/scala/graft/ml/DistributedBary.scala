@@ -415,8 +415,9 @@ object DistributedBary {
     import spark.implicits._
     // localCheckpoint: the mean pass + every MM iteration re-reads these
     // rows; without it the caller's (often expensive) upstream pipeline
-    // re-evaluates once per iteration
-    val keyed = series.map(x => (0, x)).localCheckpoint()
+    // re-evaluates once per iteration. Lazy, so the mean pass fills it
+    // inside the try.
+    val keyed = series.map(x => (0, x)).localCheckpoint(eager = false)
     try {
       val mean = meanByCluster(keyed)(0)
       val size = if (barycenterSize > 0) barycenterSize else mean.length

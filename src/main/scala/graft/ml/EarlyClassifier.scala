@@ -68,50 +68,45 @@ class EarlyClassifier(val tGrid: Seq[Int], val lambdaCost: Double = 0.01) extend
   def fit(df: DataFrame): Model = {
     val spark = df.sparkSession
     import spark.implicits._
-    val data0 = df.select(col("series_id"), col("values").cast("array<double>"),
+    val series = df.select(col("series_id"), col("values").cast("array<double>"),
       col("label").cast("string"))
-    val n = data0.count()
-    // size partitions to the data (~10k series each) to avoid
-    // empty-task scheduling in the two grid-wide jobs
-    val nPart = math.max(1,
-      math.min(spark.sparkContext.defaultParallelism, n / 10000).toInt)
-    val data = data0.repartition(nPart).cache()
-    // ONE t-exploded aggregation for every grid entry instead of one
-    // centroid job per t (guide §1.2: |tGrid| corpus passes → 1). Each
-    // (t, label, i) group averages exactly the rows the per-t pass
-    // averaged (explode t, then the same size ≥ t filter and prefix
-    // slice), so the centroids are unchanged.
-    val tArr = array(tGrid.map(t => lit(t)): _*)
-    val centroids = data
-      .select(col("label"), col("values"), explode(tArr).as("t"))
-      .where(size(col("values")) >= col("t"))
-      .select(col("t"), col("label"),
-        posexplode(slice(col("values"), lit(1), col("t"))).as(Seq("i", "v")))
-      .groupBy("t", "label", "i").agg(avg("v").as("c"))
-      .groupBy("t", "label")
-      .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
-        x => x.getField("c")).as("centroid"))
-      .as[(Int, String, Array[Double])].collect()
-      .groupBy(_._1).map { case (t, rows) =>
-        t -> rows.map(r => r._2 -> r._3).toMap
-      }
-    val model0 = Model(centroids, tGrid.map(_ -> 0.0).toMap, lambdaCost)
-    // training-set accuracy: one pass emitting (t, ok) per valid grid
-    // entry per row — the former per-t jobs re-scanned the cache |tGrid|
-    // times; ok is 0/1 so each t's average is an exact integer ratio,
-    // identical to the per-t aggregation it replaces.
-    val bc = spark.sparkContext.broadcast(model0)
-    val grid = tGrid
-    val fAll = udf((s: scala.collection.Seq[Double], l: String) =>
-      grid.filter(_ <= s.length).map { t =>
-        val (pred, _) = bc.value.classifyPrefix(s.take(t).toArray)
-        (t, if (pred == l) 1.0 else 0.0)
-      })
-    val acc = data
-      .select(explode(fAll(col("values"), col("label"))).as("e"))
-      .groupBy(col("e._1").as("t")).agg(avg(col("e._2")).as("a"))
-      .as[(Int, Double)].collect().toMap
-    data.unpersist()
-    Model(centroids, acc, lambdaCost)
+    TimeSeriesKMeans.withFitInput(series) { (data, _) =>
+      // ONE t-exploded aggregation for every grid entry instead of one
+      // centroid job per t (guide §1.2: |tGrid| corpus passes → 1). Each
+      // (t, label, i) group averages exactly the rows the per-t pass
+      // averaged (explode t, then the same size ≥ t filter and prefix
+      // slice), so the centroids are unchanged.
+      val tArr = array(tGrid.map(t => lit(t)): _*)
+      val centroids = data
+        .select(col("label"), col("values"), explode(tArr).as("t"))
+        .where(size(col("values")) >= col("t"))
+        .select(col("t"), col("label"),
+          posexplode(slice(col("values"), lit(1), col("t"))).as(Seq("i", "v")))
+        .groupBy("t", "label", "i").agg(avg("v").as("c"))
+        .groupBy("t", "label")
+        .agg(transform(array_sort(collect_list(struct(col("i"), col("c")))),
+          x => x.getField("c")).as("centroid"))
+        .as[(Int, String, Array[Double])].collect()
+        .groupBy(_._1).map { case (t, rows) =>
+          t -> rows.map(r => r._2 -> r._3).toMap
+        }
+      val model0 = Model(centroids, tGrid.map(_ -> 0.0).toMap, lambdaCost)
+      // training-set accuracy: one pass emitting (t, ok) per valid grid
+      // entry per row — the former per-t jobs re-scanned the input |tGrid|
+      // times; ok is 0/1 so each t's average is an exact integer ratio,
+      // identical to the per-t aggregation it replaces.
+      val bc = spark.sparkContext.broadcast(model0)
+      val grid = tGrid
+      val fAll = udf((s: scala.collection.Seq[Double], l: String) =>
+        grid.filter(_ <= s.length).map { t =>
+          val (pred, _) = bc.value.classifyPrefix(s.take(t).toArray)
+          (t, if (pred == l) 1.0 else 0.0)
+        })
+      val acc = data
+        .select(explode(fAll(col("values"), col("label"))).as("e"))
+        .groupBy(col("e._1").as("t")).agg(avg(col("e._2")).as("a"))
+        .as[(Int, Double)].collect().toMap
+      Model(centroids, acc, lambdaCost)
+    }
   }
 }

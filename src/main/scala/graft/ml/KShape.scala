@@ -16,14 +16,15 @@ import graft.kernels.{Kernels, Ncc}
   * buffer is cluster-size-independent, each task folds its own rows), then
   * a local Breeze eigendecomposition per cluster on the driver. Input must
   * be equal-length (KShape z-normalizes internally, as the reference does).
-  */
-/** @param init "sample" (reference default: k series sampled with
+  *
+  * @param init "sample" (reference default: k series sampled with
   *   `seed`) or "first" (the k lowest series_ids — the deterministic
   *   mode the SQL trace oracle replays, as TimeSeriesKMeans does)
   * @param shapeSteps 0 = eigSym shape extraction (production); > 0 =
   *   exactly that many deterministic power-method updates per cluster
   *   per iteration (DistributedBary.shapeByClusterPower) so an external
-  *   oracle can replay the identical iterate sequence */
+  *   oracle can replay the identical iterate sequence
+  */
 class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
              val seed: Long = 0L, val init: String = "sample",
              val shapeSteps: Int = 0) extends Serializable {
@@ -46,21 +47,12 @@ class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
   def fit(df: DataFrame): Model = {
     val spark = df.sparkSession
     import spark.implicits._
-    val data0 = df.select(col("series_id").cast("long"), col("values").cast("array<double>"))
+    val series = df.select(col("series_id").cast("long"), col("values").cast("array<double>"))
       .as[(Long, Array[Double])]
       .map { case (id, vs) =>
         (id, Kernels.scaleMeanVariance(Kernels.uni(vs)).map(_(0)))
       }
-      // localCheckpoint: count + repartition-cache fill + takeSample each
-      // re-read these rows; truncate so the upstream runs once
-      .localCheckpoint()
-    val n = data0.count()
-    // size partitions to the data (~10k series each): per-iteration jobs
-    // should pay for the gram aggregation, not empty-task scheduling
-    val nPart = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 10000).toInt)
-    val data = data0.repartition(nPart).cache()
-    // released however the fit ends, a failed iteration included
-    try {
+    TimeSeriesKMeans.withFitInput(series) { (data, n) =>
       require(n >= k, s"need at least k=$k series")
       // deterministic init: k sampled members as initial shapes, or the k
       // lowest-id members ("first" — the trace-oracle mode). "first" takes
@@ -68,7 +60,7 @@ class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
       // yield exactly k centroids.
       var centroids: Array[Array[Double]] =
         if (init == "first")
-          data0.toDF("id", "vs").orderBy("id").limit(k)
+          data.toDF("id", "vs").orderBy("id").limit(k)
             .as[(Long, Array[Double])].collect().sortBy(_._1).map(_._2)
         else data.rdd.takeSample(withReplacement = false, k, seed).map(_._2)
       var prevInertia = Double.PositiveInfinity
@@ -96,7 +88,7 @@ class KShape(val k: Int, val maxIter: Int = 20, val tol: Double = 1e-6,
         iter += 1
       }
       Model(centroids, inertia)
-    } finally { data.unpersist(); TimeSeriesKMeans.releaseLocalCheckpoint(data0) }
+    }
   }
 }
 

@@ -162,92 +162,94 @@ class NonMyopicEarlyClassifier(
     import spark.implicits._
     val data = df.select(col("series_id").cast("long"), col("values").cast("array<double>"),
       col("label").cast("string")).cache()
-    val sz = data.select(size(col("values"))).head().getInt(0)
-    val labels = data.select("label").distinct().as[String].collect().sorted
-    val labelIdx = labels.zipWithIndex.toMap
+    try {
+      val sz = data.select(size(col("values"))).head().getInt(0)
+      val labels = data.select("label").distinct().as[String].collect().sorted
+      val labelIdx = labels.zipWithIndex.toMap
 
-    // 1. cluster (distributed k-means; deterministic by seed)
-    val km = new TimeSeriesKMeans(nClusters, metric = "euclidean", seed = seed)
-      .fit(data.select("series_id", "values"))
-    val centers = km.centroids
-    val assigned = km.predict(data.select("series_id", "values"))
-      .select(col("series_id"), col("cluster"))
-    val joined = data.join(assigned, "series_id")
-      .select(col("series_id"), col("values"), col("label"), col("cluster")).cache()
-
-    // 2. pyck_ : P(y | c_k) — one count aggregation, normalized per cluster
-    //    (`early_classification.py:181-186`)
-    val pyck = Array.fill(labels.length, nClusters)(0.0)
-    joined.groupBy("label", "cluster").count().collect().foreach { r =>
-      pyck(labelIdx(r.getString(0)))(r.getInt(1)) = r.getLong(2).toDouble
-    }
-    for (k <- 0 until nClusters) {
-      var tot = 0.0
-      for (y <- labels.indices) tot += pyck(y)(k)
-      if (tot > 0) for (y <- labels.indices) pyck(y)(k) /= tot
-    }
-
-    // deterministic stratified split: within each cluster (ordered by id),
-    // alternate train (rank 1,3,5..) / calibration (rank 2,4,..)
-    val ranked = joined.withColumn("rn",
-      row_number().over(org.apache.spark.sql.expressions.Window
-        .partitionBy("cluster").orderBy("series_id")))
-    val trainRows = ranked.where(col("rn") % 2 === 1)
-      .orderBy("cluster", "series_id")
-      .select(col("values").cast("array<double>"), col("label"))
-      .as[(Array[Double], String)].collect()
-    val trainValues = trainRows.map(_._1)
-    val trainLabelIdx = trainRows.map(r => labelIdx(r._2))
-
-    // 3. pyhatyck_ : every calibration row emits its 1NN label for ALL t
-    //    in one incremental pass, then one groupBy builds every confusion
-    //    matrix (`early_classification.py:187-210`)
-    val bcTrain = spark.sparkContext.broadcast((trainValues, trainLabelIdx))
-    val mT = minT
-    val calib = ranked.where(col("rn") % 2 === 0)
-      .select(col("cluster"), col("label"), col("values").cast("array<double>"))
-      .as[(Int, String, Array[Double])]
-    val counts = calib.flatMap { case (ck, y, xs) =>
-      val (tv, tl) = bcTrain.value
-      val cums = new Array[Double](tv.length)
-      val out = new Array[(Int, Int, String, Int)](sz - mT + 1)
-      var t = 1
-      while (t <= sz) {
-        var j = 0
-        while (j < tv.length) {
-          val d = xs(t - 1) - tv(j)(t - 1); cums(j) += d * d; j += 1
+      // 1. cluster (distributed k-means; deterministic by seed)
+      val km = new TimeSeriesKMeans(nClusters, metric = "euclidean", seed = seed)
+        .fit(data.select("series_id", "values"))
+      val centers = km.centroids
+      val assigned = km.predict(data.select("series_id", "values"))
+        .select(col("series_id"), col("cluster"))
+      val joined = data.join(assigned, "series_id")
+        .select(col("series_id"), col("values"), col("label"), col("cluster")).cache()
+      try {
+        // 2. pyck_ : P(y | c_k) — one count aggregation, normalized per cluster
+        //    (`early_classification.py:181-186`)
+        val pyck = Array.fill(labels.length, nClusters)(0.0)
+        joined.groupBy("label", "cluster").count().collect().foreach { r =>
+          pyck(labelIdx(r.getString(0)))(r.getInt(1)) = r.getLong(2).toDouble
         }
-        if (t >= mT) {
-          var best = 0; var bestD = Double.PositiveInfinity
-          j = 0
-          while (j < tv.length) { if (cums(j) < bestD) { bestD = cums(j); best = j }; j += 1 }
-          out(t - mT) = (t, ck, y, tl(best))
+        for (k <- 0 until nClusters) {
+          var tot = 0.0
+          for (y <- labels.indices) tot += pyck(y)(k)
+          if (tot > 0) for (y <- labels.indices) pyck(y)(k) /= tot
         }
-        t += 1
-      }
-      out.toSeq
-    }.toDF("t", "ck", "y", "yhat")
-      .groupBy("t", "ck", "y", "yhat").count().collect()
 
-    val pyhatyck = Array.fill(sz - minT + 1, nClusters, labels.length, labels.length)(0.0)
-    counts.foreach { r =>
-      pyhatyck(r.getInt(0) - minT)(r.getInt(1))(labelIdx(r.getString(2)))(r.getInt(3)) =
-        r.getLong(4).toDouble
-    }
-    // reference normalization: per predicted-class COLUMN sums
-    // (`conf_matrix.sum(axis=0)`), then zero the diagonal (δ_{y≠ŷ})
-    for (ti <- 0 until (sz - minT + 1); k <- 0 until nClusters) {
-      val m = pyhatyck(ti)(k)
-      for (yh <- labels.indices) {
-        var colSum = 0.0
-        for (y <- labels.indices) colSum += m(y)(yh)
-        if (colSum == 0.0) colSum = 1.0
-        for (y <- labels.indices) m(y)(yh) /= colSum
-      }
-      for (y <- labels.indices) m(y)(y) = 0.0
-    }
-    data.unpersist(); joined.unpersist()
-    Model(labels, centers, trainValues, trainLabelIdx, pyck, pyhatyck,
-      minT, sz, lamb, costTimeParameter)
+        // deterministic stratified split: within each cluster (ordered by id),
+        // alternate train (rank 1,3,5..) / calibration (rank 2,4,..)
+        val ranked = joined.withColumn("rn",
+          row_number().over(org.apache.spark.sql.expressions.Window
+            .partitionBy("cluster").orderBy("series_id")))
+        val trainRows = ranked.where(col("rn") % 2 === 1)
+          .orderBy("cluster", "series_id")
+          .select(col("values").cast("array<double>"), col("label"))
+          .as[(Array[Double], String)].collect()
+        val trainValues = trainRows.map(_._1)
+        val trainLabelIdx = trainRows.map(r => labelIdx(r._2))
+
+        // 3. pyhatyck_ : every calibration row emits its 1NN label for ALL t
+        //    in one incremental pass, then one groupBy builds every confusion
+        //    matrix (`early_classification.py:187-210`)
+        val bcTrain = spark.sparkContext.broadcast((trainValues, trainLabelIdx))
+        val mT = minT
+        val calib = ranked.where(col("rn") % 2 === 0)
+          .select(col("cluster"), col("label"), col("values").cast("array<double>"))
+          .as[(Int, String, Array[Double])]
+        val counts = calib.flatMap { case (ck, y, xs) =>
+          val (tv, tl) = bcTrain.value
+          val cums = new Array[Double](tv.length)
+          val out = new Array[(Int, Int, String, Int)](sz - mT + 1)
+          var t = 1
+          while (t <= sz) {
+            var j = 0
+            while (j < tv.length) {
+              val d = xs(t - 1) - tv(j)(t - 1); cums(j) += d * d; j += 1
+            }
+            if (t >= mT) {
+              var best = 0; var bestD = Double.PositiveInfinity
+              j = 0
+              while (j < tv.length) { if (cums(j) < bestD) { bestD = cums(j); best = j }; j += 1 }
+              out(t - mT) = (t, ck, y, tl(best))
+            }
+            t += 1
+          }
+          out.toSeq
+        }.toDF("t", "ck", "y", "yhat")
+          .groupBy("t", "ck", "y", "yhat").count().collect()
+
+        val pyhatyck = Array.fill(sz - minT + 1, nClusters, labels.length, labels.length)(0.0)
+        counts.foreach { r =>
+          pyhatyck(r.getInt(0) - minT)(r.getInt(1))(labelIdx(r.getString(2)))(r.getInt(3)) =
+            r.getLong(4).toDouble
+        }
+        // reference normalization: per predicted-class COLUMN sums
+        // (`conf_matrix.sum(axis=0)`), then zero the diagonal (δ_{y≠ŷ})
+        for (ti <- 0 until (sz - minT + 1); k <- 0 until nClusters) {
+          val m = pyhatyck(ti)(k)
+          for (yh <- labels.indices) {
+            var colSum = 0.0
+            for (y <- labels.indices) colSum += m(y)(yh)
+            if (colSum == 0.0) colSum = 1.0
+            for (y <- labels.indices) m(y)(yh) /= colSum
+          }
+          for (y <- labels.indices) m(y)(y) = 0.0
+        }
+        Model(labels, centers, trainValues, trainLabelIdx, pyck, pyhatyck,
+          minT, sz, lamb, costTimeParameter)
+      } finally joined.unpersist()
+    } finally data.unpersist()
   }
 }

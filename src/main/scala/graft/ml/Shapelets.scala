@@ -285,12 +285,10 @@ object Shapelets {
     val rng = new scala.util.Random(seed)
     var w = Array.fill(nC, kS)(0.01 * rng.nextGaussian())
     var b = new Array[Double](nC)
-    val data = df.select(col("values").cast("array<double>"),
+    val rows = df.select(col("values").cast("array<double>"),
         col("label").cast("string"))
       .as[(Array[Double], String)]
       .map { case (v, l) => (v, labelIdx(l)) }
-      .cache()
-    data.count()
     // Adam state over the flat parameter vector
     val lens = shapelets.map(_.length)
     val offs = lens.scanLeft(0)(_ + _)
@@ -298,16 +296,17 @@ object Shapelets {
     val mAdam = new Array[Double](nP)
     val vAdam = new Array[Double](nP)
     val losses = scala.collection.mutable.ArrayBuffer.empty[Double]
-    var it = 0
-    while (it < iters) {
-      val g = data.groupByKey(_ => 0)
-        .agg(new GradAgg(shapelets, w, b).toColumn).collect().head._2
-      val n = math.max(1.0, g(g.length - 1))
-      losses += g(g.length - 2) / n
-      adamStep(g, n, it + 1, lr, mAdam, vAdam, shapelets, w, b, offs)
-      it += 1
+    TimeSeriesKMeans.withFitInput(rows) { (data, _) =>
+      var it = 0
+      while (it < iters) {
+        val g = data.groupByKey(_ => 0)
+          .agg(new GradAgg(shapelets, w, b).toColumn).collect().head._2
+        val n = math.max(1.0, g(g.length - 1))
+        losses += g(g.length - 2) / n
+        adamStep(g, n, it + 1, lr, mAdam, vAdam, shapelets, w, b, offs)
+        it += 1
+      }
     }
-    data.unpersist()
     RefinedModel(shapelets, w, b, labels, losses.toArray)
   }
 
@@ -366,15 +365,17 @@ object Shapelets {
     val data = df.select(col("values").cast("array<double>"), col("label").cast("string"))
       .as[(Array[Double], String)]
       .map { case (v, l) => (v, labelIdx(l)) }
-      .localCheckpoint()
-    var it = 0
-    while (it < iters) {
-      val g = data.groupByKey(_ => 0)
-        .agg(new GradAgg(shapelets, w, b).toColumn).collect().head._2
-      val n = math.max(1.0, g(g.length - 1))
-      adamStep(g, n, it + 1, lr, mAdam, vAdam, shapelets, w, b, offs)
-      it += 1
-    }
+      .localCheckpoint(eager = false) // filled by the first step's pass
+    try {
+      var it = 0
+      while (it < iters) {
+        val g = data.groupByKey(_ => 0)
+          .agg(new GradAgg(shapelets, w, b).toColumn).collect().head._2
+        val n = math.max(1.0, g(g.length - 1))
+        adamStep(g, n, it + 1, lr, mAdam, vAdam, shapelets, w, b, offs)
+        it += 1
+      }
+    } finally TimeSeriesKMeans.releaseLocalCheckpoint(data)
     (shapelets, w, b)
   }
 
@@ -434,23 +435,16 @@ object Shapelets {
       .as[String].collect().sorted
     val labelIdx = labels.zipWithIndex.toMap
     val toIdx = udf((l: String) => labelIdx(l).toDouble)
-    // LR runs ~50 treeAggregate jobs over the tiny feature table; size
-    // partitions to the data (~10k rows each) so iteration cost is the
-    // aggregation, not empty-task scheduling (32 near-empty tasks × 50
-    // iterations dominated ts_shapelet_classify's bench time)
-    val n = df.count()
-    val nPart = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 10000).toInt)
     val feats = transform(df, shapelets)
       .withColumn("features", arrayToVectorUdf(col("shapelet_features")))
       .withColumn("label_idx", toIdx(col("label").cast("string")))
       .select("series_id", "features", "label_idx")
-      .repartition(nPart).cache()
-    feats.count()
-    val lr = new org.apache.spark.ml.classification.LogisticRegression()
-      .setFeaturesCol("features").setLabelCol("label_idx")
-      .setMaxIter(50).setRegParam(0.01)
-      .fit(feats)
-    feats.unpersist()
+    val lr = TimeSeriesKMeans.withFitInput(feats) { (data, _) =>
+      new org.apache.spark.ml.classification.LogisticRegression()
+        .setFeaturesCol("features").setLabelCol("label_idx")
+        .setMaxIter(50).setRegParam(0.01)
+        .fit(data)
+    }
     Model(shapelets, lr, labels)
   }
 }

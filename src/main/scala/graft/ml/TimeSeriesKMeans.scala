@@ -9,8 +9,9 @@ import graft.kernels.Kernels
   * `/root/reference/tslearn/clustering/kmeans.py:471-859` re-expressed for
   * Spark's execution model (SURVEY §3.2):
   *
-  *  - assignment: one distributed pass — `crossJoin(broadcast(centroids))`
-  *    + `min_by` argmin. No shuffle of the big side; centroids are tiny.
+  *  - assignment: one distributed pass — a typed map over the rows against
+  *    a broadcast centroid array (`nearest`, strict < argmin). No shuffle
+  *    of the big side; centroids are tiny.
   *  - update: one per-cluster fold of fixed-size buffers per pass
   *    (DistributedBary) — per-cluster ΣV/ΣWx for DBA, per-timestep means
   *    for euclidean, a joint L-BFGS with distributed gradients for
@@ -83,35 +84,20 @@ class TimeSeriesKMeans(
   def fit(df: DataFrame): Model = {
     val spark = df.sparkSession
     import spark.implicits._
-    // localCheckpoint first: count / sample / init-seed / every Lloyd
-    // iteration all read the materialized rows — without it the (often
-    // expensive) upstream pipeline re-evaluates once per driver action
-    // before the iteration cache even forms (measured 3 extra full
-    // upstream scans per fit).
-    val data0 = df.select(col("series_id").cast("long"), col("values").cast("array<double>"))
-      .as[(Long, Array[Double])]
-      .localCheckpoint()
-    val n = data0.count()
-    // iterative passes: size partitions to the data (~10k series each) so
-    // each of the maxIter·nInit jobs pays for aggregation, not for
-    // scheduling near-empty tasks
-    val nPart = math.max(1, math.min(spark.sparkContext.defaultParallelism, n / 10000).toInt)
-    val data = data0.repartition(nPart).cache()
-    // released however the fit ends, a failed restart included
-    try fitCached(data0, data, n)
-    finally { data.unpersist(); TimeSeriesKMeans.releaseLocalCheckpoint(data0) }
+    TimeSeriesKMeans.withFitInput(
+      df.select(col("series_id").cast("long"), col("values").cast("array<double>"))
+        .as[(Long, Array[Double])])(fitOn)
   }
 
-  private def fitCached(data0: Dataset[(Long, Array[Double])],
-                        data: Dataset[(Long, Array[Double])], n: Long): Model = {
+  private def fitOn(data: Dataset[(Long, Array[Double])], n: Long): Model = {
     val spark = data.sparkSession
     import spark.implicits._
     require(n >= k, s"need at least k=$k series, got $n")
     val sampleCap = 10000
     // lazy: the sample collect is one full job that init="first" fits
     // only ever need on an empty-cluster reseed (rare) — k-means++ inits
-    // force it as before. Content is unchanged (data is cached), so a
-    // reseed that does happen draws exactly the series it always drew.
+    // force it as before. data is checkpointed, so every read of it (a
+    // reseed's included) sees the same rows in the same order.
     lazy val sample = (if (n <= sampleCap) data.map(_._2)
       else data.sample(withReplacement = false, sampleCap.toDouble / n, seed).map(_._2))
       .collect()
@@ -124,7 +110,7 @@ class TimeSeriesKMeans(
     // best-of-n fit stays oracle-replayable (ts_kmeans_best2).
     val firstAll: Array[Array[Double]] =
       if (init == "first") {
-        val rows = data0.orderBy("series_id").limit(k * nInit).collect().map(_._2)
+        val rows = data.orderBy("series_id").limit(k * nInit).collect().map(_._2)
         require(rows.length >= k * nInit,
           s"init=first with nInit=$nInit needs ${k * nInit} series, got ${rows.length}")
         rows
@@ -194,8 +180,8 @@ class TimeSeriesKMeans(
       Model(centroids, inertia)
     }
     // Restarts are fully independent (per-attempt rng, shared read-only
-    // cached data) and each attempt's dataflow is untouched, so its values
-    // are bit-identical to the sequential loop's. Running them from driver
+    // checkpointed data) and each attempt's dataflow is untouched, so its
+    // values are bit-identical to the sequential loop's. Running them from driver
     // threads overlaps their jobs (guide §2.6): attempt b's tasks back-fill
     // executors idled by attempt a's stage tails — at sf0.1 the fit is
     // job-scheduling-floor-bound, so the overlap halves the wall; at scale
@@ -376,6 +362,32 @@ object TimeSeriesKMeans {
     * leave its blocks to the ContextCleaner. */
   private[ml] def releaseLocalCheckpoint(ds: Dataset[_]): Unit =
     ds.queryExecution.logical.collect { case r: LogicalRDD => r.rdd }.foreach(_.unpersist(blocking = false))
+
+  /** Runs an iterative fit over `ds`, evaluated once. `ds` is held as a
+    * lazy local checkpoint, filled by one job: the row count `n`. The body
+    * gets the checkpoint coalesced to ~10k rows per partition (at most
+    * defaultParallelism), so each per-iteration job pays for its
+    * aggregation rather than for near-empty tasks, and `n`. The
+    * checkpoint is released however the body ends.
+    *
+    * `coalesce` merges partitions without a shuffle, so it never raises
+    * the partition count, where `repartition` could: an input with fewer
+    * partitions than the rule asks for keeps its own count. The callers'
+    * inputs come out of a shuffle read, which AQE merges below
+    * spark.sql.shuffle.partitions into partitions of at least 1 MB
+    * (coalescePartitions.minPartitionSize): on 4 cores the sf0.01 and
+    * sf0.1 series (150 and 1,500) arrive in 1 and 2 partitions. Below 20k
+    * rows the rule asks for one partition anyway; past it, an input of
+    * under ~100 shuffled bytes per row keeps fewer partitions than the
+    * rule asks for (20k series of 2 events each: 1, not 2). */
+  private[ml] def withFitInput[T, R](ds: Dataset[T])(body: (Dataset[T], Long) => R): R = {
+    val data = ds.localCheckpoint(eager = false)
+    try {
+      val n = data.rdd.count()
+      val nPart = math.max(1, math.min(ds.sparkSession.sparkContext.defaultParallelism, n / 10000).toInt)
+      body(data.coalesce(nPart), n)
+    } finally releaseLocalCheckpoint(data)
+  }
 
   /** (cluster, dist) of the centroid nearest to `vs` under `d`: strict <,
     * so ties go to the lower cluster id. */

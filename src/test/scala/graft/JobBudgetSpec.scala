@@ -7,11 +7,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{KShape, KernelKMeans, TimeSeriesKMeans}
 
-/** Spark jobs per k-means fit. Kernel k-means runs one job to collect the
-  * rows, one to broadcast the gram's input, one per Lloyd iteration, and
-  * one for the model's term3; euclidean k-means and KShape run one job per
-  * Lloyd iteration. A regression gate on the shape of the fit: each extra
-  * coordination round per iteration shows up here. */
+/** Spark jobs per k-means fit:
+  *  - kernel k-means: one to collect the rows, one to broadcast the gram's
+  *    input, one per Lloyd iteration, one for the model's term3;
+  *  - euclidean k-means (init = "first"): one to count the rows (it fills
+  *    the fit's local checkpoint), one for the init collect, one per Lloyd
+  *    iteration;
+  *  - KShape: the same with init = "first"; with init = "sample", the init
+  *    is `takeSample`'s two (its count and its sample collect).
+  * A regression gate on the shape of the fit: each extra coordination
+  * round, per iteration or before the first one, shows up here. */
 class JobBudgetSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -59,6 +64,21 @@ class JobBudgetSpec extends AnyFunSuite {
       val two = jobs(km(2, blocks).fitModel(df))
       val four = jobs(km(4, blocks).fitModel(df))
       assert(four - two == 2, s"blocks $blocks: maxIter 2 ran $two jobs, maxIter 4 ran $four")
+    }
+  }
+
+  test("euclidean k-means and KShape fits run at most maxIter + 3 jobs") {
+    val df = input
+    val fits: Seq[(String, Int => Unit)] = Seq(
+      "k-means first" -> (m => new TimeSeriesKMeans(k = 3, maxIter = m,
+        tol = Double.NegativeInfinity, init = "first").fit(df)),
+      "KShape first" -> (m => new KShape(k = 3, maxIter = m,
+        tol = Double.NegativeInfinity, init = "first").fit(df)),
+      "KShape sample" -> (m => new KShape(k = 3, maxIter = m,
+        tol = Double.NegativeInfinity).fit(df)))
+    for ((name, fit) <- fits; maxIter <- Seq(2, 4)) {
+      val n = jobs(fit(maxIter))
+      assert(n <= maxIter + 3, s"$name (maxIter $maxIter) ran $n jobs")
     }
   }
 
