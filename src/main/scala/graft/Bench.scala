@@ -26,6 +26,10 @@ object Bench {
     if (runs.size < 2) 1.0 else runs.max / runs.min
   val divergenceLimit = 2.0
 
+  /** The canonical record's core count and corpus, the default one. */
+  private val CanonCpus = 32
+  private val CanonSfDir = "/root/testdata/sf0.1"
+
   /** Which file a run's record lands in. VERDICT r17 #2/#3: the canonical
     * BENCH_LOCAL.json was clobbered twice — by a CLEAN args-filtered subset
     * run (the old guard keyed on load_warning only) and by the driver's
@@ -47,7 +51,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", CanonSfDir)
     val cpus = LocalSpark.cpus
     val spark = LocalSpark.session()
     // Warm up FS/parquet/codegen once so per-query timings measure the
@@ -171,15 +175,13 @@ object Bench {
     // go to side files so they cannot clobber the canonical; a load-warned
     // run is diverted to its target's _DIRTY sibling when that target
     // already holds a clean record.
-    val canonCpus = sys.env.get("SPARK_GRAFT_CANON_CPUS").map(_.toInt).getOrElse(32)
-    val canonSf = sys.env.getOrElse("SPARK_GRAFT_CANON_SF", "/root/testdata/sf0.1")
     def cleanOnDisk(file: String): Boolean = scala.util.Try(java.nio.file.Files
       .readString(java.nio.file.Paths.get(file))).toOption.exists(isCleanRecord)
-    val target = targetFor(args.nonEmpty, cpus, canonCpus, loadWarn, cleanOnDisk,
-      sfIsCanon = sfDir == canonSf)
+    val target = targetFor(args.nonEmpty, cpus, CanonCpus, loadWarn, cleanOnDisk,
+      sfIsCanon = sfDir == CanonSfDir)
     if (target != "BENCH_LOCAL.json")
       System.err.println(s"[bench] record diverted to $target " +
-        s"(subset=${args.nonEmpty}, cpus=$cpus/canon=$canonCpus, " +
+        s"(subset=${args.nonEmpty}, cpus=$cpus/canon=$CanonCpus, " +
         s"load_warning=$loadWarn)")
     scala.util.Try(java.nio.file.Files.writeString(
       java.nio.file.Paths.get(target), fullLine + "\n"))

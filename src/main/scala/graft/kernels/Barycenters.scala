@@ -183,7 +183,7 @@ object Barycenters {
     val eu = euclidean(series, w)
     val size = if (init != null) init.length
       else if (barycenterSize > 0) barycenterSize else eu.length
-    var center: TS = if (init != null) init.map(_.clone()) else Kernels.resample(eu, size)
+    val center: TS = if (init != null) init.map(_.clone()) else Kernels.resample(eu, size)
     val n = series.length
     val rng = new scala.util.Random(seed)
     var eta = initialStepSize

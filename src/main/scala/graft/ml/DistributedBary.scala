@@ -362,7 +362,7 @@ object DistributedBary {
       val grand = g / (sz.toDouble * sz)
       val m = Array.tabulate(sz, sz)((p, q) =>
         gram(p * sz + q) - rowMean(p) - rowMean(q) + grand)
-      var v = powerInit(sz)
+      val v = powerInit(sz)
       var t = 0
       while (t < steps) {
         val w = new Array[Double](sz)

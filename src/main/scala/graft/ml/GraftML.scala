@@ -508,8 +508,7 @@ object GraftML {
     * (ts_size semantics, `utils.py:386-424`). Hyper names map to the
     * GraftML spelling (n_clusters→k, max_iter→maxIter, n_init→nInit,
     * random_state→seed); unknown hypers are carried through verbatim. */
-  def importTslearnJson(spark: SparkSession, path: String,
-                        estimator: String): Model = {
+  def importTslearnJson(path: String, estimator: String): Model = {
     import org.json4s._
     import org.json4s.jackson.JsonMethods
     // Python's json.dump writes float('nan') as the bare token NaN —

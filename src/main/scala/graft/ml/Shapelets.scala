@@ -68,7 +68,7 @@ object Shapelets {
   private def kmeansLocal(xs: Array[Array[Double]], k: Int, rng: scala.util.Random,
                           iters: Int = 10): Array[Array[Double]] = {
     if (xs.isEmpty) return Array.empty
-    var centers = Array.tabulate(math.min(k, xs.length))(i => xs(rng.nextInt(xs.length)).clone())
+    var centers = Array.tabulate(math.min(k, xs.length))(_ => xs(rng.nextInt(xs.length)).clone())
     for (_ <- 1 to iters) {
       val assign = xs.map(x => centers.indices.minBy(c => sqDist(centers(c), x)))
       centers = centers.indices.map { c =>
@@ -276,15 +276,15 @@ object Shapelets {
     val spark = df.sparkSession
     import spark.implicits._
     val sz = df.select(size(col("values"))).as[Int].head()
-    var shapelets = initShapelets(df, suggestSizes(sz), perSize, seed)
+    val shapelets = initShapelets(df, suggestSizes(sz), perSize, seed)
     val labels = df.select(col("label").cast("string")).distinct()
       .as[String].collect().sorted
     val labelIdx = labels.zipWithIndex.toMap
     val nC = labels.length
     val kS = shapelets.length
     val rng = new scala.util.Random(seed)
-    var w = Array.fill(nC, kS)(0.01 * rng.nextGaussian())
-    var b = new Array[Double](nC)
+    val w = Array.fill(nC, kS)(0.01 * rng.nextGaussian())
+    val b = new Array[Double](nC)
     val rows = df.select(col("values").cast("array<double>"),
         col("label").cast("string"))
       .as[(Array[Double], String)]

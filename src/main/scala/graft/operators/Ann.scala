@@ -226,7 +226,7 @@ object Ann {
     * scan costs nlist·sampleCap·d·iters: nlist=4096/sampleCap=160k is
     * ~4·10¹¹ mults, minutes sequential, seconds across cores. */
   def trainCoarse(df: DataFrame, nlist: Int, seed: Long = 0L, sampleCap: Int = 20000,
-                  idCol: String = "vec_id", vecCol: String = "v"): Array[Array[Double]] = {
+                  vecCol: String = "v"): Array[Array[Double]] = {
     val spark = df.sparkSession
     import spark.implicits._
     val n = df.count()

@@ -678,7 +678,7 @@ object Dedup {
     // ceiling would leave ~2 points/cell — empty-cell reseeds and a
     // junk quantizer
     val centroids = Ann.trainCoarse(e, nlist, seed,
-      sampleCap = math.max(20000, 40 * nlist), idCol = "vec_id", vecCol = "v")
+      sampleCap = math.max(20000, 40 * nlist), vecCol = "v")
     val bc = spark.sparkContext.broadcast(centroids)
     val probeUdf = udf((x: scala.collection.Seq[Double]) => {
       val cs = bc.value

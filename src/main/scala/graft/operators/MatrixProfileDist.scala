@@ -144,8 +144,7 @@ object MatrixProfileDist {
 
   /** Segment a distributed (idx, v) series once for repeated
     * diagonal-band sweeps. */
-  def segmentSeries(spark: SparkSession, series: DataFrame, m: Int,
-                    blockSize: Int = 65536): SegmentedSeries = {
+  def segmentSeries(series: DataFrame, m: Int, blockSize: Int = 65536): SegmentedSeries = {
     import org.apache.spark.sql.functions.{col, max}
     val nPoints = series.agg(max(col("idx"))).head().getLong(0) + 1
     require(nPoints >= 2L * m, "series shorter than two windows")

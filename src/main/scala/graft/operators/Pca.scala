@@ -92,7 +92,7 @@ object Pca {
     val eigs = new Array[Double](k)
     var comp = 0
     while (comp < k) {
-      var v = graft.ml.DistributedBary.powerInit(d)
+      val v = graft.ml.DistributedBary.powerInit(d)
       var t = 0
       while (t < steps) {
         val w = new Array[Double](d)

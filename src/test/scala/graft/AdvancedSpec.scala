@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels.{Advanced, Kernels}
 import graft.kernels.Kernels.uni
 
-class AdvancedSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class AdvancedSpec extends AnyFunSuite with TestSpark {
   test("L-DTW >= DTW; unconstrained L equals DTW (test_metrics.py:74-112 invariants)") {
     val rng = new scala.util.Random(11)
     for (_ <- 1 to 30) {

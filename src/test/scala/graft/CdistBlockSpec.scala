@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TsFunctions
@@ -9,13 +9,7 @@ import graft.operators.Cdist
 /** The block-partitioned selfCross fallback must be a drop-in replacement
   * for the broadcast triangle join: identical pair set, identical
   * distances, and no BroadcastExchange of the full relation in its plan. */
-class CdistBlockSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class CdistBlockSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   private def mkSeries(n: Int, sz: Int) = {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.sources.Datasets
@@ -9,13 +8,7 @@ import graft.operators.Cdist
 /** Dataset tier (SURVEY §2.1) + the §7.2 milestone: 1-NN DTW on the
   * bundled Trace fixture must reach accuracy 1.00 (the reference's
   * published Trace result). */
-class DatasetsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DatasetsSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   test("CachedDatasets lists and loads the bundled Trace fixture") {

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Ann, Dedup}
 
-class DedupAnnSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class DedupAnnSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   val sf = "/root/testdata/sf0.001"

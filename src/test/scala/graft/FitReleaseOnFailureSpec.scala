@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{DistributedBary, EarlyClassifier, KShape, NonMyopicEarlyClassifier,
   Shapelets, TimeSeriesKMeans}
@@ -11,13 +11,7 @@ import graft.ml.{DistributedBary, EarlyClassifier, KShape, NonMyopicEarlyClassif
   * every job that starts once the fit holds a persisted RDD of its own is
   * cancelled, the fit must fail with the cancel, and
   * `sc.getPersistentRDDs` must be left as the fit found it. */
-class FitReleaseOnFailureSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class FitReleaseOnFailureSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   /** Two separable label groups of 24 series of length 16. */

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.GraftML
@@ -9,13 +9,7 @@ import graft.ml.GraftML
   * params round-trip, copy(overrides), fit, transform schema, and
   * save→load→transform equality through the uniform persistence layout
   * (the bases.py:63-286 {hyper_params, model_params} contract). */
-class GraftMLSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class GraftMLSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   private lazy val rng = new scala.util.Random(3)
@@ -136,7 +130,7 @@ class GraftMLSpec extends AnyFunSuite {
         |  "inertia_": 0.125, "n_iter_": 3}}""".stripMargin
     val f = java.nio.file.Files.createTempFile("tslearn_km", ".json")
     java.nio.file.Files.writeString(f, fixture)
-    val m = GraftML.importTslearnJson(spark, f.toString, "TimeSeriesKMeans")
+    val m = GraftML.importTslearnJson(f.toString, "TimeSeriesKMeans")
     assert(m.estimator == "TimeSeriesKMeans")
     // hyper renames applied; unknown scalars carried through; nulls dropped
     assert(m.hyper("k") == "2" && m.hyper("maxIter") == "50" &&
@@ -162,7 +156,7 @@ class GraftMLSpec extends AnyFunSuite {
     assert(re.transform(data).orderBy("series_id").select("cluster")
       .as[Int].collect().toSeq == Seq(0, 1))
     // KShape route dispatches too
-    val ks = GraftML.importTslearnJson(spark, f.toString, "KShape")
+    val ks = GraftML.importTslearnJson(f.toString, "KShape")
     assert(ks.estimator == "KShape")
     java.nio.file.Files.delete(f)
   }

@@ -3,7 +3,7 @@ package graft
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.ListenerBusDrain
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{KShape, KernelKMeans, TimeSeriesKMeans}
 
@@ -17,13 +17,7 @@ import graft.ml.{KShape, KernelKMeans, TimeSeriesKMeans}
   *    is `takeSample`'s two (its count and its sample collect).
   * A regression gate on the shape of the fit: each extra coordination
   * round, per iteration or before the first one, shows up here. */
-class JobBudgetSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class JobBudgetSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   private def input: DataFrame = {

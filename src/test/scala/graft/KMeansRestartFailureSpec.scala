@@ -4,20 +4,13 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicBoolean
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.TimeSeriesKMeans
 
 /** A best-of-n k-means fit whose restart fails must fail as a whole, and
   * only after its sibling restarts have finished: no job of the fit may
   * outlive the call, and every cache the fit made is released. */
-class KMeansRestartFailureSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class KMeansRestartFailureSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   test("a cancelled restart job surfaces, with no job still running and no cache left behind") {

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels.Kernels
@@ -21,13 +20,7 @@ import graft.ml.{DistributedBary, KShape}
   * compared at 1e-12 relative instead; inertia's only consumers are the
   * tol gate (tol = −1 in the declared query — a 1-ulp wiggle cannot flip
   * `prev − inertia < −1`) and the never-emitted Model.inertia scalar. */
-class KShapeInertiaFuseSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class KShapeInertiaFuseSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   // deterministic ragged-free fixture: 30 series of length 16 with three

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.XXH64
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels.Kernels
@@ -11,13 +11,7 @@ import graft.ml.KernelKMeans
   * series to the non-empty cluster c minimising
   * K_ii − 2·Σ_{j∈c}K_ij/|c| + Σ_{j,l∈c}K_jl/|c|², ties to the lower c, and
   * stops after maxIter rounds or when the inertia falls by less than tol. */
-class KernelKMeansSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class KernelKMeansSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   private case class Replay(labels: Array[Int], d2: Array[Double], term3: Map[Int, Double],

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.{ListenerBusDrain, SparkException}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Cdist
 
@@ -13,13 +13,7 @@ import graft.operators.Cdist
   * only the query job; an unpersisted relation is never stored; new data
   * behind a new persist is never answered from an old index; the byte cap
   * and the LRU eviction hold, and what leaves the store is destroyed. */
-class KnnIndexStoreSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class KnnIndexStoreSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   private def series(seed: Int, n: Int, sz: Int, firstId: Long = 0L,

@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels.Kernels
 import graft.operators.MatrixProfileDist
 
-class MatrixProfileDistSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MatrixProfileDistSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   /** The (idx, v) relation of a series, spread over several partitions. */
@@ -119,7 +112,7 @@ class MatrixProfileDistSpec extends AnyFunSuite {
     val seriesDf = seriesOf(ts)
     val full = MatrixProfileDist.matrixProfileTiled(spark, seriesDf, m, blockSize = 128)
       .as[(Long, Double)].collect().toMap
-    val seg = MatrixProfileDist.segmentSeries(spark, seriesDf, m, blockSize = 128)
+    val seg = MatrixProfileDist.segmentSeries(seriesDf, m, blockSize = 128)
     assert(seg.nPoints == ts.length.toLong)
     val W = 150
     val folds = scala.collection.mutable.Map[Long, Double]()

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.kernels.{Advanced, Barycenters, Kernels, Sax}
@@ -8,13 +7,7 @@ import graft.kernels.{Advanced, Barycenters, Kernels, Sax}
 /** Round-2 metric/estimator API gaps (VERDICT r1 "What's missing"):
   * lcss_path(+from_metric), L-DTW path, 1d-SAX distance, petitjean DBA,
   * SVR, MLPRegressor. Goldens come from the reference's doctests. */
-class MetricGapsSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class MetricGapsSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   private def uni(xs: Double*): Kernels.TS = xs.toArray.map(Array(_))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.NativeExpressions
@@ -14,13 +13,7 @@ import graft.functions.NativeExpressions
   * fixture: consecutive spaces (empty words), empty string, short docs,
   * exact-k docs, unicode/multibyte, leading/trailing spaces.
   * Order matters everywhere, so rows are compared as sequences, not sets. */
-class NativeHofEquivalenceSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NativeHofEquivalenceSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   // empty string / empty words from consecutive+leading+trailing spaces /

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.NonMyopicEarlyClassifier
 
@@ -11,13 +10,7 @@ import graft.ml.NonMyopicEarlyClassifier
   * order (symmetry), so the deterministic split reproduces them exactly.
   * Cluster NUMBERING depends on seeding, so assertions map clusters by
   * their center shape rather than by index. */
-class NonMyopicSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class NonMyopicSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   // to_time_series_dataset([[1,2,3,4,5,6] x3, [1,2,3,3,2,1] x3,

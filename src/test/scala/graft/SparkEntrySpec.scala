@@ -37,6 +37,29 @@ class SparkEntrySpec extends AnyFunSuite {
     val unbacked = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
     assert(extra.isEmpty, s"oracle without query: $extra")
     assert(unbacked.isEmpty, s"query without oracle: $unbacked")
+    // SparkEntry's maps are the `++` of the family maps, and `++` keeps
+    // the later of two equal keys: a query declared in two families would
+    // vanish silently. So no key may sit in two families, and the family
+    // sizes must add up to the union's.
+    val families = Seq(
+      RelationalQueries.queries -> RelationalQueries.oracleSql,
+      TransformQueries.queries -> TransformQueries.oracleSql,
+      EventTimeQueries.queries -> EventTimeQueries.oracleSql,
+      MatrixProfileQueries.queries -> MatrixProfileQueries.oracleSql,
+      TextQueries.queries -> TextQueries.oracleSql,
+      EmbeddingQueries.queries -> EmbeddingQueries.oracleSql,
+      MultimodalQueries.queries -> MultimodalQueries.oracleSql,
+      ClusteringQueries.queries -> ClusteringQueries.oracleSql,
+      AlignmentQueries.queries -> AlignmentQueries.oracleSql,
+      EstimatorQueries.queries -> EstimatorQueries.oracleSql)
+    val keySets = families.map { case (q, o) => q.keySet ++ o.keySet }
+    for (i <- keySets.indices; j <- 0 until i) {
+      val twice = keySets(i) intersect keySets(j)
+      assert(twice.isEmpty, s"declared in two families: $twice")
+    }
+    assert(families.map(_._1.size).sum == SparkEntry.queries.size)
+    assert(families.map(_._2.size).sum == SparkEntry.oracleSql.size)
+    assert(SparkEntry.queries.size == 181 && SparkEntry.oracleSql.size == 181)
   }
 
   test("mv metric UDFs agree with univariate variants on d=1 input") {

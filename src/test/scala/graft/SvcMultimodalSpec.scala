@@ -1,18 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.TimeSeriesSVC
 import graft.sources.Multimodal
 
-class SvcMultimodalSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class SvcMultimodalSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   test("SMO solver separates trivially separable kernel") {

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.functions.TsFunctions
@@ -13,13 +13,7 @@ import graft.functions.TsFunctions
   * VARIABLE_LENGTH_METRICS contract (`metrics/__init__.py:29`) is
   * enforced the other way too: equal-length-only metrics reject ragged
   * input (`kmeans.py:559-562`). */
-class VariableLengthSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VariableLengthSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
   /** Two well-separated classes of RAGGED series (lengths 10..19):

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -12,13 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * event was tagged to whichever query happened to be current — and its
   * arrival released the next query's size-based wait early, cascading
   * the mis-tag. */
-class VerifyObservedSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
-
+class VerifyObservedSpec extends AnyFunSuite with TestSpark {
   test("two observed queries attribute to their own names") {
     val obs = new Verify.ObservedMetrics(spark)
     val df1 = spark.range(100).toDF().observe("vos_metric_a", sum(col("id")).as("s"))
