@@ -221,28 +221,8 @@ object NativeOps {
       ((h(6) & 0xffL) << 8) | (h(7) & 0xffL)) >>> 4
   }
 
-  /** One-pass hashed bag-of-words bucket ids: per word of
-    * `split(lower(text), " ")`, the 60-bit md5 hash mod d — value- and
-    * order-identical to the staged
-    * `transform(split(lower(text), " "), w => pmod(md5Hash60(w), d))`
-    * HOF chain, but one primitive loop over the text bytes (no per-word
-    * UTF8String slices, no interpreted lambda dispatch). */
-  def wordBuckets(text: org.apache.spark.unsafe.types.UTF8String, d: Int): ArrayData = {
-    val bytes = text.toLowerCase.getBytes
-    val starts = wordStarts(bytes)
-    val nWords = starts.length - 1
-    val md = md5Local.get()
-    val out = new Array[Int](nWords)
-    var w = 0
-    while (w < nWords) {
-      out(w) = (md5Word60(md, bytes, starts(w), starts(w + 1) - 1) % d).toInt
-      w += 1
-    }
-    ArrayData.toArrayData(out)
-  }
-
   /** Fused hashed bag-of-words d-bucket histogram: the one-pass form of
-    * wordBuckets + the per-bucket count histogram
+    * the per-word bucket ids + their per-bucket count histogram
     * (`transform(sequence(0, d−1), b => size(filter(bks, x === b)))` —
     * an O(d·words) interpreted HOF chain per row). Counts are exact
     * integers in doubles, so the result is bit-identical. */
@@ -400,31 +380,6 @@ case class ShingleSpansExpression(child: Expression, k: Int, distinct: Boolean)
     copy(child = c)
 }
 
-/** One-pass hashed bag-of-words bucket ids of a STRING text column
-  * (see [[NativeOps.wordBuckets]]). */
-case class WordBucketsExpression(child: Expression, d: Int)
-    extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-  // d <= 0 would otherwise surface per row at execution time (mod zero /
-  // negative index) instead of at construction (ADVICE r17).
-  require(d > 0, s"word_buckets_native requires d > 0, got $d")
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    if (child.dataType == org.apache.spark.sql.types.StringType)
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-    else
-      org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-        s"word_buckets_native requires a STRING child, got ${child.dataType.sql}")
-  override def dataType: DataType =
-    org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.IntegerType, false)
-  override def prettyName: String = "word_buckets_native"
-  override protected def nullSafeEval(s: Any): Any =
-    NativeOps.wordBuckets(s.asInstanceOf[org.apache.spark.unsafe.types.UTF8String], d)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, s =>
-      s"${ev.value} = graft.functions.NativeOps.wordBuckets($s, $d);")
-  override protected def withNewChildInternal(c: Expression): Expression =
-    copy(child = c)
-}
-
 /** Fused hashed bag-of-words histogram of a STRING text column
   * (see [[NativeOps.hashedBow]]). */
 case class HashedBowExpression(child: Expression, d: Int)
@@ -521,13 +476,6 @@ object NativeExpressions {
   def shingleSpansNative(text: Column, k: Int, distinct: Boolean = true): Column =
     GraftColumnBridge.column(ShingleSpansExpression(
       GraftColumnBridge.expression(text), k, distinct))
-
-  /** One-pass hashed-BoW bucket ids (array<int>) of a STRING column —
-    * value/order-identical to transform(split(lower(text)," "),
-    * w => pmod(md5Hash60(w), d)). */
-  def wordBucketsNative(text: Column, d: Int): Column =
-    GraftColumnBridge.column(WordBucketsExpression(
-      GraftColumnBridge.expression(text), d))
 
   /** Fused hashed-BoW d-bucket histogram (array<double>) of a STRING
     * column — the one-pass form of the buckets + histogram HOF stages. */

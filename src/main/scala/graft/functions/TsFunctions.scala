@@ -70,6 +70,11 @@ object TsFunctions {
     udf((a: S, b: S, sigma: Double) => Kernels.gak(uniTs(a), uniTs(b), sigma))
   val logGakUdf: UserDefinedFunction =
     udf((a: S, b: S, sigma: Double) => Kernels.logUnnormalizedGak(uniTs(a), uniTs(b), sigma))
+  /** Normalized GAK of a pair from its two log self-GAKs `la` and `lb`:
+    * one DP per pair (the gram builders of `Cdist`). */
+  val gakPairUdf: UserDefinedFunction =
+    udf((a: S, la: Double, b: S, lb: Double, sigma: Double) =>
+      Kernels.gakFromLogs(Kernels.logUnnormalizedGak(uniTs(a), uniTs(b), sigma), la, lb))
   val softDtwUdf: UserDefinedFunction =
     udf((a: S, b: S, gamma: Double) => Kernels.softDtw(uniTs(a), uniTs(b), gamma))
   val sbdUdf: UserDefinedFunction =

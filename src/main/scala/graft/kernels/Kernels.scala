@@ -349,13 +349,18 @@ object Kernels {
   def unnormalizedGak(s1: TS, s2: TS, sigma: Double = 1.0): Double =
     math.exp(logUnnormalizedGak(s1, s2, sigma))
 
-  /** Normalized GAK: k(x,x) = 1 — `softdtw_variants.py:96-137`. */
-  def gak(s1: TS, s2: TS, sigma: Double = 1.0): Double = {
-    val l12 = logUnnormalizedGak(s1, s2, sigma)
-    val l11 = logUnnormalizedGak(s1, s1, sigma)
-    val l22 = logUnnormalizedGak(s2, s2, sigma)
+  /** The GAK normalisation, k(x,y) = exp(l12 − ½(l11 + l22)), from the
+    * log unnormalized GAK of the pair (`l12`) and of each series with
+    * itself. Every normalized-GAK value in the engine comes through here,
+    * so a gram whose self terms are computed once per series is
+    * bit-identical to [[gak]]. */
+  @inline def gakFromLogs(l12: Double, l11: Double, l22: Double): Double =
     math.exp(l12 - 0.5 * (l11 + l22))
-  }
+
+  /** Normalized GAK: k(x,x) = 1 — `softdtw_variants.py:96-137`. */
+  def gak(s1: TS, s2: TS, sigma: Double = 1.0): Double =
+    gakFromLogs(logUnnormalizedGak(s1, s2, sigma),
+      logUnnormalizedGak(s1, s1, sigma), logUnnormalizedGak(s2, s2, sigma))
 
   // ------------------------------------------------------------- softDTW
 

@@ -3,7 +3,6 @@ package graft.ml
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.operators.Cdist
-import graft.functions.TsFunctions
 import graft.kernels.Kernels
 
 /** Kernel k-means with a GAK (or rbf) kernel — semantics of
@@ -11,7 +10,10 @@ import graft.kernels.Kernels
   *
   * The gram is built once, the upper triangle of the kernel self-join
   * (each unordered pair evaluated once; K_ii = 1 of the normalized kernel
-  * stays analytic), and persisted as series-position blocks. Each Lloyd
+  * stays analytic), and persisted as series-position blocks. The GAK
+  * gram comes from `Cdist.gakSelfUpper`, with each series' log self-GAK
+  * computed once, as a column of the fit input's checkpoint; the rbf
+  * gram is a column expression over `Cdist.selfUpperOrBlocked`. Each Lloyd
   * iteration is then ONE Spark job: a treeAggregate of the dense n×k
   * matrix S(i, c) = Σ_{j∈c} K_ij against the broadcast label array. The
   * driver derives |c|, term3(c) = Σ_{i∈c} S(i, c)/|c|² and the
@@ -36,28 +38,41 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
 
   require(Seq("gak", "rbf").contains(kernel), s"bad kernel $kernel")
 
-  /** Pairwise kernel as a Column expression (the gram build). */
-  private def kernelExpr(a: Column, b: Column): Column =
-    kernel match {
-      case "rbf" => exp(lit(-gamma) * aggregate(
-        zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
-      case _ => TsFunctions.gakUdf(a, b, lit(sigma))
-    }
+  /** The rbf kernel as a Column expression (the gram build). */
+  private def rbfExpr(a: Column, b: Column): Column =
+    exp(lit(-gamma) * aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), _ + _))
 
-  /** The same kernel as a driver-side scalar (Model.predict path). */
-  private[ml] def kernelScalar(x: Array[Double], y: Array[Double]): Double =
+  /** Each training series' log self-GAK (empty for rbf): the train side's
+    * self terms of every GAK kernel a predict call evaluates. */
+  private def trainSelfTerms(train: Array[Array[Double]]): Array[Double] =
+    if (kernel == "rbf") Array.empty[Double]
+    else train.map { t => val u = Kernels.uni(t); Kernels.logUnnormalizedGak(u, u, sigma) }
+
+  /** The kernel of probe `x` with each training series r, as a function
+    * of r (Model.predict path). For GAK the probe's own self term is
+    * computed once here and each kernel runs one DP. */
+  private def kernelRow(x: Array[Double], train: Array[Array[Double]],
+                        lgTrain: Array[Double]): Int => Double =
     kernel match {
-      case "rbf" =>
+      case "rbf" => r => {
+        val y = train(r)
         var ssd = 0.0
         var t = 0
         while (t < x.length) { val d = x(t) - y(t); ssd += d * d; t += 1 }
         math.exp(-gamma * ssd)
-      case _ => Kernels.gak(Kernels.uni(x), Kernels.uni(y), sigma)
+      }
+      case _ =>
+        val u = Kernels.uni(x)
+        val lgx = Kernels.logUnnormalizedGak(u, u, sigma)
+        r => Kernels.gakFromLogs(Kernels.logUnnormalizedGak(u, Kernels.uni(train(r)), sigma), lgx, lgTrain(r))
     }
 
   /** New-point assignment: kernel-trick distance to each fitted cluster
     * using the stored training series/labels (`kmeans.py:407-457`
-    * predict). `term3` is the fit-time within-cluster constant.
+    * predict). `term3` is the fit-time within-cluster constant. A GAK
+    * predict computes the training series' log self-GAKs once per call,
+    * on the driver, and broadcasts them with the training set; each
+    * probe row computes its own once, so each kernel is one DP.
     *
     * CEILING: kernel-trick predict is inherently O(n_train) GAK kernels
     * PER PROBE ROW against the broadcast training set — the reference
@@ -85,13 +100,14 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
       val slot = assignments.map(a => math.max(-1, java.util.Arrays.binarySearch(clusters, a._3)))
       val counts = new Array[Int](clusters.length)
       slot.foreach(c => if (c >= 0) counts(c) += 1)
-      val bc = df.sparkSession.sparkContext.broadcast((assignments.map(_._2), slot))
-      val kf = kernelScalar _
+      val train = assignments.map(_._2)
+      val bc = df.sparkSession.sparkContext.broadcast((train, trainSelfTerms(train), slot))
+      val kf = kernelRow _
       val f = udf((v: scala.collection.Seq[Double]) => {
-        val x = v.toArray
-        val (train, slots) = bc.value
+        val (train, lgTrain, slots) = bc.value
+        val k = kf(v.toArray, train, lgTrain)
         val sums = new Array[Double](clusters.length)
-        for (r <- train.indices if slots(r) >= 0) sums(slots(r)) += kf(x, train(r))
+        for (r <- train.indices if slots(r) >= 0) sums(slots(r)) += k(r)
         val d = Array.tabulate(clusters.length)(c => 1.0 - 2.0 * sums(c) / math.max(1, counts(c)) + t3(c))
         clusters(d.indices.minBy(c => (d(c), c)))
       })
@@ -129,8 +145,12 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
     import spark.implicits._
     val sc = spark.sparkContext
     val kk = k
-    // lazy: filled by the row collect, read back by the gram build
-    val data = df.select("series_id", "values").localCheckpoint(eager = false)
+    // lazy: filled by the row collect, read back by the gram build; a
+    // GAK fit's input carries each series' log self-GAK, computed as the
+    // collect fills it
+    val input = df.select("series_id", "values")
+    val data = (if (kernel == "rbf") input else Cdist.withLogSelfGak(input, sigma))
+      .localCheckpoint(eager = false)
     try {
       // deterministic init labels: "random" = seeded hash; "mod" =
       // series_id % k — the SQL-replayable trace-oracle mode (the
@@ -145,8 +165,8 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
       // the gram's upper triangle, one (i, j, K_ij) block of series positions per partition;
       // blocks > 0 is the block-partitioned pair join (no broadcast of the full relation)
       val upper =
-        if (blocks > 0) Cdist.selfBlockedUpper(data, kernelExpr, blocks)
-        else Cdist.selfUpper(data, kernelExpr)
+        if (kernel == "rbf") Cdist.selfUpperOrBlocked(data, rbfExpr, blocks)
+        else Cdist.gakSelfUpper(data, sigma, blocks)
       val gram = upper.select(col("left_id").cast("long"), col("right_id").cast("long"), col("dist"))
         .as[(Long, Long, Double)].rdd
         .mapPartitions { it =>

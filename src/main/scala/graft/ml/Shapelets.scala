@@ -92,33 +92,13 @@ object Shapelets {
 
   /** Sliding min normalized squared distance of one shapelet within a
     * series (`shapelets.py:115-155` semantics). */
-  def minDist(series: Array[Double], shapelet: Array[Double]): Double = {
-    val m = shapelet.length
-    if (series.length < m) return Double.PositiveInfinity
-    var best = Double.PositiveInfinity
-    var pos = 0
-    while (pos <= series.length - m) {
-      var s = 0.0; var i = 0
-      while (i < m) { val d = series(pos + i) - shapelet(i); s += d * d; i += 1 }
-      if (s < best) best = s
-      pos += 1
-    }
-    best / m
-  }
+  def minDist(series: Array[Double], shapelet: Array[Double]): Double =
+    minDistWithPos(series, shapelet)._1
 
-  /** Position of the best match (`locate`, `shapelets.py:560-585`). */
-  def locate(series: Array[Double], shapelet: Array[Double]): Int = {
-    val m = shapelet.length
-    var best = Double.PositiveInfinity; var bestPos = 0
-    var pos = 0
-    while (pos <= series.length - m) {
-      var s = 0.0; var i = 0
-      while (i < m) { val d = series(pos + i) - shapelet(i); s += d * d; i += 1 }
-      if (s < best) { best = s; bestPos = pos }
-      pos += 1
-    }
-    bestPos
-  }
+  /** Position of the best match (`locate`, `shapelets.py:560-585`); 0
+    * for a series shorter than the shapelet. */
+  def locate(series: Array[Double], shapelet: Array[Double]): Int =
+    minDistWithPos(series, shapelet)._2
 
   /** Shapelet-transform a series DataFrame: one feature column per
     * shapelet (single UDF call per row over the broadcast shapelet set). */
@@ -317,25 +297,35 @@ object Shapelets {
                        shapelets: Array[Array[Double]],
                        w: Array[Array[Double]], b: Array[Double],
                        offs: Array[Int]): Unit = {
-    val nC = b.length
-    val kS = shapelets.length
-    val nP = offs.last + nC * kS + nC
     val (b1, b2, eps) = (0.9, 0.999, 1e-8)
-    var i = 0
-    while (i < nP) {
+    descend(shapelets, w, b, offs) { i =>
       val grad = g(i) / n
       mAdam(i) = b1 * mAdam(i) + (1 - b1) * grad
       vAdam(i) = b2 * vAdam(i) + (1 - b2) * grad * grad
       val mh = mAdam(i) / (1 - math.pow(b1, t))
       val vh = vAdam(i) / (1 - math.pow(b2, t))
-      val step = lr * mh / (math.sqrt(vh) + eps)
+      lr * mh / (math.sqrt(vh) + eps)
+    }
+  }
+
+  /** θ(i) −= step(i), in index order and in place, over the flat
+    * (shapelets ++ w ++ b) parameter vector; `offs` are the shapelets'
+    * start offsets in it. */
+  private def descend(shapelets: Array[Array[Double]], w: Array[Array[Double]],
+                      b: Array[Double], offs: Array[Int])(step: Int => Double): Unit = {
+    val nC = b.length
+    val kS = shapelets.length
+    val nP = offs.last + nC * kS + nC
+    var i = 0
+    while (i < nP) {
+      val s = step(i)
       if (i < offs.last) {
         val k = offs.indices.dropRight(1).find(kk => i < offs(kk + 1)).get
-        shapelets(k)(i - offs(k)) -= step
+        shapelets(k)(i - offs(k)) -= s
       } else if (i < offs.last + nC * kS) {
         val ci = (i - offs.last) / kS
-        w(ci)((i - offs.last) % kS) -= step
-      } else b(i - offs.last - nC * kS) -= step
+        w(ci)((i - offs.last) % kS) -= s
+      } else b(i - offs.last - nC * kS) -= s
       i += 1
     }
   }
@@ -402,24 +392,11 @@ object Shapelets {
     val g = data.groupByKey(_ => 0)
       .agg(new GradAgg(shapelets, w, b).toColumn).collect().head._2
     val n = math.max(1.0, g(g.length - 1))
-    val nC = b.length
-    val kS = shapelets.length
-    val offs = shapelets.map(_.length).scanLeft(0)(_ + _)
-    val nP = offs.last + nC * kS + nC
     val eps = 1e-8
-    var i = 0
-    while (i < nP) {
+    descend(shapelets, w, b, shapelets.map(_.length).scanLeft(0)(_ + _)) { i =>
       val grad = g(i) / n
       // Adam t=1, zero moments: mhat = grad, vhat = grad²
-      val step = lr * grad / (math.sqrt(grad * grad) + eps)
-      if (i < offs.last) {
-        val k = offs.indices.dropRight(1).find(kk => i < offs(kk + 1)).get
-        shapelets(k)(i - offs(k)) -= step
-      } else if (i < offs.last + nC * kS) {
-        val ci = (i - offs.last) / kS
-        w(ci)((i - offs.last) % kS) -= step
-      } else b(i - offs.last - nC * kS) -= step
-      i += 1
+      lr * grad / (math.sqrt(grad * grad) + eps)
     }
     (shapelets, w, b)
   }

@@ -3,13 +3,15 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Cdist
-import graft.functions.TsFunctions
+import graft.kernels.Kernels
 
 /** Kernel SVM with the Global Alignment Kernel — semantics of
   * `/root/reference/tslearn/svm/svm.py:17-569`.
   *
   * Spark split (SURVEY §7.3): the O(n²) GAK gram is computed distributed
-  * (triangle self-join + mirror); the SMO solve runs on the driver over
+  * by `Cdist.gakSelfGram` (triangle self-join + mirror, each series' log
+  * self-GAK computed once; predict's probe × support-vector gram by
+  * `Cdist.gakCross`); the SMO solve runs on the driver over
   * the collected gram — same architecture as the reference (libsvm solve
   * after a precomputed gram), with the documented scale limit n ≲ 10⁴
   * support-vector candidates. Multiclass = one-vs-one voting, as libsvm.
@@ -281,15 +283,7 @@ object TimeSeriesSVC {
     // blocks > 0: block-partitioned pair join — the gram no longer needs
     // the whole dataset broadcastable (driver collect is still the solve
     // bound, as in the reference's libsvm path)
-    val pairsDf =
-      if (blocks > 0) Cdist.selfCrossBlocked(df,
-        (a, b) => TsFunctions.gakUdf(a, b, lit(sig)), blocks, computeDiagonal = false)
-      else Cdist.selfCross(df,
-        (a, b) => TsFunctions.gakUdf(a, b, lit(sig)), computeDiagonal = false)
-    val gramDf = pairsDf
-      .union(df.select(col("series_id").as("left_id"), col("series_id").as("right_id"), lit(1.0)))
-    val gram = gramDf.as[(Long, Long, Double)].collect()
-      .map { case (i, j, k) => (i, j) -> k }.toMap
+    val gram = collectGram(Cdist.gakSelfGram(df, sig, blocks))
     val labeled = df.select(col("series_id").cast("long"), col("label").cast("string"))
       .as[(Long, String)].collect()
     val classes = labeled.map(_._2).distinct.sorted
@@ -307,6 +301,12 @@ object TimeSeriesSVC {
         sv.map(t => alpha(t) * y(t)).toArray, b)
     }).toMap
     Model(classes, binaries, sig, labeled.map(_._1))
+  }
+
+  /** A (left_id, right_id, dist) gram on the driver, keyed by id pair. */
+  private[ml] def collectGram(gram: DataFrame): Map[(Long, Long), Double] = {
+    import gram.sparkSession.implicits._
+    gram.as[(Long, Long, Double)].collect().map { case (i, j, k) => (i, j) -> k }.toMap
   }
 
   // ------------------------------------------------------- Nyström path
@@ -328,14 +328,13 @@ object TimeSeriesSVC {
                              sig: Double) =
     udf((values: Seq[Double]) => {
       val x = values.toArray.map(Array(_))
-      val lgxx = graft.kernels.Kernels.logUnnormalizedGak(x, x, sig)
+      val lgxx = Kernels.logUnnormalizedGak(x, x, sig)
       val lms = bLm.value; val w = bMap.value; val lself = bSelf.value
       val m = lms.length
       val kv = new Array[Double](m)
       var i = 0
       while (i < m) {
-        val lgxl = graft.kernels.Kernels.logUnnormalizedGak(x, lms(i).map(Array(_)), sig)
-        kv(i) = math.exp(lgxl - 0.5 * (lgxx + lself(i)))
+        kv(i) = Kernels.gakFromLogs(Kernels.logUnnormalizedGak(x, lms(i).map(Array(_)), sig), lgxx, lself(i))
         i += 1
       }
       val f = new Array[Double](m)
@@ -368,10 +367,9 @@ object TimeSeriesSVC {
       .limit(m).select(col("values")).as[Array[Double]].collect()
     val mm = lms.length
     val lmTs = lms.map(_.map(Array(_)))
-    val lgSelf = lmTs.map(t => graft.kernels.Kernels.logUnnormalizedGak(t, t, sig))
+    val lgSelf = lmTs.map(t => Kernels.logUnnormalizedGak(t, t, sig))
     val w = DenseMatrix.tabulate(mm, mm) { (i, j) =>
-      math.exp(graft.kernels.Kernels.logUnnormalizedGak(lmTs(i), lmTs(j), sig)
-        - 0.5 * (lgSelf(i) + lgSelf(j)))
+      Kernels.gakFromLogs(Kernels.logUnnormalizedGak(lmTs(i), lmTs(j), sig), lgSelf(i), lgSelf(j))
     }
     val es = eigSym(w)
     val cutoff = math.max(es.eigenvalues.data.max, 0.0) * 1e-10
@@ -447,8 +445,7 @@ object TimeSeriesSVC {
     import spark.implicits._
     val w = bm.ids.zip(bm.alphaY).toSeq.toDF("right_id", "ay")
     val svTrain = train.where(col("series_id").isin(bm.ids.toSeq: _*))
-    Cdist.cross(probes, svTrain,
-      (a, b) => TsFunctions.gakUdf(a, b, lit(sigma)))
+    Cdist.gakCross(probes, svTrain, sigma)
       .join(broadcast(w), "right_id")
       .groupBy(col("left_id").as("probe_id"))
       .agg((sum(col("dist") * col("ay")) + lit(bm.b)).as("decision"))
@@ -460,10 +457,7 @@ object TimeSeriesSVC {
     import spark.implicits._
     val svIds = model.binaries.values.flatMap(_.ids).toSet
     val svTrain = train.where(col("series_id").isin(svIds.toSeq: _*))
-    val gram = Cdist.cross(probes, svTrain,
-      (a, b) => TsFunctions.gakUdf(a, b, lit(model.sigma)))
-      .as[(Long, Long, Double)].collect()
-      .map { case (p, t, k) => (p, t) -> k }.toMap
+    val gram = collectGram(Cdist.gakCross(probes, svTrain, model.sigma))
     val probeIds = probes.select(col("series_id").cast("long")).as[Long].collect()
     val preds = model.predictFromGram(gram, probeIds.toIndexedSeq)
     preds.toSeq.toDF("series_id", "label")

@@ -3,14 +3,15 @@ package graft.ml
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.operators.Cdist
-import graft.functions.TsFunctions
 
 /** ε-SVR with the Global Alignment Kernel — semantics of
   * `/root/reference/tslearn/svm/svm.py:276-421` (TimeSeriesSVR wraps an
   * ε-SVR over a precomputed GAK gram).
   *
   * Spark split mirrors [[TimeSeriesSVC]]: the O(n²) gram is computed
-  * distributed (triangle self-join + mirror) and collected; the dual
+  * distributed by `Cdist.gakSelfGram` (triangle self-join + mirror, each
+  * series' log self-GAK computed once) and collected, and predict's
+  * probe × support-vector gram comes from `Cdist.gakCross`; the dual
   * solve runs on the driver (documented scale limit n ≲ 10⁴ candidate
   * support vectors — identical to the reference's libsvm solve).
   *
@@ -99,15 +100,7 @@ object TimeSeriesSVR {
     val spark = df.sparkSession
     import spark.implicits._
     val sig = if (sigma > 0) sigma else TimeSeriesSVC.sigmaGak(df)
-    val pairsDf =
-      if (blocks > 0) Cdist.selfCrossBlocked(df,
-        (a, b) => TsFunctions.gakUdf(a, b, lit(sig)), blocks, computeDiagonal = false)
-      else Cdist.selfCross(df,
-        (a, b) => TsFunctions.gakUdf(a, b, lit(sig)), computeDiagonal = false)
-    val gramDf = pairsDf
-      .union(df.select(col("series_id").as("left_id"), col("series_id").as("right_id"), lit(1.0)))
-    val gram = gramDf.as[(Long, Long, Double)].collect()
-      .map { case (i, j, k) => (i, j) -> k }.toMap
+    val gram = TimeSeriesSVC.collectGram(Cdist.gakSelfGram(df, sig, blocks))
     val labeled = df.select(col("series_id").cast("long"), col("target").cast("double"))
       .as[(Long, Double)].collect()
     val ids = labeled.map(_._1)
@@ -125,8 +118,7 @@ object TimeSeriesSVR {
     val bc = spark.sparkContext.broadcast(betaOf)
     val bias = model.b
     val svTrain = train.where(col("series_id").isin(model.svIds.toSeq: _*))
-    val gram = Cdist.cross(probes, svTrain,
-      (a, b) => TsFunctions.gakUdf(a, b, lit(model.sigma)))
+    val gram = Cdist.gakCross(probes, svTrain, model.sigma)
     val betaUdf = udf((id: Long) => bc.value(id))
     gram.withColumn("w", betaUdf(col("right_id")) * col("dist"))
       .groupBy(col("left_id").as("series_id"))

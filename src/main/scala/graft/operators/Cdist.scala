@@ -50,23 +50,25 @@ object Cdist {
     * `compute_diagonal` does). */
   def selfCross(ds: DataFrame, metric: (Column, Column) => Column,
                 seriesCol: String = "values", computeDiagonal: Boolean = true): DataFrame =
-    withMirror(ds, selfUpper(ds, metric, seriesCol), computeDiagonal)
+    withMirror(ds, selfUpper(ds, metric, seriesCol), if (computeDiagonal) Some(0.0) else None)
 
-  /** Both orientations of every upper-triangle row plus the diagonal.
-    * Both rows come out of the ONE evaluated row: a union of `upper` with
-    * a column-swapped copy of itself plans the pair join, metric
-    * included, once per branch. */
-  private def withMirror(ds: DataFrame, upper: DataFrame, computeDiagonal: Boolean): DataFrame = {
+  /** Both orientations of every upper-triangle row plus, when `diagonal`
+    * is given, one (id, id, diagonal) row per series. Both rows come out
+    * of the ONE evaluated row: a union of `upper` with a column-swapped
+    * copy of itself plans the pair join, metric included, once per
+    * branch. */
+  private def withMirror(ds: DataFrame, upper: DataFrame, diagonal: Option[Double]): DataFrame = {
     val both = upper.select(explode(array(
         struct(col("left_id"), col("right_id"), col("dist")),
         struct(col("right_id").as("left_id"), col("left_id").as("right_id"), col("dist"))
       )).as("p"))
       .select(col("p.left_id"), col("p.right_id"), col("p.dist"))
-    val diag =
-      if (computeDiagonal)
-        ds.select(col("series_id").as("left_id"), col("series_id").as("right_id"), lit(0.0).as("dist"))
-      else ds.sparkSession.emptyDataFrame
+    val diag = diagonal match {
+      case Some(d) =>
+        ds.select(col("series_id").as("left_id"), col("series_id").as("right_id"), lit(d).as("dist"))
+      case None => ds.sparkSession.emptyDataFrame
         .select(lit(0L).as("left_id"), lit(0L).as("right_id"), lit(0.0).as("dist")).limit(0)
+    }
     both.unionAll(diag)
   }
 
@@ -111,7 +113,68 @@ object Cdist {
   def selfCrossBlocked(ds: DataFrame, metric: (Column, Column) => Column, blocks: Int,
                        seriesCol: String = "values",
                        computeDiagonal: Boolean = true): DataFrame =
-    withMirror(ds, selfBlockedUpper(ds, metric, blocks, seriesCol), computeDiagonal)
+    withMirror(ds, selfBlockedUpper(ds, metric, blocks, seriesCol),
+      if (computeDiagonal) Some(0.0) else None)
+
+  /** The upper triangle of a symmetric metric's self-join:
+    * [[selfUpper]] when `blocks` is 0, [[selfBlockedUpper]] into
+    * `blocks` buckets when it is positive. */
+  def selfUpperOrBlocked(ds: DataFrame, metric: (Column, Column) => Column, blocks: Int,
+                         seriesCol: String = "values"): DataFrame =
+    if (blocks > 0) selfBlockedUpper(ds, metric, blocks, seriesCol)
+    else selfUpper(ds, metric, seriesCol)
+
+  // ------------------------------------------------ normalized-GAK gram
+
+  /** The column of each series' log self-GAK ([[withLogSelfGak]]), and
+    * the name its UDF carries in a plan. */
+  val LogSelfGak = "log_self_gak"
+
+  private val logSelfGakUdf = TsFunctions.logGakUdf.withName(LogSelfGak)
+
+  /** The series column of a GAK pair join: struct(v = series, lg = its
+    * log self-GAK). */
+  private val GakSeries = "gak_series"
+
+  /** `ds` with each series' log self-GAK,
+    * `Kernels.logUnnormalizedGak(x, x, σ)`, added as column
+    * [[LogSelfGak]]: one DP per series, the self term of every pair the
+    * series meets. A frame that already has the column keeps it, so a
+    * fit input checkpointed with it (KernelKMeans) pays for it once. */
+  def withLogSelfGak(ds: DataFrame, sigma: Double, seriesCol: String = "values"): DataFrame =
+    if (ds.columns.contains(LogSelfGak)) ds
+    else ds.withColumn(LogSelfGak, logSelfGakUdf(col(seriesCol), col(seriesCol), lit(sigma)))
+
+  private def gakSide(ds: DataFrame, sigma: Double, seriesCol: String): DataFrame =
+    withLogSelfGak(ds, sigma, seriesCol).select(col("series_id"),
+      struct(col(seriesCol).as("v"), col(LogSelfGak).as("lg")).as(GakSeries))
+
+  /** One pair of the gram: its one DP, normalised by `Kernels.gakFromLogs`
+    * from the two carried self terms. */
+  private def gakPair(sigma: Double)(l: Column, r: Column): Column =
+    TsFunctions.gakPairUdf(l.getField("v"), l.getField("lg"), r.getField("v"), r.getField("lg"), lit(sigma))
+
+  /** Normalized-GAK cross gram (left_id, right_id, dist) of `left` ×
+    * broadcast `right` — `cdist_gak` (`softdtw_variants.py:140-218`).
+    * Each series' log self-GAK is computed once per side, below the pair
+    * join (the reference's diagonal reuse), and each pair runs one DP;
+    * every value is bit-identical to `Kernels.gak` of the pair. */
+  def gakCross(left: DataFrame, right: DataFrame, sigma: Double,
+               seriesCol: String = "values"): DataFrame =
+    cross(gakSide(left, sigma, seriesCol), gakSide(right, sigma, seriesCol), gakPair(sigma), GakSeries)
+
+  /** The upper triangle (left_id < right_id) of the normalized-GAK self
+    * gram, as [[gakCross]] builds each pair; `blocks` > 0 takes the
+    * block-partitioned join ([[selfUpperOrBlocked]]). */
+  def gakSelfUpper(ds: DataFrame, sigma: Double, blocks: Int = 0,
+                   seriesCol: String = "values"): DataFrame =
+    selfUpperOrBlocked(gakSide(ds, sigma, seriesCol), gakPair(sigma), blocks, GakSeries)
+
+  /** The full normalized-GAK self gram: [[gakSelfUpper]], its mirror and
+    * the diagonal k(x, x) = 1. */
+  def gakSelfGram(ds: DataFrame, sigma: Double, blocks: Int = 0,
+                  seriesCol: String = "values"): DataFrame =
+    withMirror(ds, gakSelfUpper(ds, sigma, blocks, seriesCol), Some(1.0))
 
   /** Normalized soft-DTW cross-distance:
     * D(x,y) − ½(D(x,x) + D(y,y)) — `cdist_soft_dtw_normalized`
@@ -181,12 +244,13 @@ object Cdist {
     * entry never answers for new data. It holds the broadcast handle
     * only. [[sweep]] drops every entry whose cached RDD is no longer
     * registered with the running SparkContext (unpersisted, recached, or
-    * of a stopped context) and destroys its broadcast when its context
-    * still runs. Entries beyond `capBytes` in total are evicted least
-    * recently used first, destroying their broadcast; an index larger
-    * than `capBytes` is never stored. A DataFrame a front door returned
-    * reads its index when it runs, so it must run before that index
-    * leaves the store; every caller collects it at once. */
+    * of a stopped context). Entries beyond `capBytes` in total are
+    * evicted least recently used first; an index larger than `capBytes`
+    * is never stored. An entry that leaves the store while its context
+    * runs unpersists its broadcast, which frees the executors' copies
+    * but never destroys it: a DataFrame a front door returned holds the
+    * broadcast in its UDF and may run again at any later time, so the
+    * driver's copy lives until the ContextCleaner finds no such frame. */
   private[graft] final class IndexStore(capBytes: Long) {
     private final class Entry(val builder: AnyRef, val kind: IndexKind, val rdd: RDD[_],
                               val bc: Broadcast[_], val bytes: Long)
@@ -215,7 +279,7 @@ object Cdist {
           while (total > capBytes) {
             val e = entries.remove(0)
             total -= e.bytes
-            e.bc.destroy()
+            e.bc.unpersist()
           }
           entries += new Entry(builder, kind, rdd, bc, bytes)
         }
@@ -227,7 +291,7 @@ object Cdist {
         val running = e.rdd.sparkContext eq sc
         val valid = running && live.get(e.rdd.id).exists(_ eq e.rdd)
         // a stopped context's broadcast ids are reused by its successor
-        if (running && !valid) e.bc.destroy()
+        if (running && !valid) e.bc.unpersist()
         valid
       }
     }

@@ -196,10 +196,7 @@ object EstimatorQueries {
         .select(col("series_id"),
           TsFunctions.resampleZnormUdf(col("values"), lit(16)).as("values"))
         .localCheckpoint()
-      val pairs = graft.operators.Cdist.selfCross(series,
-        (a, b) => TsFunctions.gakUdf(a, b, lit(1.0)), computeDiagonal = false)
-      val gram = pairs.union(series.select(col("series_id").as("left_id"),
-        col("series_id").as("right_id"), lit(1.0)))
+      val gram = graft.operators.Cdist.gakSelfGram(series, sigma = 1.0)
       val labeled = series.select(col("series_id").as("id"),
         when(col("series_id") % 2 === 0, 1.0).otherwise(-1.0).as("y"),
         (((col("series_id") * 7 + 3) % 10) / lit(10.0)).as("a"))

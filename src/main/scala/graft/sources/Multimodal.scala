@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Multimodal-column plumbing for training-data pipelines.
   *
@@ -194,16 +193,6 @@ object Multimodal {
     }
     Raster(out, outW, outH)
   }
-
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType, nullable = false),
-    StructField("kind", StringType, nullable = false), // image | audio | video
-    StructField("payload", BinaryType, nullable = false),
-    StructField("meta", StructType(Seq(
-      StructField("width", IntegerType, nullable = true),
-      StructField("height", IntegerType, nullable = true),
-      StructField("sample_rate", IntegerType, nullable = true),
-      StructField("n_frames", IntegerType, nullable = true))), nullable = false)))
 
   /** STUB fallback for payloads with NO JDK reader (compressed audio,
     * video codecs — ffmpeg-class dependencies this container doesn't

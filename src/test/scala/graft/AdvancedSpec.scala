@@ -94,7 +94,7 @@ class AdvancedSpec extends AnyFunSuite with TestSpark {
     val rows = (0 until 30).map { i =>
       val blob = i / 15
       val base = if (blob == 0) 5.0 else -5.0
-      (i.toLong, Array.tabulate(24)(t => base + rng.nextGaussian() * 0.1), blob.toString)
+      (i.toLong, Array.fill(24)(base + rng.nextGaussian() * 0.1), blob.toString)
     }
     val df = rows.toDF("series_id", "values", "label")
     val ec = new graft.ml.EarlyClassifier(tGrid = Seq(4, 8, 16, 24), lambdaCost = 0.01)

@@ -24,7 +24,6 @@ class BucketedJoinSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("bucketed-by-key tables join and aggregate with zero exchange") {
-    import spark.implicits._
     val sf = "/root/testdata/sf0.001"
     // when the suite shares an existing SparkSession the warehouse config
     // is fixed at first creation: drop both tables AND their physical

@@ -4,7 +4,6 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{KNeighbors, KShape, KernelKMeans, TimeSeriesKMeans}
-import graft.model.TSModel
 
 /** Clustering / estimator behavior tests. Quality-metric assertions
   * (inertia decreases, blobs separate) rather than raw label matching, as

@@ -84,6 +84,21 @@ class KernelsSpec extends AnyFunSuite {
     assert(approx(Kernels.gak(s, s, 1.3), 1.0, 1e-9))
   }
 
+  test("gakFromLogs of the three log GAKs == Kernels.gak, bit for bit") {
+    val rng = new scala.util.Random(16)
+    def series(): Kernels.TS =
+      Array.fill(1 + rng.nextInt(30))(Array(rng.nextGaussian() * (1 + rng.nextInt(5))))
+    for (_ <- 0 until 200) {
+      val (x, y) = (series(), series())
+      val sigma = 0.25 + rng.nextDouble() * 4
+      val lg = (s: Kernels.TS, t: Kernels.TS) => Kernels.logUnnormalizedGak(s, t, sigma)
+      val parts = Seq(lg(x, y), lg(x, x), lg(y, y))
+      assert(parts.forall(v => !v.isInfinite && !v.isNaN), s"a log GAK is not finite: $parts")
+      assert(Kernels.gakFromLogs(lg(x, y), lg(x, x), lg(y, y)) == Kernels.gak(x, y, sigma),
+        s"lengths ${x.length}, ${y.length}, sigma $sigma")
+    }
+  }
+
   test("soft dtw goldens (softdtw_variants.py:352-360)") {
     assert(approx(Kernels.softDtw(uni(1, 2, 2, 3), uni(1.0, 2.0, 3.0, 4.0), gamma = 1.0), -0.89, 1e-2))
     // reference doctest prints 0.089... (float repr of ~0.0900)

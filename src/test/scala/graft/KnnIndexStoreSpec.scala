@@ -12,7 +12,8 @@ import graft.operators.Cdist
   * persisted train relation's index is built once and its warm calls run
   * only the query job; an unpersisted relation is never stored; new data
   * behind a new persist is never answered from an old index; the byte cap
-  * and the LRU eviction hold, and what leaves the store is destroyed. */
+  * and the LRU eviction hold, and what leaves the store is released, not
+  * destroyed, so a frame a front door returned still runs after it. */
 class KnnIndexStoreSpec extends AnyFunSuite with TestSpark {
   import spark.implicits._
 
@@ -132,7 +133,7 @@ class KnnIndexStoreSpec extends AnyFunSuite with TestSpark {
     // the next kNN call, on another relation, removes and destroys it
     rows(Cdist.knnDtwRagged(raggedSeries(63, 3, firstId = 100), raggedSeries(64, 6), k = 1))
     assert(!storedIds(old.head.id), "the unpersisted relation's entry is still stored")
-    assert(destroyed(old.head), "the unpersisted relation's broadcast is not destroyed")
+    assert(!destroyed(old.head), "the unpersisted relation's broadcast was destroyed")
     persisted(df)
     val again = rows(Cdist.knnDtwPruned(probes, df, k = 2, radius = 2))
     val renewed = Cdist.storedIndexes.filterNot(e => before(e._3.id))
@@ -173,7 +174,30 @@ class KnnIndexStoreSpec extends AnyFunSuite with TestSpark {
     rdd.unpersist(true)
   }
 
-  test("LRU eviction destroys the evicted broadcast") {
+  test("a kNN frame runs again after its stored index left the store") {
+    val probes = series(81, 4, 8, firstId = 100)
+    val rProbes = raggedSeries(82, 4, firstId = 100)
+    for ((name, frame) <- Seq[(String, DataFrame => DataFrame)](
+        "knnDtwPruned" -> (t => Cdist.knnDtwPruned(probes, t, k = 3, radius = 2)),
+        "knnDtwRagged" -> (t => Cdist.knnDtwRagged(rProbes, t, k = 3)))) {
+      val train = persisted(if (name == "knnDtwPruned") series(83, 12, 8) else raggedSeries(84, 12))
+      val before = storedIds
+      val df1 = frame(train)
+      val first = rows(df1)
+      assert(first.size == 12)
+      val stored = storedIds -- before
+      assert(stored.size == 1, s"$name: the persisted train's index is not stored")
+      train.unpersist(true)
+      // one call on another persisted relation sweeps the old entry
+      val other = persisted(series(85, 6, 8))
+      rows(Cdist.knnDtwPruned(probes, other, k = 1, radius = 2))
+      assert((storedIds & stored).isEmpty, s"$name: the old entry is still stored")
+      assert(rows(df1) == first, s"$name: the frame's second run differs")
+      other.unpersist(true)
+    }
+  }
+
+  test("LRU eviction releases the evicted broadcast without destroying it") {
     val sc = spark.sparkContext
     val store = new Cdist.IndexStore(100L)
     val rdd = sc.parallelize(1 to 2).persist()
@@ -187,8 +211,7 @@ class KnnIndexStoreSpec extends AnyFunSuite with TestSpark {
     store.put(kc, kind, rdd, c, 40L)
     assert(store.snapshot.map(_._3) == Seq(a, c))
     assert(store.get(kb, kind).isEmpty)
-    assert(destroyed(b), "the evicted broadcast was not destroyed")
-    assert(!destroyed(a) && !destroyed(c))
+    assert(!destroyed(a) && !destroyed(b) && !destroyed(c))
     rdd.unpersist(true)
   }
 }

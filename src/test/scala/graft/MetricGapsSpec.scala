@@ -178,7 +178,7 @@ class MetricGapsSpec extends AnyFunSuite with TestSpark {
     // class 0: flat + noise; class 1: a bump at a random position
     val rows = (0 until 40).map { i =>
       val cls = i % 2
-      val vals = Array.tabulate(24)(t => 0.1 * rng.nextGaussian())
+      val vals = Array.fill(24)(0.1 * rng.nextGaussian())
       if (cls == 1) {
         val p = 4 + rng.nextInt(12)
         (0 until 6).foreach(j => vals(p + j) += 2.0)

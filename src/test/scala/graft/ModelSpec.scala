@@ -118,7 +118,6 @@ class ModelSpec extends AnyFunSuite with TestSpark {
     // schema has drifted (round 8 went red on every events-derived
     // query). The reader must normalize: any plausible ts physical type
     // and common column-name variants all land on the same µs clock.
-    import org.apache.spark.sql.types._
     val canonDir = java.nio.file.Files.createTempDirectory("evdrift").toString
     val rows = Seq(
       (1L, java.sql.Timestamp.valueOf("2024-03-01 10:15:30.123456"), 7L, "click", 1.5, "{}"),

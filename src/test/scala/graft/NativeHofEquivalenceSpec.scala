@@ -45,21 +45,6 @@ class NativeHofEquivalenceSpec extends AnyFunSuite with TestSpark {
     }
   }
 
-  test("word_buckets_native == transform(split(lower)) pmod-md5 HOF chain") {
-    for (d <- Seq(7, 32)) {
-      val hofCol = transform(split(lower(col("text")), " "),
-        w => pmod(graft.operators.Dedup.md5Hash60(w), lit(d.toLong)).cast("int"))
-      val rows = fixture
-        .select(col("doc_id"), hofCol.as("hof"),
-          NativeExpressions.wordBucketsNative(col("text"), d).as("nat"))
-        .orderBy("doc_id")
-        .as[(Long, Seq[Int], Seq[Int])].collect()
-      rows.foreach { case (id, hof, nat) =>
-        assert(nat == hof, s"doc $id d=$d: $nat != $hof")
-      }
-    }
-  }
-
   test("hashed_bow_native == sequence/filter-count histogram HOF chain") {
     for (d <- Seq(7, 32)) {
       val bks = transform(split(lower(col("text")), " "),

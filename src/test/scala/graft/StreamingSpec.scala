@@ -108,7 +108,7 @@ class StreamingSpec extends AnyFunSuite {
     val buf = spark.createDataset(all).toDF("embedding")
       .select(col("embedding")).as[Array[Float]]
       .select(new graft.operators.Pca.MomentAgg(d).toColumn).head()
-    rows.sortBy(_._1).foreach { case (i, n, s, p) =>
+    rows.sortBy(_._1).foreach { case (i, _, s, p) =>
       assert(math.abs(s - buf.sums(i)) < 1e-9)
       (0 until p.length).foreach { o =>
         val j = i + o

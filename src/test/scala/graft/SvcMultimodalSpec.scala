@@ -297,18 +297,4 @@ class SvcMultimodalSpec extends AnyFunSuite with TestSpark {
         s"bin $b: fft ${frame0(b)} vs dft ${math.sqrt(re * re + im * im)}")
     }
   }
-
-  test("kmeans model persistence round-trips centroids") {
-    val df = (0 until 12).map(i =>
-      (i.toLong, Array.tabulate(8)(t => (i / 6) * 10.0 + t)))
-      .toDF("series_id", "values")
-    val km = new graft.ml.TimeSeriesKMeans(k = 2, metric = "euclidean", maxIter = 5, seed = 1)
-    val model = km.fit(df)
-    val dir = java.nio.file.Files.createTempDirectory("kmeans_model").toString
-    graft.ml.Persistence.saveKMeans(spark, model, Map("k" -> "2", "metric" -> "euclidean"), dir)
-    val loaded = graft.ml.Persistence.loadKMeansCentroids(spark, dir)
-    assert(loaded.length == 2)
-    assert(loaded.map(_.toSeq).toSet == model.centroids.map(_.toSeq).toSet)
-    assert(graft.ml.Persistence.loadMetadata(dir).contains("\"metric\": \"euclidean\""))
-  }
 }
