@@ -11,7 +11,7 @@ import graft.kernels.Kernels
   * The gram is built once, the upper triangle of the kernel self-join
   * (each unordered pair evaluated once; K_ii = 1 of the normalized kernel
   * stays analytic), and persisted as series-position blocks. The GAK
-  * gram comes from `Cdist.gakSelfUpper`, with each series' log self-GAK
+  * gram comes from `Cdist.gakSelfUpperOf`, with each series' log self-GAK
   * computed once, as a column of the fit input's checkpoint; the rbf
   * gram is a column expression over `Cdist.selfUpperOrBlocked`. Each Lloyd
   * iteration is then ONE Spark job: a treeAggregate of the dense n×k
@@ -166,7 +166,7 @@ class KernelKMeans(val k: Int, val maxIter: Int = 10, val tol: Double = 1e-6,
       // blocks > 0 is the block-partitioned pair join (no broadcast of the full relation)
       val upper =
         if (kernel == "rbf") Cdist.selfUpperOrBlocked(data, rbfExpr, blocks)
-        else Cdist.gakSelfUpper(data, sigma, blocks)
+        else Cdist.gakSelfUpperOf(data, sigma, blocks)
       val gram = upper.select(col("left_id").cast("long"), col("right_id").cast("long"), col("dist"))
         .as[(Long, Long, Double)].rdd
         .mapPartitions { it =>

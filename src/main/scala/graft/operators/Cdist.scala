@@ -137,17 +137,16 @@ object Cdist {
   private val GakSeries = "gak_series"
 
   /** `ds` with each series' log self-GAK,
-    * `Kernels.logUnnormalizedGak(x, x, σ)`, added as column
-    * [[LogSelfGak]]: one DP per series, the self term of every pair the
-    * series meets. A frame that already has the column keeps it, so a
-    * fit input checkpointed with it (KernelKMeans) pays for it once. */
-  def withLogSelfGak(ds: DataFrame, sigma: Double, seriesCol: String = "values"): DataFrame =
-    if (ds.columns.contains(LogSelfGak)) ds
-    else ds.withColumn(LogSelfGak, logSelfGakUdf(col(seriesCol), col(seriesCol), lit(sigma)))
+    * `Kernels.logUnnormalizedGak(x, x, σ)` of its `values`, added as
+    * column [[LogSelfGak]]: one DP per series, the self term of every
+    * pair the series meets. */
+  private[graft] def withLogSelfGak(ds: DataFrame, sigma: Double): DataFrame =
+    ds.withColumn(LogSelfGak, logSelfGakUdf(col("values"), col("values"), lit(sigma)))
 
-  private def gakSide(ds: DataFrame, sigma: Double, seriesCol: String): DataFrame =
-    withLogSelfGak(ds, sigma, seriesCol).select(col("series_id"),
-      struct(col(seriesCol).as("v"), col(LogSelfGak).as("lg")).as(GakSeries))
+  /** The pair-join side of a frame that carries [[LogSelfGak]]. */
+  private def gakSide(withSelf: DataFrame): DataFrame =
+    withSelf.select(col("series_id"),
+      struct(col("values").as("v"), col(LogSelfGak).as("lg")).as(GakSeries))
 
   /** One pair of the gram: its one DP, normalised by `Kernels.gakFromLogs`
     * from the two carried self terms. */
@@ -159,22 +158,27 @@ object Cdist {
     * Each series' log self-GAK is computed once per side, below the pair
     * join (the reference's diagonal reuse), and each pair runs one DP;
     * every value is bit-identical to `Kernels.gak` of the pair. */
-  def gakCross(left: DataFrame, right: DataFrame, sigma: Double,
-               seriesCol: String = "values"): DataFrame =
-    cross(gakSide(left, sigma, seriesCol), gakSide(right, sigma, seriesCol), gakPair(sigma), GakSeries)
+  def gakCross(left: DataFrame, right: DataFrame, sigma: Double): DataFrame =
+    cross(gakSide(withLogSelfGak(left, sigma)), gakSide(withLogSelfGak(right, sigma)),
+      gakPair(sigma), GakSeries)
 
   /** The upper triangle (left_id < right_id) of the normalized-GAK self
     * gram, as [[gakCross]] builds each pair; `blocks` > 0 takes the
     * block-partitioned join ([[selfUpperOrBlocked]]). */
-  def gakSelfUpper(ds: DataFrame, sigma: Double, blocks: Int = 0,
-                   seriesCol: String = "values"): DataFrame =
-    selfUpperOrBlocked(gakSide(ds, sigma, seriesCol), gakPair(sigma), blocks, GakSeries)
+  def gakSelfUpper(ds: DataFrame, sigma: Double, blocks: Int = 0): DataFrame =
+    gakSelfUpperOf(withLogSelfGak(ds, sigma), sigma, blocks)
+
+  /** [[gakSelfUpper]] of a frame that already carries each series'
+    * [[LogSelfGak]] for this `sigma` ([[withLogSelfGak]]): KernelKMeans
+    * checkpoints its fit input with the column, so it pays for the self
+    * terms once. */
+  private[graft] def gakSelfUpperOf(withSelf: DataFrame, sigma: Double, blocks: Int): DataFrame =
+    selfUpperOrBlocked(gakSide(withSelf), gakPair(sigma), blocks, GakSeries)
 
   /** The full normalized-GAK self gram: [[gakSelfUpper]], its mirror and
     * the diagonal k(x, x) = 1. */
-  def gakSelfGram(ds: DataFrame, sigma: Double, blocks: Int = 0,
-                  seriesCol: String = "values"): DataFrame =
-    withMirror(ds, gakSelfUpper(ds, sigma, blocks, seriesCol), Some(1.0))
+  def gakSelfGram(ds: DataFrame, sigma: Double, blocks: Int = 0): DataFrame =
+    withMirror(ds, gakSelfUpper(ds, sigma, blocks), Some(1.0))
 
   /** Normalized soft-DTW cross-distance:
     * D(x,y) − ½(D(x,x) + D(y,y)) — `cdist_soft_dtw_normalized`

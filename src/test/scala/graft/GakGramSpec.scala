@@ -80,12 +80,19 @@ class GakGramSpec extends AnyFunSuite with TestSpark {
     }
   }
 
-  test("a frame that already carries its log self-GAK is not recomputed") {
+  test("a fit input that already carries its log self-GAK is not recomputed") {
     val ds = Cdist.withLogSelfGak(ragged(5, 5), sigma).localCheckpoint()
-    assert(Cdist.withLogSelfGak(ds, sigma) eq ds)
-    val plan = Cdist.gakSelfUpper(ds, sigma).queryExecution.sparkPlan
+    val plan = Cdist.gakSelfUpperOf(ds, sigma, blocks = 0).queryExecution.sparkPlan
     assert(plan.collect { case p if carriesSelfTerm(p) => p }.isEmpty, plan.treeString)
-    assert(bits(triples(Cdist.gakSelfUpper(ds, sigma))) ==
+    assert(bits(triples(Cdist.gakSelfUpperOf(ds, sigma, blocks = 0))) ==
       bits(triples(Cdist.selfUpper(ds, perPair))))
+  }
+
+  test("the public builders compute the self term even when a column of its name exists") {
+    val ds = ragged(6, 5)
+    // a stale self term of another sigma under the same column name
+    val stale = Cdist.withLogSelfGak(ds, sigma * 3)
+    assert(bits(triples(Cdist.gakSelfUpper(stale, sigma))) == bits(triples(Cdist.gakSelfUpper(ds, sigma))))
+    assert(bits(triples(Cdist.gakCross(stale, stale, sigma))) == bits(triples(Cdist.gakCross(ds, ds, sigma))))
   }
 }

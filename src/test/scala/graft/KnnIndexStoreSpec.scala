@@ -130,7 +130,8 @@ class KnnIndexStoreSpec extends AnyFunSuite with TestSpark {
     val old = Cdist.storedIndexes.filterNot(e => before(e._3.id)).map(_._3)
     assert(old.size == 1)
     train.unpersist(true)
-    // the next kNN call, on another relation, removes and destroys it
+    // the next kNN call, on another relation, removes the entry and
+    // unpersists its broadcast
     rows(Cdist.knnDtwRagged(raggedSeries(63, 3, firstId = 100), raggedSeries(64, 6), k = 1))
     assert(!storedIds(old.head.id), "the unpersisted relation's entry is still stored")
     assert(!destroyed(old.head), "the unpersisted relation's broadcast was destroyed")
