@@ -3,6 +3,8 @@ package graft.ml
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
+import graft.functions.NativeOps
 import graft.kernels.Kernels
 
 /** Time-series k-means — semantics of
@@ -123,15 +125,8 @@ class TimeSeriesKMeans(
         case "k-means++det" =>
           // distributed deterministic seeding over the FULL dataset;
           // per-attempt salt = the deterministic analog of re-rolling
-          val exploded = data.toDF("series_id", "values")
-            .select(col("series_id"),
-              posexplode(col("values")).as(Seq("j", "v")))
-          val seedIds = TimeSeriesKMeans.kmeansPlusPlusInit(
-              exploded, k, salt = s"kpp:$seed:$attempt", metric = metric)
-            .select("center_id").collect().map(_.getLong(0))
-          val byId = data.filter(r => seedIds.contains(r._1))
-            .collect().toMap
-          seedIds.map(byId)
+          TimeSeriesKMeans.plusPlusSeeds(data, k, s"kpp:$seed:$attempt", metric)
+            .map(_.values).toArray
         case _ => kmeansPlusPlus(sample, rng)
       }
       var prevInertia = Double.PositiveInfinity
@@ -217,20 +212,23 @@ object TimeSeriesKMeans {
       case _ => (a, b) => Kernels.euclidean(Kernels.uni(a), Kernels.uni(b))
     }
 
-  /** Deterministic DISTRIBUTED greedy k-means++ seeding over an
-    * exploded series relation `rows(series_id, j, v)` — the reference's
-    * `_k_init_metric` semantics (`clustering/kmeans.py:50-140`:
-    * `n_local_trials = 2 + ⌊ln k⌋` candidates per round ∝ D², keep the
-    * potential minimizer) with the RNG replaced by portable md5-uniform
-    * exponential races: the trial-`t` candidate in round `r` is
-    * argmin_i −ln(u_i^{r,t}) / D²_i, which selects i with probability
-    * ∝ D²_i — the same D² weighting, but bit-replayable in SQL.
+  /** Deterministic DISTRIBUTED greedy k-means++ seeding over
+    * `series(series_id, values)` — the reference's `_k_init_metric`
+    * semantics (`clustering/kmeans.py:50-140`: `n_local_trials =
+    * 2 + ⌊ln k⌋` candidates per round ∝ D², keep the potential minimizer)
+    * with the RNG replaced by portable md5-uniform exponential races: the
+    * trial-`t` candidate in round `r` is argmin_i −ln(u_i^{r,t}) / D²_i,
+    * which selects i with probability ∝ D²_i — the same D² weighting, but
+    * bit-replayable in SQL.
     *
-    * 100 TB shape: D² lives as an (id, d2) relation (localCheckpoint'd
-    * per round); candidate selection is ONE aggregation computing all
-    * `trials` races map-side (L min_by slots); potential evaluation is
-    * one broadcast join (L·sz center values) + partial agg. Nothing
-    * corpus-sized ever sits on the driver or shuffles.
+    * 100 TB shape: k + 2 jobs, each one pass over the rows, and nothing
+    * corpus-sized on the driver or in a shuffle. The input is held through
+    * [[withFitInput]] (its count is the first job), one fold picks the
+    * round-0 centre, and each round is one fold against the chosen centres
+    * and that round's at most 2 + ⌊ln k⌋ candidates (arrays shipped in the
+    * task closure). Each row recomputes its D² as the minimum over the
+    * chosen centres — k(k−1)/2 extra distance calls per row per call — so
+    * no per-round relation is held or released.
     *
     * Tie/degeneracy rules (documented deviations, both measure-zero
     * under the reference's real RNG): duplicate candidates across
@@ -240,121 +238,97 @@ object TimeSeriesKMeans {
     *
     * Returns the seeding trace (round, center_id, pot) where pot is
     * the k-means potential Σ_i D²_i AFTER that round's center joins. */
-  def kmeansPlusPlusInit(rows: DataFrame, k: Int, trials: Int = -1,
-                         salt: String = "kpp",
+  def kmeansPlusPlusInit(series: DataFrame, k: Int, salt: String = "kpp",
                          metric: String = "euclidean"): DataFrame = {
-    val spark = rows.sparkSession
+    val spark = series.sparkSession
     import spark.implicits._
-    val l = if (trials > 0) trials else 2 + math.log(k).toInt
-    val r = rows.select(col("series_id").cast("long").as("id"),
-      col("j").cast("int").as("j"), col("v").cast("double").as("v"))
-      .localCheckpoint()
-    def race(rr: Int, t: Int): org.apache.spark.sql.Column =
-      -log((graft.operators.Dedup.md5Hash60(
-        concat(lit(s"$salt:$rr:$t:"), col("id").cast("string")))
-        .cast("double") + 1.0d) / math.pow(2.0, 60))
-    def centerRel(ids: Seq[Long]) = broadcast(
-      r.where(col("id").isin(ids: _*))
-        .select(col("id").as("cid"), col("j"), col("v").as("c")))
-    // series arrays — only materialized for warped metrics, where the
-    // squared distance needs a DP, not a per-timestep join
-    lazy val series: Dataset[(Long, Array[Double])] = r
-      .groupBy("id")
-      .agg(sort_array(collect_list(struct(col("j"), col("v")))).as("s"))
-      .select(col("id"), transform(col("s"), p => p.getField("v")).as("vals"))
-      .as[(Long, Array[Double])].cache()
-    // (id, cid, dc): squared metric distance of every point to each of
-    // the candidate centers. Euclidean stays fully relational (join on
-    // the timestep, map-side partial sum); dtw/softdtw run the kernel
-    // per (point, broadcast candidate) — candidates are ≤ 2+⌊ln k⌋
-    // arrays, so the pass is map-only either way.
-    val dcTo: Seq[Long] => DataFrame =
-      if (metric == "euclidean") { ids =>
-        r.join(centerRel(ids), "j")
-          .groupBy(col("id"), col("cid"))
-          .agg(sum(pow(col("v") - col("c"), 2)).as("dc"))
-      } else { ids =>
-        val dist = metricDist(metric, 1.0)
-        val cands = series.filter(s => ids.contains(s._1)).collect().toSeq
-        val bc = spark.sparkContext.broadcast(cands)
-        series.flatMap { case (id, vals) =>
-          bc.value.map { case (cid, cv) =>
-            val d = dist(cv, vals)
-            (id, cid, d * d)
-          }
-        }.toDF("id", "cid", "dc")
+    withFitInput(series.select(col("series_id").cast("long"), col("values").cast("array<double>"))
+        .as[(Long, Array[Double])]) { (data, n) =>
+      require(n >= k, s"need at least k=$k series, got $n")
+      plusPlusSeeds(data, k, salt, metric)
+    }.map(s => (s.round, s.id, s.pot)).toDF("round", "center_id", "pot")
+  }
+
+  /** One chosen k-means++ centre: its round, its id, the potential once it
+    * joined, and its values. */
+  private case class Seed(round: Int, id: Long, pot: Double, values: Array[Double])
+
+  /** The race value −ln(u) of `id` in trial `t` of round `round`, u the md5
+    * uniform in (0, 1]; `StrictMath.log` is what Spark's SQL `log` runs. */
+  private def race(salt: String, round: Int, t: Int, id: Long): Double =
+    -StrictMath.log((NativeOps.md5Hash60(UTF8String.fromString(s"$salt:$round:$t:$id")) + 1.0) /
+      math.pow(2.0, 60))
+
+  /** One k-means++ round's fold over `nc` candidates: each candidate's
+    * potential Σ min(D², dc), its `l` race minima over the rows it leaves
+    * live (nd² > 0), keyed on (race / nd², id), and its fallback: the
+    * smallest id neither chosen before the round nor its own. Each slot
+    * keeps its row's values. */
+  private final class PlusPlusFold(nc: Int, l: Int) extends Serializable {
+    val pot = new Array[Double](nc)
+    val key = new Array[Double](nc * (l + 1))
+    val id = new Array[Long](nc * (l + 1))
+    val vals = new Array[Array[Double]](nc * (l + 1)) // null: no row offered
+
+    def offer(slot: Int, k: Double, i: Long, v: Array[Double]): Unit =
+      if (vals(slot) == null || k < key(slot) || (k == key(slot) && i < id(slot))) {
+        key(slot) = k; id(slot) = i; vals(slot) = v
       }
-    // Per-round race columns for selecting round `rr`'s candidates, over a
-    // given D² column. Dead rows (D² = 0 — already-chosen centers and
-    // exact duplicates) must not race, exactly like the former standalone
-    // `live` filter: the whole ordering struct goes null for them and
-    // min_by skips null ordering values.
-    def raceAggs(rr: Int, d2c: org.apache.spark.sql.Column) =
-      (0 until l).map(t =>
-        min_by(col("id"), when(d2c > 0,
-          struct((race(rr, t) / d2c).as("k"), col("id")))).as(s"c$t"))
-    // Candidate extraction from an aggregated race row (slots at `offset`):
-    // null slots mean no live row raced — fall back to the smallest
-    // unchosen id (same degenerate-case rule as before).
-    def candsFrom(row: org.apache.spark.sql.Row, offset: Int,
-                  chosen: Set[Long]): Seq[Long] =
-      if (row.isNullAt(offset))
-        Seq(r.select(col("id")).distinct()
-          .where(!col("id").isin(chosen.toSeq: _*))
-          .agg(min(col("id"))).head().getLong(0))
-      else (offset until offset + l).map(row.getLong).distinct
-    // round 0: uniform pick = argmax u = argmin −ln(u)
-    val c0 = r.select(col("id")).distinct()
-      .select(col("id"), race(0, 0).as("e"))
-      .agg(min_by(col("id"), struct(col("e"), col("id"))).as("id"))
-      .head().getLong(0)
-    var d2 = dcTo(Seq(c0)).select(col("id"), col("dc").as("d2"))
-      .localCheckpoint()
-    // ONE aggregation computes round 0's potential AND round 1's races
-    // (guide §1.2/§2.4: the former standalone race-selection job was a
-    // second full scan of the D² relation per round — k−1 corpus passes
-    // removed). The pot sum is the same aggregation over the same rows;
-    // extra min_by columns do not perturb it.
-    val row0 = d2.agg(sum("d2").as("pot"), raceAggs(1, col("d2")): _*).head()
-    val trace = scala.collection.mutable.ArrayBuffer((0, c0, row0.getDouble(0)))
-    var chosen = Set(c0)
-    var nextCands: Seq[Long] = candsFrom(row0, 1, chosen)
-    for (rr <- 1 until k) {
-      val cands = nextCands
-      // ONE evaluation of the candidate-distance relation per round,
-      // checkpointed: it feeds BOTH the potential ranking and the next
-      // round's D² (the former code evaluated dcTo twice — once over all
-      // candidates for the ranking, once over the winner for the update
-      // — and for warped metrics paid a second candidate collect +
-      // broadcast per round). nd2 = least(d2, dc) is the identical
-      // update expression; the winner's rows are a filter on the leaf.
-      val upd = dcTo(cands)
-        .join(d2, "id")
-        .select(col("id"), col("cid"), least(col("d2"), col("dc")).as("nd2"))
-        .localCheckpoint()
-      // per-candidate potential + per-candidate round-(rr+1) races in the
-      // SAME groupBy: the group that wins the potential ranking carries
-      // exactly the races the next round would have computed over its
-      // winner-filtered D² relation — the standalone race scan is gone.
-      val perCid = upd.groupBy("cid")
-        .agg(sum(col("nd2")).as("pot"),
-          (if (rr + 1 < k) raceAggs(rr + 1, col("nd2")) else Seq.empty): _*)
-        .collect()
-      // winner = (pot, cid)-minimum — the exact ordering the former
-      // min_by(struct(cid,pot), struct(pot,cid)) SQL used, on the same
-      // pot doubles (identical sum over identical groups)
-      val best = perCid.minBy(rw => (rw.getDouble(1), rw.getLong(0)))
-      val (bestId, bestPot) = (best.getLong(0), best.getDouble(1))
-      d2 = upd.where(col("cid") === bestId)
-        .select(col("id"), col("nd2").as("d2"))
-      chosen += bestId
-      if (rr + 1 < k) nextCands = candsFrom(best, 2, chosen)
-      trace += ((rr, bestId, bestPot))
+
+    def merge(o: PlusPlusFold): PlusPlusFold = {
+      for (c <- pot.indices) pot(c) += o.pot(c)
+      for (s <- vals.indices if o.vals(s) != null) offer(s, o.key(s), o.id(s), o.vals(s))
+      this
     }
-    // the warped-metric path caches the per-id arrays for its k·(L+1)
-    // passes; release them now that the trace is materialized
-    if (metric != "euclidean") series.unpersist()
-    trace.toSeq.toDF("round", "center_id", "pot")
+
+    /** Candidate `c`'s race winners, deduplicated in trial order, or its
+      * fallback when no live row raced. */
+    def next(c: Int): Seq[(Long, Array[Double])] = {
+      val s = c * (l + 1)
+      if (vals(s) == null) Seq((id(s + l), vals(s + l)))
+      else (s until s + l).map(t => (id(t), vals(t))).distinctBy(_._1)
+    }
+  }
+
+  /** The k-means++ seeds of [[kmeansPlusPlusInit]] over a held input of
+    * at least k rows: k + 1 folds. */
+  private def plusPlusSeeds(data: Dataset[(Long, Array[Double])], k: Int, salt: String,
+                            metric: String): Seq[Seed] = {
+    val l = 2 + math.log(k).toInt
+    val dist = metricDist(metric, 1.0)
+    def pass(nc: Int, nl: Int)(f: (PlusPlusFold, Long, Array[Double]) => Unit): PlusPlusFold =
+      data.rdd.treeAggregate(new PlusPlusFold(nc, nl))((acc, r) => { f(acc, r._1, r._2); acc },
+        _ merge _)
+    // round 0: uniform pick = argmax u = argmin −ln(u)
+    var cands = pass(1, 1)((acc, i, x) => acc.offer(0, race(salt, 0, 0, i), i, x)).next(0)
+    val seeds = scala.collection.mutable.ArrayBuffer.empty[Seed]
+    for (rr <- 0 until k) {
+      val cs = seeds.map(_.values).toArray
+      val chosen = seeds.map(_.id).toSet
+      val (cid, cv) = (cands.map(_._1).toArray, cands.map(_._2).toArray)
+      val nl = if (rr + 1 < k) l else 0
+      val fold = pass(cv.length, nl) { (acc, i, x) =>
+        var d2 = Double.PositiveInfinity
+        for (c <- cs) { val d = dist(c, x); d2 = math.min(d2, d * d) }
+        var races: Array[Double] = null
+        for (c <- cv.indices) {
+          val dc = dist(cv(c), x)
+          val nd2 = math.min(d2, dc * dc)
+          acc.pot(c) += nd2
+          // dead rows (D² = 0: chosen centres, exact duplicates) never race
+          if (nd2 > 0 && nl > 0) {
+            if (races == null) races = Array.tabulate(nl)(t => race(salt, rr + 1, t, i))
+            for (t <- 0 until nl) acc.offer(c * (nl + 1) + t, races(t) / nd2, i, x)
+          }
+          if (nl > 0 && !chosen(i) && i != cid(c)) acc.offer(c * (nl + 1) + nl, 0.0, i, x)
+        }
+      }
+      // winner = the (pot, cid)-minimum
+      val w = cv.indices.minBy(c => (fold.pot(c), cid(c)))
+      seeds += Seed(rr, cid(w), fold.pot(w), cv(w))
+      if (nl > 0) cands = fold.next(w)
+    }
+    seeds.toSeq
   }
 
   /** Releases the blocks of a `localCheckpoint()`ed Dataset. A local

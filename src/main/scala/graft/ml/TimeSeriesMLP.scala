@@ -92,6 +92,7 @@ object TimeSeriesMLPRegressor {
     // (guide §1.2: don't recompute what you already have). xv itself no
     // longer needs its own checkpoint: it derives from d0 by a narrow
     // posexplode, so each consumer replays only the explode.
+    // read by the returned lazy frame: the ContextCleaner releases it once that frame is unreachable
     val d0 = df.select(col("series_id").as("sid"), col("target"),
       col("values")).localCheckpoint()
     val n = d0.count().toDouble
@@ -104,12 +105,14 @@ object TimeSeriesMLPRegressor {
       .join(broadcast(b1), Seq("h"))
       .withColumn("a", tanh(col("s") + col("b")))
       .select("sid", "h", "a")
+      // read by the returned lazy frame: the ContextCleaner releases it once that frame is unreachable
       .localCheckpoint() // read by pred, gW2 and gZ
     val w2r = w2.select(col("h"), col("w").as("w2"))
     val resid = act.join(broadcast(w2r), Seq("h"))
       .groupBy("sid").agg((sum(col("w2") * col("a")) + lit(b2)).as("pred"))
       .join(d0.select(col("sid"), col("target")), "sid")
       .select(col("sid"), ((col("pred") - col("target")) / lit(n)).as("gp"))
+      // read by the returned lazy frame: the ContextCleaner releases it once that frame is unreachable
       .localCheckpoint()
     val gW2 = act.join(resid, "sid")
       .groupBy("h").agg(sum(col("a") * col("gp")).as("g"))

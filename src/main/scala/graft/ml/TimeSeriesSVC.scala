@@ -48,9 +48,11 @@ object TimeSeriesSVC {
     * one-row frame (sigma). */
   def sigmaGakExact(df: DataFrame, maxId: Long = 4,
                     seriesCol: String = "values"): DataFrame = {
+    // lazy local checkpoints: an eager one is persisted before its fill
+    // job runs, so a failed fill would leave it where no finally reaches
     val vals = df.where(col("series_id") < maxId)
       .select(col("series_id"), posexplode(col(seriesCol)).as(Seq("t", "v")))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     val a = vals.select(col("series_id").as("sa"), col("t").as("ta"), col("v").as("va"))
     val b = vals.select(col("series_id").as("sb"), col("t").as("tb"), col("v").as("vb"))
     // i<j over the value multiset via the (series, t) lexicographic key
@@ -63,24 +65,29 @@ object TimeSeriesSVC {
     def kthSmallest(values: org.apache.spark.sql.DataFrame,
                     c: String): Double = {
       val grouped = values.groupBy(c).agg(count(lit(1)).as("cnt"))
-        .localCheckpoint()
-      val n = grouped.agg(sum("cnt")).head().getLong(0)
-      val w = org.apache.spark.sql.expressions.Window.orderBy(c)
-        .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-          org.apache.spark.sql.expressions.Window.currentRow)
-      grouped.withColumn("cum", sum("cnt").over(w))
-        .where(col("cum") >= n / 2 + 1)
-        .agg(min(col(c))).head().getDouble(0)
+        .localCheckpoint(eager = false)
+      try {
+        val n = grouped.agg(sum("cnt")).head().getLong(0)
+        val w = org.apache.spark.sql.expressions.Window.orderBy(c)
+          .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
+            org.apache.spark.sql.expressions.Window.currentRow)
+        grouped.withColumn("cum", sum("cnt").over(w))
+          .where(col("cum") >= n / 2 + 1)
+          .agg(min(col(c))).head().getDouble(0)
+      } finally TimeSeriesKMeans.releaseLocalCheckpoint(grouped)
     }
-    val pairs = a.crossJoin(b)
-      .where(col("sa") < col("sb") || (col("sa") === col("sb") && col("ta") < col("tb")))
-      .select(abs(col("va") - col("vb")).as("d"))
-    val medDist = kthSmallest(pairs, "d")
-    val medSz = kthSmallest(
-      df.select(size(col(seriesCol)).cast("double").as("sz")), "sz")
+    val sigma = try {
+      val pairs = a.crossJoin(b)
+        .where(col("sa") < col("sb") || (col("sa") === col("sb") && col("ta") < col("tb")))
+        .select(abs(col("va") - col("vb")).as("d"))
+      val medDist = kthSmallest(pairs, "d")
+      val medSz = kthSmallest(
+        df.select(size(col(seriesCol)).cast("double").as("sz")), "sz")
+      medDist * math.sqrt(medSz)
+    } finally TimeSeriesKMeans.releaseLocalCheckpoint(vals)
     val spark = df.sparkSession
     import spark.implicits._
-    Seq(medDist * math.sqrt(medSz)).toDF("sigma")
+    Seq(sigma).toDF("sigma")
   }
 
   /** gamma_soft_dtw heuristic = 2·sigma_gak²
@@ -172,6 +179,7 @@ object TimeSeriesSVC {
     * diagonal as (left_id, right_id, dist); `labeled` is (id, y, a). */
   def smoStep(gram0: DataFrame, labeled: DataFrame, b0: Double, cReg: Double,
               decimals: Int = 4): DataFrame = {
+    // read by the returned lazy frame: the ContextCleaner releases it once that frame is unreachable
     val gram = gram0.localCheckpoint() // scanned by 4 branches below
     val cRegL = lit(cReg)
     val ay = labeled.select(col("id").as("left_id"), (col("a") * col("y")).as("ay"))
@@ -180,6 +188,7 @@ object TimeSeriesSVC {
       .select(col("right_id").as("id"), (col("s") + lit(b0)).as("f0"))
       .join(broadcast(labeled), "id")
       .withColumn("e", col("f0") - col("y"))
+      // read by the returned lazy frame: the ContextCleaner releases it once that frame is unreachable
       .localCheckpoint()
     val iRow = err
       .where((col("y") > 0 && col("a") < cRegL) || (col("y") < 0 && col("a") > 0))
@@ -235,6 +244,7 @@ object TimeSeriesSVC {
         .otherwise((col("b1") + col("b2")) / 2))
       .select(col("i_id"), col("j_id"), col("y_i"), col("y_j"),
         col("a_i"), col("a_j"), col("ai_new"), col("aj_new"), col("b_new"))
+      // read by the returned lazy frame: the ContextCleaner releases it once that frame is unreachable
       .localCheckpoint() // 1 row, read by two gram lookups + the final join
     val ki = gram.join(broadcast(upd.select(col("i_id").as("gi"))),
         col("left_id") === col("gi"))
@@ -393,15 +403,16 @@ object TimeSeriesSVC {
       featUdf(col("values")).as("features")).cache()
     // one-vs-rest binary LinearSVCs; regParam follows the standard
     // C ↔ 1/(nC) correspondence
-    val n = feats.count()
-    val ovr = classes.map { cls =>
-      val bin = feats.withColumn("y", when(col("label") === cls, 1.0).otherwise(0.0))
-      new org.apache.spark.ml.classification.LinearSVC()
-        .setLabelCol("y").setFeaturesCol("features")
-        .setRegParam(1.0 / (c * n)).setMaxIter(maxIter)
-        .fit(bin)
-    }
-    feats.unpersist()
+    val ovr = try {
+      val n = feats.count()
+      classes.map { cls =>
+        val bin = feats.withColumn("y", when(col("label") === cls, 1.0).otherwise(0.0))
+        new org.apache.spark.ml.classification.LinearSVC()
+          .setLabelCol("y").setFeaturesCol("features")
+          .setRegParam(1.0 / (c * n)).setMaxIter(maxIter)
+          .fit(bin)
+      }
+    } finally feats.unpersist()
     NystromModel(lms, mapping, lgSelf, sig, classes, ovr)
   }
 

@@ -44,29 +44,23 @@ object ClusteringQueries {
     // RNG replaced by md5-uniform exponential races, so every race,
     // every candidate D² pass and every potential argmin replays in
     // SQL. Output = the seeding trace (round, center_id, potential).
-    "ts_kmeanspp_init" -> ((s, dir) => {
-      val r = resampledEvents(s, dir, 16)
-        .select(col("user_id").as("series_id"), col("j"), col("v"))
-      graft.ml.TimeSeriesKMeans.kmeansPlusPlusInit(r, k = 3)
+    "ts_kmeanspp_init" -> ((s, dir) =>
+      graft.ml.TimeSeriesKMeans.kmeansPlusPlusInit(resampledSeries(s, dir, 16), k = 3)
         .select(col("round"), col("center_id"),
-          (round(col("pot"), 4) + lit(0.0)).as("pot"))
-    }),
+          (round(col("pot"), 4) + lit(0.0)).as("pot"))),
 
     // The same greedy k-means++ under metric="dtw" — what the
     // reference's _k_init_metric actually runs for
     // TimeSeriesKMeans(metric="dtw") (kmeans.py:636-651: metric_fun =
-    // cdist_dtw, squared inside _k_init_metric as the D² weight). The engine races stay identical; the D²
-    // passes swap the per-timestep join for the DTW kernel against
-    // ≤2+⌊ln k⌋ broadcast candidates. Restricted to 24 users so the
-    // oracle's unrolled DP chains stay cheap.
-    "ts_kmeanspp_dtw" -> ((s, dir) => {
-      val r = resampledEvents(s, dir, 16)
-        .where(col("user_id") < 24)
-        .select(col("user_id").as("series_id"), col("j"), col("v"))
-      graft.ml.TimeSeriesKMeans.kmeansPlusPlusInit(r, k = 3, metric = "dtw")
+    // cdist_dtw, squared inside _k_init_metric as the D² weight). The
+    // engine runs the same seeding body; only the distance its folds call
+    // is the DTW kernel. Restricted to 24 users so the oracle's unrolled
+    // DP chains stay cheap.
+    "ts_kmeanspp_dtw" -> ((s, dir) =>
+      graft.ml.TimeSeriesKMeans.kmeansPlusPlusInit(
+          resampledSeries(s, dir, 16).where(col("series_id") < 24), k = 3, metric = "dtw")
         .select(col("round"), col("center_id"),
-          (round(col("pot"), 4) + lit(0.0)).as("pot"))
-    }),
+          (round(col("pot"), 4) + lit(0.0)).as("pot"))),
 
     // Full 10-iteration Lloyd trace of the estimator, oracle-backed:
     // init="first" seeds from series 0..k-1 and tol=-1 disables the

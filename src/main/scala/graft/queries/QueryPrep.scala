@@ -67,6 +67,14 @@ object QueryPrep {
         (col("v0") * (lit(1.0) - col("frac")) + col("v1") * col("frac")).as("v"))
   }
 
+  /** [[resampledEvents]] as one array per user, in timestep order:
+    * (series_id, values). */
+  private[graft] def resampledSeries(s: SparkSession, dir: String, target: Int): DataFrame =
+    resampledEvents(s, dir, target)
+      .groupBy(col("user_id").as("series_id"))
+      .agg(sort_array(collect_list(struct(col("j"), col("v")))).as("s"))
+      .select(col("series_id"), transform(col("s"), p => p.getField("v")).as("values"))
+
   /** Every user's event series resampled to `sz` points and z-normed:
     * (series_id, values). */
   private[graft] def znormedSeries(s: SparkSession, dir: String, sz: Int): DataFrame =

@@ -217,10 +217,10 @@ class ClusteringSpec extends AnyFunSuite {
   test("k-means++ init: spreads seeds across separated clusters, potential decreases") {
     // 3 tight clusters far apart: the D² weighting must land one seed
     // in each (a uniform pick of 3 from 30 would collide often)
-    val rows = (0 until 30).flatMap { i =>
+    val rows = (0 until 30).map { i =>
       val base = (i % 3) * 100.0
-      (0 until 8).map(j => (i.toLong, j, base + (i / 3) * 0.01 + j * 0.001))
-    }.toDF("series_id", "j", "v")
+      (i.toLong, Array.tabulate(8)(j => base + (i / 3) * 0.01 + j * 0.001))
+    }.toDF("series_id", "values")
     val trace = TimeSeriesKMeans.kmeansPlusPlusInit(rows, k = 3)
       .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
     assert(trace.map(_._1) == Seq(0, 1, 2))
@@ -234,7 +234,7 @@ class ClusteringSpec extends AnyFunSuite {
     assert(trace.map(_._2).distinct.size == 3)
     // partition independence: same trace from a different layout
     val trace2 = TimeSeriesKMeans.kmeansPlusPlusInit(
-        rows.repartition(7, col("j")), k = 3)
+        rows.repartition(7, col("series_id")), k = 3)
       .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
     assert(trace2.map(t => (t._1, t._2)) == trace.map(t => (t._1, t._2)),
       s"seeding changed under repartitioning: $trace2 vs $trace")
@@ -246,9 +246,27 @@ class ClusteringSpec extends AnyFunSuite {
       s"dtw seeds collided: $dtwTrace")
     assert(dtwTrace.map(_._3) == dtwTrace.map(_._3).sorted.reverse)
     val dtwTrace2 = TimeSeriesKMeans.kmeansPlusPlusInit(
-        rows.repartition(7, col("j")), k = 3, metric = "dtw")
+        rows.repartition(7, col("series_id")), k = 3, metric = "dtw")
       .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
     assert(dtwTrace2.map(t => (t._1, t._2)) == dtwTrace.map(t => (t._1, t._2)))
+  }
+
+  test("k-means++ init: once every D² is zero, the smallest unchosen id is taken") {
+    // three copies each of two distinct series: after one seed per
+    // series no row is live, so round 2 has no race and falls back
+    val rows = (0 until 6).map { i =>
+      (i.toLong, Array.tabulate(8)(j => if (i % 2 == 0) j.toDouble else 10.0 - j))
+    }.toDF("series_id", "values")
+    for (metric <- Seq("euclidean", "dtw")) {
+      val trace = TimeSeriesKMeans.kmeansPlusPlusInit(rows, k = 3, metric = metric)
+        .as[(Int, Long, Double)].collect().sortBy(_._1).toSeq
+      val ids = trace.map(_._2)
+      assert(ids(0) % 2 != ids(1) % 2, s"$metric: round 1 re-picked a copy: $trace")
+      assert(ids(2) == (0L until 6L).filterNot(ids.take(2).contains).min,
+        s"$metric: round 2 is not the smallest unchosen id: $trace")
+      assert(trace(0)._3 > 0 && trace(1)._3 == 0.0 && trace(2)._3 == 0.0,
+        s"$metric: potentials $trace")
+    }
   }
 
   test("fit with init=k-means++det: converges on separated clusters") {

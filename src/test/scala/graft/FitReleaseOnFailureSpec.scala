@@ -5,7 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 import graft.ml.{DistributedBary, EarlyClassifier, KShape, NonMyopicEarlyClassifier,
-  Shapelets, TimeSeriesKMeans}
+  Shapelets, TimeSeriesKMeans, TimeSeriesSVC}
 
 /** An iterative fit that fails partway through releases what it persisted:
   * every job that starts once the fit holds a persisted RDD of its own is
@@ -59,10 +59,23 @@ class FitReleaseOnFailureSpec extends AnyFunSuite with TestSpark {
       Array(Array(0.0, 1.0, 0.0, -1.0)), Array(Array(0.1), Array(0.2)), new Array[Double](2),
       lr = 0.1, iters = 3, labels = Array("0", "1"))),
     "DistributedBary.dba" -> (df => DistributedBary.dba(
-      df.select($"values").as[Array[Double]], maxIter = 3)))
+      df.select($"values").as[Array[Double]], maxIter = 3)),
+    "TimeSeriesKMeans.kmeansPlusPlusInit" -> (df => TimeSeriesKMeans.kmeansPlusPlusInit(df, k = 3)),
+    "TimeSeriesKMeans.kmeansPlusPlusInit dtw" -> (df => TimeSeriesKMeans.kmeansPlusPlusInit(df,
+      k = 3, metric = "dtw")),
+    "TimeSeriesSVC.fitNystrom" -> (df => TimeSeriesSVC.fitNystrom(df, m = 4, maxIter = 5)),
+    "TimeSeriesSVC.sigmaGakExact" -> (df => TimeSeriesSVC.sigmaGakExact(df)))
 
   for ((name, fit) <- fits)
     test(s"$name releases its persisted input when a job is cancelled") {
       cancelledFit(fit(input))
     }
+
+  test("a successful kmeansPlusPlusInit leaves nothing persisted") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    for (metric <- Seq("euclidean", "dtw"))
+      TimeSeriesKMeans.kmeansPlusPlusInit(input, k = 3, metric = metric).collect()
+    assert(sc.getPersistentRDDs.keySet == before)
+  }
 }

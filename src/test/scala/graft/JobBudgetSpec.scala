@@ -14,7 +14,10 @@ import graft.ml.{KShape, KernelKMeans, TimeSeriesKMeans}
   *    the fit's local checkpoint), one for the init collect, one per Lloyd
   *    iteration;
   *  - KShape: the same with init = "first"; with init = "sample", the init
-  *    is `takeSample`'s two (its count and its sample collect).
+  *    is `takeSample`'s two (its count and its sample collect);
+  *  - k-means++ seeding (`kmeansPlusPlusInit`): one to count the rows, one
+  *    fold for the round-0 pick and one per round; under init =
+  *    "k-means++det" the fit's own count serves it.
   * A regression gate on the shape of the fit: each extra coordination
   * round, per iteration or before the first one, shows up here. */
 class JobBudgetSpec extends AnyFunSuite with TestSpark {
@@ -89,6 +92,19 @@ class JobBudgetSpec extends AnyFunSuite with TestSpark {
     for ((name, fit) <- fits) {
       val (two, four) = (jobs(fit(2)), jobs(fit(4)))
       assert(four - two == 2, s"$name: maxIter 2 ran $two jobs, maxIter 4 ran $four")
+    }
+  }
+
+  test("k-means++ seeding runs at most k + 2 jobs, its fit at most maxIter + k + 2") {
+    val df = input
+    for (metric <- Seq("euclidean", "dtw"); k <- Seq(2, 3)) {
+      val n = jobs(TimeSeriesKMeans.kmeansPlusPlusInit(df, k = k, metric = metric).collect())
+      assert(n <= k + 2, s"kmeansPlusPlusInit($metric, k $k) ran $n jobs")
+    }
+    for (k <- Seq(2, 3); maxIter <- Seq(2, 4)) {
+      val n = jobs(new TimeSeriesKMeans(k = k, maxIter = maxIter, tol = Double.NegativeInfinity,
+        init = "k-means++det").fit(df))
+      assert(n <= maxIter + k + 2, s"k-means++det fit (k $k, maxIter $maxIter) ran $n jobs")
     }
   }
 }
